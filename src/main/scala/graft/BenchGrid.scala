@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Mhw
@@ -27,7 +27,6 @@ object BenchGrid {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.local(cpus)
-    import spark.implicits._
 
     // SPARK_GRAFT_GRID_SCALE multiplies the cell count (1 = the
     // notebook's 17×17 subset; 10 ≈ 34.8 M points) — the scaling sweep

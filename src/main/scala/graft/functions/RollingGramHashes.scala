@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Rolling k-token-gram hashes of an `array<string>` column as ONE
   * native O(n) pass — the exact-substring-dedup gram table's hot

@@ -243,24 +243,20 @@ object Mhw {
     // reachable via `exact = false` — the divergent-regime rank-error
     // contract is pinned there (MhwSpec) — for callers who genuinely
     // want it.
-    val ex = exact
     // one-time notice (round-11 advisory): a deployment that set the
     // global sketch posture should see that this family intentionally
     // ignores it rather than silently wonder which path ran
-    if (ex && graft.Hints.approxQuantiles(dailyDf.sparkSession) &&
+    if (exact && graft.Hints.approxQuantiles(dailyDf.sparkSession) &&
         ApproxNoticeLogged.compareAndSet(false, true))
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"${graft.Hints.ApproxQuantiles} is set, but the MHW pooled-" +
         "climatology family keeps the exact slot-partials build by design " +
         "(years-bounded groups; see pooledQuantile scaladoc). " +
         "Pass exact = false to force the sketch branch.")
-    if (ex)
+    if (exact)
       // slot-partials build ([[pooledSlots]]): bit-identical values,
       // ×years fewer rows through the heavy aggregate
-      poolMerged(dailyDf, hw)
-        .select(col("user_id"), col("doy"),
-                when(col("has_nan") === 1, lit(null))
-                  .otherwise(r(linQuantile(col("vs"), pctile), 6)).as("thresh"))
+      threshOf(poolMerged(dailyDf, hw), pctile)
     else
       // sketch path: GK summaries have bounded per-group state; keeps
       // the raw fan because GK digests aren't mergeable from SQL and
@@ -293,9 +289,7 @@ object Mhw {
     * bit-identical to davg over the raw fan (decimal addition is exact
     * and associative; the finalize expression is the same). */
   def pooledMean(dailyDf: DataFrame, hw: Int): DataFrame =
-    poolMerged(dailyDf, hw, withValues = false)
-      .select(col("user_id"), col("doy"),
-              r(col("s").cast("double") / col("n"), 6).as("seas"))
+    seasOf(poolMerged(dailyDf, hw, withValues = false))
 
   /** Raw-fan spelling of [[pooledMean]] — parity reference for the
     * slot-partials rework (spec-pinned). Not on any query path. */
@@ -400,11 +394,9 @@ object Mhw {
       df.groupBy(col("user_id"), col("doy"))
         .agg(sum(col("sst").cast(Dec)).as("s"), count(col("sst")).as("n"))
     val half = pmod(dayofmonth(col("d")), lit(2))
-    partial(d.filter(half === 0)).unionByName(partial(d.filter(half === 1)))
+    seasOf(partial(d.filter(half === 0)).unionByName(partial(d.filter(half === 1)))
       .groupBy(col("user_id"), col("doy"))
-      .agg(sum(col("s")).as("s"), sum(col("n")).as("n"))
-      .select(col("user_id"), col("doy"),
-              r(col("s").cast("double") / col("n"), 6).as("seas"))
+      .agg(sum(col("s")).as("s"), sum(col("n")).as("n")))
   }
 
   /** best_practice.compute_climatology, smoothPercentile=true. Keyed
@@ -423,28 +415,44 @@ object Mhw {
     * fused legacy pair, the severity chain's threshold) — previously
     * each ran its own pooledSlots explode + merge, the heaviest stage
     * of the whole MHW family (guide §1.2 step 1: don't recompute what
-    * a sibling already built). seas = r(s/n, 6) and thresh =
-    * r(linQuantile(vs, p), 6) read from the merged slots are the
-    * EXACT expressions of [[pooledMean]] / [[pooledQuantile]]'s exact
-    * branch, so every consumer is bit-identical to its previous
-    * spelling (the slot-partials ≡ raw-fan spec already pins the
-    * build itself). */
+    * a sibling already built). Every consumer reads seas and thresh
+    * through [[seasOf]] / [[threshOf]], the readouts [[pooledMean]] and
+    * [[pooledQuantile]]'s exact branch use, so each is bit-identical to
+    * its previous spelling (the slot-partials ≡ raw-fan spec already
+    * pins the build itself). */
   private[graft] def pooledMergedCached(s: SparkSession, dir: String,
                                         hw: Int = 5): DataFrame =
     graft.Caches.persisted(s, ("mhw_pool_merged", dir, hw)) {
       poolMerged(daily(s, dir), hw)
     }
 
+  /** Pooled mean over a merged slot pool: exact decimal sum / count. */
+  private def seasCol: Column = r(col("s").cast("double") / col("n"), 6).as("seas")
+
+  /** Pooled quantile over a merged slot pool; any NaN in the window
+    * nulls the center (strict skipna). */
+  private def threshCol(pctile: Double): Column =
+    when(col("has_nan") === 1, lit(null))
+      .otherwise(r(linQuantile(col("vs"), pctile), 6)).as("thresh")
+
   /** [[pooledMean]]'s readout over a merged slot pool. */
   private[graft] def seasOf(pool: DataFrame): DataFrame =
-    pool.select(col("user_id"), col("doy"),
-                r(col("s").cast("double") / col("n"), 6).as("seas"))
+    pool.select(col("user_id"), col("doy"), seasCol)
 
   /** [[pooledQuantile]]'s exact-branch readout over a merged slot pool. */
   private[graft] def threshOf(pool: DataFrame, pctile: Double): DataFrame =
-    pool.select(col("user_id"), col("doy"),
-                when(col("has_nan") === 1, lit(null))
-                  .otherwise(r(linQuantile(col("vs"), pctile), 6)).as("thresh"))
+    pool.select(col("user_id"), col("doy"), threshCol(pctile))
+
+  /** The legacy finish over pooled (seas, thresh): Feb-29 interpolation
+    * and circular smoothing, each one pass over both columns. */
+  private def legacyFinish(pooled: DataFrame): DataFrame = {
+    val cols = Seq("seas", "thresh")
+    smoothDoyCols(interpFeb29Cols(pooled, cols), cols)
+  }
+
+  /** The fused legacy climatology + threshold over a merged slot pool. */
+  private def legacyOf(pool: DataFrame, pctile: Double): DataFrame =
+    legacyFinish(pool.select(col("user_id"), col("doy"), seasCol, threshCol(pctile)))
 
   /** best_practice.compute_threshold, smoothPercentile=false, q=0.9. */
   def thresholdBpRaw(s: SparkSession, dir: String): DataFrame =
@@ -477,42 +485,28 @@ object Mhw {
     // exact build (bounded state AND no observation fan); the GK
     // branch stays reachable via `exact = false` for the
     // `accuracy`-tunable sketch contract
-    val ex = exact
-    val pooled =
-      if (ex)
-        // slot-partials build: the one shared slot table feeds both the
-        // merged decimal mean and the merged pooled-value quantile —
-        // bit-identical to the separate raw-fan operators (spec-pinned)
-        poolMerged(dailyDf, hw)
-          .select(col("user_id"), col("doy"),
-                  r(col("s").cast("double") / col("n"), 6).as("seas"),
-                  when(col("has_nan") === 1, lit(null))
-                    .otherwise(r(linQuantile(col("vs"), pctile), 6)).as("thresh"))
-      else
-        poolSamples(dailyDf, hw)
-          .groupBy(col("user_id"), col("doy"))
-          .agg(davg(col("sst"), 6).as("seas"),
-               expr(s"array(approx_percentile(sst, $pctile, $accuracy))").as("vs"),
-               max(when(isnan(col("sst")), 1).otherwise(0)).as("has_nan"))
-          .select(col("user_id"), col("doy"), col("seas"),
-                  when(col("has_nan") === 1, lit(null))
-                    .otherwise(r(element_at(col("vs"), 1), 6)).as("thresh"))
-    smoothDoyCols(interpFeb29Cols(pooled, Seq("seas", "thresh")), Seq("seas", "thresh"))
+    if (exact)
+      // slot-partials build: the one shared slot table feeds both the
+      // merged decimal mean and the merged pooled-value quantile —
+      // bit-identical to the separate raw-fan operators (spec-pinned)
+      legacyOf(poolMerged(dailyDf, hw), pctile)
+    else
+      legacyFinish(poolSamples(dailyDf, hw)
+        .groupBy(col("user_id"), col("doy"))
+        .agg(davg(col("sst"), 6).as("seas"),
+             expr(s"array(approx_percentile(sst, $pctile, $accuracy))").as("vs"),
+             max(when(isnan(col("sst")), 1).otherwise(0)).as("has_nan"))
+        .select(col("user_id"), col("doy"), col("seas"),
+                when(col("has_nan") === 1, lit(null))
+                  .otherwise(r(element_at(col("vs"), 1), 6)).as("thresh")))
   }
 
   /** Query: the fused legacy chain over the events-derived daily series
     * — reads the session-shared merged slot pool (the exact branch of
     * [[legacyClimThresh]] with the pool build factored out; identical
     * expressions, bit-identical output). */
-  def legacyClimThreshQ(s: SparkSession, dir: String): DataFrame = {
-    val pooled = pooledMergedCached(s, dir)
-      .select(col("user_id"), col("doy"),
-              r(col("s").cast("double") / col("n"), 6).as("seas"),
-              when(col("has_nan") === 1, lit(null))
-                .otherwise(r(linQuantile(col("vs"), 0.9), 6)).as("thresh"))
-    smoothDoyCols(interpFeb29Cols(pooled, Seq("seas", "thresh")),
-                  Seq("seas", "thresh"))
-  }
+  def legacyClimThreshQ(s: SparkSession, dir: String): DataFrame =
+    legacyOf(pooledMergedCached(s, dir), 0.9)
 
   // --------------------------------------------------------------- detrend
 

@@ -36,7 +36,7 @@ object Relational3 {
     * aggregation — per-pair means are unaffected by dropping other
     * parts, so the filter commutes with the groupBy. */
   private def unitCost(s: SparkSession, dir: String,
-                       partKeys: Option[DataFrame] = None): DataFrame = {
+                       partKeys: Option[DataFrame]): DataFrame = {
     val li = Tables.lineitem(s, dir)
       .select(col("l_partkey"), col("l_suppkey"),
               (col("l_extendedprice") / col("l_quantity")).as("unit"))

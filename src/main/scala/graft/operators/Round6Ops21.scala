@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Parity._
-import graft.functions.TextFunctions._
 import graft.sources.Tables
 
 /** Round-6 batch-38 operators (SURVEY §2 #258): the predicted-language

@@ -312,7 +312,6 @@ object Round6Ops6 {
     val top = counts
       .orderBy((col("n_a") + col("n_b")).desc, col("tok"))
       .limit(VocabDriftTopK)
-    val wAll = Window.partitionBy()
     val tot = counts.agg(sum(col("n_a")).as("tot_a"), sum(col("n_b")).as("tot_b"))
     val withOther = top
       .crossJoin(broadcast(tot))

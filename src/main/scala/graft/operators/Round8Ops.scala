@@ -124,7 +124,7 @@ object Round8Ops {
     * ids (no join back to documents); one ≤3×3 rollup. */
   def corpusSplitLeakage(s: SparkSession, dir: String,
                          tau: Double = 0.3): DataFrame = {
-    import graft.Parity.{davg, r}
+    import graft.Parity.davg
     val pairs = LshDedup.dedupMinhash(s, dir, tau)
     pairs
       .withColumn("sa", splitOf(col("id_a")))

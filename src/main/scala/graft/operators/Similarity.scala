@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Parity._
@@ -386,7 +385,7 @@ object Similarity {
     * #198 stability probe trains full + half) can share one WITH list.
     * `trainWhere` restricts the TRAINING rows (init + Lloyd updates);
     * the final `bucketed$sfx` assignment always covers the full corpus. */
-  private def ivfChainBody(nCells: Int, iters: Int, sfx: String = "",
+  private def ivfChainBody(nCells: Int, iters: Int, sfx: String,
                            trainWhere: String = "TRUE"): String = {
     def score(emb: String) =
       s"(${sqlDotSeq(emb, "c.c")} - ${sqlHalfNormSeq("c.c")})"

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Parity._
@@ -17,10 +17,6 @@ import graft.sources.Tables
 object Similarity3 {
 
   private val MatryoshkaDims = Seq(8, 16, 32, 64)
-
-  /** r6 cosine between two (possibly prefix-sliced) float arrays. */
-  private def cos6(a: Column, b: Column): Column =
-    r(dotDec(a, b) / (sqrt(dotDec(a, a)) * sqrt(dotDec(b, b))), 6)
 
   /** #117 emb_matryoshka_eval: retrieval quality of PREFIX-truncated
     * embeddings (Matryoshka representation learning, Kusupati et al.

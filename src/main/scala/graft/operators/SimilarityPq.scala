@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.Parity._
 import graft.functions.VectorFunctions._
-import graft.sources.Tables
 
 /** #31g ann_pq — product-quantization ANN (Jégou et al. 2011, the
   * billion-vector workhorse under FAISS/ScaNN-style indexes).

@@ -501,8 +501,8 @@ object Sketches {
   /** Pair estimates from the ≤ types-row sketch table, with exact
     * distinct/intersection columns recomputed from the raw events for
     * the report. */
-  private[graft] def kmvFinalize(s: SparkSession, sk: DataFrame,
-                                 ev: DataFrame, k: Int = KmvK): DataFrame = {
+  private[graft] def kmvFinalize(sk: DataFrame, ev: DataFrame,
+                                 k: Int = KmvK): DataFrame = {
     val du = ev.select(col("event_type"), col("user_id")).distinct()
     val nd = du.groupBy(col("event_type")).agg(count(lit(1)).as("nd"))
     val ix = du.as("x").join(du.as("y"),
@@ -540,7 +540,7 @@ object Sketches {
   def eventsKmvOverlapDf(ev: DataFrame, k: Int = KmvK): DataFrame = {
     graft.functions.GraftFunctions.ensure(ev.sparkSession)
     val hashed = ev.select(col("event_type"), kmvHash.as("h")).distinct()
-    kmvFinalize(ev.sparkSession, kmvSketches(hashed, k), ev, k)
+    kmvFinalize(kmvSketches(hashed, k), ev, k)
   }
 
   /** Oracle: identical hashes, k-min lists (row_number ≤ k), union

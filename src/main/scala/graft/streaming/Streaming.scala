@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types._
 
 import graft.Parity._
 import graft.sources.Tables
@@ -71,9 +70,9 @@ object Streaming {
     * then drop the sink's temp view and delete any staging dir. The
     * per-invocation uniquely-named sinks would otherwise pin one
     * in-memory copy of their output per call (warmup + repeated bench
-    * passes) for the JVM lifetime, and the staged files accumulate in
-    * /tmp. The checkpoint blocks are ContextCleaner-reclaimed once the
-    * returned frame is unreachable. */
+    * passes) for the JVM lifetime, and the staged files accumulate
+    * under the scratch root. The checkpoint blocks are
+    * ContextCleaner-reclaimed once the returned frame is unreachable. */
   private[streaming] def sealResult(s: SparkSession, name: String, df: DataFrame,
                                     scratchDir: Option[String] = None): DataFrame = {
     val out = df.localCheckpoint()
@@ -98,6 +97,12 @@ object Streaming {
     }
     sealResult(s, name, finalize(s.table(name)))
   }
+
+  /** A fresh path under the session scratch root (`GraftSession.local`
+    * points `java.io.tmpdir` there) for a drain's staged input or
+    * output; [[sealResult]] / [[dropScratch]] delete it afterwards. */
+  private[streaming] def stagingPath(tag: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${System.nanoTime()}"
 
   private[graft] def dropScratch(s: SparkSession, name: String,
                                  scratchDir: Option[String]): Unit = {
@@ -241,20 +246,12 @@ object Streaming {
     * table, which is how production streaming top-k works (the heavy
     * fact scan is incremental, ranking is O(windows × types)). */
   def streamTopK(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    val name = s"topk_${System.nanoTime()}"
-    withStreamPartitions(s) {
-      val q = windowCounts(eventsStream(s, dir)).writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
     val w = Window.partitionBy("window_start")
       .orderBy(col("n").desc, col("event_type"))
-    sealResult(s, name, s.table(name)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("window_start"), col("event_type"), col("n"), col("rk")))
+    runRegisterStream(s, "topk", windowCounts(eventsStream(s, dir)),
+      _.withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= k)
+        .select(col("window_start"), col("event_type"), col("n"), col("rk")))
   }
 
   val streamTopKSql: String =
@@ -274,22 +271,17 @@ object Streaming {
     * the exact-count comparison run batch-side over the 64-row register
     * sink. This is the canonical "mergeable sketch over an unbounded
     * stream" pattern: O(m · groups) state, no raw retention. */
-  def streamHll(s: SparkSession, dir: String): DataFrame = {
-    val name = s"hll_${System.nanoTime()}"
-    withStreamPartitions(s) {
-      val q = graft.operators.Analytics2.hllRegisters(eventsStream(s, dir))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    val exact = Tables.events(s, dir).groupBy(col("event_type"))
-      .agg(countDistinct(col("user_id")).as("n_exact"))
-    sealResult(s, name, graft.operators.Analytics2.hllFinalize(s.table(name))
-      .join(broadcast(exact), Seq("event_type"))
-      .select(col("event_type"), col("n_exact"), col("hll_est"))
-      .orderBy(col("event_type")))
-  }
+  def streamHll(s: SparkSession, dir: String): DataFrame =
+    runRegisterStream(s, "hll",
+      graft.operators.Analytics2.hllRegisters(eventsStream(s, dir)),
+      { regs =>
+        val exact = Tables.events(s, dir).groupBy(col("event_type"))
+          .agg(countDistinct(col("user_id")).as("n_exact"))
+        graft.operators.Analytics2.hllFinalize(regs)
+          .join(broadcast(exact), Seq("event_type"))
+          .select(col("event_type"), col("n_exact"), col("hll_est"))
+          .orderBy(col("event_type"))
+      })
 
   /** #72b stream_cms: the portable Count-Min sketch maintained
     * incrementally — register counts ARE the streaming state (sum is the
@@ -298,20 +290,15 @@ object Streaming {
     * Point estimation + exact comparison run batch-side over the
     * ≤ depth×width register sink. Same mergeable-sketch contract as
     * [[streamHll]]: O(depth×width) state, no raw retention. */
-  def streamCms(s: SparkSession, dir: String): DataFrame = {
-    val name = s"cms_${System.nanoTime()}"
-    withStreamPartitions(s) {
-      val q = graft.operators.Sketches.cmsRegisters(eventsStream(s, dir))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    val ev = Tables.events(s, dir)
-    val exact = ev.groupBy(col("user_id")).agg(count(lit(1)).as("n_exact"))
-    sealResult(s, name, graft.operators.Sketches.cmsTopK(
-      s.table(name), ev.select(col("user_id")).distinct(), exact, 10))
-  }
+  def streamCms(s: SparkSession, dir: String): DataFrame =
+    runRegisterStream(s, "cms",
+      graft.operators.Sketches.cmsRegisters(eventsStream(s, dir)),
+      { regs =>
+        val ev = Tables.events(s, dir)
+        val exact = ev.groupBy(col("user_id")).agg(count(lit(1)).as("n_exact"))
+        graft.operators.Sketches.cmsTopK(
+          regs, ev.select(col("user_id")).distinct(), exact, 10)
+      })
 
   /** #73b stream_bloom: the portable bloom filter built incrementally —
     * per-word bit_or IS the streaming state (bit_or is idempotent AND
@@ -319,20 +306,12 @@ object Streaming {
     * no distinct is ever needed). The drained ≤4-word register sink is
     * bit-identical to the batch build; the probe + per-type report run
     * batch-side, checked by the batch oracle. */
-  def streamBloom(s: SparkSession, dir: String): DataFrame = {
-    val name = s"bloom_${System.nanoTime()}"
-    withStreamPartitions(s) {
-      val q = graft.operators.Sketches.bloomWords(
-          eventsStream(s, dir).filter(col("event_type") === "purchase")
-            .select(col("user_id")))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    sealResult(s, name,
-      graft.operators.Sketches.bloomProbeReport(s, dir, s.table(name)))
-  }
+  def streamBloom(s: SparkSession, dir: String): DataFrame =
+    runRegisterStream(s, "bloom",
+      graft.operators.Sketches.bloomWords(
+        eventsStream(s, dir).filter(col("event_type") === "purchase")
+          .select(col("user_id"))),
+      graft.operators.Sketches.bloomProbeReport(s, dir, _))
 
   /** #213 stream_ams_f2: the #212 AMS F₂ sketch maintained
     * incrementally — the signed counters Z_r ARE the streaming state
@@ -793,20 +772,12 @@ object Streaming {
     * oracle checks the full report exactly; the spine join + shares +
     * chi-square finalize runs batch-side over the 9-row sink. Same
     * mergeable-register contract as [[streamHll]]/[[streamCms]]. */
-  def streamBenford(s: SparkSession, dir: String): DataFrame = {
-    val name = s"benford_${System.nanoTime()}"
-    withStreamPartitions(s) {
-      val q = graft.operators.Round6Ops4.benfordDigitCounts(
-          eventsStream(s, dir)
-            .select(floor(col("value") * 100 + 0.5).cast("long").as("cents")))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    sealResult(s, name,
-      graft.operators.Round6Ops4.benfordReport(s, s.table(name)))
-  }
+  def streamBenford(s: SparkSession, dir: String): DataFrame =
+    runRegisterStream(s, "benford",
+      graft.operators.Round6Ops4.benfordDigitCounts(
+        eventsStream(s, dir)
+          .select(floor(col("value") * 100 + 0.5).cast("long").as("cents"))),
+      graft.operators.Round6Ops4.benfordReport(s, _))
 
   val streamBenfordSql: String = graft.operators.Round6Ops4.benfordReportSql(
     """
@@ -829,19 +800,12 @@ object Streaming {
     * streaming family: HLL (max), CMS (sum), bloom (bit_or),
     * histogram quantiles (sum). */
   def streamQuantile(s: SparkSession, dir: String): DataFrame = {
-    val name = s"qs_${System.nanoTime()}"
     val ranges = graft.operators.Sketches.qsRanges(
       Tables.events(s, dir).select(col("event_type"), col("value")))
-    withStreamPartitions(s) {
-      val q = graft.operators.Sketches.qsBinned(
-          eventsStream(s, dir).select(col("event_type"), col("value")), ranges)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    sealResult(s, name,
-      graft.operators.Sketches.qsFinalize(s.table(name), ranges))
+    runRegisterStream(s, "qs",
+      graft.operators.Sketches.qsBinned(
+        eventsStream(s, dir).select(col("event_type"), col("value")), ranges),
+      graft.operators.Sketches.qsFinalize(_, ranges))
   }
 
   /** Per-type KMV state transition: fold this batch's hashes into the
@@ -907,7 +871,7 @@ object Streaming {
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
-    sealResult(s, name, graft.operators.Sketches.kmvFinalize(s,
+    sealResult(s, name, graft.operators.Sketches.kmvFinalize(
       lastEmission(s.table(name)), Tables.events(s, dir)))
   }
 

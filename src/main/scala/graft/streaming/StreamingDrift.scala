@@ -5,9 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
-import graft.Parity._
-import graft.sources.Tables
-
 /** #120 stream_centroid_drift: the #113 embedding distribution-shift
   * monitor maintained INCREMENTALLY — per-label, per-component decimal
   * sums and cohort counts ARE the streaming state, folded by one

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
-import graft.sources.Tables
-
 /** #126 stream_holt: the #115 Holt level/trend smoother maintained
   * incrementally over the events stream. The recursion itself is
   * order-sensitive, so the state is NOT (l, b): it is the per-day

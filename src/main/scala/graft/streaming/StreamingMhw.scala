@@ -165,7 +165,7 @@ object StreamingMhw {
     import s.implicits._
     val sev = Mhw.severityChain(s, dir, 0.6)
     val d0 = sev.agg(min(col("d")).as("d0")).head.getDate(0)
-    val tmp = s"/tmp/graft_mhw_sev_${System.nanoTime()}"
+    val tmp = Streaming.stagingPath("mhw_sev")
     // parallel (multi-file) staging write: the file source reads any
     // number of part files, and per-batch chunking invariance is
     // property-pinned in StreamingMhwSpec — no reason to funnel the

@@ -107,7 +107,7 @@ object StreamingPeriodogram {
 
   def streamPeriodogram(s: SparkSession, dir: String): DataFrame = {
     val name = s"pg_${System.nanoTime()}"
-    val tmp = s"/tmp/graft_pg_daily_${System.nanoTime()}"
+    val tmp = Streaming.stagingPath("pg_daily")
     // stage the day-grain feed (the StreamingMhw severity contract):
     // multi-file write is fine — the sums commute across any chunking
     graft.operators.Mhw.daily(s, dir)

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.sources.Tables
-
 /** Streaming upsert sink via `foreachBatch` + dynamic partition
   * overwrite (SURVEY §2 #100): the canonical "stream maintains a keyed
   * snapshot table" pattern when no transactional table format (Delta/
@@ -164,7 +162,7 @@ object StreamingUpsert {
     * fixed point. */
   def streamUpsert(s: SparkSession, dir: String): DataFrame = {
     val name = s"upsert_${System.nanoTime()}"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_$name"
+    val path = Streaming.stagingPath("upsert")
     runUpsertStream(s, Streaming.eventsStream(s, dir), path)
     Streaming.sealResult(s, name,
       s.read.parquet(path)

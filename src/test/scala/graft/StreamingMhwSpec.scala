@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQueryListener, TestGroupState}
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import graft.operators.Mhw
 import graft.streaming.{MhwStreamState, SevIn, StreamingMhw}
@@ -174,5 +176,34 @@ class StreamingMhwSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     assert(streamed == oneShot)
     assert(streamed.nonEmpty)
+  }
+
+  test("staged drains read their file-source input from under java.io.tmpdir") {
+    import StreamingQueryListener._
+    val paths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit = {
+        val d = e.progress.sources(0).description
+        if (d.startsWith("FileStreamSource["))
+          paths.add(new org.apache.hadoop.fs.Path(
+            d.stripPrefix("FileStreamSource[").stripSuffix("]")).toUri.getPath)
+      }
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      Seq("stream_mhw_events", "stream_periodogram")
+        .foreach(n => SparkEntry.queries(n)(spark, sf).count())
+      val tmp = new java.io.File(System.getProperty("java.io.tmpdir")).getCanonicalPath
+      import scala.jdk.CollectionConverters._
+      eventually(timeout(Span(30, Seconds))) {
+        val staged = paths.asScala.toSeq.filter(p => p.contains("graft_mhw_sev_") ||
+                                                     p.contains("graft_pg_daily_"))
+        assert(staged.exists(_.contains("graft_mhw_sev_")))
+        assert(staged.exists(_.contains("graft_pg_daily_")))
+        staged.foreach(p => assert(p.startsWith(tmp + "/"), s"$p is not under $tmp"))
+      }
+    } finally spark.streams.removeListener(listener)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Events
+import graft.operators.{Events, Round6Ops4}
 import graft.streaming.Streaming
 
 /** Batch↔stream parity: the same logical operation executed through
@@ -33,6 +33,42 @@ class StreamingSpec extends AnyFunSuite {
     val stream = Streaming.runWindowCountsStream(spark, sf)
       .orderBy("window_start", "event_type").collect().toSeq
     assert(stream == batch)
+  }
+
+  /** Rows as the oracle check compares them: columns sorted by name,
+    * cells as strings, rows sorted. */
+  private def canonical(df: org.apache.spark.sql.DataFrame): (Seq[String], Seq[Seq[String]]) = {
+    val cols = df.columns.toSeq.sorted
+    val rows = df.select(cols.map(df.col): _*).collect().toSeq
+      .map(_.toSeq.map(String.valueOf))
+    (cols, rows.sortBy(_.mkString("\u0001")))
+  }
+
+  test("registry: each stream twin sharing a batch oracle returns the batch rows") {
+    val batchBySql = SparkEntry.registry.filterNot(_.name.startsWith("stream_"))
+      .groupBy(_.oracleSql)
+    val pairs = SparkEntry.registry.filter(_.name.startsWith("stream_"))
+      .flatMap(q => batchBySql.get(q.oracleSql).map(b => q -> b.head))
+    assert(pairs.size >= 28, s"only ${pairs.size} stream/batch pairs share an oracle")
+    val diverged = pairs.filter { case (stream, batch) =>
+      canonical(stream.build(spark, sf)) != canonical(batch.build(spark, sf))
+    }.map { case (stream, batch) => s"${stream.name} vs ${batch.name}" }
+    assert(diverged.isEmpty, s"stream twins diverge: ${diverged.mkString(", ")}")
+  }
+
+  test("stream_topk and stream_benford: drains equal their batch expressions") {
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    val ev = graft.sources.Tables.events(spark, sf)
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("window_start")
+      .orderBy(col("n").desc, col("event_type"))
+    val topk = Streaming.windowCounts(ev)
+      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
+      .select("window_start", "event_type", "n", "rk")
+    assert(rows(Streaming.streamTopK(spark, sf)) == rows(topk))
+    val benford = Round6Ops4.benfordReport(spark, Round6Ops4.benfordDigitCounts(
+      ev.select(floor(col("value") * 100 + 0.5).cast("long").as("cents"))))
+    assert(rows(Streaming.streamBenford(spark, sf)) == rows(benford))
   }
 
   test("stream_enrich_dim: stream-static broadcast join equals batch run") {
@@ -288,7 +324,7 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     val foldSk = sk.collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     assert(foldSk == batchSk)
-    val streamed = Sketches.kmvFinalize(spark, sk, ev)
+    val streamed = Sketches.kmvFinalize(sk, ev)
       .collect().map(_.toSeq).toSet
     val batch = Sketches.eventsKmvOverlapDf(ev).collect().map(_.toSeq).toSet
     assert(streamed == batch)
