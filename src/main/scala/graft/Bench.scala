@@ -3,10 +3,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // optional comma-separated subset for local iteration (driver sets none)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val spark = GraftSession.local(cpus)
+    val settler = new BenchKit.Settler
+    val spark = GraftSession.local(GraftSession.cpus)
     // SPARK_GRAFT_POSTURE=large runs the whole suite under the 100 TB
     // deployment knobs (no forced key-dim broadcasts, no exact-audit
     // columns, sketch percentiles) — the end-to-end proof that the three
@@ -27,98 +27,28 @@ object Bench {
     // Untimed warmup pass over the measured SF: pays JIT, whole-stage
     // codegen (Janino), OS page-cache population, and operator-cache
     // materialization once, so the timed pass measures steady-state
-    // operator throughput. Disable with SPARK_GRAFT_WARMUP=0.
+    // operator throughput. The C2 queue it leaves behind drains in the
+    // settle before each timed sweep.
     // deterministic name order: per-round numbers stay comparable (hash
     // order would reshuffle which queries inherit warmup/GC debt)
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0") {
-      queries.foreach { case (_, fn) =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      }
+    queries.foreach { case (_, fn) =>
+      try fn(spark, sfDir).count() catch { case _: Throwable => () }
     }
-    // ~200 distinct codegen'd plans enqueue thousands of C2 jobs; while
-    // the queue drains, hot loops run at tier 1 and whichever queries
-    // execute during the storm measure 40-60x slow (a warmup at a
-    // smaller SF doesn't help: AQE picks different physical stages at
-    // the measured SF, so their classes still compile fresh). Wait for
-    // the JIT to go quiescent — cumulative compilation time growing
-    // < 100 ms/s for 3 consecutive seconds — before any timed sweep.
-    // GC happens HERE, between sweeps, not between queries: an explicit
-    // gc discovers every dead RDD/broadcast/shuffle weak reference at
-    // once, and the ContextCleaner's burst of removal RPCs contends
-    // with the scheduler — per-query gc() made the most job-intensive
-    // queries (iterative CC) measure 10x slow late in the suite. In the
-    // settle window the churn is free.
-    val jit = java.lang.management.ManagementFactory.getCompilationMXBean
-    // Host-load reader: 1-min /proc/loadavg. Timed artifacts produced on
-    // a loaded host overstate queries 2-4x (round-10's ann_pq: 10.04 s
-    // committed vs 3.35 s on the same tree) — the bench now RECORDS the
-    // load at start/timed/end so a reader can attribute outliers, and
-    // optionally GATES the timed sweep (SPARK_GRAFT_LOAD_GATE=<max>)
-    // by waiting, during the idle settle window, for external load to
-    // drain below the threshold before any timing starts.
-    def loadavg(): Double =
-      try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    val loadStart = loadavg()
-    // Gate defaults ON at 2.0 (round-11 Wrong #1: the opt-in gate went
-    // unset on the run of record and a loaded-host artifact was one env
-    // var away). SPARK_GRAFT_LOAD_GATE=<max> widens/narrows; <= 0 or
-    // "off" disables. Gate waits and timeouts are RECORDED in the JSON
-    // so a loaded artifact can no longer be produced silently.
-    val loadGate = sys.env.get("SPARK_GRAFT_LOAD_GATE") match {
-      case Some("off")                  => None
-      case Some(v) if v.toDouble <= 0.0 => None
-      case Some(v)                      => Some(v.toDouble)
-      case None                         => Some(2.0)
-    }
-    var gateWaitS = 0
-    var gateTimedOut = false
-    def settle(maxWaitS: Int = 300): Unit = {
-      System.gc()
-      var last = jit.getTotalCompilationTime
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < maxWaitS) {
-        Thread.sleep(1000); waited += 1
-        val cur = jit.getTotalCompilationTime
-        if (cur - last < 100) stable += 1 else stable = 0
-        last = cur
-      }
-      // the JVM is idle here, so loadavg decays toward EXTERNAL load —
-      // wait (bounded) for it to clear the gate before timing
-      loadGate.foreach { g =>
-        var gw = 0
-        while (loadavg() > g && gw < maxWaitS) { Thread.sleep(5000); gw += 5 }
-        gateWaitS += gw
-        if (loadavg() > g) gateTimedOut = true
-        System.err.println(s"load gate: ${loadavg()} (threshold $g) after ${gw}s" +
-          (if (loadavg() > g) " TIMED OUT" else ""))
-      }
-      System.err.println(s"bench settled after ${waited}s, loadavg=${loadavg()}")
-    }
-    settle()
-    val loadTimed = loadavg()
-    // A failed query must NOT masquerade as a fast pass: time() records
-    // the error; failed queries report -1 s and land in the errors map.
+    val loadStart = BenchKit.loadavg()
+    settler.settle()
+    val loadTimed = BenchKit.loadavg()
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def time(name: String, fn: (SparkSession, String) => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
-        errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        -1.0
-      }
-    }
+    def time(name: String, fn: (SparkSession, String) => DataFrame): Double =
+      BenchKit.timeOrRecord(errors, name)(fn(spark, sfDir).count())
     // Report the per-query min of two timings: residual compile/GC
     // noise lands on individual queries but never the same one twice.
     // The second sweep only re-times queries the first sweep measured
     // above 1 s — a sub-second first timing is already noise-free, and
     // skipping the rest keeps the suite's wall clock bounded.
     val p1 = queries.map { case (name, fn) => name -> time(name, fn) }
-    settle()
+    settler.settle()
     val results = p1.map { case (name, t1) =>
       if (t1 <= 1.0) name -> t1
       else name -> math.min(t1, time(name, SparkEntry.queries(name)))
@@ -147,16 +77,11 @@ object Bench {
     val wallRatio = if (total > 0) wallSec / total else -1.0
     val loadJson =
       s"""{"start":${fmt(loadStart, 2)},"timed":${fmt(loadTimed, 2)},""" +
-      s""""end":${fmt(loadavg(), 2)},"gate":""" +
-      loadGate.map(g =>
-        s"""{"threshold":${fmt(g, 1)},"wait_s":$gateWaitS,"timed_out":$gateTimedOut}""")
-        .getOrElse("\"disabled\"") + "}"
+      s""""end":${fmt(BenchKit.loadavg(), 2)},"gate":${settler.gateJson}}"""
     def queriesJson(dp: Int): String = timed
       .map { case (k, v) => "\"" + k + "\":" + fmt(v, dp) }
       .mkString("{", ",", "}")
-    val errJson = errors
-      .map { case (k, v) => "\"" + k + "\":\"" + v.replaceAll("[\"\\\\\\n\\r\\t]", " ") + "\"" }
-      .mkString("{", ",", "}")
+    val errJson = BenchKit.jsonObject(errors)
     // operator-cache + block-residency diagnostics: settles whether a
     // slow cached-family query reused its persisted tables (hits>0,
     // evictions=0) and whether the BlockManager spilled them to disk
@@ -166,10 +91,9 @@ object Bench {
     val storageJson = Caches.residency(spark)
       .map { case (n, mem, disk, frac) =>
         // RDD names are plan strings: multi-line, arbitrarily long —
-        // keep the first line only and drop every control char, or the
-        // emitted file is not valid JSON (BENCH_FULL round-5 regression)
-        val clean = n.takeWhile(_ != '\n').replaceAll("[\"\\\\\\p{Cntrl}]", "").take(120)
-        "{\"rdd\":\"" + clean + "\",\"mem\":" + mem +
+        // keep the first line only
+        "{\"rdd\":" + BenchKit.jsonString(n.takeWhile(_ != '\n').take(120)) +
+        ",\"mem\":" + mem +
         ",\"disk\":" + disk + ",\"cached_frac\":" + fmt(frac, 3) + "}" }
       .mkString("[", ",", "]")
     def line(dp: Int): String =
@@ -189,8 +113,7 @@ object Bench {
     // the file artifact additionally carries block residency (too long
     // for the tail-captured stdout line)
     val fileLine = line(6).dropRight(1) + s""","storage":$storageJson}"""
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), fileLine + "\n")
-    catch { case e: Throwable => System.err.println(s"bench file write failed: $e") }
+    BenchKit.write(outFile, fileLine)
     // Human/grep copy of the full line first (may be tail-truncated —
     // that's fine, it is not the parse target) ...
     println(line(3))

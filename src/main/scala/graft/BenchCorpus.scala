@@ -109,9 +109,10 @@ object BenchCorpus {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scale = sys.env.getOrElse("SPARK_GRAFT_CORPUS_SCALE", "1").toInt
+    val settler = new BenchKit.Settler
     val spark = GraftSession.local(cpus)
 
     val dir = stage(spark, base, scale)
@@ -122,111 +123,33 @@ object BenchCorpus {
     // shingle/signature fans are ~an order of magnitude over the raw
     // text bytes — size the shuffle to the staged volume, not the core
     // count (the BENCH_GRID rule)
-    val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE") match {
-      case Some(v) => spark.conf.set("spark.sql.shuffle.partitions", v); v.toInt
-      case None    => GraftSession.autoScaleShuffle(docs, amplification = 8.0)
-    }
+    val shufflePartitions = GraftSession.autoScaleShuffle(docs, amplification = 8.0)
 
-    def loadavg(): Double =
-      try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    val loadGate = sys.env.get("SPARK_GRAFT_LOAD_GATE") match {
-      case Some("off")                  => None
-      case Some(v) if v.toDouble <= 0.0 => None
-      case Some(v)                      => Some(v.toDouble)
-      case None                         => Some(2.0)
-    }
-    var gateWaitS = 0
-    var gateTimedOut = false
-    val jit = java.lang.management.ManagementFactory.getCompilationMXBean
-    def settle(maxWaitS: Int = 240): Unit = {
-      System.gc()
-      var last = jit.getTotalCompilationTime; var stable = 0; var waited = 0
-      while (stable < 3 && waited < maxWaitS) {
-        Thread.sleep(1000); waited += 1
-        val cur = jit.getTotalCompilationTime
-        if (cur - last < 100) stable += 1 else stable = 0
-        last = cur
-      }
-      loadGate.foreach { g =>
-        var gw = 0
-        while (loadavg() > g && gw < maxWaitS) { Thread.sleep(5000); gw += 5 }
-        gateWaitS += gw
-        if (loadavg() > g) gateTimedOut = true
-      }
-      System.err.println(s"corpus bench settled after ${waited}s, loadavg=${loadavg()}")
-    }
-
-    // task-metric accumulator (the BENCH_GRID listener): spill is the
-    // headline counter — the claim under test is zero spill at ×30
-    val tMem = new java.util.concurrent.atomic.AtomicLong
-    val tDisk = new java.util.concurrent.atomic.AtomicLong
-    val tShufR = new java.util.concurrent.atomic.AtomicLong
-    val tShufW = new java.util.concurrent.atomic.AtomicLong
-    val tIn = new java.util.concurrent.atomic.AtomicLong
-    val tRun = new java.util.concurrent.atomic.AtomicLong
-    val tGc = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            tMem.addAndGet(m.memoryBytesSpilled)
-            tDisk.addAndGet(m.diskBytesSpilled)
-            tShufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            tShufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            tIn.addAndGet(m.inputMetrics.bytesRead)
-            tRun.addAndGet(m.executorRunTime)
-            tGc.addAndGet(m.jvmGCTime): Unit
-          }
-        }
-      })
-    def snap(): Map[String, Long] = {
-      Thread.sleep(1500)
-      Map("spill_mem" -> tMem.get, "spill_disk" -> tDisk.get,
-          "shuffle_read" -> tShufR.get, "shuffle_write" -> tShufW.get,
-          "input_bytes" -> tIn.get, "run_ms" -> tRun.get, "gc_ms" -> tGc.get)
-    }
-    def delta(a: Map[String, Long], b: Map[String, Long]): String =
-      a.keys.toSeq.sorted
-        .map(k => s""""$k":${b(k) - a(k)}""").mkString("{", ",", "}")
+    // spill is the headline task counter — the claim under test is zero
+    // spill at ×30
+    val tasks = new BenchKit.TaskMetricsListener(spark.sparkContext)
 
     val queries = Flagships.map(n => n -> SparkEntry.queries(n))
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def sweep(tag: String): Seq[(String, Double, String)] =
       queries.map { case (name, fn) =>
-        val m0 = snap()
-        val t0 = System.nanoTime()
-        val t =
-          try { fn(spark, dir).count(); (System.nanoTime() - t0) / 1e9 }
-          catch { case e: Throwable =>
-            errors(s"$tag:$name") =
-              Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-            -1.0
-          }
-        (name, t, delta(m0, snap()))
+        val m0 = tasks.snapshot()
+        val t = BenchKit.timeOrRecord(errors, s"$tag:$name")(fn(spark, dir).count())
+        (name, t, BenchKit.jsonObject(tasks.delta(m0)))
       }
 
-    val loadStart = loadavg()
-    settle()
-    val loadCold = loadavg()
+    val loadStart = BenchKit.loadavg()
+    settler.settle()
+    val loadCold = BenchKit.loadavg()
     val cold = sweep("cold")
-    settle()
-    val loadWarm = loadavg()
+    settler.settle()
+    val loadWarm = BenchKit.loadavg()
     val warm = sweep("warm")
 
     def fmt(v: Double): String = f"$v%.3f"
     def sweepJson(rows: Seq[(String, Double, String)]): String = rows
       .map { case (n, t, m) => s""""$n":{"sec":${fmt(t)},"metrics":$m}""" }
       .mkString("{", ",", "}")
-    val errJson = errors
-      .map { case (k, v) => "\"" + k + "\":\"" + v.replaceAll("[\"\\\\\\n\\r\\t]", " ") + "\"" }
-      .mkString("{", ",", "}")
-    val gateJson = loadGate.map(g =>
-      s"""{"threshold":$g,"wait_s":$gateWaitS,"timed_out":$gateTimedOut}""")
-      .getOrElse("\"disabled\"")
     val coldTotal = cold.filter(_._2 >= 0).map(_._2).sum
     val warmTotal = warm.filter(_._2 >= 0).map(_._2).sum
     val json =
@@ -235,16 +158,13 @@ object BenchCorpus {
       s""""cpus":"$cpus","shuffle_partitions":$shufflePartitions,""" +
       s""""cold_total_sec":${fmt(coldTotal)},"warm_total_sec":${fmt(warmTotal)},""" +
       s""""cold":${sweepJson(cold)},"warm":${sweepJson(warm)},""" +
-      s""""n_errors":${errors.size},"errors":$errJson,""" +
+      s""""n_errors":${errors.size},"errors":${BenchKit.jsonObject(errors)},""" +
       s""""loadavg":{"start":$loadStart,"cold":$loadCold,"warm":$loadWarm,""" +
-      s""""end":${loadavg()},"gate":$gateJson}}"""
+      s""""end":${BenchKit.loadavg()},"gate":${settler.gateJson}}}"""
     val outDefault =
       if (scale == 1) "/root/repo/BENCH_CORPUS.json"
       else s"/root/repo/BENCH_CORPUS_x$scale.json"
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_CORPUS_OUT", outDefault)),
-      json + "\n")
-    catch { case e: Throwable => System.err.println(s"corpus bench write failed: $e") }
+    BenchKit.write(sys.env.getOrElse("SPARK_GRAFT_CORPUS_OUT", outDefault), json)
     println(json)
     Caches.clear(spark)
     spark.stop()

@@ -25,7 +25,8 @@ import graft.time.DoyFunctions
   */
 object BenchGrid {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
+    val settler = new BenchKit.Settler
     val spark = GraftSession.local(cpus)
 
     // SPARK_GRAFT_GRID_SCALE multiplies the cell count (1 = the
@@ -42,11 +43,6 @@ object BenchGrid {
     sys.env.get("SPARK_GRAFT_KEYDIM_BCAST")
       .foreach(v => spark.conf.set(Hints.BroadcastKeyDims, v))
     val keyDimBcast = spark.conf.get(Hints.BroadcastKeyDims, "true")
-    // Shuffle partitions scale with data volume, not core count — the
-    // rule is automatic (GraftSession.autoScaleShuffle, applied after
-    // the input materializes below); SPARK_GRAFT_SHUFFLE remains as an
-    // explicit override for A/B runs.
-    val shuffleOverride = sys.env.get("SPARK_GRAFT_SHUFFLE")
     val nCells = 17 * 17 * scale
     val d0 = java.sql.Date.valueOf("1982-01-01")
     val nDays = java.time.temporal.ChronoUnit.DAYS.between(
@@ -87,24 +83,16 @@ object BenchGrid {
     // Volume rule: size shuffle partitions to the materialized input ×
     // the pooling chain's in-stage fan-out (each daily row explodes to
     // 2·hw+1 window centers whose collect_list partials are resident in
-    // the aggregation task). This is what turned the hand-set
-    // SPARK_GRAFT_SHUFFLE lesson of the ×30/×100 runs into a rule.
-    val shufflePartitions = shuffleOverride match {
-      case Some(v) => spark.conf.set("spark.sql.shuffle.partitions", v); v.toInt
-      case None    => GraftSession.autoScaleShuffle(dl, amplification = 11.0)
-    }
+    // the aggregation task) — the rule the hand-set partition counts of
+    // the ×30/×100 runs turned into.
+    val shufflePartitions = GraftSession.autoScaleShuffle(dl, amplification = 11.0)
 
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime()
       val r = f
       (r, (System.nanoTime() - t0) / 1e9)
     }
-    // host-load attribution for the timed artifact (see Bench.loadavg)
-    def loadavg(): Double =
-      try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    val loadStart = loadavg()
+    val loadStart = BenchKit.loadavg()
 
     // Task-level metric accumulator (the ×100 IO-wall evidence): spill
     // bytes, shuffle IO, input bytes, executor run/GC time per pass.
@@ -112,38 +100,7 @@ object BenchGrid {
     // RAM, so the WARM pass re-reads persisted blocks from disk and
     // sort-spills against the same device — the hypothesis for warm ≥
     // cold on the single-host grid; these counters are the test.
-    val tMem = new java.util.concurrent.atomic.AtomicLong
-    val tDisk = new java.util.concurrent.atomic.AtomicLong
-    val tShufR = new java.util.concurrent.atomic.AtomicLong
-    val tShufW = new java.util.concurrent.atomic.AtomicLong
-    val tIn = new java.util.concurrent.atomic.AtomicLong
-    val tRun = new java.util.concurrent.atomic.AtomicLong
-    val tGc = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            tMem.addAndGet(m.memoryBytesSpilled)
-            tDisk.addAndGet(m.diskBytesSpilled)
-            tShufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            tShufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            tIn.addAndGet(m.inputMetrics.bytesRead)
-            tRun.addAndGet(m.executorRunTime)
-            tGc.addAndGet(m.jvmGCTime): Unit
-          }
-        }
-      })
-    def metricsSnap(): Map[String, Long] = {
-      Thread.sleep(2000) // listener bus drains async; tasks are done
-      Map("spill_mem" -> tMem.get, "spill_disk" -> tDisk.get,
-          "shuffle_read" -> tShufR.get, "shuffle_write" -> tShufW.get,
-          "input_bytes" -> tIn.get, "run_ms" -> tRun.get, "gc_ms" -> tGc.get)
-    }
-    def metricsDelta(a: Map[String, Long], b: Map[String, Long]): String =
-      a.keys.toSeq.sorted
-        .map(k => s""""$k":${b(k) - a(k)}""").mkString("{", ",", "}")
+    val tasks = new BenchKit.TaskMetricsListener(spark.sparkContext)
     // block residency of everything persisted (is the input on disk?)
     def storageSnap(): String = {
       val infos = spark.sparkContext.getRDDStorageInfo
@@ -189,41 +146,30 @@ object BenchGrid {
     // cost (numpy kernels ship precompiled), so pass 2 reports the
     // steady state any long-lived Spark driver/cluster runs at: same
     // plans, warm code cache, JIT settled (Bench's protocol).
-    val m0 = metricsSnap()
-    val loadCold0 = loadavg()
+    val m0 = tasks.snapshot()
+    val loadCold0 = BenchKit.loadavg()
     val (nEvents, cClim, cSev, cEvents, scratch1) = runChain()
-    val loadCold1 = loadavg()
-    val m1 = metricsSnap()
+    val loadCold1 = BenchKit.loadavg()
+    val coldMetrics = tasks.delta(m0)
     val coldStorage = storageSnap()
     scratch1.foreach(_.unpersist(false))
-    val jit = java.lang.management.ManagementFactory.getCompilationMXBean
-    System.gc()
-    var last = jit.getTotalCompilationTime; var stable = 0; var waited = 0
-    while (stable < 3 && waited < 120) {
-      Thread.sleep(1000); waited += 1
-      val cur = jit.getTotalCompilationTime
-      if (cur - last < 100) stable += 1 else stable = 0
-      last = cur
-    }
-    val m2 = metricsSnap()
-    val loadWarm0 = loadavg()
+    settler.settle()
+    val m2 = tasks.snapshot()
+    val loadWarm0 = BenchKit.loadavg()
     val (nEvents2, wClim, wSev, wEvents, _) = runChain()
-    val loadWarm1 = loadavg()
-    val m3 = metricsSnap()
+    val loadWarm1 = BenchKit.loadavg()
+    val warmMetrics = tasks.delta(m2)
     val warmStorage = storageSnap()
     require(nEvents2 == nEvents, s"non-deterministic event count: $nEvents vs $nEvents2")
 
     val coldTotal = cClim + cSev + cEvents
     val warmTotal = wClim + wSev + wEvents
     val json =
-      f"""{"grid_cells":$nCells,"days":$nDays,"points":$nPoints,"events":$nEvents,"cold":{"sec_clim_thresh":$cClim%.3f,"sec_severity":$cSev%.3f,"sec_events":$cEvents%.3f,"sec_total":$coldTotal%.3f},"warm":{"sec_clim_thresh":$wClim%.3f,"sec_severity":$wSev%.3f,"sec_events":$wEvents%.3f,"sec_total":$warmTotal%.3f},"reference_notebook_sec":{"clim_thresh":5.9},"cpus":"$cpus","broadcast_key_dims":$keyDimBcast,"shuffle_partitions":$shufflePartitions,"cold_task_metrics":${metricsDelta(m0, m1)},"warm_task_metrics":${metricsDelta(m2, m3)},"cold_storage":$coldStorage,"warm_storage":$warmStorage,"loadavg":{"start":$loadStart,"cold0":$loadCold0,"cold1":$loadCold1,"warm0":$loadWarm0,"warm1":$loadWarm1,"end":${loadavg()}}}"""
+      f"""{"grid_cells":$nCells,"days":$nDays,"points":$nPoints,"events":$nEvents,"cold":{"sec_clim_thresh":$cClim%.3f,"sec_severity":$cSev%.3f,"sec_events":$cEvents%.3f,"sec_total":$coldTotal%.3f},"warm":{"sec_clim_thresh":$wClim%.3f,"sec_severity":$wSev%.3f,"sec_events":$wEvents%.3f,"sec_total":$warmTotal%.3f},"reference_notebook_sec":{"clim_thresh":5.9},"cpus":"$cpus","broadcast_key_dims":$keyDimBcast,"shuffle_partitions":$shufflePartitions,"cold_task_metrics":${BenchKit.jsonObject(coldMetrics)},"warm_task_metrics":${BenchKit.jsonObject(warmMetrics)},"cold_storage":$coldStorage,"warm_storage":$warmStorage,"loadavg":{"start":$loadStart,"cold0":$loadCold0,"cold1":$loadCold1,"warm0":$loadWarm0,"warm1":$loadWarm1,"end":${BenchKit.loadavg()},"gate":${settler.gateJson}}}"""
     val outDefault =
       if (scale == 1) "/root/repo/BENCH_GRID.json"
       else s"/root/repo/BENCH_GRID_x$scale.json"
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_GRID_OUT", outDefault)),
-      json + "\n")
-    catch { case e: Throwable => System.err.println(s"grid bench write failed: $e") }
+    BenchKit.write(sys.env.getOrElse("SPARK_GRAFT_GRID_OUT", outDefault), json)
     println(json)
     Caches.clear(spark)
     spark.stop()

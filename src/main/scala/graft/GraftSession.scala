@@ -15,6 +15,11 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Local core count of the mains: `SPARK_GRAFT_CPUS`, default every
+    * core of the machine. */
+  val cpus: String = sys.env.getOrElse(
+    "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
   /** Post-amplification bytes one shuffle/aggregation task should hold
     * in memory. 256 MB leaves headroom under the default 60%-of-heap
     * execution fraction with 32 concurrent tasks on a 128 GiB local JVM,
@@ -162,23 +167,10 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing posture. parallelismFirst=false (coalesce purely
-      // to the 64 MB advisory size) was tried as round-13's change 2 on
-      // the §2.2 many-tiny-blocks argument and MEASURED A CLEAN LOSS on
-      // this suite: a controlled 20-query A/B (bench_out/ab_pf_*.json,
-      // same host, load-gated) showed ZERO winners and 1-1.5 s/query
-      // regressions exactly where a byte-small exchange feeds a
-      // CPU-DENSE stage (dedup_containment's shingle self-join 0.90 →
-      // 2.38 s, supplier_single_source's part windows 1.42 → 2.75 s):
-      // size-only coalescing cannot see post-shuffle compute density,
-      // only bytes. Keep Spark's default (floor coalescing at
-      // minPartitionSize to preserve parallelism); a deployment whose
-      // small-exchange task overhead actually dominates (thousands of
-      // reducers × many queries) can flip it via env without a code
-      // change. Result-safe either way: every order-sensitive aggregate
-      // accumulates in DECIMAL (Parity.dsum).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
+      // coalescePartitions.parallelismFirst keeps Spark's default (true):
+      // size-only coalescing measured a clean loss in round 13
+      // (bench_out/ab_pf_*.json: zero winners, 1-1.5 s/query regressions
+      // where a byte-small exchange feeds a CPU-dense stage)
       // static conf, must be set before the first session: the default
       // 100-entry generated-class cache thrashes under this library's
       // ~200 distinct codegen'd plans (Bench warmup + timed passes),

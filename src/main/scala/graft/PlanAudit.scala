@@ -68,7 +68,7 @@ object PlanAudit {
     // decided via system property before the JVM's first session)
     if (!sys.props.contains("SPARK_GRAFT_MAX_PLAN_STR"))
       sys.props("SPARK_GRAFT_MAX_PLAN_STR") = (64 << 20).toString
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = GraftSession.local(GraftSession.cpus)
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
     val (streamQs, batchQs) = names.partition(_._1.startsWith("stream_"))
 

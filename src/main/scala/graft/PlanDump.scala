@@ -21,7 +21,7 @@ object PlanDump {
     val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
     if (!sys.props.contains("SPARK_GRAFT_MAX_PLAN_STR"))
       sys.props("SPARK_GRAFT_MAX_PLAN_STR") = (64 << 20).toString
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = GraftSession.local(GraftSession.cpus)
     if (sys.env.getOrElse("SPARK_GRAFT_PLAN_MODE", "audit") != "deployed")
       spark.conf.set(Caches.PlanAuditConf, "true")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

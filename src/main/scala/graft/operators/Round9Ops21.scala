@@ -72,7 +72,7 @@ object Round9Ops21 {
     * state (≤|types|×(B+1) rows). Replica −1 carries the plain base
     * moments (same merge algebra, one register stream).
     *
-    * Fan economics (ProfBootstrap, sf0.1): one md5 feeds EIGHT
+    * Fan economics (profiled at sf0.1): one md5 feeds EIGHT
     * replicas (8 disjoint 16-bit uniforms per 128-bit digest —
     * ⌈reps/8⌉ hashes per row, any reps value), and the weight is a
     * 4-char string compare against [[PoisCdfHex]]. But the dominant

@@ -36,7 +36,7 @@ object Round9Ops7 {
   def embCkaHalvesDf(input: DataFrame, d: Int = 8): DataFrame = {
     // pre-fan repartition: the three covariance fans below each explode
     // d² product rows per vector and would otherwise inherit the scan's
-    // (possibly single-split) partitioning — the ProfBootstrap finding
+    // (possibly single-split) partitioning — see Round9Ops21.bootstrapRegisters
     val parts = input.sparkSession.conf
       .get("spark.sql.shuffle.partitions").toInt
     val slices = input.select(

@@ -38,8 +38,9 @@ object Round9Ops9 {
   def embCkaMatrixDf(input0: DataFrame, d: Int = 4, blocks: Int = 8): DataFrame = {
     val n = d * blocks
     // the n²-per-vector product fan inherits the SCAN's partitioning —
-    // spread it before exploding (the ProfBootstrap single-split
-    // finding; the pre-fan shuffle moves 1/n² of the fanned rows)
+    // spread it before exploding (the single-split fan recorded at
+    // Round9Ops21.bootstrapRegisters; the pre-fan shuffle moves 1/n² of
+    // the fanned rows)
     val parts = input0.sparkSession.conf
       .get("spark.sql.shuffle.partitions").toInt
     val input = input0.select(col("vec_id"), col("embedding"))

@@ -71,7 +71,7 @@ object SubstringDedup {
       // pre-repartition before the rolling hash + position explode —
       // the fan inherits the scan's (possibly single-split)
       // partitioning, and the persisted gram table keeps the spread
-      // for every consumer (the ProfBootstrap finding)
+      // for every consumer (see Round9Ops21.bootstrapRegisters)
       val parts = docs.sparkSession.conf
         .get("spark.sql.shuffle.partitions").toInt
       docs.select(col("doc_id"), col("text")).repartition(parts)

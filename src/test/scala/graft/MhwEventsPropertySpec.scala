@@ -3,7 +3,6 @@ package graft
 import java.sql.Date
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Mhw

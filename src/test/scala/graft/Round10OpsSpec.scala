@@ -114,7 +114,6 @@ class Round10OpsSpec extends AnyFunSuite {
   }
 
   test("permutation entropy: monotone series reads 0, alternating reads ln2/ln6") {
-    import org.apache.spark.sql.functions._
     val d0 = java.sql.Date.valueOf("2024-01-01")
     def day(n: Int) = new java.sql.Date(d0.getTime + n * 86400000L)
     val dl = (

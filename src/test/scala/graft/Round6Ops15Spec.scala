@@ -79,7 +79,6 @@ class Round6Ops15Spec extends AnyFunSuite {
   test("seasonal anomaly: flat z-screen baseline would flag every Saturday") {
     // documents the reason this operator exists: on the same synthetic
     // series the UNADJUSTED 3-sigma screen flags the weekly peaks
-    import spark.implicits._
     val base = java.time.LocalDate.of(2024, 1, 1)
     val vs = (0 until 56).map { d =>
       if (base.plusDays(d).getDayOfWeek == java.time.DayOfWeek.SATURDAY) 100.0

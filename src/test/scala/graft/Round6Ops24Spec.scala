@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Round6Ops12, Round6Ops14, Round6Ops24}
+import graft.operators.Round6Ops24
 
 /** Invariants + reconciliations for round-6 batch 41 (#266-#267). */
 class Round6Ops24Spec extends AnyFunSuite {

@@ -9,7 +9,6 @@ import graft.operators.{Round6Ops3, Similarity3, TextOps2}
 class Round6Ops3Spec extends AnyFunSuite {
 
   lazy val spark = GraftSession.local("4")
-  import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
 

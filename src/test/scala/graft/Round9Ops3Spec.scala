@@ -1,10 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Round9Ops2, Round9Ops3}
+import graft.operators.Round9Ops3
 
 /** Round-9 batch-3 operators (#306-#309): spectral entropy, RAKE
   * keyphrases, classifier-scored sampling, and the scoring stream. */

@@ -1,6 +1,6 @@
 package graft
 
-import java.sql.{Date, Timestamp}
+import java.sql.Date
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
