@@ -56,13 +56,16 @@ object Hints {
   def exactAudit(s: SparkSession): Boolean =
     s.conf.get(ExactAudit, "true").toBoolean
 
-  /** Conf key switching the exact-percentile family (climatology
-    * thresholds, per-group quantiles) to `approx_percentile` sketches.
-    * Default false: exact percentiles at test SF, bit-matching the
-    * DuckDB oracle. At extreme per-key sample counts the exact path
-    * materializes every sample in the percentile buffer; a deployment
-    * sets true and the family degrades to mergeable KLL-style sketches
-    * with bounded memory (accuracy spec-pinned, plan spec-pinned). */
+  /** Conf key switching the per-group quantile family (event-value,
+    * lateness, lag and duration percentiles, robust bounds, RFM/Pareto
+    * boundaries) to `approx_percentile` sketches; read only by
+    * [[Parity.quantiles]]. Default false: exact percentiles at test SF,
+    * bit-matching the DuckDB oracle. At extreme per-group sample counts
+    * the exact path materializes every sample in the percentile buffer;
+    * a deployment sets true and the family degrades to mergeable
+    * sketches with bounded memory (accuracy spec-pinned, plan
+    * spec-pinned). Climatology thresholds stay exact: their pooled
+    * groups are years-bounded (see Mhw.pooledQuantile). */
   val ApproxQuantiles = "spark.graft.approxQuantiles"
 
   def approxQuantiles(s: SparkSession): Boolean =

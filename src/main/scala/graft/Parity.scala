@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataTypes
 
@@ -22,7 +22,8 @@ import org.apache.spark.sql.types.DataTypes
   * factor, not a shuffle.
   */
 object Parity {
-  private val Dec = DataTypes.createDecimalType(38, 10)
+  /** The exact accumulator type of every order-independent double sum. */
+  private[graft] val Dec = DataTypes.createDecimalType(38, 10)
 
   /** Event-time epoch micros, robust to the column's timestamp flavor.
     * The driver's parquet has shipped `ts` as int64-nanos, TIMESTAMP µs
@@ -84,7 +85,7 @@ object Parity {
     * (instead of Spark's `percentile`) so the oracle engine computes
     * the bit-identical IEEE expression. The single definition every
     * exact-quantile operator (threshold chain, RFM/Pareto boundaries,
-    * event-duration percentiles) shares. */
+    * event-duration percentiles, medians, bootstrap intervals) shares. */
   def linQuantile(vs: Column, p: Double): Column = {
     val n = size(vs)
     val h = (n - 1) * lit(p)
@@ -97,6 +98,23 @@ object Parity {
     // is NULL — Spark's element_at(·, 0) would instead raise
     when(n === 0, lit(null)).otherwise(vl + (vu - vl) * f)
   }
+
+  /** Per-group quantiles of `x` at `ps`: `agg` is the group's one
+    * aggregate and `at(vs)` reads one unrounded quantile per p from its
+    * value `vs` (a reference to the aggregated column, or `agg` itself
+    * inline). Exact by default — the sorted samples under
+    * [[linQuantile]], bit-matching the oracle; under
+    * [[Hints.ApproxQuantiles]] a single bounded-state
+    * `approx_percentile(x, array(ps…), 10000)` sketch, rank-exact for
+    * groups under 10000 samples. The only reader of that posture. */
+  final case class Quantiles(agg: Column, at: Column => Seq[Column])
+
+  def quantiles(s: SparkSession, x: Column, ps: Seq[Double]): Quantiles =
+    if (Hints.approxQuantiles(s))
+      Quantiles(approx_percentile(x, array(ps.map(lit): _*), lit(10000)),
+                vs => ps.indices.map(i => element_at(vs, i + 1)))
+    else
+      Quantiles(sort_array(collect_list(x)), vs => ps.map(linQuantile(vs, _)))
 
   /** DuckDB mirror of [[linQuantile]] as an aggregate expression over
     * `list_sort(list(x))` (unrounded — wrap with [[sqlR]] at the call

@@ -148,9 +148,8 @@ object Graft {
   def computeThreshold(daily: DataFrame, pctile: Double = 0.9,
                        windowHalfWidth: Int = 5,
                        smoothPercentile: Boolean = true,
-                       smoothPercentileWidth: Int = 31,
-                       exact: Boolean = true): DataFrame = {
-    val t = Mhw.pooledQuantile(daily, windowHalfWidth, pctile, exact)
+                       smoothPercentileWidth: Int = 31): DataFrame = {
+    val t = Mhw.pooledQuantile(daily, windowHalfWidth, pctile)
     if (smoothPercentile) Mhw.smoothDoy(t, "thresh", half(smoothPercentileWidth)) else t
   }
 
@@ -168,10 +167,8 @@ object Graft {
   def computeThresholdLegacy(daily: DataFrame, pctile: Double = 0.9,
                              windowHalfWidth: Int = 5,
                              smoothPercentile: Boolean = true,
-                             smoothPercentileWidth: Int = 31,
-                             exact: Boolean = true): DataFrame = {
-    val t = Mhw.interpFeb29(
-      Mhw.pooledQuantile(daily, windowHalfWidth, pctile, exact), "thresh")
+                             smoothPercentileWidth: Int = 31): DataFrame = {
+    val t = Mhw.interpFeb29(Mhw.pooledQuantile(daily, windowHalfWidth, pctile), "thresh")
     if (smoothPercentile) Mhw.smoothDoy(t, "thresh", half(smoothPercentileWidth)) else t
   }
 

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataTypes
 
 import graft.Parity._
 import graft.sources.Tables
@@ -14,8 +13,6 @@ import graft.sources.Tables
   * duplicate clustering.
   */
 object Analytics {
-
-  private val Dec = DataTypes.createDecimalType(38, 10)
 
   /** #37 ROLLUP over (event_type, day) with a grouping id — the
     * multi-dimensional aggregate shape (cube/rollup are one shuffle;

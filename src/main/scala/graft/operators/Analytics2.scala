@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataTypes
 
 import graft.Parity._
 import graft.sources.Tables
@@ -17,21 +16,6 @@ import graft.sources.Tables
   * order-sensitive double sum, explicit total tiebreak orders.
   */
 object Analytics2 {
-
-  private val Dec = DataTypes.createDecimalType(38, 10)
-
-  /** Linear-interpolation quantile over a sorted array column — the
-    * portable exact formula (same bits in Spark and DuckDB; engine
-    * percentile implementations differ in last-ulp interpolation). */
-  private def linQuantile(vs: Column, p: Double): Column = {
-    val n = size(vs)
-    val h = (n - 1) * lit(p)
-    val l = floor(h).cast("int")
-    val f = h - l
-    val vl = element_at(vs, l + 1)
-    val vu = element_at(vs, least(l + 2, n))
-    vl + (vu - vl) * f
-  }
 
   private def sqlQuantile(v: String, p: Double): String = {
     val l = s"CAST(floor((count($v) - 1) * $p) AS INT)"
@@ -50,20 +34,13 @@ object Analytics2 {
     * (error-bounded, mergeable partials), conf-switched via
     * [[graft.Hints.ApproxQuantiles]] and spec-pinned. */
   def eventsPercentiles(s: SparkSession, dir: String): DataFrame = {
-    // one shared groupBy; only the quantile extractor differs between
-    // postures (a posture edit can no longer drift the two copies)
-    val ex = !graft.Hints.approxQuantiles(s)
-    val samples =
-      if (ex) sort_array(collect_list(col("value")))
-      else expr("approx_percentile(value, array(0.5, 0.9, 0.99), 10000)")
-    def pq(p: Double, i: Int) =
-      if (ex) r(linQuantile(col("vs"), p), 6)
-      else r(element_at(col("vs"), i + 1), 6)
+    val q = quantiles(s, col("value"), Seq(0.5, 0.9, 0.99))
+    val Seq(p50, p90, p99) = q.at(col("vs")).map(r(_, 6))
     Tables.events(s, dir)
       .groupBy(col("event_type"))
-      .agg(count(col("value")).as("n"), samples.as("vs"))
+      .agg(count(col("value")).as("n"), q.agg.as("vs"))
       .select(col("event_type"), col("n"),
-              pq(0.5, 0).as("p50"), pq(0.9, 1).as("p90"), pq(0.99, 2).as("p99"))
+              p50.as("p50"), p90.as("p90"), p99.as("p99"))
       .orderBy(col("event_type"))
   }
 

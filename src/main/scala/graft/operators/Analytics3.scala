@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataTypes
 
 import graft.Parity._
 import graft.sources.Tables
@@ -13,11 +12,7 @@ import graft.sources.Tables
   */
 object Analytics3 {
 
-  private val Dec = DataTypes.createDecimalType(38, 10)
-
-  /** Shared exact-quantile pair (see [[graft.Parity.linQuantile]]). */
-  private def linQuantile(vs: Column, p: Double): Column =
-    graft.Parity.linQuantile(vs, p)
+  /** Oracle mirror of the exact boundaries (see [[graft.Parity.quantiles]]). */
   private def sqlQuantile(x: String, p: Double): String =
     graft.Parity.sqlQuantileAgg(x, p)
 
@@ -30,17 +25,17 @@ object Analytics3 {
     * partition. The boundary table is a single broadcast row (9
     * doubles); scoring is a map-only comparison on the per-customer
     * aggregate, so the whole plan is two hash aggregates + one
-    * broadcast — the 100 TB shape. `exact=true` computes boundaries by
-    * sorted-array interpolation (bit-identical to the oracle);
-    * `exact=false` is the extreme-scale path via mergeable
-    * approx_percentile (same contract as Mhw.pooledQuantile).
+    * broadcast — the 100 TB shape. Boundaries come from
+    * [[graft.Parity.quantiles]]: sorted-array interpolation
+    * (bit-identical to the oracle), or under the
+    * [[graft.Hints.ApproxQuantiles]] posture one mergeable
+    * `approx_percentile` sketch per measure.
     *
     * Scoring convention: quartile scores 1-4; recency is
     * better-when-lower (score 4 = most recent quartile), frequency and
     * monetary better-when-higher. Boundaries are compared with strict
     * `>` so ties land in the lower score deterministically. */
-  def eventsRfm(s: SparkSession, dir: String, exact: Boolean = true): DataFrame = {
-    val ex = exact && !graft.Hints.approxQuantiles(s)
+  def eventsRfm(s: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(s, dir)
     val horizon = o.agg(max(col("o_orderdate")).as("d_max"))
     val cust = o.groupBy(col("o_custkey"))
@@ -51,13 +46,10 @@ object Analytics3 {
       .select(col("o_custkey"),
               datediff(col("d_max"), col("last_d")).cast("long").as("recency"),
               col("frequency"), col("monetary"))
-    def bounds(nm: String, src: String): Seq[Column] =
-      Seq(25, 50, 75).map { p =>
-        val q =
-          if (ex) linQuantile(sort_array(collect_list(col(src).cast("double"))), p / 100.0)
-          else expr(s"approx_percentile(CAST($src AS DOUBLE), ${p / 100.0}, 10000)")
-        r(q, 6).as(s"$nm$p")
-      }
+    def bounds(nm: String, src: String): Seq[Column] = {
+      val q = quantiles(s, col(src).cast("double"), Seq(0.25, 0.5, 0.75))
+      q.at(q.agg).zip(Seq(25, 50, 75)).map { case (b, p) => r(b, 6).as(s"$nm$p") }
+    }
     val allB = bounds("r", "recency") ++ bounds("f", "frequency") ++
       bounds("m", "monetary")
     val qs = cust.agg(allB.head, allB.tail: _*)
@@ -292,20 +284,15 @@ object Analytics3 {
     * boundaries computed by aggregation, never an ntile window over all
     * customers: per-customer revenue (one groupBy) → 9 boundary scalars
     * (broadcast) → map-only decile tag → ≤10-row rollup. The cumulative
-    * share window runs over those ≤10 rows. `exact=true` is the
-    * bit-reproducible oracle path; extreme scale swaps in
-    * approx_percentile boundaries (same contract as #92). */
-  def customerPareto(s: SparkSession, dir: String, exact: Boolean = true): DataFrame = {
-    val ex = exact && !graft.Hints.approxQuantiles(s)
+    * share window runs over those ≤10 rows. Boundaries come from
+    * [[graft.Parity.quantiles]], exact or sketched with the posture
+    * (same contract as #92). */
+  def customerPareto(s: SparkSession, dir: String): DataFrame = {
     val cust = Tables.orders(s, dir)
       .groupBy(col("o_custkey"))
       .agg(dsum(col("o_totalprice"), 2).as("revenue"))
-    val bounds = (1 to 9).map { d =>
-      val q =
-        if (ex) linQuantile(sort_array(collect_list(col("revenue"))), d / 10.0)
-        else expr(s"approx_percentile(revenue, ${d / 10.0}, 10000)")
-      r(q, 6).as(s"b$d")
-    }
+    val q = quantiles(s, col("revenue"), (1 to 9).map(_ / 10.0))
+    val bounds = q.at(q.agg).zip(1 to 9).map { case (b, d) => r(b, 6).as(s"b$d") }
     val qs = cust.agg(bounds.head, bounds.tail: _*)
     val decile = (1 to 9).map(d => when(col("revenue") > col(s"b$d"), 1).otherwise(0))
       .reduce(_ + _) + 1

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataTypes
 
 import graft.Parity._
 import graft.sources.Tables
@@ -17,7 +16,6 @@ import graft.sources.Tables
   */
 object Events {
 
-  private val Dec = DataTypes.createDecimalType(38, 10)
   private def wUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
 
   /** 30-minute-gap sessionization (SURVEY §2 #16). A session breaks when

@@ -34,17 +34,13 @@ import graft.time.DoyFunctions._
   * relative to facts (366 rows per key) → broadcast back to facts, so the
   * fact table never shuffles for severity. Pooling explodes ×(2w+1)
   * map-side then partially aggregates per (key,doy) before the shuffle.
-  * Exact `percentile` co-locates each (key,doy) group's values — group
-  * cardinality ∝ keys, no global hotspot; at extreme scale swap
-  * `approx_percentile` (algebraic t-digest) via the `exact` flag. Event
+  * The exact pooled quantile co-locates each (key,doy) group's values —
+  * group cardinality ∝ keys, no global hotspot, and each group is
+  * years-bounded, so no sketch is needed at any scale. Event
   * detection is a single shuffle per series key: every window shares
   * `partitionBy(user_id)`, so Catalyst plans one exchange+sort.
   */
 object Mhw {
-
-  /** One-shot latch for the exact-overrides-sketch posture notice. */
-  private val ApproxNoticeLogged =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Daily series: one observation per (series key, calendar day).
     * sst = mean event value that day, rounded (6dp) for cross-engine
@@ -105,11 +101,6 @@ object Mhw {
       .select(col("user_id"), wrapDoy(col("c_raw")).as("doy"), col("sst"))
   }
 
-  /** Linear-interpolation quantile over a pre-sorted array column (the
-    * shared [[graft.Parity.linQuantile]] definition). */
-  private def linQuantile(vs: Column, p: Double): Column =
-    graft.Parity.linQuantile(vs, p)
-
   /** Slot-partials pooling — the clim_incremental mergeable-partials
     * discipline ([[climIncremental]]) applied to the ±hw pooled
     * climatology, replacing the raw ×(2hw+1) observation fan that was
@@ -151,7 +142,6 @@ object Mhw {
     * chain that is already sub-second at bench SF. */
   private[graft] def pooledSlots(dailyDf: DataFrame, hw: Int,
                                  withValues: Boolean = true): DataFrame = {
-    val Dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 10)
     val years = dailyDf.select(col("yr")).distinct()
     // per-observation eligibility flags (broadcast joins keep the byKey
     // partitioning, so the whole chain still plans into one stage)
@@ -217,59 +207,15 @@ object Mhw {
 
   /** Pooled per-DOY quantile (best-practice threshold before smoothing).
     * Strict skipna: any NaN observation in a window nulls that center.
-    * `exact=false` switches to approx_percentile for extreme scale; the
-    * exact path co-locates each (key,doy) group's ≤ years×(2w+1) values —
-    * bounded per group, no global hotspot.
-    *
-    * Approx error contract (MhwSpec "approx threshold rank-error
-    * bound"): approx_percentile is Greenwald–Khanna with relative rank
-    * error 1/`accuracy` — the returned value's rank in the pooled group
-    * is within n/accuracy of the target rank ⌊p·(n−1)⌋, so the VALUE
-    * error is bounded by the sample spread across that rank window
-    * (data-dependent, tight where the distribution is dense). At the
-    * default accuracy=10000 any group with < 10000 samples (= fewer
-    * than ~900 pooled years) is rank-exact, which is why sf-local runs
-    * match the exact path bit-for-bit; the spec exercises a LOW
-    * accuracy to pin the bound in the divergent regime. */
-  def pooledQuantile(dailyDf: DataFrame, hw: Int, pctile: Double,
-                     exact: Boolean = true, accuracy: Int = 10000): DataFrame = {
-    // The [[graft.Hints.ApproxQuantiles]] posture deliberately does NOT
-    // flip this chain (unlike the event-stats family): pooled-climatology
-    // groups are YEARS-BOUNDED (≤ (2hw+1)·years samples — ~350 at a
-    // century of daily data), so a GK sketch's bounded state buys
-    // nothing the slot-partials build doesn't already guarantee, while
-    // its raw ×(2hw+1) observation fan re-creates the sort-fallback
-    // spill the slot build exists to kill. The sketch branch remains
-    // reachable via `exact = false` — the divergent-regime rank-error
-    // contract is pinned there (MhwSpec) — for callers who genuinely
-    // want it.
-    // one-time notice (round-11 advisory): a deployment that set the
-    // global sketch posture should see that this family intentionally
-    // ignores it rather than silently wonder which path ran
-    if (exact && graft.Hints.approxQuantiles(dailyDf.sparkSession) &&
-        ApproxNoticeLogged.compareAndSet(false, true))
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"${graft.Hints.ApproxQuantiles} is set, but the MHW pooled-" +
-        "climatology family keeps the exact slot-partials build by design " +
-        "(years-bounded groups; see pooledQuantile scaladoc). " +
-        "Pass exact = false to force the sketch branch.")
-    if (exact)
-      // slot-partials build ([[pooledSlots]]): bit-identical values,
-      // ×years fewer rows through the heavy aggregate
-      threshOf(poolMerged(dailyDf, hw), pctile)
-    else
-      // sketch path: GK summaries have bounded per-group state; keeps
-      // the raw fan because GK digests aren't mergeable from SQL and
-      // the spec-pinned rank-error contract is defined over this exact
-      // insertion stream
-      poolSamples(dailyDf, hw)
-        .groupBy(col("user_id"), col("doy"))
-        .agg(expr(s"array(approx_percentile(sst, $pctile, $accuracy))").as("vs"),
-             max(when(isnan(col("sst")), 1).otherwise(0)).as("has_nan"))
-        .select(col("user_id"), col("doy"),
-                when(col("has_nan") === 1, lit(null))
-                  .otherwise(r(element_at(col("vs"), 1), 6)).as("thresh"))
-  }
+    * Slot-partials build ([[pooledSlots]]): bit-identical values, ×years
+    * fewer rows through the heavy aggregate. Each (key,doy) group holds
+    * ≤ years×(2w+1) values — bounded per group, no global hotspot — so
+    * the [[graft.Hints.ApproxQuantiles]] posture deliberately does NOT
+    * flip this chain: a sketch's bounded state buys nothing the slot
+    * build doesn't already guarantee, and a sketch would need the raw
+    * ×(2w+1) observation fan the slot build exists to avoid. */
+  def pooledQuantile(dailyDf: DataFrame, hw: Int, pctile: Double): DataFrame =
+    threshOf(poolMerged(dailyDf, hw), pctile)
 
   /** Raw-fan spelling of the exact pooled quantile — retained as the
     * parity reference for the slot-partials rework (spec: "slot-partials
@@ -389,7 +335,6 @@ object Mhw {
     * partials→merge→finalize path as CTEs — MhwSql.climIncremental). */
   def climIncremental(s: SparkSession, dir: String): DataFrame = {
     val d = daily(s, dir)
-    val Dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 10)
     def partial(df: DataFrame): DataFrame =
       df.groupBy(col("user_id"), col("doy"))
         .agg(sum(col("sst").cast(Dec)).as("s"), count(col("sst")).as("n"))
@@ -417,7 +362,7 @@ object Mhw {
     * of the whole MHW family (guide §1.2 step 1: don't recompute what
     * a sibling already built). Every consumer reads seas and thresh
     * through [[seasOf]] / [[threshOf]], the readouts [[pooledMean]] and
-    * [[pooledQuantile]]'s exact branch use, so each is bit-identical to
+    * [[pooledQuantile]] use, so each is bit-identical to
     * its previous spelling (the slot-partials ≡ raw-fan spec already
     * pins the build itself). */
   private[graft] def pooledMergedCached(s: SparkSession, dir: String,
@@ -439,20 +384,18 @@ object Mhw {
   private[graft] def seasOf(pool: DataFrame): DataFrame =
     pool.select(col("user_id"), col("doy"), seasCol)
 
-  /** [[pooledQuantile]]'s exact-branch readout over a merged slot pool. */
+  /** [[pooledQuantile]]'s readout over a merged slot pool. */
   private[graft] def threshOf(pool: DataFrame, pctile: Double): DataFrame =
     pool.select(col("user_id"), col("doy"), threshCol(pctile))
 
-  /** The legacy finish over pooled (seas, thresh): Feb-29 interpolation
-    * and circular smoothing, each one pass over both columns. */
-  private def legacyFinish(pooled: DataFrame): DataFrame = {
+  /** The fused legacy climatology + threshold over a merged slot pool:
+    * Feb-29 interpolation and circular smoothing, each one pass over
+    * both columns. */
+  private def legacyOf(pool: DataFrame, pctile: Double): DataFrame = {
     val cols = Seq("seas", "thresh")
-    smoothDoyCols(interpFeb29Cols(pooled, cols), cols)
+    smoothDoyCols(interpFeb29Cols(
+      pool.select(col("user_id"), col("doy"), seasCol, threshCol(pctile)), cols), cols)
   }
-
-  /** The fused legacy climatology + threshold over a merged slot pool. */
-  private def legacyOf(pool: DataFrame, pctile: Double): DataFrame =
-    legacyFinish(pool.select(col("user_id"), col("doy"), seasCol, threshCol(pctile)))
 
   /** best_practice.compute_threshold, smoothPercentile=false, q=0.9. */
   def thresholdBpRaw(s: SparkSession, dir: String): DataFrame =
@@ -478,33 +421,17 @@ object Mhw {
     * [[thresholdLegacy]] separately (spec-pinned) at half the
     * scan/shuffle cost — severity consumes BOTH tables, so this is the
     * chain a user actually runs (the reference notebook's step 1). */
-  def legacyClimThresh(dailyDf: DataFrame, hw: Int = 5, pctile: Double = 0.9,
-                       accuracy: Int = 10000, exact: Boolean = true): DataFrame = {
-    // same posture policy as [[pooledQuantile]]: pooled groups are
-    // years-bounded, so the deployment posture keeps the slot-partials
-    // exact build (bounded state AND no observation fan); the GK
-    // branch stays reachable via `exact = false` for the
-    // `accuracy`-tunable sketch contract
-    if (exact)
-      // slot-partials build: the one shared slot table feeds both the
-      // merged decimal mean and the merged pooled-value quantile —
-      // bit-identical to the separate raw-fan operators (spec-pinned)
-      legacyOf(poolMerged(dailyDf, hw), pctile)
-    else
-      legacyFinish(poolSamples(dailyDf, hw)
-        .groupBy(col("user_id"), col("doy"))
-        .agg(davg(col("sst"), 6).as("seas"),
-             expr(s"array(approx_percentile(sst, $pctile, $accuracy))").as("vs"),
-             max(when(isnan(col("sst")), 1).otherwise(0)).as("has_nan"))
-        .select(col("user_id"), col("doy"), col("seas"),
-                when(col("has_nan") === 1, lit(null))
-                  .otherwise(r(element_at(col("vs"), 1), 6)).as("thresh")))
-  }
+  def legacyClimThresh(dailyDf: DataFrame, hw: Int = 5,
+                       pctile: Double = 0.9): DataFrame =
+    // slot-partials build: the one shared slot table feeds both the
+    // merged decimal mean and the merged pooled-value quantile —
+    // bit-identical to the separate raw-fan operators (spec-pinned)
+    legacyOf(poolMerged(dailyDf, hw), pctile)
 
   /** Query: the fused legacy chain over the events-derived daily series
-    * — reads the session-shared merged slot pool (the exact branch of
-    * [[legacyClimThresh]] with the pool build factored out; identical
-    * expressions, bit-identical output). */
+    * — reads the session-shared merged slot pool ([[legacyClimThresh]]
+    * with the pool build factored out; identical expressions,
+    * bit-identical output). */
   def legacyClimThreshQ(s: SparkSession, dir: String): DataFrame =
     legacyOf(pooledMergedCached(s, dir), 0.9)
 
@@ -547,7 +474,6 @@ object Mhw {
     val t = dl.crossJoin(broadcast(origin))
       .withColumn("t", datediff(col("d"), col("d0")))
     val tFit = fitSlice(t)
-    val Dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 10)
     val fit = tFit.groupBy(col("user_id")).agg(
       count(lit(1)).cast("double").as("n"),
       sum(col("t").cast("long")).cast("double").as("st"),
@@ -587,7 +513,6 @@ object Mhw {
     val t = dl.crossJoin(broadcast(origin))
       .withColumn("t", datediff(col("d"), col("d0")))
     val DecI = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
-    val DecF = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 10)
     // integer powers stay integral per row (long t⁴ is exact to ~150
     // years of daily data) and accumulate in exact decimals
     val tl = col("t").cast("long")
@@ -597,9 +522,9 @@ object Mhw {
       sum((tl * tl).cast(DecI)).cast("double").as("s2"),
       sum((tl * tl * tl).cast(DecI)).cast("double").as("s3"),
       sum((tl * tl * tl * tl).cast(DecI)).cast("double").as("s4"),
-      sum(col("sst").cast(DecF)).cast("double").as("sy"),
-      sum((col("sst") * col("t")).cast(DecF)).cast("double").as("sty"),
-      sum((col("sst") * col("t") * col("t")).cast(DecF)).cast("double").as("st2y"))
+      sum(col("sst").cast(Dec)).cast("double").as("sy"),
+      sum((col("sst") * col("t")).cast(Dec)).cast("double").as("sty"),
+      sum((col("sst") * col("t") * col("t")).cast(Dec)).cast("double").as("st2y"))
       // Cramer: det of [[n,s1,s2],[s1,s2,s3],[s2,s3,s4]]; columns
       // replaced by the y-moment vector for each coefficient
       .withColumn("det",
@@ -648,7 +573,6 @@ object Mhw {
     val t = dl.crossJoin(broadcast(origin))
       .withColumn("t", datediff(col("d"), col("d0")))
       .withColumn("cut", floor(datediff(col("d1"), col("d0")) / 2))
-    val Dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 10)
     val fit = t.filter(col("t") <= col("cut"))
       .groupBy(col("user_id")).agg(
         count(lit(1)).cast("double").as("n"),
@@ -704,7 +628,7 @@ object Mhw {
         smoothDoy(climatologyBp(dl), "seas")
       }
       val thresh = graft.Caches.persisted(s, ("mhw_thresh", dir, pctile)) {
-        // same expression as pooledQuantile's exact branch, read from
+        // same expression as pooledQuantile, read from
         // the shared merged slot pool instead of a private rebuild
         smoothDoy(threshOf(pooledMergedCached(s, dir), pctile), "thresh")
       }
@@ -990,20 +914,18 @@ object Mhw {
     * the single-row final aggregate is cheap; the duration percentiles
     * use the same exact sorted-array interpolation as the threshold
     * chain, conf-switched to `approx_percentile` sketches via
-    * [[graft.Hints.ApproxQuantiles]] (exactly as Mhw.pooledQuantile). */
+    * [[graft.Hints.ApproxQuantiles]] ([[graft.Parity.quantiles]]; event
+    * durations, unlike pooled climatology groups, are not years-bounded). */
   def mhwEventDist(s: SparkSession, dir: String): DataFrame = {
-    def pq(p: Double): Column =
-      if (graft.Hints.approxQuantiles(s))
-        r(expr(s"approx_percentile(CAST(duration AS DOUBLE), $p, 10000)"), 6)
-      else
-        r(linQuantile(sort_array(collect_list(col("duration").cast("double"))), p), 6)
+    val q = quantiles(s, col("duration").cast("double"), Seq(0.5, 0.9))
+    val Seq(p50, p90) = q.at(q.agg).map(r(_, 6))
     eventsTable(s, dir)
       .agg(count(lit(1)).as("n_events"),
            countDistinct(col("user_id")).as("n_series"),
            davg(col("duration").cast("double"), 6).as("mean_duration"),
            max(col("duration")).cast("int").as("max_duration"),
-           pq(0.5).as("p50_duration"),
-           pq(0.9).as("p90_duration"),
+           p50.as("p50_duration"),
+           p90.as("p90_duration"),
            davg(col("intensity_max"), 6).as("mean_imax"),
            max(col("intensity_max")).as("max_imax"))
   }

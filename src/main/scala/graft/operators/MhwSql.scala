@@ -19,7 +19,7 @@ object MhwSql {
 
   /** Explicit linear-interpolation quantile (numpy "linear"):
     * v_l + (v_u − v_l)·f over a sorted list — same IEEE expression as
-    * Mhw.linQuantile. */
+    * [[graft.Parity.linQuantile]]. */
   private def quantileSel(p: Double): String = {
     val l = s"CAST(floor((count(sst) - 1) * $p) AS INT)"
     val f = s"((count(sst) - 1) * $p - floor((count(sst) - 1) * $p))"

@@ -300,12 +300,12 @@ object Round6Ops11 {
     val filled = spine.join(daily, Seq("d"), "left")
       .select(col("d"), coalesce(col("n_raw"), lit(0L)).as("n"))
     val med = filled.agg(
-      r(TimeSeries2.medSorted(sort_array(collect_list(col("n").cast("double")))), 6)
+      r(linQuantile(sort_array(collect_list(col("n").cast("double"))), 0.5), 6)
         .as("med"))
     val dev = filled.crossJoin(broadcast(med))
       .withColumn("dev", r(abs(col("n") - col("med")), 6))
     val mad = dev.agg(
-      r(TimeSeries2.medSorted(sort_array(collect_list(col("dev")))), 6).as("mad"),
+      r(linQuantile(sort_array(collect_list(col("dev"))), 0.5), 6).as("mad"),
       r(dsum(col("dev")) / count(lit(1)), 6).as("mean_ad"))
     dev.crossJoin(broadcast(mad))
       .withColumn("z",

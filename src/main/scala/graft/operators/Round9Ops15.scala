@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -141,17 +141,6 @@ object Round9Ops15 {
 
   // ------------------------------------------ #337 events_robust_center
 
-  /** The portable linear-interpolation quantile (the #49 formula). */
-  private def linQuantile(vs: Column, p: Double): Column = {
-    val n = size(vs)
-    val h = (n - 1) * lit(p)
-    val l = floor(h).cast("int")
-    val f = h - l
-    val vl = element_at(vs, l + 1)
-    val vu = element_at(vs, least(l + 2, n))
-    vl + (vu - vl) * f
-  }
-
   /** #337 events_robust_center: robust central tendency per event type
     * — plain mean, the exact p05/p95 bounds, the WINSORIZED mean
     * (clamp to the bounds — keeps n, caps influence) and the TRIMMED
@@ -185,20 +174,11 @@ object Round9Ops15 {
     * `approx_percentile` sketches so the per-type aggregation buffer
     * is bounded at any scale. */
   private[graft] def robustBounds(ev: DataFrame): DataFrame = {
-    // one shared groupBy; only the quantile extractor differs between
-    // postures (the Analytics2.eventsPercentiles discipline)
-    val ex = !graft.Hints.approxQuantiles(ev.sparkSession)
-    val samples =
-      if (ex) sort_array(collect_list(col("value")))
-      else expr("approx_percentile(value, array(0.05, 0.95), 10000)")
-    def pq(p: Double, i: Int) =
-      if (ex) r(linQuantile(col("vs"), p), 6)
-      else r(element_at(col("vs"), i + 1), 6)
+    val q = quantiles(ev.sparkSession, col("value"), Seq(0.05, 0.95))
+    val Seq(p05, p95) = q.at(col("vs")).map(r(_, 6))
     ev.groupBy(col("event_type"))
-      .agg(samples.as("vs"))
-      .select(col("event_type"),
-              pq(0.05, 0).as("p05"),
-              pq(0.95, 1).as("p95"))
+      .agg(q.agg.as("vs"))
+      .select(col("event_type"), p05.as("p05"), p95.as("p95"))
   }
 
   /** The per-type moment registers under fixed bounds — count and

@@ -15,17 +15,6 @@ object Round9Ops19 {
 
   // ------------------------------------ #344 events_transfer_entropy
 
-  /** The portable linear-interpolation quantile (the #49 formula). */
-  private def linQuantile(vs: org.apache.spark.sql.Column, p: Double) = {
-    val n = size(vs)
-    val h = (n - 1) * lit(p)
-    val l = floor(h).cast("int")
-    val f = h - l
-    val vl = element_at(vs, l + 1)
-    val vu = element_at(vs, least(l + 2, n))
-    vl + (vu - vl) * f
-  }
-
   /** #344 events_transfer_entropy: DIRECTIONAL information flow
     * between every ordered type pair — binary (above/below own
     * median) transfer entropy TE(src→dst) = Σ p(x₁,x₀,y₀) ·

@@ -19,17 +19,6 @@ object Round9Ops21 {
     * P(≤4)=.996340; the tail caps at 5. */
   private val PoisCdf = Seq(0.367879, 0.735759, 0.919699, 0.981012, 0.99634)
 
-  /** The portable linear-interpolation quantile (the #49 formula). */
-  private def linQuantile(vs: Column, p: Double): Column = {
-    val n = size(vs)
-    val h = (n - 1) * lit(p)
-    val l = floor(h).cast("int")
-    val f = h - l
-    val vl = element_at(vs, l + 1)
-    val vu = element_at(vs, least(l + 2, n))
-    vl + (vu - vl) * f
-  }
-
   /** #348 events_bootstrap_ci: a NONPARAMETRIC confidence interval for
     * each type's mean value by the POISSON BOOTSTRAP — the shape
     * bootstrap takes on MapReduce (Chamandy et al., Google): instead

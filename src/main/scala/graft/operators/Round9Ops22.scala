@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataTypes
 
 import graft.Parity._
 import graft.sources.Tables
@@ -12,8 +11,6 @@ import graft.sources.Tables
   * materialized-aggregate maintenance and the event-lateness audit.
   */
 object Round9Ops22 {
-
-  private val Dec = DataTypes.createDecimalType(38, 10)
 
   // ------------------------------------------- #350 q1_incremental
 
@@ -76,17 +73,6 @@ object Round9Ops22 {
       .orderBy(col("l_returnflag"), col("l_linestatus"))
 
   // -------------------------------------- #351 events_lateness_audit
-
-  /** The portable linear-interpolation quantile (the #49 formula). */
-  private def linQuantile(vs: Column, p: Double): Column = {
-    val n = size(vs)
-    val h = (n - 1) * lit(p)
-    val l = floor(h).cast("int")
-    val f = h - l
-    val vl = element_at(vs, l + 1)
-    val vu = element_at(vs, least(l + 2, n))
-    vl + (vu - vl) * f
-  }
 
   /** #351 events_lateness_audit: the EVENT-LATENESS distribution per
     * type — for each event, how far behind the highest event time
@@ -175,24 +161,18 @@ object Round9Ops22 {
       .join(graft.Hints.keyDim(pre), Seq("event_type", "bkt"))
       .withColumn("late_s",
         greatest(col("in_max"), col("pre_max")) - col("es"))
-    val ex = !graft.Hints.approxQuantiles(ev.sparkSession)
-    val samples =
-      if (ex) sort_array(collect_list(col("late_s").cast("double")))
-      else expr(
-        "approx_percentile(CAST(late_s AS DOUBLE), array(0.5, 0.95, 0.99), 10000)")
-    def pq(p: Double, i: Int) =
-      if (ex) r(linQuantile(col("vs"), p), 6)
-      else r(element_at(col("vs"), i + 1), 6)
+    val q = quantiles(ev.sparkSession, col("late_s").cast("double"), Seq(0.5, 0.95, 0.99))
+    val Seq(p50, p95, p99) = q.at(col("vs")).map(r(_, 6))
     late.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
            r(sum(when(col("late_s") > 0, 1L).otherwise(0L))
                .cast("double") / count(lit(1)), 6).as("late_share"),
-           samples.as("vs"),
+           q.agg.as("vs"),
            max(col("late_s")).as("max_late_s"))
       .select(col("event_type"), col("n"), col("late_share"),
-              pq(0.5, 0).as("p50_late_s"),
-              pq(0.95, 1).as("p95_late_s"),
-              pq(0.99, 2).as("p99_late_s"),
+              p50.as("p50_late_s"),
+              p95.as("p95_late_s"),
+              p99.as("p99_late_s"),
               col("max_late_s"))
       .orderBy(col("event_type"))
   }

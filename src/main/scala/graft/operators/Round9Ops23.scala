@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Parity._
@@ -12,17 +12,6 @@ import graft.sources.Tables
   * registers.)
   */
 object Round9Ops23 {
-
-  /** The portable linear-interpolation quantile (the #49 formula). */
-  private def linQuantile(vs: Column, p: Double): Column = {
-    val n = size(vs)
-    val h = (n - 1) * lit(p)
-    val l = floor(h).cast("int")
-    val f = h - l
-    val vl = element_at(vs, l + 1)
-    val vu = element_at(vs, least(l + 2, n))
-    vl + (vu - vl) * f
-  }
 
   // --------------------------------------- #353 orders_fulfillment_lag
 
@@ -55,23 +44,17 @@ object Round9Ops23 {
       .join(lastShip, col("o_orderkey") === col("l_orderkey"))
       .select(col("o_orderpriority"),
               datediff(col("last_ship"), col("od")).as("lag_d"))
-    val ex = !graft.Hints.approxQuantiles(s)
-    val samples =
-      if (ex) sort_array(collect_list(col("lag_d").cast("double")))
-      else expr(
-        "approx_percentile(CAST(lag_d AS DOUBLE), array(0.5, 0.95), 10000)")
-    def pq(p: Double, i: Int) =
-      if (ex) r(linQuantile(col("vs"), p), 6)
-      else r(element_at(col("vs"), i + 1), 6)
+    val q = quantiles(s, col("lag_d").cast("double"), Seq(0.5, 0.95))
+    val Seq(p50, p95) = q.at(col("vs")).map(r(_, 6))
     lag.groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_orders"),
-           samples.as("vs"),
+           q.agg.as("vs"),
            r(sum(when(col("lag_d") > slaDays, 1L).otherwise(0L))
                .cast("double") / count(lit(1)), 6).as("sla_breach_share"),
            max(col("lag_d")).as("max_lag_d"))
       .select(col("o_orderpriority"), col("n_orders"),
-              pq(0.5, 0).as("p50_lag_d"),
-              pq(0.95, 1).as("p95_lag_d"),
+              p50.as("p50_lag_d"),
+              p95.as("p95_lag_d"),
               col("sla_breach_share"), col("max_lag_d"))
       .orderBy(col("o_orderpriority"))
   }

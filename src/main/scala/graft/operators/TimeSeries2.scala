@@ -125,19 +125,6 @@ object TimeSeries2 {
 
   // ---------------------------------------------------------- MAD anomalies
 
-  /** Exact linear-interpolation median over a sorted array (same formula
-    * as Analytics2.linQuantile at p=0.5 — engine medians differ in
-    * interpolation ulps, this one is bit-portable). */
-  private[graft] def medSorted(vs: Column): Column = {
-    val n = size(vs)
-    val h = (n - 1) * lit(0.5)
-    val l = floor(h).cast("int")
-    val f = h - l
-    val vl = element_at(vs, l + 1)
-    val vu = element_at(vs, least(l + 2, n))
-    vl + (vu - vl) * f
-  }
-
   private[graft] def sqlMed(v: String): String = {
     val l = s"CAST(floor((count($v) - 1) * 0.5) AS INT)"
     val f = s"((count($v) - 1) * 0.5 - floor((count($v) - 1) * 0.5))"
@@ -162,11 +149,11 @@ object TimeSeries2 {
   def eventsAnomalyMadDf(ev: DataFrame): DataFrame = {
     val e = ev.select(col("event_type"), col("value"))
     val med = e.groupBy(col("event_type"))
-      .agg(r(medSorted(sort_array(collect_list(col("value")))), 6).as("med"))
+      .agg(r(linQuantile(sort_array(collect_list(col("value"))), 0.5), 6).as("med"))
     val dev = e.join(broadcast(med), Seq("event_type"))
       .withColumn("dev", r(abs(col("value") - col("med")), 6))
     val mad = dev.groupBy(col("event_type"))
-      .agg(r(medSorted(sort_array(collect_list(col("dev")))), 6).as("mad"))
+      .agg(r(linQuantile(sort_array(collect_list(col("dev"))), 0.5), 6).as("mad"))
     dev.join(broadcast(mad), Seq("event_type"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -236,7 +223,7 @@ object TimeSeries2 {
             datediff(col("d2"), col("d1")).cast("double"), 6).as("slope"))
     pairs.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_pairs"),
-           r(medSorted(sort_array(collect_list(col("slope")))), 6).as("sen_slope"))
+           r(linQuantile(sort_array(collect_list(col("slope"))), 0.5), 6).as("sen_slope"))
       .withColumn("sen_slope_month", r(col("sen_slope") * 30, 6))
   }
 

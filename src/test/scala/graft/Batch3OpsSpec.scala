@@ -36,13 +36,6 @@ class Batch3OpsSpec extends AnyFunSuite {
     assert(!plan(Analytics3.eventsRfm(spark, sf)).contains("Window"))
   }
 
-  test("rfm: approx boundary path yields full-coverage segmentation too") {
-    val seg = Analytics3.eventsRfm(spark, sf, exact = false).collect()
-    val total = seg.map(_.getLong(3)).sum
-    val nCust = Tables.orders(spark, sf).select("o_custkey").distinct().count()
-    assert(total == nCust)
-  }
-
   // -------------------------------------------------- events_lag_features
 
   test("lag features: per-user recomputation matches for the busiest user") {
@@ -216,12 +209,6 @@ class Batch3OpsSpec extends AnyFunSuite {
       assert(!p.contains("hashpartitioning(l_orderkey"))
       assert(!p.contains("hashpartitioning(o_orderkey"))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
-  test("pareto: approx boundary path also partitions every customer") {
-    val seg = operators.Analytics3.customerPareto(spark, sf, exact = false).collect()
-    val nCust = Tables.orders(spark, sf).select("o_custkey").distinct().count()
-    assert(seg.map(_.getLong(1)).sum == nCust)
   }
 
   // ------------------------------------------------------ mhw_event_dist

@@ -179,32 +179,6 @@ class MhwSpec extends AnyFunSuite {
     assert(!out.contains((2L, 60))) // doy 61 missing → row absent
   }
 
-  test("approx threshold (t-digest scale path) tracks the exact quantile") {
-    // Dense synthetic series: 10 years of daily values in [0, 100), so
-    // each pooled (doy ±5) group holds ~110 samples with ~1.0 spacing.
-    // approx_percentile returns an order statistic with bounded rank
-    // error while the exact path interpolates — the value gap is at most
-    // a few sample spacings.
-    val base = java.time.LocalDate.of(2000, 1, 1)
-    val rows = (0 until 3650).map { i =>
-      (1L, java.sql.Date.valueOf(base.plusDays(i)),
-       (i * 2654435761L % 10007L) / 100.07)
-    }
-    val dl = rows.toDF("user_id", "d", "sst")
-      .withColumn("yr", year($"d"))
-      .withColumn("doy", DoyFunctions.climDoy($"d"))
-    val exact = Mhw.pooledQuantile(dl, 5, 0.9)
-      .select($"doy", $"thresh".as("t_exact"))
-    val approx = Mhw.pooledQuantile(dl, 5, 0.9, exact = false)
-      .select($"doy", $"thresh".as("t_approx"))
-    val joined = exact.join(approx, "doy")
-    val n = joined.count()
-    assert(n > 300)
-    val worst = joined
-      .agg(max(abs($"t_exact" - $"t_approx"))).head.getDouble(0)
-    assert(worst < 3.0, s"max |exact-approx| = $worst over $n doy groups")
-  }
-
   test("legacyClimThresh fused chain is bit-identical to the separate legacy operators") {
     val sf = "/root/testdata/sf0.001"
     def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getInt(1))
@@ -219,90 +193,6 @@ class MhwSpec extends AnyFunSuite {
     fused.foreach { case (k, (s, t)) =>
       assert(s == seas(k) && t == thresh(k), s"mismatch at $k")
     }
-  }
-
-  test("approx threshold at sf0.01: rank-exact within one order statistic of the bracket") {
-    // The documented approx_percentile guarantee is rank error <=
-    // n/accuracy; pooled groups hold n <= years*(2w+1) values, so with
-    // accuracy=10000 the rank error is < 1 for any realistic record
-    // length: the returned value must be an ACTUAL pooled value lying
-    // within one order statistic of the exact path's interpolation
-    // bracket [v[l+1], v[l+2]] (1-indexed, l = floor((n-1)p)). This is
-    // the scale-path accuracy claim of SURVEY §5, pinned on real data.
-    val dl = Mhw.daily(spark, "/root/testdata/sf0.01")
-    val pooled = Mhw.poolSamples(dl, 5)
-      .groupBy($"user_id", $"doy")
-      .agg(sort_array(collect_list($"sst")).as("vs"))
-    val ap = Mhw.pooledQuantile(dl, 5, 0.9, exact = false)
-    val j = pooled.join(ap, Seq("user_id", "doy"))
-      .filter($"thresh".isNotNull)
-      .withColumn("n", size($"vs"))
-      .withColumn("l", floor(($"n" - 1) * lit(0.9)).cast("int"))
-      .withColumn("lo", element_at($"vs", greatest($"l", lit(1))))
-      .withColumn("hi", element_at($"vs", least($"l" + 3, $"n")))
-      .withColumn("is_member",
-        exists($"vs", x => abs(x - $"thresh") < lit(1e-9)))
-      .withColumn("in_bracket",
-        $"thresh" >= $"lo" - 1e-9 && $"thresh" <= $"hi" + 1e-9)
-    val agg = j.agg(count(lit(1)),
-      sum(when(!$"is_member", 1L).otherwise(0L)),
-      sum(when(!$"in_bracket", 1L).otherwise(0L))).head
-    assert(agg.getLong(0) > 4000)
-    assert(agg.getLong(1) == 0, s"${agg.getLong(1)} approx values not in the pooled multiset")
-    assert(agg.getLong(2) == 0, s"${agg.getLong(2)} approx values outside the rank bracket")
-  }
-
-  test("approx threshold rank-error bound holds in the genuinely divergent regime " +
-       "(accuracy << group size)") {
-    // The regime approx_percentile exists for: group size n well above
-    // `accuracy`, where it actually diverges from the exact quantile.
-    // Contract pinned (Greenwald–Khanna, relative rank error
-    // 1/accuracy): the returned value sits within n/accuracy ranks of
-    // the target rank l = ⌊0.9·(n−1)⌋, and therefore |approx − exact|
-    // is bounded by the sample spread across [l−e, l+e]. 32 years of
-    // daily data → pooled groups of ~352; accuracy=20 → e ≈ 18 ranks.
-    val base = java.time.LocalDate.of(1982, 1, 1)
-    val rows = (0 until 11688).map { i =>
-      (1L, java.sql.Date.valueOf(base.plusDays(i)),
-       (i * 2654435761L % 99991L) / 999.91)
-    }
-    val dl = rows.toDF("user_id", "d", "sst")
-      .withColumn("yr", year($"d"))
-      .withColumn("doy", DoyFunctions.climDoy($"d"))
-    val acc = 20
-    val pooled = Mhw.poolSamples(dl, 5)
-      .groupBy($"doy").agg(sort_array(collect_list($"sst")).as("vs"))
-    val ap = Mhw.pooledQuantile(dl, 5, 0.9, exact = false, accuracy = acc)
-      .select($"doy", $"thresh")
-    val ex = Mhw.pooledQuantile(dl, 5, 0.9)
-      .select($"doy", $"thresh".as("t_exact"))
-    val joined = pooled.join(ap, "doy").join(ex, "doy").collect()
-    assert(joined.length == 366)
-    var diverged = 0
-    joined.foreach { r =>
-      val vs = r.getAs[scala.collection.Seq[Double]]("vs")
-      val approx = r.getAs[Double]("thresh")
-      val exact = r.getAs[Double]("t_exact")
-      val n = vs.length
-      val e = math.ceil(n.toDouble / acc).toInt + 1 // +1: 6dp output rounding
-      val target = math.floor(0.9 * (n - 1)).toInt
-      // rank of the approx value: member index nearest the target
-      // (duplicates → any matching index is a valid rank witness)
-      val ranks = vs.indices.filter(i => math.abs(vs(i) - approx) < 1e-6)
-      assert(ranks.nonEmpty, s"doy ${r.getAs[Int]("doy")}: approx $approx not a pooled member")
-      val rank = ranks.minBy(i => math.abs(i - target))
-      assert(math.abs(rank - target) <= e,
-        s"doy ${r.getAs[Int]("doy")}: rank $rank vs target $target exceeds n/accuracy = $e")
-      // implied value bound: spread of the admissible rank window
-      val lo = vs(math.max(target - e, 0))
-      val hi = vs(math.min(target + e, n - 1))
-      assert(approx >= lo - 1e-6 && approx <= hi + 1e-6,
-        s"doy ${r.getAs[Int]("doy")}: $approx outside value window [$lo, $hi]")
-      assert(math.abs(approx - exact) <= (hi - lo) + 1e-6)
-      if (math.abs(approx - exact) > 1e-6) diverged += 1
-    }
-    // the whole point of this spec: the regime must actually diverge
-    assert(diverged > 50, s"only $diverged/366 groups diverged — not the divergent regime")
   }
 
   test("CUSUM changepoint lands on a mean shift; flat series ties to first day") {

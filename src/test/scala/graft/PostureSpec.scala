@@ -116,6 +116,10 @@ class PostureSpec extends AnyFunSuite {
         assert(!p.contains("collect_list"),
           "sketch posture must not materialize per-group sample arrays")
       }
+      // event durations are not years-bounded: unlike the pooled
+      // climatology below, this MHW readout follows the posture
+      assert(plan(Mhw.mhwEventDist(spark, sf)).contains("approx_percentile"),
+        "mhw_event_dist sketch path must be active")
     }
   }
 
@@ -124,9 +128,7 @@ class PostureSpec extends AnyFunSuite {
     // The posture knob deliberately does NOT flip this chain: pooled
     // climatology groups hold ≤ (2hw+1)·years samples, so per-group
     // state is bounded by construction; the GK alternative re-creates
-    // the ×11 observation fan (the 207 GB x100 spill). The sketch
-    // contract stays reachable via the explicit `exact = false`
-    // parameter (MhwSpec pins its rank-error bound).
+    // the ×11 observation fan (the 207 GB x100 spill).
     import org.apache.spark.sql.execution.GenerateExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.functions.{col, lit}
@@ -192,10 +194,15 @@ class PostureSpec extends AnyFunSuite {
           assert(v >= 1 && v <= 4, s"$c=$v out of range")
         }
       }
+      // sketch boundaries still segment every customer exactly once
+      val nCust = graft.sources.Tables.orders(spark, sf)
+        .select("o_custkey").distinct().count()
+      assert(rows.map(_.getAs[Long]("n_cust")).sum == nCust)
       val pareto = graft.operators.Analytics3.customerPareto(spark, sf)
       assert(plan(pareto).contains("approx_percentile"))
       val deciles = pareto.collect()
       assert(deciles.nonEmpty && deciles.length <= 10)
+      assert(deciles.map(_.getAs[Long]("n_cust")).sum == nCust)
     }
   }
 

@@ -121,7 +121,6 @@ class Round8Spec extends AnyFunSuite {
     val rows = Similarity.embIvfIncremental(spark, sf).collect()
     val emb = graft.sources.Tables.embeddings(spark, sf)
     val total = emb.count()
-    val nDelta = total / 5 + (if (total % 5 > 4) 1 else 0)
     assert(rows.map(_.getLong(1)).sum + rows.map(_.getLong(2)).sum == total)
     assert(rows.map(_.getLong(2)).sum ==
       emb.filter(org.apache.spark.sql.functions.pmod(

@@ -63,6 +63,20 @@ class Round9Ops15Spec extends AnyFunSuite {
     assert(p95 < 10000, "p95 below the outlier")
   }
 
+  // An all-null group collects to an empty sample list; its quantile
+  // bounds are NULL (the oracle's out-of-range list index), not an
+  // INVALID_INDEX_OF_ZERO error that fails the whole query.
+  test("events_robust_center: an all-null type gets null bounds; other types unchanged") {
+    import spark.implicits._
+    val m = (1 to 19).map(v => ("m", Option(v.toDouble)))
+    val ev = (m ++ Seq.fill(3)(("z", Option.empty[Double]))).toDF("event_type", "value")
+    val out = Round9Ops15.robustCenterDf(ev).collect().map(r => r.getString(0) -> r).toMap
+    assert(out.keySet == Set("m", "z"))
+    assert(out("z").isNullAt(3) && out("z").isNullAt(4), s"z bounds: ${out("z")}")
+    val alone = Round9Ops15.robustCenterDf(m.toDF("event_type", "value")).collect()(0)
+    assert(out("m") == alone)
+  }
+
   test("events_robust_center: corpus run — robust means bracketed by bounds") {
     val out = Round9Ops15.eventsRobustCenter(spark, sf).collect()
     assert(out.nonEmpty)
