@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -101,11 +102,7 @@ object BenchCorpus {
       AnnIndex.indexPath(dir, 16, 3), AnnIndex.slicedPath(dir, 16, 3, 5),
       AnnIndex.pqPath(dir, 2), AnnIndex.pqSlicedPath(dir, 2, 5),
       MinhashIndex.indexPath(dir, 64))
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    roots.map(new java.io.File(_)).filter(_.exists).foreach(rm)
+    roots.foreach(r => FileUtils.deleteQuietly(new java.io.File(r)))
   }
 
   def main(args: Array[String]): Unit = {

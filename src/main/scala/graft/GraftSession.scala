@@ -85,19 +85,6 @@ object GraftSession {
     math.max(1L, math.min(cap.toLong,
       (nRows + rowsPerTask - 1) / rowsPerTask)).toInt
 
-  /** Run `body` with `spark.sql.shuffle.partitions` set to `n`,
-    * restoring the previous value after — for driver loops whose
-    * per-round jobs execute INSIDE the operator (BPE trainers), so the
-    * scoped setting cannot leak into the next query's plan. Same
-    * single-threaded-driver contract as the streaming twin of this
-    * helper (Streaming.withStreamPartitions). */
-  def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, old)
-  }
-
   /** Scoped conf for MODEL-SIZED driver-loop rounds (the BPE trainers):
     * [[modelPartitionsFor]]-derived shuffle partitioning AND adaptive
     * execution OFF, both restored after `body`. Each round is a fixed

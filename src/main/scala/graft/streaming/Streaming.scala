@@ -1,5 +1,10 @@
 package graft.streaming
 
+import java.io.File
+
+import scala.util.control.NonFatal
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -66,55 +71,43 @@ object Streaming {
     try body finally s.conf.set(key, old)
   }
 
-  /** Materialize a memory-sink-derived result eagerly (localCheckpoint),
-    * then drop the sink's temp view and delete any staging dir. The
-    * per-invocation uniquely-named sinks would otherwise pin one
-    * in-memory copy of their output per call (warmup + repeated bench
-    * passes) for the JVM lifetime, and the staged files accumulate
-    * under the scratch root. The checkpoint blocks are
+  /** The memory-sink lifecycle every stream twin rides: build and start
+    * `stream` under [[withStreamPartitions]] (which fixes its state
+    * partition count), drain everything available in `mode` into a
+    * memory sink named `prefix_nanoTime`, and return `finish` over the
+    * sink table, materialized by `localCheckpoint`. The sink
+    * view and `scratch` (a staged input dir) are released in a
+    * `finally`, on success and on failure alike, so neither pins memory
+    * nor accumulates under the scratch root per call; the drain's own
+    * exception still propagates. The checkpoint blocks are
     * ContextCleaner-reclaimed once the returned frame is unreachable. */
-  private[streaming] def sealResult(s: SparkSession, name: String, df: DataFrame,
-                                    scratchDir: Option[String] = None): DataFrame = {
-    val out = df.localCheckpoint()
-    dropScratch(s, name, scratchDir)
-    out
-  }
-
-  /** The register-stream template every mergeable-register twin rides:
-    * drain `registers` through a Complete-mode memory sink (the
-    * aggregate state IS the registers), then run the batch-side
-    * `finalize` over the drained table. One place owns the sink
-    * lifecycle (output mode, trigger, sealResult cleanup). */
-  private def runRegisterStream(s: SparkSession, prefix: String,
-      registers: DataFrame,
-      finalize: DataFrame => DataFrame): DataFrame = {
+  private[graft] def drain(s: SparkSession, prefix: String, mode: OutputMode,
+                           scratch: Option[String] = None)(
+      stream: => Dataset[_])(finish: DataFrame => DataFrame): DataFrame = {
     val name = s"${prefix}_${System.nanoTime()}"
-    withStreamPartitions(s) {
-      val q = registers.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    try {
+      withStreamPartitions(s) {
+        stream.writeStream.format("memory").queryName(name)
+          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+          .awaitTermination()
+      }
+      finish(s.table(name)).localCheckpoint()
+    } finally {
+      try s.catalog.dropTempView(name) catch { case NonFatal(_) => () }
+      scratch.foreach(deleteScratch)
     }
-    sealResult(s, name, finalize(s.table(name)))
   }
 
   /** A fresh path under the session scratch root (`GraftSession.local`
     * points `java.io.tmpdir` there) for a drain's staged input or
-    * output; [[sealResult]] / [[dropScratch]] delete it afterwards. */
+    * output; [[deleteScratch]] removes it afterwards. */
   private[streaming] def stagingPath(tag: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${System.nanoTime()}"
 
-  private[graft] def dropScratch(s: SparkSession, name: String,
-                                 scratchDir: Option[String]): Unit = {
-    try s.catalog.dropTempView(name) catch { case _: Throwable => () }
-    scratchDir.foreach { d =>
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      try rm(new java.io.File(d)) catch { case _: Throwable => () }
-    }
-  }
+  /** Delete a staged dir (symlinks are removed, not followed); a failure
+    * is swallowed so cleanup never masks the caller's own outcome. */
+  private[streaming] def deleteScratch(dir: String): Unit =
+    try FileUtils.deleteDirectory(new File(dir)) catch { case NonFatal(_) => () }
 
   // ----------------------------------------------------- #35 window counts
 
@@ -191,17 +184,9 @@ object Streaming {
 
   /** Real-stream run of [[enrichDim]] (file source → stream-static
     * broadcast join → windowed agg → memory sink). */
-  def runEnrichDimStream(s: SparkSession, dir: String): DataFrame = {
-    val name = s"enrich_${System.nanoTime()}"
-    withStreamPartitions(s) {
-      val q = enrichDim(eventsStream(s, dir), customerDim(s, dir)).writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    s.table(name)
-  }
+  def runEnrichDimStream(s: SparkSession, dir: String): DataFrame =
+    drain(s, "enrich", OutputMode.Complete)(
+      enrichDim(eventsStream(s, dir), customerDim(s, dir)))(identity)
 
   val streamEnrichDimSql: String =
     s"""SELECT make_timestamp(CAST(floor(epoch(CAST(ts AS TIMESTAMP)) / 21600) AS BIGINT) * 21600 * 1000000) AS window_start,
@@ -210,34 +195,30 @@ object Streaming {
        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
        |GROUP BY 1, 2, 3""".stripMargin
 
-  /** Streaming events source. File-stream sources require an explicit
-    * schema; hardcoding one silently desynced from the batch reader when
-    * the testdata regenerated with a new `ts` encoding (µs NTZ vs int64
-    * nanos) — the raw µs were then "div 1000"-ed into 1970. So the schema
-    * comes from the parquet footer via a zero-row batch read (driver-side
-    * metadata only), and the ts canonicalization is the SAME helper the
-    * batch loader uses ([[Tables.normalizeTs]]) — one contract, two
-    * execution modes. */
-  private[streaming] def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    val footerSchema = s.read.parquet(s"$dir/events.parquet").schema
-    Tables.normalizeTs(
-      s.readStream.schema(footerSchema)
-        .option("pathGlobFilter", "events.parquet") // source wants a dir
-        .parquet(dir))
+  /** File-stream source over `table` of the corpus at `dir`. File-stream
+    * sources require an explicit schema; hardcoding one silently desynced
+    * from the batch reader when the testdata regenerated with a new `ts`
+    * encoding (µs NTZ vs int64 nanos) — the raw µs were then
+    * "div 1000"-ed into 1970. So the schema comes from the parquet footer
+    * via a zero-row batch read (driver-side metadata only). */
+  private[streaming] def fileStream(s: SparkSession, dir: String,
+                                    table: String): DataFrame = {
+    val footerSchema = s.read.parquet(s"$dir/$table.parquet").schema
+    s.readStream.schema(footerSchema)
+      .option("pathGlobFilter", s"$table.parquet") // source wants a dir
+      .parquet(dir)
   }
 
-  /** Run [[windowCounts]] as a real stream (file source → memory sink,
-    * Trigger.AvailableNow) and return the sink table. */
-  def runWindowCountsStream(s: SparkSession, dir: String): DataFrame = {
-    withStreamPartitions(s) {
-      val q = windowCounts(eventsStream(s, dir)).writeStream
-        .format("memory").queryName("wc_stream")
-        .outputMode(OutputMode.Complete)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    s.table("wc_stream")
-  }
+  /** Streaming events source; the ts canonicalization is the SAME helper
+    * the batch loader uses ([[Tables.normalizeTs]]) — one contract, two
+    * execution modes. */
+  private[streaming] def eventsStream(s: SparkSession, dir: String): DataFrame =
+    Tables.normalizeTs(fileStream(s, dir, "events"))
+
+  /** Run [[windowCounts]] as a real stream (file source → memory sink)
+    * and return the drained table. */
+  def runWindowCountsStream(s: SparkSession, dir: String): DataFrame =
+    drain(s, "wc", OutputMode.Complete)(windowCounts(eventsStream(s, dir)))(identity)
 
   /** #35c stream_topk: streaming top-k — the windowed count aggregation
     * runs as a real stream (Complete mode: Spark keeps one state row per
@@ -248,7 +229,7 @@ object Streaming {
   def streamTopK(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
     val w = Window.partitionBy("window_start")
       .orderBy(col("n").desc, col("event_type"))
-    runRegisterStream(s, "topk", windowCounts(eventsStream(s, dir)),
+    drain(s, "topk", OutputMode.Complete)(windowCounts(eventsStream(s, dir)))(
       _.withColumn("rk", row_number().over(w))
         .filter(col("rk") <= k)
         .select(col("window_start"), col("event_type"), col("n"), col("rk")))
@@ -272,16 +253,15 @@ object Streaming {
     * sink. This is the canonical "mergeable sketch over an unbounded
     * stream" pattern: O(m · groups) state, no raw retention. */
   def streamHll(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "hll",
-      graft.operators.Analytics2.hllRegisters(eventsStream(s, dir)),
-      { regs =>
-        val exact = Tables.events(s, dir).groupBy(col("event_type"))
-          .agg(countDistinct(col("user_id")).as("n_exact"))
-        graft.operators.Analytics2.hllFinalize(regs)
-          .join(broadcast(exact), Seq("event_type"))
-          .select(col("event_type"), col("n_exact"), col("hll_est"))
-          .orderBy(col("event_type"))
-      })
+    drain(s, "hll", OutputMode.Complete)(
+      graft.operators.Analytics2.hllRegisters(eventsStream(s, dir))) { regs =>
+      val exact = Tables.events(s, dir).groupBy(col("event_type"))
+        .agg(countDistinct(col("user_id")).as("n_exact"))
+      graft.operators.Analytics2.hllFinalize(regs)
+        .join(broadcast(exact), Seq("event_type"))
+        .select(col("event_type"), col("n_exact"), col("hll_est"))
+        .orderBy(col("event_type"))
+    }
 
   /** #72b stream_cms: the portable Count-Min sketch maintained
     * incrementally — register counts ARE the streaming state (sum is the
@@ -291,14 +271,13 @@ object Streaming {
     * ≤ depth×width register sink. Same mergeable-sketch contract as
     * [[streamHll]]: O(depth×width) state, no raw retention. */
   def streamCms(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "cms",
-      graft.operators.Sketches.cmsRegisters(eventsStream(s, dir)),
-      { regs =>
-        val ev = Tables.events(s, dir)
-        val exact = ev.groupBy(col("user_id")).agg(count(lit(1)).as("n_exact"))
-        graft.operators.Sketches.cmsTopK(
-          regs, ev.select(col("user_id")).distinct(), exact, 10)
-      })
+    drain(s, "cms", OutputMode.Complete)(
+      graft.operators.Sketches.cmsRegisters(eventsStream(s, dir))) { regs =>
+      val ev = Tables.events(s, dir)
+      val exact = ev.groupBy(col("user_id")).agg(count(lit(1)).as("n_exact"))
+      graft.operators.Sketches.cmsTopK(
+        regs, ev.select(col("user_id")).distinct(), exact, 10)
+    }
 
   /** #73b stream_bloom: the portable bloom filter built incrementally —
     * per-word bit_or IS the streaming state (bit_or is idempotent AND
@@ -307,10 +286,10 @@ object Streaming {
     * bit-identical to the batch build; the probe + per-type report run
     * batch-side, checked by the batch oracle. */
   def streamBloom(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "bloom",
+    drain(s, "bloom", OutputMode.Complete)(
       graft.operators.Sketches.bloomWords(
         eventsStream(s, dir).filter(col("event_type") === "purchase")
-          .select(col("user_id"))),
+          .select(col("user_id"))))(
       graft.operators.Sketches.bloomProbeReport(s, dir, _))
 
   /** #213 stream_ams_f2: the #212 AMS F₂ sketch maintained
@@ -321,8 +300,8 @@ object Streaming {
     * integer state, no raw retention — the same mergeable-register
     * contract as [[streamHll]]/[[streamCms]]. */
   def streamAmsF2(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "ams",
-      graft.operators.Round6Ops10.amsRegisters(eventsStream(s, dir)),
+    drain(s, "ams", OutputMode.Complete)(
+      graft.operators.Round6Ops10.amsRegisters(eventsStream(s, dir)))(
       regs => graft.operators.Round6Ops10.amsFinalize(regs, Tables.events(s, dir)))
 
   /** #215 stream_sample: the #214 deterministic bottom-k uniform sample
@@ -334,19 +313,15 @@ object Streaming {
     * state; the batch oracle checks the exact rows. */
   def streamSample(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.ensure(s)
-    runRegisterStream(s, "sample",
-      graft.operators.Round6Ops10.sampleSketch(eventsStream(s, dir)),
+    drain(s, "sample", OutputMode.Complete)(
+      graft.operators.Round6Ops10.sampleSketch(eventsStream(s, dir)))(
       graft.operators.Round6Ops10.sampleFinalize)
   }
 
   /** File-source stream over the documents table (the text-feed
     * counterpart of [[eventsStream]]). */
-  private[streaming] def docsStream(s: SparkSession, dir: String): DataFrame = {
-    val footerSchema = s.read.parquet(s"$dir/documents.parquet").schema
-    s.readStream.schema(footerSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-  }
+  private[streaming] def docsStream(s: SparkSession, dir: String): DataFrame =
+    fileStream(s, dir, "documents")
 
   /** #238 stream_doc_quality: the #22 quality score as a CONTINUOUS
     * ingest monitor over the documents feed — per source, the running
@@ -358,8 +333,8 @@ object Streaming {
     * quality steps down mid-crawl is a parser regression caught here,
     * batches before the #132 curve would show it at rest. */
   def streamDocQuality(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "docq",
-      graft.operators.TextOps.docQualityRegisters(docsStream(s, dir)),
+    drain(s, "docq", OutputMode.Complete)(
+      graft.operators.TextOps.docQualityRegisters(docsStream(s, dir)))(
       graft.operators.TextOps.docQualityFinalize)
 
   /** #240 stream_rule_check: the #239 event-feed rule registers
@@ -370,8 +345,8 @@ object Streaming {
     * join rules stay batch, exactly because row-local rules are what
     * keeps the register mergeable. */
   def streamRuleCheck(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "rules",
-      graft.operators.Round6Ops16.eventRuleRegisters(eventsStream(s, dir)),
+    drain(s, "rules", OutputMode.Complete)(
+      graft.operators.Round6Ops16.eventRuleRegisters(eventsStream(s, dir)))(
       graft.operators.Round6Ops16.eventRuleFinalize)
 
   /** #279 stream_adoption: the #278 adoption curve LIVE — the per
@@ -383,8 +358,8 @@ object Streaming {
     * #278's oracle. The launch dashboard that updates as the rollout
     * lands. */
   def streamAdoption(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "adopt",
-      graft.operators.Round6Ops29.adoptionRegisters(eventsStream(s, dir)),
+    drain(s, "adopt", OutputMode.Complete)(
+      graft.operators.Round6Ops29.adoptionRegisters(eventsStream(s, dir)))(
       graft.operators.Round6Ops29.adoptionFinalize)
 
   /** #276 stream_script_mix: the #273 Unicode script census LIVE —
@@ -395,8 +370,8 @@ object Streaming {
     * oracle. The encoding-drift alarm at the crawler's edge beside
     * #259's language mix. */
   def streamScriptMix(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "script",
-      graft.operators.Round6Ops27.scriptRegisters(docsStream(s, dir)),
+    drain(s, "script", OutputMode.Complete)(
+      graft.operators.Round6Ops27.scriptRegisters(docsStream(s, dir)))(
       graft.operators.Round6Ops27.scriptMixFinalize)
 
   /** #272 stream_icc: the #271 intraclass correlation maintained
@@ -407,8 +382,8 @@ object Streaming {
     * to batch and sharing #271's oracle. The live design-effect
     * readout a running experiment's power math needs. */
   def streamIcc(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "icc",
-      graft.operators.Round6Ops26.iccRegisters(eventsStream(s, dir)),
+    drain(s, "icc", OutputMode.Complete)(
+      graft.operators.Round6Ops26.iccRegisters(eventsStream(s, dir)))(
       graft.operators.Round6Ops26.iccFinalize)
 
   /** #311 stream_diff_in_diff: the #304 causal readout MAINTAINED LIVE
@@ -423,8 +398,8 @@ object Streaming {
   def streamDiffInDiff(s: SparkSession, dir: String): DataFrame = {
     val mid = graft.operators.Round8Ops.feedMidDay(
       graft.sources.Tables.events(s, dir))
-    runRegisterStream(s, "did",
-      graft.operators.Round9Ops2.didRegisters(eventsStream(s, dir), mid),
+    drain(s, "did", OutputMode.Complete)(
+      graft.operators.Round9Ops2.didRegisters(eventsStream(s, dir), mid))(
       graft.operators.Round9Ops2.didFinalize)
   }
 
@@ -438,8 +413,8 @@ object Streaming {
     * Bit-identical to #320, sharing its oracle — the live retention
     * curve a growth dashboard refreshes as events land. */
   def streamRetentionHalflife(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "ret",
-      graft.operators.Round9Ops9.activeDayRegisters(eventsStream(s, dir)),
+    drain(s, "ret", OutputMode.Complete)(
+      graft.operators.Round9Ops9.activeDayRegisters(eventsStream(s, dir)))(
       graft.operators.Round9Ops9.retentionHalflifeFinalize)
 
   /** #324 stream_hurst: the #319 long-range-dependence panel LIVE —
@@ -452,8 +427,8 @@ object Streaming {
     * mid-stream is a structural change in the feed the variance-scale
     * ladder catches before any single-lag monitor. */
   def streamHurst(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "hurst",
-      graft.operators.Round9Ops9.dailyMomentRegisters(eventsStream(s, dir)),
+    drain(s, "hurst", OutputMode.Complete)(
+      graft.operators.Round9Ops9.dailyMomentRegisters(eventsStream(s, dir)))(
       graft.operators.Round9Ops9.hurstFinalize)
 
   /** #362 stream_permutation_entropy: the #360 complexity triage LIVE —
@@ -468,8 +443,8 @@ object Streaming {
     * monitors; the ordinal alphabet catches the dynamics change as it
     * lands. */
   def streamPermutationEntropy(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "pentropy",
-      graft.operators.Round9Ops9.dailyMomentRegisters(eventsStream(s, dir)),
+    drain(s, "pentropy", OutputMode.Complete)(
+      graft.operators.Round9Ops9.dailyMomentRegisters(eventsStream(s, dir)))(
       graft.operators.Round10Ops.permutationEntropyFinalize)
 
   /** #316 stream_value_psi: the #310 PSI drift scorecard LIVE — the
@@ -483,8 +458,8 @@ object Streaming {
   def streamValuePsi(s: SparkSession, dir: String): DataFrame = {
     val (mid, lo, hi) = graft.operators.Round9Ops4.psiBounds(
       graft.sources.Tables.events(s, dir))
-    runRegisterStream(s, "psi",
-      graft.operators.Round9Ops4.psiRegistersLit(eventsStream(s, dir), mid, lo, hi),
+    drain(s, "psi", OutputMode.Complete)(
+      graft.operators.Round9Ops4.psiRegistersLit(eventsStream(s, dir), mid, lo, hi))(
       graft.operators.Round9Ops4.psiFinalize)
   }
 
@@ -498,10 +473,13 @@ object Streaming {
     * sink — bit-identical to #348, sharing its oracle. A live metric
     * WITH its uncertainty: the dashboard stops flagging noise as
     * movement. */
-  def streamBootstrapCi(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "boot",
-      graft.operators.Round9Ops21.bootstrapRegisters(eventsStream(s, dir)),
+  def streamBootstrapCi(s: SparkSession, dir: String): DataFrame = {
+    // built before the drain: its pre-fan repartition reads the
+    // session's shuffle partitions, not the stream's state partitions
+    val regs = graft.operators.Round9Ops21.bootstrapRegisters(eventsStream(s, dir))
+    drain(s, "boot", OutputMode.Complete)(regs)(
       graft.operators.Round9Ops21.bootstrapFinalize)
+  }
 
   /** #352 stream_modality_balance: the #219 multimodal inventory as a
     * CONTINUOUS ingest monitor — the (source, modality) doc/byte/frame
@@ -513,8 +491,8 @@ object Streaming {
     * lands on — a camera feed flooding one modality shows up in
     * minutes, not at the nightly batch. */
   def streamModalityBalance(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "modal",
-      graft.operators.Round6Ops11.modalityRegisters(docsStream(s, dir)),
+    drain(s, "modal", OutputMode.Complete)(
+      graft.operators.Round6Ops11.modalityRegisters(docsStream(s, dir)))(
       graft.operators.Round6Ops11.modalityBalanceFinalize)
 
   /** #346 stream_style_divergence: the #343 corpus-homogeneity audit
@@ -527,8 +505,8 @@ object Streaming {
     * notices a crawler feed changing script or turning to markup soup
     * while it happens. */
   def streamStyleDivergence(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "style",
-      graft.operators.Round9Ops18.charCountRegisters(docsStream(s, dir)),
+    drain(s, "style", OutputMode.Complete)(
+      graft.operators.Round9Ops18.charCountRegisters(docsStream(s, dir)))(
       graft.operators.Round9Ops18.styleFinalize)
 
   /** #342 stream_robust_center: the #337 robust KPI panel LIVE — the
@@ -544,8 +522,8 @@ object Streaming {
   def streamRobustCenter(s: SparkSession, dir: String): DataFrame = {
     val bounds = graft.operators.Round9Ops15.robustBounds(
       graft.sources.Tables.events(s, dir))
-    runRegisterStream(s, "robust",
-      graft.operators.Round9Ops15.robustRegisters(eventsStream(s, dir), bounds),
+    drain(s, "robust", OutputMode.Complete)(
+      graft.operators.Round9Ops15.robustRegisters(eventsStream(s, dir), bounds))(
       graft.operators.Round9Ops15.robustFinalize)
   }
 
@@ -559,8 +537,8 @@ object Streaming {
     * alert bands it is allowed to use, kept current as the feed
     * drifts. */
   def streamOverdispersion(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "odisp",
-      graft.operators.Round9Ops14.dailyCountRegisters(eventsStream(s, dir)),
+    drain(s, "odisp", OutputMode.Complete)(
+      graft.operators.Round9Ops14.dailyCountRegisters(eventsStream(s, dir)))(
       graft.operators.Round9Ops14.overdispersionFinalize)
 
   /** #332 stream_ab_monitor: the #330 corrected A/B readout LIVE —
@@ -573,8 +551,8 @@ object Streaming {
     * runs #330's Holm/BH chain — bit-identical to batch, sharing
     * #330's oracle. */
   def streamAbMonitor(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "abmon",
-      graft.operators.Round9Ops13.welchMomentRegisters(eventsStream(s, dir)),
+    drain(s, "abmon", OutputMode.Complete)(
+      graft.operators.Round9Ops13.welchMomentRegisters(eventsStream(s, dir)))(
       graft.operators.Round9Ops13.abMonitorFinalize)
 
   /** #326 stream_freshness: the #325 feed-liveness scorecard as a
@@ -587,8 +565,8 @@ object Streaming {
     * verdict readout runs batch-side over the bounded sink, sharing
     * #325's oracle. */
   def streamFreshness(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "fresh",
-      graft.operators.Round9Ops10.freshnessRegisters(eventsStream(s, dir)),
+    drain(s, "fresh", OutputMode.Complete)(
+      graft.operators.Round9Ops10.freshnessRegisters(eventsStream(s, dir)))(
       graft.operators.Round9Ops10.freshnessFinalize)
 
   /** #265 stream_slo_burn: the #261 burn-rate alert as a LIVE monitor
@@ -599,8 +577,8 @@ object Streaming {
     * is the shape SRE burn alerts actually deploy as: a continuously
     * maintained window table the pager reads. */
   def streamSloBurn(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "burn",
-      graft.operators.Round6Ops22.burnRegisters(eventsStream(s, dir)),
+    drain(s, "burn", OutputMode.Complete)(
+      graft.operators.Round6Ops22.burnRegisters(eventsStream(s, dir)))(
       graft.operators.Round6Ops22.burnFinalize)
 
   /** #289 stream_pii_mix: the #288 PII audit LIVE — per-source doc/
@@ -612,8 +590,8 @@ object Streaming {
     * edge: a source whose PII rate steps up mid-crawl gets quarantined
     * before the batch gate would see it. */
   def streamPiiMix(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "pii",
-      graft.operators.Round8Ops.piiRegisters(docsStream(s, dir)),
+    drain(s, "pii", OutputMode.Complete)(
+      graft.operators.Round8Ops.piiRegisters(docsStream(s, dir)))(
       graft.operators.Round8Ops.piiAuditFinalize)
 
   /** #285 stream_schema_drift: the #284 JSON-schema drift monitor LIVE
@@ -628,8 +606,8 @@ object Streaming {
   def streamSchemaDrift(s: SparkSession, dir: String): DataFrame = {
     val mid = graft.operators.Round8Ops.feedMidDay(
       graft.sources.Tables.events(s, dir))
-    runRegisterStream(s, "schema",
-      graft.operators.Round8Ops.schemaRegisters(eventsStream(s, dir), mid),
+    drain(s, "schema", OutputMode.Complete)(
+      graft.operators.Round8Ops.schemaRegisters(eventsStream(s, dir), mid))(
       graft.operators.Round8Ops.schemaDriftFinalize)
   }
 
@@ -644,8 +622,8 @@ object Streaming {
     * second scan), exactly because a stream cannot re-scan the feed. */
   def streamTokenBudget(s: SparkSession, dir: String,
                         budget: Long = 20000): DataFrame =
-    runRegisterStream(s, "tokbudget",
-      graft.operators.Curation.tokenBudgetRegisters(docsStream(s, dir)),
+    drain(s, "tokbudget", OutputMode.Complete)(
+      graft.operators.Curation.tokenBudgetRegisters(docsStream(s, dir)))(
       graft.operators.Curation.tokenBudgetFinalize(budget))
 
   /** #299 stream_token_budget_bpe: the #298 REAL-token budget decision
@@ -665,8 +643,9 @@ object Streaming {
     // posexplode + stream-static join into one stateful aggregate
     val wmap = graft.operators.BpeEncode.corpusWordMap(
       s, dir, graft.operators.TextOps2.BpeSteps)
-    runRegisterStream(s, "tokbudgetbpe",
-      graft.operators.BpeEncode.budgetRegisters(docsStream(s, dir), wmap),
+    // built before the drain, like streamBootstrapCi's registers
+    val regs = graft.operators.BpeEncode.budgetRegisters(docsStream(s, dir), wmap)
+    drain(s, "tokbudgetbpe", OutputMode.Complete)(regs)(
       graft.operators.BpeEncode.budgetFinalize(budget))
   }
 
@@ -679,8 +658,8 @@ object Streaming {
     * PUBLISHES, updating as the crawl lands — budget owners watch
     * keep_prose share in flight instead of after the batch gate. */
   def streamDisposition(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "disp",
-      graft.operators.Round6Ops24.dispositionRegisters(docsStream(s, dir)),
+    drain(s, "disp", OutputMode.Complete)(
+      graft.operators.Round6Ops24.dispositionRegisters(docsStream(s, dir)))(
       graft.operators.Round6Ops24.dispositionFinalize)
 
   /** #281 stream_garbage_mix: the #222 OCR/encoding-garbage screen as
@@ -692,8 +671,8 @@ object Streaming {
     * A source whose garbage share steps up mid-crawl is an extractor
     * regression caught at the edge, beside #238's quality monitor. */
   def streamGarbageMix(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "garb",
-      graft.operators.Round6Ops12.garbageRegisters(docsStream(s, dir)),
+    drain(s, "garb", OutputMode.Complete)(
+      graft.operators.Round6Ops12.garbageRegisters(docsStream(s, dir)))(
       graft.operators.Round6Ops12.garbageMixFinalize)
 
   /** #308 stream_classifier_calibration: the #305-trained quality
@@ -709,8 +688,8 @@ object Streaming {
     * model no longer fits the feed. */
   def streamClassifierCalibration(s: SparkSession, dir: String): DataFrame = {
     val (means, sds, w) = graft.operators.Round9Ops3.classifierModel(s, dir)
-    runRegisterStream(s, "qcal",
-      graft.operators.Round9Ops3.calibRegisters(docsStream(s, dir), means, sds, w),
+    drain(s, "qcal", OutputMode.Complete)(
+      graft.operators.Round9Ops3.calibRegisters(docsStream(s, dir), means, sds, w))(
       graft.operators.Round9Ops3.calibFinalize)
   }
 
@@ -721,8 +700,8 @@ object Streaming {
     * bit-identical to batch and #258's oracle checks the shares. The
     * langid drift alarm at the crawler's edge. */
   def streamLangMix(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "langmix",
-      graft.operators.Round6Ops21.langMixRegisters(docsStream(s, dir)),
+    drain(s, "langmix", OutputMode.Complete)(
+      graft.operators.Round6Ops21.langMixRegisters(docsStream(s, dir)))(
       graft.operators.Round6Ops21.langMixFinalize)
 
   /** #260 stream_mix_weights: #74's token inventory maintained
@@ -734,8 +713,8 @@ object Streaming {
     * the crawl lands — a budget owner reads tomorrow's weights
     * tonight. */
   def streamMixWeights(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "mixw",
-      graft.operators.Sketches.mixRegisters(docsStream(s, dir)),
+    drain(s, "mixw", OutputMode.Complete)(
+      graft.operators.Sketches.mixRegisters(docsStream(s, dir)))(
       graft.operators.Sketches.mixFinalize)
 
   /** #246 stream_load_heatmap: the #241 hour×weekday load matrix as a
@@ -745,8 +724,8 @@ object Streaming {
     * over the fixed-size sink, sharing #241's oracle. The live view a
     * capacity dashboard actually polls. */
   def streamLoadHeatmap(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "heat",
-      graft.operators.Round6Ops16.loadCells(eventsStream(s, dir)),
+    drain(s, "heat", OutputMode.Complete)(
+      graft.operators.Round6Ops16.loadCells(eventsStream(s, dir)))(
       graft.operators.Round6Ops16.loadHeatmapFinalize)
 
   /** #228 stream_volume_anomaly: the #220 daily-volume feed monitor as
@@ -758,8 +737,8 @@ object Streaming {
     * calendar-bounded; the same mergeable-register contract as
     * [[streamBenford]]. */
   def streamVolumeAnomaly(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "vol",
-      graft.operators.Round6Ops11.volumeDayCounts(eventsStream(s, dir)),
+    drain(s, "vol", OutputMode.Complete)(
+      graft.operators.Round6Ops11.volumeDayCounts(eventsStream(s, dir)))(
       graft.operators.Round6Ops11.volumeFinalize)
 
   /** #168 stream_benford: the #161 Benford first-digit audit as a
@@ -773,10 +752,10 @@ object Streaming {
     * chi-square finalize runs batch-side over the 9-row sink. Same
     * mergeable-register contract as [[streamHll]]/[[streamCms]]. */
   def streamBenford(s: SparkSession, dir: String): DataFrame =
-    runRegisterStream(s, "benford",
+    drain(s, "benford", OutputMode.Complete)(
       graft.operators.Round6Ops4.benfordDigitCounts(
         eventsStream(s, dir)
-          .select(floor(col("value") * 100 + 0.5).cast("long").as("cents"))),
+          .select(floor(col("value") * 100 + 0.5).cast("long").as("cents"))))(
       graft.operators.Round6Ops4.benfordReport(s, _))
 
   val streamBenfordSql: String = graft.operators.Round6Ops4.benfordReportSql(
@@ -802,9 +781,9 @@ object Streaming {
   def streamQuantile(s: SparkSession, dir: String): DataFrame = {
     val ranges = graft.operators.Sketches.qsRanges(
       Tables.events(s, dir).select(col("event_type"), col("value")))
-    runRegisterStream(s, "qs",
+    drain(s, "qs", OutputMode.Complete)(
       graft.operators.Sketches.qsBinned(
-        eventsStream(s, dir).select(col("event_type"), col("value")), ranges),
+        eventsStream(s, dir).select(col("event_type"), col("value")), ranges))(
       graft.operators.Sketches.qsFinalize(_, ranges))
   }
 
@@ -861,18 +840,11 @@ object Streaming {
     * cumulative sketch (Update mode); the last emission per type wins,
     * selected batch-side over the ≤ types × batches row sink. */
   def streamKmv(s: SparkSession, dir: String): DataFrame = {
-    val name = s"kmv_${System.nanoTime()}"
     graft.functions.GraftFunctions.ensure(s)
-    withStreamPartitions(s) {
-      val q = kmvFoldSketches(eventsStream(s, dir)
-          .select(col("event_type"), col("user_id")))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    drain(s, "kmv", OutputMode.Update)(
+      kmvFoldSketches(eventsStream(s, dir).select(col("event_type"), col("user_id")))) {
+      sink => graft.operators.Sketches.kmvFinalize(lastEmission(sink), Tables.events(s, dir))
     }
-    sealResult(s, name, graft.operators.Sketches.kmvFinalize(
-      lastEmission(s.table(name)), Tables.events(s, dir)))
   }
 
   /** Last Update-mode emission per type from a drained sink (≤ types ×
@@ -912,64 +884,38 @@ object Streaming {
     closed.result().iterator
   }
 
-  /** Stateful streaming sessionization. Returns the CLOSED sessions
+  /** #36 stateful streaming sessionization. Returns the CLOSED sessions
     * observed while draining the source (each user's final session stays
     * open in state — StreamingSpec pins parity against the batch
     * sessionizer modulo those). */
-  def runSessionizeStream(s: SparkSession, dir: String,
-                          name: String = "sess_stream"): DataFrame = {
+  def streamSessionize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    withStreamPartitions(s) {
-      val events = eventsStream(s, dir)
+    drain(s, "sess", OutputMode.Append)(
+      eventsStream(s, dir)
         .select(col("user_id"), epochUs(col("ts")).as("ts_us"))
         .as[SessEvent]
-      val sessions = events.groupByKey(_.user_id)
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(foldGroup)
-      val q = sessions.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    s.table(name)
-      .select(col("user_id"),
+        .groupByKey(_.user_id)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(foldGroup)) {
+      _.select(col("user_id"),
         timestamp_micros(col("session_start_us")).as("session_start"),
         timestamp_micros(col("session_end_us")).as("session_end"),
         col("n_events"))
-  }
-
-  /** Driver-contract entry for #36 (sealed: the per-call sink view is
-    * dropped after materialization; specs that inspect the sink use
-    * [[runSessionizeStream]] with their own name). */
-  def streamSessionize(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sess_${System.nanoTime()}"
-    sealResult(s, name, runSessionizeStream(s, dir, name))
+    }
   }
 
   // ------------------------------------------------------- #37 stream dedup
 
-  /** Streaming deduplication: `dropDuplicates` holds one state entry per
-    * distinct key and emits each key's first arrival — the streaming
+  /** #37 streaming deduplication: `dropDuplicates` holds one state entry
+    * per distinct key and emits each key's first arrival — the streaming
     * half of exact dedup (at scale the state store is RocksDB, keyed by
     * the same hash the batch groupBy shuffles on; with a watermark the
     * state is bounded to the lateness horizon). Output = the distinct
     * key set, which the batch oracle checks exactly. */
-  def runDedupStream(s: SparkSession, dir: String,
-                     name: String = "dedup_stream"): DataFrame = {
-    withStreamPartitions(s) {
-      val q = eventsStream(s, dir)
+  def streamDedup(s: SparkSession, dir: String): DataFrame =
+    drain(s, "dedup", OutputMode.Append)(
+      eventsStream(s, dir)
         .select(col("user_id"), col("event_type"))
-        .dropDuplicates("user_id", "event_type")
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    s.table(name)
-  }
-
-  /** Driver-contract entry for #37 (batch-exact oracle). */
-  def streamDedup(s: SparkSession, dir: String): DataFrame = {
-    val name = s"dedup_${System.nanoTime()}"
-    sealResult(s, name, runDedupStream(s, dir, name))
-  }
+        .dropDuplicates("user_id", "event_type"))(identity)
 
   val streamDedupSql: String =
     "SELECT DISTINCT user_id, event_type FROM events"
@@ -989,28 +935,13 @@ object Streaming {
     * checks; the multi-batch expiry behavior is pinned in
     * StreamingSpec against a staged source whose second batch lies
     * beyond the horizon. */
-  def runDedupWatermarkStream(s: SparkSession, source: DataFrame,
-                              name: String,
-                              horizon: String = "1 hour"): DataFrame = {
-    withStreamPartitions(s) {
-      val q = source
+  def streamDedupWatermark(s: SparkSession, dir: String): DataFrame =
+    drain(s, "dedup_wm", OutputMode.Append)(
+      eventsStream(s, dir)
         .select(col("user_id"), col("event_type"), col("ts"))
-        .withWatermark("ts", horizon)
+        .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
-        .select(col("user_id"), col("event_type"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    s.table(name)
-  }
-
-  /** Driver-contract entry for #36e (batch-exact oracle under a
-    * single-batch drain). */
-  def streamDedupWatermark(s: SparkSession, dir: String): DataFrame = {
-    val name = s"dedup_wm_${System.nanoTime()}"
-    sealResult(s, name, runDedupWatermarkStream(s, eventsStream(s, dir), name))
-  }
+        .select(col("user_id"), col("event_type")))(identity)
 
   val streamDedupWatermarkSql: String =
     "SELECT DISTINCT user_id, event_type FROM events"
@@ -1026,36 +957,21 @@ object Streaming {
     * The test corpus is one file = one micro-batch, so no match is
     * dropped by watermark eviction and the batch SQL oracle is exact.
     */
-  def runClickAttributionStream(s: SparkSession, dir: String,
-                                name: String = "attr_stream"): DataFrame = {
-    withStreamPartitions(s) {
-    val clicks = eventsStream(s, dir)
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-              col("event_id").as("click_id"))
-      .withWatermark("c_ts", "1 hour")
-    val purchases = eventsStream(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-              col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", "1 hour")
-    val joined = purchases.join(clicks,
-      col("c_user") === col("p_user") &&
-      col("c_ts") <= col("p_ts") &&
-      col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR"))
-    val q = joined.writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    }
-    s.table(name)
-      .select(col("p_user").as("user_id"), col("purchase_id"), col("click_id"),
-              (epochUs(col("p_ts")) - epochUs(col("c_ts"))).as("gap_us"))
-  }
-
-  /** Driver-contract entry for #38 (exact batch-join oracle). */
   def streamClickAttribution(s: SparkSession, dir: String): DataFrame = {
-    val name = s"attr_${System.nanoTime()}"
-    sealResult(s, name, runClickAttributionStream(s, dir, name))
+    def side(tpe: String, user: String, ts: String, id: String) =
+      eventsStream(s, dir)
+        .filter(col("event_type") === tpe)
+        .select(col("user_id").as(user), col("ts").as(ts), col("event_id").as(id))
+        .withWatermark(ts, "1 hour")
+    drain(s, "attr", OutputMode.Append)(
+      side("purchase", "p_user", "p_ts", "purchase_id")
+        .join(side("click", "c_user", "c_ts", "click_id"),
+          col("c_user") === col("p_user") &&
+          col("c_ts") <= col("p_ts") &&
+          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR"))) {
+      _.select(col("p_user").as("user_id"), col("purchase_id"), col("click_id"),
+               (epochUs(col("p_ts")) - epochUs(col("c_ts"))).as("gap_us"))
+    }
   }
 
   val streamClickAttributionSql: String =

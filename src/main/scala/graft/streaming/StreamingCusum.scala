@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.Parity.r6d
 import graft.streaming.StreamingHolt.{HoltIn, HoltState, dailySeries, mergeDays}
@@ -102,17 +102,9 @@ object StreamingCusum {
               col("sigma"), col("cusum_max"), col("n_alarms"))
       .orderBy(col("user_id"))
 
-  def streamCusum(s: SparkSession, dir: String): DataFrame = {
-    val name = s"cusum_${System.nanoTime()}"
-    Streaming.withStreamPartitions(s) {
-      val q = cusumFold(Streaming.eventsStream(s, dir))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    Streaming.sealResult(s, name, finalizeCusum(s.table(name)))
-  }
+  def streamCusum(s: SparkSession, dir: String): DataFrame =
+    Streaming.drain(s, "cusum", OutputMode.Update)(
+      cusumFold(Streaming.eventsStream(s, dir)))(finalizeCusum)
 
   /** The batch #136 oracle — identical output contract. */
   val streamCusumSql: String = graft.operators.Round6Ops2.tsCusumAlarmSql

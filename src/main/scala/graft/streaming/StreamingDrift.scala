@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** #120 stream_centroid_drift: the #113 embedding distribution-shift
   * monitor maintained INCREMENTALLY — per-label, per-component decimal
@@ -106,20 +106,9 @@ object StreamingDrift {
 
   /** Driver-contract entry: stream the embeddings file through the
     * fold, finalize the drained sink. */
-  def streamCentroidDrift(s: SparkSession, dir: String): DataFrame = {
-    val name = s"drift_${System.nanoTime()}"
-    val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-    val source = s.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-    Streaming.withStreamPartitions(s) {
-      val q = driftFold(source)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    Streaming.sealResult(s, name, finalizeDrift(s.table(name)))
-  }
+  def streamCentroidDrift(s: SparkSession, dir: String): DataFrame =
+    Streaming.drain(s, "drift", OutputMode.Update)(
+      driftFold(Streaming.fileStream(s, dir, "embeddings")))(finalizeDrift)
 
   /** The batch #113 oracle — identical output contract. */
   val streamCentroidDriftSql: String =

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Input row for the streaming EWMA fold (µs event time; `value` may be
   * missing — a missing observation still occupies a lag slot, exactly
@@ -66,24 +66,17 @@ object StreamingEwma {
     out.result().iterator
   }
 
-  /** Run the fold as a real stream (file source → memory sink,
-    * Trigger.AvailableNow) and return the drained result. */
+  /** Run the fold as a real stream (file source → memory sink) and
+    * return the drained result. */
   def streamEwma(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val name = s"ewma_${System.nanoTime()}"
-    Streaming.withStreamPartitions(s) {
-      val in = Streaming.eventsStream(s, dir)
+    Streaming.drain(s, "ewma", OutputMode.Append)(
+      Streaming.eventsStream(s, dir)
         .select(col("event_id"), col("user_id"),
                 graft.Parity.epochUs(col("ts")).as("ts_us"), col("value"))
         .as[EwmaIn]
-      val q = in.groupByKey(_.user_id)
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(foldEwma)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    Streaming.sealResult(s, name,
-      s.table(name).select(col("event_id"), col("user_id"), col("ewma")))
+        .groupByKey(_.user_id)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(foldEwma))(
+      _.select(col("event_id"), col("user_id"), col("ewma")))
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** #126 stream_holt: the #115 Holt level/trend smoother maintained
   * incrementally over the events stream. The recursion itself is
@@ -102,17 +102,9 @@ object StreamingHolt {
               col("forecast"))
       .orderBy(col("user_id"))
 
-  def streamHolt(s: SparkSession, dir: String): DataFrame = {
-    val name = s"holt_${System.nanoTime()}"
-    Streaming.withStreamPartitions(s) {
-      val q = holtFold(Streaming.eventsStream(s, dir))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    Streaming.sealResult(s, name, finalizeHolt(s.table(name)))
-  }
+  def streamHolt(s: SparkSession, dir: String): DataFrame =
+    Streaming.drain(s, "holt", OutputMode.Update)(
+      holtFold(Streaming.eventsStream(s, dir)))(finalizeHolt)
 
   /** The batch #115 oracle — identical output contract. */
   val streamHoltSql: String = graft.operators.Round6Ops.tsHoltSql
@@ -193,17 +185,9 @@ object StreamingHolt {
     * re-folding the sorted day axis through the #174 α/β/γ recursion.
     * O(days) state per key, calendar-bounded; the drained stream is
     * BIT-IDENTICAL to the batch operator and shares its oracle. */
-  def streamHoltWinters(s: SparkSession, dir: String): DataFrame = {
-    val name = s"hw_${System.nanoTime()}"
-    Streaming.withStreamPartitions(s) {
-      val q = hwFold(Streaming.eventsStream(s, dir))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    Streaming.sealResult(s, name, finalizeHw(s.table(name)))
-  }
+  def streamHoltWinters(s: SparkSession, dir: String): DataFrame =
+    Streaming.drain(s, "hw", OutputMode.Update)(
+      hwFold(Streaming.eventsStream(s, dir)))(finalizeHw)
 
   /** The batch #174 oracle — identical output contract. */
   val streamHoltWintersSql: String = graft.operators.Round6Ops.tsHoltWintersSql

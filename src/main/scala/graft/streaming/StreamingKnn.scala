@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.Similarity2
 import graft.sources.Tables
@@ -74,20 +74,13 @@ object StreamingKnn {
         foldKnn(k))
   }
 
-  /** Drive the kNN stream over `source` (raw embedding rows) and
-    * return the drained sink name's final shortlists. */
+  /** Drain the kNN stream over `source` (raw embedding rows) and
+    * return `finish` over the drained top-k sink. */
   private[graft] def runKnnStream(s: SparkSession, source: DataFrame,
-                                  queries: DataFrame, name: String,
-                                  k: Int): DataFrame = {
-    Streaming.withStreamPartitions(s) {
-      val q = knnFold(Similarity2.packCols(source), queries, k)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    s.table(name)
-  }
+                                  queries: DataFrame, k: Int)(
+      finish: DataFrame => DataFrame): DataFrame =
+    Streaming.drain(s, "knn", OutputMode.Update)(
+      knnFold(Similarity2.packCols(source), queries, k))(finish)
 
   /** Last Update-mode emission per query (window over the tiny sink —
     * ≤ queries × batches rows), exploded to the batch operator's
@@ -108,15 +101,10 @@ object StreamingKnn {
   def streamKnn(s: SparkSession, dir: String, k: Int = 5,
                 nQueries: Int = 5): DataFrame = {
     graft.functions.GraftFunctions.ensure(s)
-    val name = s"knn_${System.nanoTime()}"
     val queries = Similarity2.packedQueries(
       Similarity2.packCols(Tables.embeddings(s, dir)), nQueries)
-    val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-    val source = s.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-    val sink = runKnnStream(s, source, queries, name, k)
-    Streaming.sealResult(s, name,
-      finalShortlists(sink).orderBy(col("q_id"), col("rank")))
+    runKnnStream(s, Streaming.fileStream(s, dir, "embeddings"), queries, k)(
+      finalShortlists(_).orderBy(col("q_id"), col("rank")))
   }
 
   /** The batch Hamming-kNN oracle — identical output contract. */

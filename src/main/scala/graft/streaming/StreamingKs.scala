@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.sources.Tables
 
@@ -79,19 +79,12 @@ object StreamingKs {
   }
 
   def streamKs(s: SparkSession, dir: String): DataFrame = {
-    val name = s"ks_${System.nanoTime()}"
     // grid pinned from the static table — the deployment-time histogram
     // grid; identical to the bounds the batch operator derives
     val bounds = graft.operators.Round6Ops.ksBounds(Tables.events(s, dir))
-    Streaming.withStreamPartitions(s) {
-      val q = ksFold(Streaming.eventsStream(s, dir)
-          .select(col("event_type"), col("value")), bounds)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    Streaming.sealResult(s, name, finalizeKs(s.table(name)))
+    Streaming.drain(s, "ks", OutputMode.Update)(
+      ksFold(Streaming.eventsStream(s, dir)
+        .select(col("event_type"), col("value")), bounds))(finalizeKs)
   }
 
   /** The batch #116 oracle — identical output contract. */

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 import graft.operators.{Mhw, MhwSql}
@@ -156,12 +156,12 @@ object StreamingMhw {
     StructField("user_id", LongType), StructField("idx", IntegerType),
     StructField("t_anom", DoubleType), StructField("severity", DoubleType)))
 
-  /** Run the incremental detector over the severity chain: the batch
-    * climatology/threshold stage materializes the severity table (in a
-    * deployment that's the precomputed model side), the stream consumes
-    * it through a file source and emits closed events. */
-  def runMhwEventsStream(s: SparkSession, dir: String,
-                         name: String): DataFrame = {
+  /** Driver-contract entry: run the incremental detector over the
+    * severity chain. The batch climatology/threshold stage materializes
+    * the severity table (in a deployment that's the precomputed model
+    * side), the stream consumes it through a file source and emits the
+    * closed events (all but each series' last). */
+  def streamMhwEvents(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sev = Mhw.severityChain(s, dir, 0.6)
     val d0 = sev.agg(min(col("d")).as("d0")).head.getDate(0)
@@ -174,33 +174,20 @@ object StreamingMhw {
         datediff(col("d"), lit(d0)).as("idx"),
         col("t_anom"), col("severity"))
       .write.mode("overwrite").parquet(tmp)
-    Streaming.withStreamPartitions(s) {
-      val src = s.readStream.schema(sevSchema)
+    Streaming.drain(s, "mhw", OutputMode.Append, Some(tmp))(
+      s.readStream.schema(sevSchema)
         .option("pathGlobFilter", "*.parquet").parquet(tmp).as[SevIn]
-      val q = src.groupByKey(_.user_id)
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(foldMhw)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .groupByKey(_.user_id)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(foldMhw)) {
+      _.select(
+        col("user_id"), col("evt"), col("index_start"), col("index_end"),
+        date_add(lit(d0), col("index_start")).as("date_start"),
+        date_add(lit(d0), col("index_end")).as("date_end"),
+        col("duration"), col("index_peak"),
+        date_add(lit(d0), col("index_peak")).as("date_peak"),
+        col("intensity_max"), col("intensity_mean"), col("intensity_cumul"))
     }
-    // materialize, then release the run's scratch state: the memory-sink
-    // view and the staged severity dir would otherwise accumulate one
-    // copy per invocation (warmup + repeated bench passes)
-    val out = s.table(name).select(
-      col("user_id"), col("evt"), col("index_start"), col("index_end"),
-      date_add(lit(d0), col("index_start")).as("date_start"),
-      date_add(lit(d0), col("index_end")).as("date_end"),
-      col("duration"), col("index_peak"),
-      date_add(lit(d0), col("index_peak")).as("date_peak"),
-      col("intensity_max"), col("intensity_mean"), col("intensity_cumul"))
-      .localCheckpoint()
-    Streaming.dropScratch(s, name, Some(tmp))
-    out
   }
-
-  /** Driver-contract entry (closed events = all but each series' last). */
-  def streamMhwEvents(s: SparkSession, dir: String): DataFrame =
-    runMhwEventsStream(s, dir, s"mhw_${System.nanoTime()}")
 
   /** Oracle: the batch event table minus each series' newest event. */
   val streamMhwEventsSql: String =

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 import graft.Parity
@@ -106,7 +106,6 @@ object StreamingPeriodogram {
   }
 
   def streamPeriodogram(s: SparkSession, dir: String): DataFrame = {
-    val name = s"pg_${System.nanoTime()}"
     val tmp = Streaming.stagingPath("pg_daily")
     // stage the day-grain feed (the StreamingMhw severity contract):
     // multi-file write is fine — the sums commute across any chunking
@@ -114,16 +113,9 @@ object StreamingPeriodogram {
       .select(col("user_id"),
               datediff(col("d"), lit("1970-01-01")).as("day"), col("sst"))
       .write.mode("overwrite").parquet(tmp)
-    Streaming.withStreamPartitions(s) {
-      val src = s.readStream.schema(pgSchema)
-        .option("pathGlobFilter", "*.parquet").parquet(tmp)
-      val q = pgFold(src)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    Streaming.sealResult(s, name, finalizePg(s.table(name)), Some(tmp))
+    Streaming.drain(s, "pg", OutputMode.Update, Some(tmp))(
+      pgFold(s.readStream.schema(pgSchema)
+        .option("pathGlobFilter", "*.parquet").parquet(tmp)))(finalizePg)
   }
 
   /** The batch #134 oracle — identical output contract. */

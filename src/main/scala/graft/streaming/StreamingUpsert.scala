@@ -126,19 +126,16 @@ object StreamingUpsert {
                 col("latest.value").as("value"),
                 col("n_events"), col("bucket"), col("batch_id"))
     }
-    val prevMode = s.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try {
-      // initial load: STATIC overwrite, so a crashed first attempt's
-      // partial part-files are wiped rather than wedging every retry
-      // (ErrorIfExists would throw on the half-written dir forever);
-      // incremental merges: DYNAMIC, replacing only the read buckets.
-      s.conf.set("spark.sql.sources.partitionOverwriteMode",
-                 if (exists) "dynamic" else "static")
-      merged.write.partitionBy("bucket")
-        .mode(SaveMode.Overwrite)
-        .parquet(path)
-      writeWatermark(path, batchId)
-    } finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
+    // initial load: STATIC overwrite, so a crashed first attempt's
+    // partial part-files are wiped rather than wedging every retry
+    // (ErrorIfExists would throw on the half-written dir forever);
+    // incremental merges: DYNAMIC, replacing only the read buckets. The
+    // per-write option leaves the session conf untouched.
+    merged.write.partitionBy("bucket")
+      .option("partitionOverwriteMode", if (exists) "dynamic" else "static")
+      .mode(SaveMode.Overwrite)
+      .parquet(path)
+    writeWatermark(path, batchId)
   }
 
   /** Drive the upsert stream over the events source into a fresh
@@ -161,16 +158,16 @@ object StreamingUpsert {
     * the static table: the incremental path must land on the identical
     * fixed point. */
   def streamUpsert(s: SparkSession, dir: String): DataFrame = {
-    val name = s"upsert_${System.nanoTime()}"
     val path = Streaming.stagingPath("upsert")
-    runUpsertStream(s, Streaming.eventsStream(s, dir), path)
-    Streaming.sealResult(s, name,
+    try {
+      runUpsertStream(s, Streaming.eventsStream(s, dir), path)
       s.read.parquet(path)
         .select(col("user_id"), col("ts").as("last_ts"),
                 col("event_type").as("last_type"),
                 col("value").as("last_value"), col("n_events"))
-        .orderBy(col("user_id")),
-      scratchDir = Some(path))
+        .orderBy(col("user_id"))
+        .localCheckpoint()
+    } finally Streaming.deleteScratch(path)
   }
 
   val streamUpsertSql: String =

@@ -71,6 +71,8 @@ class Batch4OpsSpec extends AnyFunSuite {
   // ---------------------------------------- events_backfill_overwrite
 
   test("backfill: only the corrected day partitions rewrite; re-running is idempotent") {
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val mode0 = spark.conf.getAll.get(modeKey)
     val first = Partitioned.eventsBackfillOverwrite(spark, sf).collect().toSeq
     val tag = sf.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
     val base = new java.io.File(
@@ -91,6 +93,8 @@ class Batch4OpsSpec extends AnyFunSuite {
       assert(before(s"p_date=$d") != after(s"p_date=$d"),
         s"backfilled partition $d was not rewritten")
     }
+    assert(spark.conf.getAll.get(modeKey) == mode0,
+      "the backfill changed the session's partitionOverwriteMode")
   }
 
   // ---------------------------------------------------- events_welch_t

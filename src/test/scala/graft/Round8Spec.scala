@@ -296,7 +296,11 @@ class Round8Spec extends AnyFunSuite {
       .write.partitionBy("p_date").parquet(path)
     val day3 = new java.io.File(s"$path/p_date=2024-01-03")
     val mtimes = day3.listFiles().map(f => f.getName -> f.lastModified).toMap
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val mode0 = spark.conf.getAll.get(modeKey)
     Partitioned.eraseUserFromCopy(ev, path, 1L)
+    assert(spark.conf.getAll.get(modeKey) == mode0,
+      "the erase changed the session's partitionOverwriteMode")
     val left = spark.read.parquet(path)
     assert(left.filter(col("user_id") === 1L).count() == 0, "user fully erased")
     assert(left.count() == 2, "other users' events survive")

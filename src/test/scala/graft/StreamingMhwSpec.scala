@@ -126,7 +126,7 @@ class StreamingMhwSpec extends AnyFunSuite {
     val lastPerUser = batch.groupBy("user_id").agg(max("evt").as("evt"))
     val expected = batch.join(lastPerUser, Seq("user_id", "evt"), "left_anti")
       .collect().map(_.toSeq).toSet
-    val streamed = StreamingMhw.runMhwEventsStream(spark, sf, "mhw_spec")
+    val streamed = StreamingMhw.streamMhwEvents(spark, sf)
       .select(batch.columns.map(col): _*)
       .collect().map(_.toSeq).toSet
     assert(streamed == expected)
@@ -170,7 +170,7 @@ class StreamingMhwSpec extends AnyFunSuite {
       .select("user_id", "evt", "index_start", "index_end", "duration",
               "index_peak", "intensity_max", "intensity_mean", "intensity_cumul")
       .collect().map(_.toSeq).toSet
-    val oneShot = StreamingMhw.runMhwEventsStream(spark, sf, "mhw_oneshot")
+    val oneShot = StreamingMhw.streamMhwEvents(spark, sf)
       .select("user_id", "evt", "index_start", "index_end", "duration",
               "index_peak", "intensity_max", "intensity_mean", "intensity_cumul")
       .collect().map(_.toSeq).toSet

@@ -50,10 +50,41 @@ class StreamingSpec extends AnyFunSuite {
     val pairs = SparkEntry.registry.filter(_.name.startsWith("stream_"))
       .flatMap(q => batchBySql.get(q.oracleSql).map(b => q -> b.head))
     assert(pairs.size >= 28, s"only ${pairs.size} stream/batch pairs share an oracle")
-    val diverged = pairs.filter { case (stream, batch) =>
-      canonical(stream.build(spark, sf)) != canonical(batch.build(spark, sf))
-    }.map { case (stream, batch) => s"${stream.name} vs ${batch.name}" }
+    // batch side first: some batch entries keep a staged copy under the
+    // scratch root on purpose, and only the twins' drains are checked
+    // for leftovers below
+    val expected = pairs.map { case (_, batch) => canonical(batch.build(spark, sf)) }
+    // every drain releases its sink view and staged dirs: the catalog's
+    // temp views and the scratch root's graft_* entries are unchanged
+    def views() = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val views0 = views()
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def staged() = Option(tmp.list()).toSeq.flatten.filter(_.startsWith("graft_")).toSet
+    val staged0 = staged()
+    val diverged = pairs.zip(expected).filter { case ((stream, _), rows) =>
+      canonical(stream.build(spark, sf)) != rows
+    }.map { case ((stream, batch), _) => s"${stream.name} vs ${batch.name}" }
     assert(diverged.isEmpty, s"stream twins diverge: ${diverged.mkString(", ")}")
+    assert(views() == views0, s"temp views left behind: ${views() -- views0}")
+    assert(staged() -- staged0 == Set.empty, s"staged dirs left behind: ${staged() -- staged0}")
+  }
+
+  test("drain: a failing stream raises, then its sink view and scratch dir are gone") {
+    import org.apache.spark.sql.streaming.OutputMode
+    val scratch = java.nio.file.Files.createTempDirectory("graft_drainfail").toString
+    spark.range(3).write.parquet(s"$scratch/in")
+    val schema = spark.read.parquet(s"$scratch/in").schema
+    val boom = udf((x: Long) => if (x >= 0) throw new IllegalStateException("boom") else x)
+    val err = intercept[Exception] {
+      Streaming.drain(spark, "drainfail", OutputMode.Append, Some(scratch))(
+        spark.readStream.schema(schema).parquet(s"$scratch/in")
+          .select(boom(col("id")).as("id")))(identity)
+    }
+    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("boom")), err)
+    val views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name)
+    assert(!views.exists(_.startsWith("drainfail")), views.mkString(", "))
+    assert(!new java.io.File(scratch).exists(), s"scratch dir $scratch survived the failed drain")
   }
 
   test("stream_topk and stream_benford: drains equal their batch expressions") {
@@ -136,9 +167,13 @@ class StreamingSpec extends AnyFunSuite {
       "b=0" -> ev.filter(unix_micros(col("ts")) <= cut),
       "b=1" -> ev.filter(unix_micros(col("ts")) > cut)))
     val path = s"$dir/state"
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val mode0 = spark.conf.getAll.get(modeKey)
     StreamingUpsert.runUpsertStream(spark,
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$dir/in"), path)
+    assert(spark.conf.getAll.get(modeKey) == mode0,
+      "the upsert changed the session's partitionOverwriteMode")
     val state = spark.read.parquet(path)
     assert(state.agg(max(col("batch_id"))).collect()(0).getLong(0) >= 1,
       "expected the snapshot to have been built across >= 2 micro-batches")
@@ -345,7 +380,7 @@ class StreamingSpec extends AnyFunSuite {
     val sink = StreamingKnn.runKnnStream(spark,
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$dir/in"),
-      queries, "sknn_batches", 5)
+      queries, 5)(identity)
     assert(sink.select("upd").agg(max(col("upd"))).collect()(0).getInt(0) >= 2,
       "expected the fold to run across >= 2 micro-batches")
     val streamed = StreamingKnn.finalShortlists(sink)
@@ -407,7 +442,7 @@ class StreamingSpec extends AnyFunSuite {
         "left_anti")
       .collect().map(_.toSeq).toSet
 
-    val streamed = Streaming.runSessionizeStream(spark, sf, "sess_spec")
+    val streamed = Streaming.streamSessionize(spark, sf)
       .select("user_id", "session_start", "session_end", "n_events")
       .collect().map(_.toSeq).toSet
 
@@ -417,7 +452,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream_click_attr: stream-stream interval join equals the batch join") {
     import org.apache.spark.sql.functions._
-    val streamed = Streaming.runClickAttributionStream(spark, sf, "attr_spec")
+    val streamed = Streaming.streamClickAttribution(spark, sf)
       .collect().map(_.toSeq).toSet
     val ev = graft.sources.Tables.events(spark, sf)
     val clicks = ev.filter(col("event_type") === "click")
@@ -469,7 +504,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = spark.table("attr_batches")
       .select(col("p_user"), col("purchase_id"), col("click_id"))
       .collect().map(_.toSeq).toSet
-    val oneShot = Streaming.runClickAttributionStream(spark, sf, "attr_oneshot")
+    val oneShot = Streaming.streamClickAttribution(spark, sf)
       .select(col("user_id"), col("purchase_id"), col("click_id"))
       .collect().map(_.toSeq).toSet
     assert(streamed == oneShot)
