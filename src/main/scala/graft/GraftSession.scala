@@ -1,5 +1,8 @@
 package graft
 
+import scala.util.Try
+
+import org.apache.spark.GraftBus
 import org.apache.spark.sql.SparkSession
 
 /** Session defaults shared by every entrypoint (Verify/Bench/tests).
@@ -104,25 +107,27 @@ object GraftSession {
     try body finally olds.foreach { case (k, v) => s.conf.set(k, v) }
   }
 
-  /** Node-local scratch root for everything Spark spills to local
-    * storage: shuffle/block-manager dirs (`spark.local.dir` defaults to
+  /** Node-local scratch for everything Spark spills to local storage:
+    * shuffle/block-manager dirs (`spark.local.dir` defaults to
     * `java.io.tmpdir`), the temp checkpoint dirs of ephemeral streaming
     * drains (offset/commit WAL + state-store deltas — each tiny file is
     * atomically renamed and synced, so their latency is the drain's
-    * floor), and staged fixture copies.
+    * floor), and the staged copies of `graft.sources.Staging`.
     *
-    * Guide §2.1/§6: local scratch bandwidth+latency is the tighter
-    * limit for shuffle files and state commits on machines with slow
-    * disks — measured here, the ~55 streaming drains spent 60-80% of
-    * their wall in state/WAL commits to an ext4 /tmp (stream_click_attr
-    * 16.4 s → 3.1 s, stream_hurst 9.2 s → 3.2 s with scratch on tmpfs).
-    * Default: a RAM-backed tmpfs (/dev/shm) when present — correct for
-    * this suite because ALL scratch here is ephemeral (AvailableNow
-    * drains into memory sinks recompute from parquet on restart;
-    * durability of their checkpoints is not load-bearing) and sub-GB.
-    * A production deployment sets SPARK_GRAFT_SCRATCH to its fast local
-    * NVMe (or `off` to leave the JVM default), and points any stream
-    * whose checkpoint must survive the node at a DFS via the normal
+    * Root: `SPARK_GRAFT_SCRATCH` when set (a production deployment
+    * points it at its fast local NVMe); `off` or unset falls back as
+    * below. Unset, it is a RAM-backed tmpfs (`/dev/shm/graft-scratch`)
+    * when `/dev/shm` is writable, else the JVM's default temp dir; `off`
+    * is always the JVM's default temp dir. Guide §2.1/§6: local scratch
+    * bandwidth+latency is the tighter limit for shuffle files and state
+    * commits on machines with slow disks — measured here, the ~55
+    * streaming drains spent 60-80% of their wall in state/WAL commits to
+    * an ext4 /tmp (stream_click_attr 16.4 s → 3.1 s, stream_hurst
+    * 9.2 s → 3.2 s with scratch on tmpfs). tmpfs is correct for this
+    * suite because ALL scratch here is ephemeral (AvailableNow drains
+    * into memory sinks recompute from parquet on restart; durability of
+    * their checkpoints is not load-bearing) and sub-GB. A stream whose
+    * checkpoint must survive the node points at a DFS via the normal
     * per-query checkpointLocation — a durability choice, not a bench
     * one. */
   private def scratchRoot(): Option[String] =
@@ -135,18 +140,28 @@ object GraftSession {
         else None
     }
 
+  /** This JVM's own scratch dir: one uniquely named `graft-<uuid>` dir
+    * under the root, made once per JVM (the first `local` call) and
+    * deleted by Spark's shutdown hook after the SparkContext has stopped.
+    * No two JVMs share a staged copy or a streaming dir, and a cold JVM
+    * never finds an older one's. A JVM killed without running its
+    * shutdown hooks (SIGKILL, an OOM kill) leaves its dir behind under
+    * the root. When the root cannot be created or written, the dir goes
+    * under the JVM's default temp dir instead. `java.io.tmpdir` is
+    * pointed at it, because it is the single root Spark derives local
+    * scratch from when spark.local.dir is unset: DiskBlockManager dirs,
+    * Utils.createTempDir (streaming temp checkpoints) and the staged
+    * copies. Setting it before the first SparkContext moves all of them
+    * together. */
+  private lazy val scratchDir: String = {
+    val dir = scratchRoot().flatMap(root => Try(GraftBus.tempDir(root)).toOption)
+      .getOrElse(GraftBus.tempDir(System.getProperty("java.io.tmpdir"))).getPath
+    System.setProperty("java.io.tmpdir", dir)
+    dir
+  }
+
   def local(cpus: String): SparkSession = {
-    scratchRoot().foreach { d =>
-      try {
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-        // java.io.tmpdir is the single root Spark derives local scratch
-        // from when spark.local.dir is unset: DiskBlockManager dirs,
-        // Utils.createTempDir (streaming temp checkpoints), staged
-        // fixtures. Redirecting it here (before the first SparkContext)
-        // moves all of them together.
-        System.setProperty("java.io.tmpdir", d)
-      } catch { case _: Throwable => () }
-    }
+    scratchDir
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new graft.functions.GraftExtensions)

@@ -24,8 +24,7 @@ import graft.sources.{Staging, Tables}
   * the artifact records the length+mtime of the source
   * `embeddings.parquet`; a regenerated corpus re-triggers the build,
   * an unchanged one never does (the spec pins probe-after-build
-  * running zero training jobs). Single-process assumption as for every
-  * staged source in this repo.
+  * running zero training jobs).
   *
   * Probe ≡ build-path bit-identity: the index stores exactly what #31b
   * computes in-session — float embeddings (exact parquet round-trip),
@@ -38,26 +37,34 @@ import graft.sources.{Staging, Tables}
   */
 object AnnIndex {
 
-  /** Artifact root for (dir, nCells, iters): tmp-dir keyed by a path
-    * hash (the Evolution convention — distinct data dirs must not
-    * share an index) + the quantizer hyper-parameters. */
-  private[graft] def indexPath(dir: String, nCells: Int, iters: Int): String = {
-    val pathHash = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"${System.getProperty("java.io.tmpdir")}/graft_annix_${pathHash}_c${nCells}_i$iters"
+  /** Staged artifact (source-stamped, see [[graft.sources.Staging]]):
+    * the artifact `name` for `dir`'s embeddings, keyed by the data dir
+    * and the name's hyper-parameters. A fresh artifact short-circuits —
+    * no training job, no corpus scan. */
+  private def artifact(s: SparkSession, dir: String, name: String)(
+      write: String => Unit): String =
+    Staging.staged(name, dir, s"$dir/embeddings.parquet") { base =>
+      graft.functions.GraftFunctions.ensure(s)
+      write(base)
+    }
+
+  /** `_m<mod>` when the index covers only the non-delta slice. */
+  private def sliceSuffix(slice: Option[Int]): String =
+    slice.fold("")(m => s"_m$m")
+
+  /** The embeddings an index trains on and holds: the whole corpus, or
+    * (sliced) everything but the delta slice. */
+  private def indexed(s: SparkSession, dir: String, slice: Option[Int]): DataFrame = {
+    val corpus = graft.Lineage.pin(Tables.embeddings(s, dir))
+    slice.fold(corpus)(m => corpus.filter(!isDelta(m)))
   }
 
-  /** Build (idempotent): train the coarse quantizer, write centroids +
-    * cluster-partitioned postings, stamp against the source. Returns
-    * the artifact root. A fresh artifact short-circuits — no training
-    * job, no corpus scan. */
-  def build(s: SparkSession, dir: String,
-            nCells: Int = 16, iters: Int = 3): String = {
-    val base = indexPath(dir, nCells, iters)
-    val src = s"$dir/embeddings.parquet"
-    if (!Staging.isFresh(s"$base/postings", src)) {
-      graft.functions.GraftFunctions.ensure(s)
-      val corpus = graft.Lineage.pin(Tables.embeddings(s, dir))
+  /** Train the coarse quantizer on the indexed rows, write centroids +
+    * their cluster-partitioned postings. Returns the artifact root. */
+  private def buildIvf(s: SparkSession, dir: String, nCells: Int, iters: Int,
+                       slice: Option[Int]): String =
+    artifact(s, dir, s"annix_c${nCells}_i$iters${sliceSuffix(slice)}") { base =>
+      val corpus = indexed(s, dir, slice)
       val cents = Similarity.trainCentroids(corpus, nCells, iters)
       import s.implicits._
       cents.toSeq.toDF("cluster", "c")
@@ -69,11 +76,14 @@ object AnnIndex {
         .select(col("vec_id"), col("embedding"), col("e_norm"), col("cluster"))
         .write.partitionBy("cluster")
         .mode(SaveMode.Overwrite).parquet(s"$base/postings")
-      Staging.markStaged(s"$base/centroids", src)
-      Staging.markStaged(s"$base/postings", src)
     }
-    base
-  }
+
+  /** Build (idempotent): train the coarse quantizer on the full corpus,
+    * write centroids + cluster-partitioned postings. Returns the
+    * artifact root. */
+  def build(s: SparkSession, dir: String,
+            nCells: Int = 16, iters: Int = 3): String =
+    buildIvf(s, dir, nCells, iters, None)
 
   /** #363 ann_index_probe: answer queries FROM THE ARTIFACT — read the
     * centroid model (nCells rows, collected), score each query against
@@ -131,54 +141,24 @@ object AnnIndex {
   private def isDelta(mod: Int) =
     pmod(col("vec_id"), lit(mod.toLong)) === (mod - 1)
 
-  /** Artifact root for the sliced (append-maintained) index. */
-  private[graft] def slicedPath(dir: String, nCells: Int, iters: Int,
-                                mod: Int): String = {
-    val pathHash = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"${System.getProperty("java.io.tmpdir")}/graft_annix_${pathHash}_c${nCells}_i${iters}_m$mod"
-  }
-
   /** Day-1 build: train the quantizer on the INDEX slice only (the
     * amortized model #287 monitors), write centroids + the index
     * slice's cluster-partitioned postings. Idempotent, source-stamped. */
   def buildSliced(s: SparkSession, dir: String, nCells: Int = 16,
-                  iters: Int = 3, mod: Int = 5): String = {
-    val base = slicedPath(dir, nCells, iters, mod)
-    val src = s"$dir/embeddings.parquet"
-    if (!Staging.isFresh(s"$base/postings", src)) {
-      graft.functions.GraftFunctions.ensure(s)
-      val corpus = graft.Lineage.pin(Tables.embeddings(s, dir))
-      val cents = Similarity.trainCentroids(corpus.filter(!isDelta(mod)), nCells, iters)
-      import s.implicits._
-      cents.toSeq.toDF("cluster", "c")
-        .select(col("cluster"), col("c").cast("array<float>").as("c"))
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$base/centroids")
-      Similarity.assignNearest(
-          corpus.filter(!isDelta(mod))
-            .withColumn("e_norm", norm(col("embedding"))), cents)
-        .select(col("vec_id"), col("embedding"), col("e_norm"), col("cluster"))
-        .write.partitionBy("cluster")
-        .mode(SaveMode.Overwrite).parquet(s"$base/postings")
-      Staging.markStaged(s"$base/centroids", src)
-      Staging.markStaged(s"$base/postings", src)
-    }
-    base
-  }
+                  iters: Int = 3, mod: Int = 5): String =
+    buildIvf(s, dir, nCells, iters, Some(mod))
 
   /** APPEND WITHOUT RETRAIN: the delta slice assigns against the
-    * FROZEN day-1 centroid model — read from the artifact, never
-    * retrained — and lands in its own cluster-partitioned postings
-    * directory beside the base (idempotent, stamped). This is the
-    * maintenance write a deployed IVF index runs between the rebuilds
-    * #287's drift monitor calls for. */
+    * FROZEN day-1 centroid model — read from the [[buildSliced]]
+    * artifact, never retrained — and lands in its own
+    * cluster-partitioned `postings/` under a delta artifact beside the
+    * base (idempotent, stamped). Returns the delta artifact's root. This
+    * is the maintenance write a deployed IVF index runs between the
+    * rebuilds #287's drift monitor calls for. */
   def appendDelta(s: SparkSession, dir: String, nCells: Int = 16,
                   iters: Int = 3, mod: Int = 5): String = {
     val base = buildSliced(s, dir, nCells, iters, mod)
-    val src = s"$dir/embeddings.parquet"
-    if (!Staging.isFresh(s"$base/postings_delta", src)) {
-      graft.functions.GraftFunctions.ensure(s)
+    artifact(s, dir, s"annix_c${nCells}_i${iters}_m${mod}_delta") { delta =>
       val cents = s.read.parquet(s"$base/centroids").collect()
         .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
       Similarity.assignNearest(
@@ -186,10 +166,8 @@ object AnnIndex {
             .withColumn("e_norm", norm(col("embedding"))), cents)
         .select(col("vec_id"), col("embedding"), col("e_norm"), col("cluster"))
         .write.partitionBy("cluster")
-        .mode(SaveMode.Overwrite).parquet(s"$base/postings_delta")
-      Staging.markStaged(s"$base/postings_delta", src)
+        .mode(SaveMode.Overwrite).parquet(s"$delta/postings")
     }
-    base
   }
 
   /** #366 ann_index_append_probe: probe the APPENDED index — base +
@@ -202,21 +180,15 @@ object AnnIndex {
   def probeAppended(s: SparkSession, dir: String, k: Int = 5,
                     nQueries: Int = 5, nCells: Int = 16, nProbe: Int = 4,
                     iters: Int = 3, mod: Int = 5): DataFrame = {
-    val base = appendDelta(s, dir, nCells, iters, mod)
+    val delta = appendDelta(s, dir, nCells, iters, mod)
+    val base = buildSliced(s, dir, nCells, iters, mod)
     probeTail(s, dir, s"$base/centroids",
               s.read.parquet(s"$base/postings")
-                .unionByName(s.read.parquet(s"$base/postings_delta")),
+                .unionByName(s.read.parquet(s"$delta/postings")),
               k, nQueries, nProbe)
   }
 
   // ----------------------------------------------------------- PQ artifact
-
-  /** Artifact root for the PQ index of (dir, iters). */
-  private[graft] def pqPath(dir: String, iters: Int): String = {
-    val pathHash = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"${System.getProperty("java.io.tmpdir")}/graft_annpq_${pathHash}_i$iters"
-  }
 
   /** Build the persisted PQ index (idempotent, source-stamped like the
     * IVF build): the 8×16×8-float codebooks plus the encoded CODES
@@ -225,25 +197,29 @@ object AnnIndex {
     * RAM. Deliberately does NOT store raw embeddings: the exact
     * re-rank fetches the shortlist's vectors from primary storage at
     * probe time (shortlist-sized, never corpus-sized). */
-  def buildPq(s: SparkSession, dir: String, iters: Int = 2): String = {
-    val base = pqPath(dir, iters)
-    val src = s"$dir/embeddings.parquet"
-    if (!Staging.isFresh(s"$base/codes", src)) {
-      graft.functions.GraftFunctions.ensure(s)
-      val corpus = graft.Lineage.pin(Tables.embeddings(s, dir))
+  def buildPq(s: SparkSession, dir: String, iters: Int = 2): String =
+    buildPqIndex(s, dir, iters, None)
+
+  /** Train the codebooks on the indexed rows and write them with the
+    * indexed rows' codes. Returns the artifact root. */
+  private def buildPqIndex(s: SparkSession, dir: String, iters: Int,
+                           slice: Option[Int]): String =
+    artifact(s, dir, s"annpq_i$iters${sliceSuffix(slice)}") { base =>
+      val corpus = indexed(s, dir, slice)
       val cb = SimilarityPq.trainCodebooks(corpus, iters)
       s.createDataFrame(cb.toSeq.map { case ((m, code), c) => (m, code, c) })
         .toDF("m", "code", "c").coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$base/codebooks")
-      SimilarityPq.withCodes(corpus, cb)
-        .select(col("vec_id") +:
-          (0 until SimilarityPq.SubSpaces).map(m => col(s"code_$m")): _*)
-        .write.mode(SaveMode.Overwrite).parquet(s"$base/codes")
-      Staging.markStaged(s"$base/codebooks", src)
-      Staging.markStaged(s"$base/codes", src)
+      writeCodes(corpus, cb, s"$base/codes")
     }
-    base
-  }
+
+  /** The (vec_id, code_0..code_7) table of `corpus` under `cb`. */
+  private def writeCodes(corpus: DataFrame, cb: Map[(Int, Int), Array[Float]],
+                         path: String): Unit =
+    SimilarityPq.withCodes(corpus, cb)
+      .select(col("vec_id") +:
+        (0 until SimilarityPq.SubSpaces).map(m => col(s"code_$m")): _*)
+      .write.mode(SaveMode.Overwrite).parquet(path)
 
   /** #365 ann_pq_index_probe: ADC retrieval FROM THE ARTIFACT — read
     * the codebooks (128 rows, collected: the model), read the codes
@@ -269,58 +245,29 @@ object AnnIndex {
 
   // ---------------------------------------- PQ append-without-retrain path
 
-  /** Artifact root for the sliced (append-maintained) PQ index. */
-  private[graft] def pqSlicedPath(dir: String, iters: Int, mod: Int): String = {
-    val pathHash = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"${System.getProperty("java.io.tmpdir")}/graft_annpq_${pathHash}_i${iters}_m$mod"
-  }
-
   /** Day-1 PQ build: train the codebooks on the INDEX slice only and
     * encode that slice. Idempotent, source-stamped — the exact
     * discipline [[buildSliced]] applies to the IVF artifact. */
   def buildPqSliced(s: SparkSession, dir: String, iters: Int = 2,
-                    mod: Int = 5): String = {
-    val base = pqSlicedPath(dir, iters, mod)
-    val src = s"$dir/embeddings.parquet"
-    if (!Staging.isFresh(s"$base/codes", src)) {
-      graft.functions.GraftFunctions.ensure(s)
-      val corpus = graft.Lineage.pin(Tables.embeddings(s, dir))
-      val cb = SimilarityPq.trainCodebooks(corpus.filter(!isDelta(mod)), iters)
-      s.createDataFrame(cb.toSeq.map { case ((m, code), c) => (m, code, c) })
-        .toDF("m", "code", "c").coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$base/codebooks")
-      SimilarityPq.withCodes(corpus.filter(!isDelta(mod)), cb)
-        .select(col("vec_id") +:
-          (0 until SimilarityPq.SubSpaces).map(m => col(s"code_$m")): _*)
-        .write.mode(SaveMode.Overwrite).parquet(s"$base/codes")
-      Staging.markStaged(s"$base/codebooks", src)
-      Staging.markStaged(s"$base/codes", src)
-    }
-    base
-  }
+                    mod: Int = 5): String =
+    buildPqIndex(s, dir, iters, Some(mod))
 
   /** PQ APPEND WITHOUT RETRAIN: the delta slice ENCODES against the
-    * FROZEN day-1 codebooks — read from the artifact, never retrained —
-    * and lands as a delta codes table beside the base (idempotent,
-    * stamped). Encode is map-only (the codebook is a plan literal), so
-    * the maintenance write scans only the delta: the daily cost of a
-    * deployed 100 TB PQ index is proportional to the crawl, not the
-    * corpus. #366's discipline applied to the compressed index. */
+    * FROZEN day-1 codebooks — read from the [[buildPqSliced]] artifact,
+    * never retrained — and lands as a `codes/` table under a delta
+    * artifact beside the base (idempotent, stamped). Returns the delta
+    * artifact's root. Encode is map-only (the codebook is a plan
+    * literal), so the maintenance write scans only the delta: the daily
+    * cost of a deployed 100 TB PQ index is proportional to the crawl,
+    * not the corpus. #366's discipline applied to the compressed
+    * index. */
   def appendPqDelta(s: SparkSession, dir: String, iters: Int = 2,
                     mod: Int = 5): String = {
     val base = buildPqSliced(s, dir, iters, mod)
-    val src = s"$dir/embeddings.parquet"
-    if (!Staging.isFresh(s"$base/codes_delta", src)) {
-      graft.functions.GraftFunctions.ensure(s)
-      val cb = readCodebooks(s, base)
-      SimilarityPq.withCodes(Tables.embeddings(s, dir).filter(isDelta(mod)), cb)
-        .select(col("vec_id") +:
-          (0 until SimilarityPq.SubSpaces).map(m => col(s"code_$m")): _*)
-        .write.mode(SaveMode.Overwrite).parquet(s"$base/codes_delta")
-      Staging.markStaged(s"$base/codes_delta", src)
+    artifact(s, dir, s"annpq_i${iters}_m${mod}_delta") { delta =>
+      writeCodes(Tables.embeddings(s, dir).filter(isDelta(mod)),
+                 readCodebooks(s, base), s"$delta/codes")
     }
-    base
   }
 
   /** #367 ann_pq_index_append_probe: ADC retrieval from the APPENDED
@@ -336,10 +283,11 @@ object AnnIndex {
                       nQueries: Int = 5, iters: Int = 2,
                       shortlist: Int = 32, mod: Int = 5): DataFrame = {
     graft.functions.GraftFunctions.ensure(s)
-    val base = appendPqDelta(s, dir, iters, mod)
+    val delta = appendPqDelta(s, dir, iters, mod)
+    val base = buildPqSliced(s, dir, iters, mod)
     val cb = readCodebooks(s, base)
     val codes = s.read.parquet(s"$base/codes")
-      .unionByName(s.read.parquet(s"$base/codes_delta"))
+      .unionByName(s.read.parquet(s"$delta/codes"))
     SimilarityPq.adcTopK(Tables.embeddings(s, dir), codes, cb, k, nQueries,
                          shortlist)
   }

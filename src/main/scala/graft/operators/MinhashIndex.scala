@@ -38,29 +38,17 @@ import graft.sources.{Staging, Tables}
   */
 object MinhashIndex {
 
-  /** Artifact root for (dir, k): tmp-dir keyed by a path hash (the
-    * Evolution convention) + the signature width. */
-  private[graft] def indexPath(dir: String, k: Int): String = {
-    val pathHash = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"${System.getProperty("java.io.tmpdir")}/graft_mhix_${pathHash}_k$k"
-  }
-
   /** Build (idempotent): run the signature job once, persist the
-    * k-wide signature table, stamp against the source. A fresh
-    * artifact short-circuits — no shingle scan, no signature job. */
-  def build(s: SparkSession, dir: String, k: Int = 64): String = {
-    val base = indexPath(dir, k)
-    val src = s"$dir/documents.parquet"
-    if (!Staging.isFresh(s"$base/sigs", src)) {
+    * k-wide signature table as artifact `mhix_k<k>`, stamp against the
+    * source. A fresh artifact short-circuits — no shingle scan, no
+    * signature job. Returns the artifact root. */
+  def build(s: SparkSession, dir: String, k: Int = 64): String =
+    Staging.staged(s"mhix_k$k", dir, s"$dir/documents.parquet") { base =>
       val docs = TextOps.shingleTable(Tables.documents(s, dir))
         .filter(size(col("sh")) > 0)
       LshDedup.signatureTable(docs, k)
         .write.mode(SaveMode.Overwrite).parquet(s"$base/sigs")
-      Staging.markStaged(s"$base/sigs", src)
     }
-    base
-  }
 
   /** #368 dedup_minhash_index_probe: near-dup pairs FROM THE ARTIFACT —
     * read the persisted signatures, derive band keys in-plan (map-only),

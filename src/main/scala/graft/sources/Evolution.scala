@@ -14,38 +14,18 @@ import graft.Parity._
   */
 object Evolution {
 
-  /** Stage the two-vintage layout under a tmp dir keyed by BOTH a
-    * readable tag and an md5 of the FULL data-dir path — the readable
-    * tag alone is lossy (non-alphanumerics collapse to '_'), so two
-    * distinct data dirs could otherwise share one staging path and
-    * thrash each other's source stamps. Single-process assumption: like
-    * every staged source in this repo (Staging.markStaged has no
-    * cross-process lock), concurrent staging of the same dir from two
-    * JVMs could expose a half-written epoch to the other process — the
-    * Verify/Bench drivers are single-process, and a deployment stages
-    * to a path it owns. */
-  private[graft] def stage(s: SparkSession, dir: String): String = {
-    val pathHash = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase + "_" + pathHash
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_evo$tag"
-    val src = s"$dir/events.parquet"
-    val ev = Tables.events(s, dir)
-    if (!Staging.isFresh(s"$base/epoch=1", src)) {
+  /** Stage the two-vintage layout, both epochs as one artifact. */
+  private[graft] def stage(s: SparkSession, dir: String): String =
+    Staging.staged("evo", dir, s"$dir/events.parquet") { base =>
+      val ev = Tables.events(s, dir)
       ev.filter(to_date(col("ts")).between("2024-01-08", "2024-01-14"))
         .select(col("event_id"), col("event_type"), col("value"))
         .write.mode(SaveMode.Overwrite).parquet(s"$base/epoch=1")
-      Staging.markStaged(s"$base/epoch=1", src)
-    }
-    if (!Staging.isFresh(s"$base/epoch=2", src)) {
       ev.filter(to_date(col("ts")).between("2024-01-15", "2024-01-21"))
         .select(col("event_id"), col("event_type"), col("value"),
                 col("user_id")) // the column the producer added
         .write.mode(SaveMode.Overwrite).parquet(s"$base/epoch=2")
-      Staging.markStaged(s"$base/epoch=2", src)
     }
-    base
-  }
 
   /** #331 events_schema_evolution: per-(epoch, type) rollup over a
     * `mergeSchema` scan of the two-vintage lake — counts, value mass,

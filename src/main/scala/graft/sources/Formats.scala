@@ -26,28 +26,18 @@ import graft.Parity._
   */
 object Formats {
 
-  private[graft] def stage(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_fmt$tag"
-    val src = s"$dir/events.parquet"
-    lazy val slice = Tables.events(s, dir)
-      .filter(to_date(col("ts")).between("2024-01-08", "2024-01-14"))
-      .select(col("event_id"), col("event_type"), col("value"))
-    if (!Staging.isFresh(s"$base/orc", src)) {
+  /** The one-week slice staged as `orc/`, `json/` and `csv/` under one
+    * artifact root. */
+  private[graft] def stage(s: SparkSession, dir: String): String =
+    Staging.staged("fmt", dir, s"$dir/events.parquet") { base =>
+      val slice = Tables.events(s, dir)
+        .filter(to_date(col("ts")).between("2024-01-08", "2024-01-14"))
+        .select(col("event_id"), col("event_type"), col("value"))
       slice.write.mode(SaveMode.Overwrite).orc(s"$base/orc")
-      Staging.markStaged(s"$base/orc", src)
-    }
-    if (!Staging.isFresh(s"$base/json", src)) {
       slice.write.mode(SaveMode.Overwrite).json(s"$base/json")
-      Staging.markStaged(s"$base/json", src)
-    }
-    if (!Staging.isFresh(s"$base/csv", src)) {
       slice.write.mode(SaveMode.Overwrite).option("header", "true")
         .csv(s"$base/csv")
-      Staging.markStaged(s"$base/csv", src)
     }
-    base
-  }
 
   /** #108 events_format_roundtrip: one rollup per storage format over
     * the same staged relation — rows must agree except the `fmt` tag.

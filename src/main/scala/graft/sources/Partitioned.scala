@@ -28,23 +28,22 @@ import graft.Parity._
   */
 object Partitioned {
 
-  /** Write `events` once per sf dir as a daily-partitioned table
-    * (idempotent across Verify runs — overwrite replaces). Dynamic
+  /** The staged copy `name` of `events` for `dir` as a daily-partitioned
+    * table, written once per JVM and source ([[Staging.staged]]). Dynamic
     * partition overwrite is the production backfill mode (rewrite only
-    * the touched days); the initial load here is a static overwrite. */
-  private[graft] def eventsPartitioned(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_part$tag/events"
-    val src = s"$dir/events.parquet"
-    if (!Staging.isFresh(path, src)) {
+    * the touched days); the initial load here is a static overwrite. It
+    * does not coalesce: every upstream task writes its slice of every
+    * day, the natural small-file debris #293's compactor cleans. */
+  private def dailyCopy(s: SparkSession, dir: String, name: String): String =
+    Staging.staged(name, dir, s"$dir/events.parquet") { path =>
       Tables.events(s, dir)
         .withColumn("p_date", date_format(col("ts"), "yyyy-MM-dd"))
-        .write.partitionBy("p_date")
-        .mode(SaveMode.Overwrite).parquet(path)
-      Staging.markStaged(path, src)
+        .write.partitionBy("p_date").mode(SaveMode.Overwrite).parquet(path)
     }
-    path
-  }
+
+  /** The read-only partitioned layout of `dir`'s events. */
+  private[graft] def eventsPartitioned(s: SparkSession, dir: String): String =
+    dailyCopy(s, dir, "part")
 
   /** The pruned scan: read back the partitioned layout with a
     * partition-column predicate. Exposed for the plan-pin spec. */
@@ -119,15 +118,7 @@ object Partitioned {
     * untouched days, and the oracle applies the same CASE to the
     * original table — the copy must land on that exact fixed point. */
   def eventsBackfillOverwrite(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_backfill$tag/events"
-    val src = s"$dir/events.parquet"
-    if (!Staging.isFresh(path, src)) {
-      Tables.events(s, dir)
-        .withColumn("p_date", date_format(col("ts"), "yyyy-MM-dd"))
-        .write.partitionBy("p_date").mode(SaveMode.Overwrite).parquet(path)
-      Staging.markStaged(path, src)
-    }
+    val path = dailyCopy(s, dir, "backfill")
     val corrected = Tables.events(s, dir)
       .withColumn("p_date", date_format(col("ts"), "yyyy-MM-dd"))
       .filter(col("p_date").between("2024-01-10", "2024-01-12"))
@@ -204,14 +195,7 @@ object Partitioned {
   def eventsEraseUser(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
     val uid = ev.agg(min(col("user_id"))).collect()(0).getLong(0)
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_erase$tag/events"
-    val src = s"$dir/events.parquet"
-    if (!Staging.isFresh(path, src)) {
-      ev.withColumn("p_date", date_format(col("ts"), "yyyy-MM-dd"))
-        .write.partitionBy("p_date").mode(SaveMode.Overwrite).parquet(path)
-      Staging.markStaged(path, src)
-    }
+    val path = dailyCopy(s, dir, "erase")
     eraseUserFromCopy(ev, path, uid)
     // report: before-counts from the source of truth, after-counts from
     // the materialized copy (LEFT join — a tombstoned day reads 0)
@@ -311,17 +295,7 @@ object Partitioned {
     * relational oracle). */
   def eventsCompactPartitions(s: SparkSession, dir: String,
                               maxFiles: Int = 1): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_compact$tag/events"
-    val src = s"$dir/events.parquet"
-    if (!Staging.isFresh(path, src)) {
-      // stage WITHOUT coalescing: every upstream task writes its slice
-      // of every day — the natural small-file debris this op cleans
-      ev.withColumn("p_date", date_format(col("ts"), "yyyy-MM-dd"))
-        .write.partitionBy("p_date").mode(SaveMode.Overwrite).parquet(path)
-      Staging.markStaged(path, src)
-    }
+    val path = dailyCopy(s, dir, "compact")
     compactCopy(s, path, maxFiles)
     s.read.parquet(path)
       .groupBy(col("p_date").cast("string").as("p_date"))

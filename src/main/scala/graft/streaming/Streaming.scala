@@ -98,14 +98,9 @@ object Streaming {
     }
   }
 
-  /** A fresh path under the session scratch root (`GraftSession.local`
-    * points `java.io.tmpdir` there) for a drain's staged input or
-    * output; [[deleteScratch]] removes it afterwards. */
-  private[streaming] def stagingPath(tag: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${System.nanoTime()}"
-
-  /** Delete a staged dir (symlinks are removed, not followed); a failure
-    * is swallowed so cleanup never masks the caller's own outcome. */
+  /** Delete a drain's staged dir (a `Staging.scratchPath`; symlinks are
+    * removed, not followed); a failure is swallowed so cleanup never
+    * masks the caller's own outcome. */
   private[streaming] def deleteScratch(dir: String): Unit =
     try FileUtils.deleteDirectory(new File(dir)) catch { case NonFatal(_) => () }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 import graft.operators.{Mhw, MhwSql}
+import graft.sources.Staging
 
 /** A severity observation consumed by the streaming detector. */
 case class SevIn(user_id: Long, idx: Int, t_anom: Double, severity: Double)
@@ -165,7 +166,7 @@ object StreamingMhw {
     import s.implicits._
     val sev = Mhw.severityChain(s, dir, 0.6)
     val d0 = sev.agg(min(col("d")).as("d0")).head.getDate(0)
-    val tmp = Streaming.stagingPath("mhw_sev")
+    val tmp = Staging.scratchPath("mhw_sev")
     // parallel (multi-file) staging write: the file source reads any
     // number of part files, and per-batch chunking invariance is
     // property-pinned in StreamingMhwSpec — no reason to funnel the

@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 import graft.Parity
+import graft.sources.Staging
 
 /** #135 stream_periodogram: the #134 fixed-period seasonality detector
   * maintained incrementally — per-series state is the five decimal sums
@@ -106,7 +107,7 @@ object StreamingPeriodogram {
   }
 
   def streamPeriodogram(s: SparkSession, dir: String): DataFrame = {
-    val tmp = Streaming.stagingPath("pg_daily")
+    val tmp = Staging.scratchPath("pg_daily")
     // stage the day-grain feed (the StreamingMhw severity contract):
     // multi-file write is fine — the sums commute across any chunking
     graft.operators.Mhw.daily(s, dir)

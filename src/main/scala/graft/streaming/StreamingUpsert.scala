@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.sources.Staging
+
 /** Streaming upsert sink via `foreachBatch` + dynamic partition
   * overwrite (SURVEY §2 #100): the canonical "stream maintains a keyed
   * snapshot table" pattern when no transactional table format (Delta/
@@ -158,7 +160,7 @@ object StreamingUpsert {
     * the static table: the incremental path must land on the identical
     * fixed point. */
   def streamUpsert(s: SparkSession, dir: String): DataFrame = {
-    val path = Streaming.stagingPath("upsert")
+    val path = Staging.scratchPath("upsert")
     try {
       runUpsertStream(s, Streaming.eventsStream(s, dir), path)
       s.read.parquet(path)

@@ -5,4 +5,10 @@ package org.apache.spark
   * event of a finished action is counted without a guessed sleep. */
 object GraftBus {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Spark's package-private temp-dir maker: a new, uniquely named dir
+    * `graft-<uuid>` under `root`, which Spark's shutdown hook deletes
+    * after the SparkContext has stopped. */
+  def tempDir(root: String): java.io.File =
+    util.Utils.createTempDir(root, "graft")
 }

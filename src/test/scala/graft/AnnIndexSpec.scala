@@ -27,7 +27,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("probe plan partition-prunes the postings and contains no training subtree") {
-    AnnIndex.build(spark, sf)
+    val base = AnnIndex.build(spark, sf)
     // a narrow probe (2 queries × 2 cells) so pruning is strict even at
     // the sf0.001 cell count
     val df = AnnIndex.probe(spark, sf, k = 3, nQueries = 2, nProbe = 2)
@@ -40,7 +40,6 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(postings.forall(_.partitionFilters.nonEmpty),
       "postings scan is not partition-pruned")
     // probed cells < cells on disk: pruning is real, not a tautology
-    val base = AnnIndex.indexPath(sf, 16, 3)
     val allCells = new File(s"$base/postings").listFiles()
       .count(_.getName.startsWith("cluster="))
     val probedN = postings.head.partitionFilters.flatMap(_.collect {
@@ -86,12 +85,13 @@ class AnnIndexSpec extends AnyFunSuite {
   test("append-without-retrain: base ∪ delta postings ≡ full-corpus assignment " +
        "under the frozen day-1 model; probe answers from the union") {
     import org.apache.spark.sql.functions._
-    val base = AnnIndex.appendDelta(spark, sf)
+    val delta = AnnIndex.appendDelta(spark, sf)
+    val base = AnnIndex.buildSliced(spark, sf)
     // the union must equal assigning EVERY vector with the read model
     val cents = spark.read.parquet(s"$base/centroids").collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
     val appended = spark.read.parquet(s"$base/postings")
-      .unionByName(spark.read.parquet(s"$base/postings_delta"))
+      .unionByName(spark.read.parquet(s"$delta/postings"))
       .select("vec_id", "cluster").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toMap
     val fresh = Similarity.assignNearest(
@@ -113,14 +113,15 @@ class AnnIndexSpec extends AnyFunSuite {
   test("PQ append-without-retrain: base ∪ delta codes ≡ full-corpus encode " +
        "under the frozen day-1 codebooks; probe answers from the union") {
     import org.apache.spark.sql.functions._
-    val base = AnnIndex.appendPqDelta(spark, sf)
+    val delta = AnnIndex.appendPqDelta(spark, sf)
+    val base = AnnIndex.buildPqSliced(spark, sf)
     // the union must equal encoding EVERY vector with the read codebooks
     val cb = spark.read.parquet(s"$base/codebooks").collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Float](2).toArray).toMap
     def codeMap(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Int]] =
       df.collect().map(r => r.getLong(0) -> (1 to 8).map(r.getInt)).toMap
     val appended = codeMap(spark.read.parquet(s"$base/codes")
-      .unionByName(spark.read.parquet(s"$base/codes_delta")))
+      .unionByName(spark.read.parquet(s"$delta/codes")))
     val fresh = codeMap(graft.operators.SimilarityPq
       .withCodes(graft.sources.Tables.embeddings(spark, sf), cb)
       .select(col("vec_id") +: (0 until 8).map(m => col(s"code_$m")): _*))
@@ -159,7 +160,7 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.build(spark, sf)
     assert(success.lastModified() == t0, "fresh index was rebuilt")
     // invalidate the stamp (as a source regen would) → rebuild happens
-    new File(s"$base/postings/_GRAFT_SRC_STAMP").delete()
+    new File(s"$base/_GRAFT_SRC_STAMP").delete()
     AnnIndex.build(spark, sf)
     assert(success.lastModified() > t0, "stale index was not rebuilt")
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TextOps2
-import graft.sources.{Partitioned, Tables}
+import graft.sources.{Partitioned, Staging, Tables}
 
 /** Invariants + plan pins for the round-5 batch-4 operators (#99-#101):
   * partition-pruned scans, the foreachBatch upsert sink (streaming side
@@ -74,9 +74,7 @@ class Batch4OpsSpec extends AnyFunSuite {
     val modeKey = "spark.sql.sources.partitionOverwriteMode"
     val mode0 = spark.conf.getAll.get(modeKey)
     val first = Partitioned.eventsBackfillOverwrite(spark, sf).collect().toSeq
-    val tag = sf.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-    val base = new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/graft_backfill$tag/events")
+    val base = new java.io.File(Staging.pathOf("backfill", sf))
     def mtimes() = base.listFiles().filter(_.getName.startsWith("p_date="))
       .map(d => d.getName -> d.listFiles().map(f => f.getName -> f.lastModified()).toMap)
       .toMap

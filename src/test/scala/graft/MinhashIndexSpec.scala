@@ -63,7 +63,7 @@ class MinhashIndexSpec extends AnyFunSuite {
     Thread.sleep(1100)
     MinhashIndex.build(spark, sf)
     assert(success.lastModified() == t0, "fresh signature artifact was rebuilt")
-    new File(s"$base/sigs/_GRAFT_SRC_STAMP").delete()
+    new File(s"$base/_GRAFT_SRC_STAMP").delete()
     MinhashIndex.build(spark, sf)
     assert(success.lastModified() > t0, "stale signature artifact was not rebuilt")
   }
