@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
@@ -60,7 +62,7 @@ object Caches {
       (s"${i.id}:${i.name}", i.memSize, i.diskSize,
        if (i.numPartitions == 0) 0.0
        else i.numCachedPartitions.toDouble / i.numPartitions)
-    } catch { case _: Throwable => Nil }
+    } catch { case NonFatal(_) => Nil }
 
   /** Memoize `build` (which should return an already-persisted frame)
     * under (session, key). LRU: re-access moves the entry to the back;
@@ -138,15 +140,17 @@ object Caches {
   // ------------------------------------------------------- driver models
 
   /** Driver-side MODEL memo — collected, model-sized training artifacts
-    * (IVF centroid tables, PQ codebooks) that several operators train
-    * IDENTICALLY from the same corpus. The frame registry above shares
+    * (IVF centroid tables, PQ codebooks, BPE merge tables and training
+    * runs, classifier weights, and the pinned BPE word map) that
+    * several operators train IDENTICALLY from the same corpus. The frame registry above shares
     * distributed tables; this shares the train-once/probe-many driver
     * artifacts the persisted-index family (AnnIndex) stages to parquet,
     * for the in-session operators that consume the model directly.
     * Keyed (session, key) like the frame registry and cleared by
     * [[clear]]. Unlike frames there is no plan-stub concern, so audit
     * mode shares the memo too (training collects are eager either way).
-    * Values are model-sized by contract (≤ k×dims floats). */
+    * Values are model-sized by contract (≤ k×dims floats, or a pinned
+    * frame's handle). */
   private val models =
     scala.collection.mutable.LinkedHashMap.empty[(SparkSession, Any), Any]
 
@@ -183,5 +187,5 @@ object Caches {
 
   private def safeUnpersist(df: DataFrame): Unit =
     try if (!df.sparkSession.sparkContext.isStopped) df.unpersist(false)
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 }

@@ -31,17 +31,14 @@ import graft.sources.Tables
   * symbols are characters, the exact BPE base case.
   *
   * The merge table is a driver-side model artifact (#153's collect —
-  * bounded by contract), memoized per (session, dir, steps) so the
-  * encode queries and the trainer share one training run per session.
+  * bounded by contract), memoized per (session, dir, steps) in
+  * [[graft.Caches.model]] so the encode queries and the trainer share
+  * one training run per session.
   * Scale shape: training per round is a vocab-sized rollup + 1-row
   * collect; encoding is one vocab-sized fused-replace pass + one
   * token⋈word-map join + per-doc rollup; the fertility readout is a
   * |langs|-key rollup of integer-exact sums. */
 object BpeEncode {
-
-  private val memo =
-    new scala.collection.concurrent.TrieMap[(String, String, Int),
-                                            Seq[(String, String)]]
 
   /** #153's trained merge table, in merge order, memoized. With the
     * per-symbol bracketed encoding (`|a||b|` → `|ab|`, see
@@ -50,9 +47,10 @@ object BpeEncode {
     * SubstringPropertySpec, including right-compound merges. */
   private[graft] def trainedMerges(s: SparkSession, dir: String,
                                    steps: Int): Seq[(String, String)] =
-    memo.getOrElseUpdate((s.sparkContext.applicationId, dir, steps),
+    graft.Caches.model(s, ("bpe_merges", dir, steps)) {
       TextOps2.bpeTrainMerges(s, dir, steps).collect()
-        .sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2))).toSeq)
+        .sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2))).toSeq
+    }
 
   /** The word → BPE-token-count map: DISTINCT words of the corpus,
     * each bracket-encoded and fused through the k merges once, reduced
@@ -103,17 +101,15 @@ object BpeEncode {
       .join(perDoc, Seq("doc_id"))
   }
 
-  private val wmapMemo =
-    new scala.collection.concurrent.TrieMap[(String, String, Int), DataFrame]
-
   /** The corpus word map for (session, dir, steps), memoized like the
     * merge table — the encode/fertility/budget/stream queries share
     * one vocab-encode job per session (the pinned frame is reusable:
     * localCheckpoint blocks live for the session). */
   private[graft] def corpusWordMap(s: SparkSession, dir: String,
                                    steps: Int): DataFrame =
-    wmapMemo.getOrElseUpdate((s.sparkContext.applicationId, dir, steps),
-      wordTokenMap(Tables.documents(s, dir), trainedMerges(s, dir, steps)))
+    graft.Caches.model(s, ("bpe_word_map", dir, steps)) {
+      wordTokenMap(Tables.documents(s, dir), trainedMerges(s, dir, steps))
+    }
 
   private def encoded(s: SparkSession, dir: String, steps: Int): DataFrame =
     encodedDf(Tables.documents(s, dir), trainedMerges(s, dir, steps),

@@ -37,8 +37,10 @@ import graft.time.DoyFunctions._
   * The exact pooled quantile co-locates each (key,doy) group's values —
   * group cardinality ∝ keys, no global hotspot, and each group is
   * years-bounded, so no sketch is needed at any scale. Event
-  * detection is a single shuffle per series key: every window shares
-  * `partitionBy(user_id)`, so Catalyst plans one exchange+sort.
+  * detection groups each series' exceeding day indices under one
+  * exchange on the series key and scans them with [[eventChains]], the
+  * one run/gap-join implementation (the streaming detector folds with
+  * it too); the per-key spans then join back to the facts.
   */
 object Mhw {
 
@@ -640,10 +642,10 @@ object Mhw {
   /** common.calculate_mhw_metrics: boolean runs of severity>1 on the
     * shared calendar index (absent days break runs, like NaN→False in the
     * reference), duration filter, then single-pass gap-join of kept runs
-    * (start − prev_end ≤ maxGap — chains merge transitively). Metrics
-    * computed over the merged index span INCLUDING gap days; peak is the
-    * first argmax of T_anom. One shuffle: all windows share
-    * partitionBy(user_id).
+    * (start − prev_end ≤ maxGap — chains merge transitively), all in
+    * [[eventChains]] over each series' exceeding days. Metrics are
+    * computed over the merged index span INCLUDING gap days
+    * ([[eventMetrics]]); peak is the first argmax of T_anom.
     *
     * `maxEvents` is the reference's `maxEvt`/`l_return` slot cap
     * (core.py:37,130: metrics arrays are pre-allocated at l_return=200
@@ -663,24 +665,76 @@ object Mhw {
       if (sev.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
         sev.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else sev // the memoized severity chain arrives already persisted
-    val origin = sevP.agg(min(col("d")).as("d0"))
-    val s = sevP.crossJoin(broadcast(origin))
-      .withColumn("idx", datediff(col("d"), col("d0")))
-    val events0 = eventSpans(s, minDuration, maxGap)
-    val events =
-      if (maxEvents == Int.MaxValue) events0
-      else events0.filter(col("evt") <= maxEvents)
+    val (origin, s) = indexed(sevP)
+    eventMetrics(spanDays(s, s, minDuration, maxGap, maxEvents), origin)
+  }
 
-    // Span-join facts back (events are per-key → keyDim-gated
-    // broadcast), window for the per-event max, then one grouped pass
-    // incl. first-argmax peak.
-    val span = s.join(graft.Hints.keyDim(events),
-        s("user_id") === events("user_id") &&
+  /** Exceedance, Spark's own `severity > 1` (null: no; NaN: yes). Batch
+    * detection filters on it and the stream stages it as a column. */
+  private[graft] val exceeds: Column = col("severity") > 1
+
+  /** The origin scalar (first day on record) and the severity frame with
+    * the shared calendar index `idx` = days since that origin. */
+  private[graft] def indexed(sev: DataFrame): (DataFrame, DataFrame) = {
+    val origin = sev.agg(min(col("d")).as("d0"))
+    (origin, sev.crossJoin(broadcast(origin))
+      .withColumn("idx", datediff(col("d"), col("d0"))))
+  }
+
+  /** The event scan of ONE series (common/core.py:37 `_detect_events`):
+    * its exceeding day indices, sorted ascending → maximal runs of
+    * consecutive indices, the duration filter, then a single-pass
+    * gap-join (start − prev_end ≤ maxGap, chains merge transitively).
+    * Returns the merged (start, end) spans in order. The only run
+    * detection in graft: [[spanDays]] runs it per series key, the
+    * streaming fold over each key's open buffer. */
+  private[graft] def eventChains(idx: Seq[Int], minDuration: Int,
+                                 maxGap: Int): Vector[(Int, Int)] = {
+    val runs = idx.foldLeft(Vector.empty[(Int, Int)]) {
+      case (done :+ ((a, b)), i) if i == b + 1 => done :+ ((a, i))
+      case (done, i) => done :+ ((i, i))
+    }
+    runs.filter { case (a, b) => b - a + 1 >= minDuration }
+      .foldLeft(Vector.empty[(Int, Int)]) {
+        case (done :+ ((a0, b0)), (a, b)) if a - b0 <= maxGap => done :+ ((a0, b))
+        case (done, run) => done :+ run
+      }
+  }
+
+  /** The event days of an idx'd severity frame `s`: each series key's
+    * exceeding indices, grouped and sorted, go through [[eventChains]];
+    * the spans explode with `evt` = their chronological ordinal (capped
+    * at `maxEvents`), join back to `facts` (events are per-key →
+    * keyDim-gated range join) and each day carries its event's T_anom
+    * max `mx`. Any key type groups — the public API's is a
+    * struct<lat,lon>. */
+  private def spanDays(s: DataFrame, facts: DataFrame, minDuration: Int,
+                       maxGap: Int, maxEvents: Int): DataFrame = {
+    val chains = udf((ix: Seq[Int]) => eventChains(ix, minDuration, maxGap))
+    val events = s.filter(exceeds)
+      .groupBy(col("user_id"))
+      .agg(chains(array_sort(collect_list(col("idx")))).as("spans"))
+      .select(col("user_id"), posexplode(col("spans")))
+      .select(col("user_id"), (col("pos") + 1).cast("long").as("evt"),
+        col("col._1").as("index_start"), col("col._2").as("index_end"))
+      .filter(col("evt") <= maxEvents)
+    withMx(facts.join(graft.Hints.keyDim(events),
+        facts("user_id") === events("user_id") &&
         col("idx").between(col("index_start"), col("index_end")))
-      .drop(events("user_id"))
-      .withColumn("mx", max(col("t_anom")).over(Window.partitionBy("user_id", "evt")))
+      .drop(events("user_id")))
+  }
 
-    span.groupBy(col("user_id"), col("evt"), col("index_start"), col("index_end"))
+  /** Each event day's per-event T_anom max `mx` (for the first-argmax
+    * peak). */
+  private[graft] def withMx(days: DataFrame): DataFrame =
+    days.withColumn("mx", max(col("t_anom")).over(Window.partitionBy("user_id", "evt")))
+
+  /** The event-metric aggregate over event days (user_id, evt,
+    * index_start, index_end, idx, t_anom, severity, mx): one grouped
+    * pass incl. first-argmax peak, dates off the `origin` scalar. Batch
+    * detection and the streaming drain both finish here. */
+  private[graft] def eventMetrics(days: DataFrame, origin: DataFrame): DataFrame =
+    days.groupBy(col("user_id"), col("evt"), col("index_start"), col("index_end"))
       .agg(
         min(when(col("t_anom") === col("mx"), col("idx"))).as("index_peak"),
         max(col("t_anom")).as("intensity_max"),
@@ -697,28 +751,6 @@ object Mhw {
         date_add(col("d0"), col("index_peak")).as("date_peak"),
         col("intensity_max"), col("intensity_mean"), col("intensity_cumul"),
         col("severity_max"))
-  }
-
-  /** Run detection core over an idx'd severity frame: boolean runs of
-    * severity>1, duration filter, then single-pass gap-join (start −
-    * prev_end ≤ maxGap, chains merge transitively). Returns the merged
-    * event spans (user_id, evt, index_start, index_end). All windows
-    * share partitionBy(user_id) — one exchange. */
-  private def eventSpans(s: DataFrame, minDuration: Int, maxGap: Int): DataFrame = {
-    val wU = Window.partitionBy("user_id")
-    s.filter(col("severity") > 1)
-      .withColumn("grp", col("idx") - row_number().over(wU.orderBy("idx")))
-      .groupBy(col("user_id"), col("grp"))
-      .agg(min(col("idx")).as("i0"), max(col("idx")).as("i1"))
-      .filter(col("i1") - col("i0") + 1 >= minDuration)
-      .withColumn("brk",
-        when(col("i0") - lag("i1", 1).over(wU.orderBy("i0")) <= maxGap, 0)
-          .otherwise(1))
-      .withColumn("evt", sum("brk").over(
-        wU.orderBy("i0").rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("user_id"), col("evt"))
-      .agg(min(col("i0")).as("index_start"), max(col("i1")).as("index_end"))
-  }
 
   /** Hobday-2018 category from per-event max severity. */
   def categoryOf(sevMax: Column): Column =
@@ -733,7 +765,7 @@ object Mhw {
   /** The #10-parameterized event table (pctile 0.6, minDuration 3,
     * maxGap 2), memoized per (session, dir): EIGHT queries (#10, #317,
     * #11e, #11l, #11g, #87b/#87, #11i, #345) consume the IDENTICAL
-    * detection output, so the window/gap-merge detection runs once per
+    * detection output, so the run/gap-join detection runs once per
     * session on top of the already-memoized severity chain. */
   private[graft] def eventsTable(s: SparkSession, dir: String): DataFrame =
     graft.Caches.persisted(s, ("mhw_events06", dir)) {
@@ -767,9 +799,7 @@ object Mhw {
     val sev = severityChain(s, dir, 0.6)
     val ev = eventsTable(s, dir)
       .select(col("user_id").as("ev_uid"), col("index_start"))
-    val origin = sev.agg(min(col("d")).as("d0"))
-    val si = sev.crossJoin(broadcast(origin))
-      .withColumn("idx", datediff(col("d"), col("d0")))
+    val (_, si) = indexed(sev)
     si.join(graft.Hints.keyDim(ev),
         col("user_id") === col("ev_uid") &&
         col("idx").between(col("index_start") - before,
@@ -982,32 +1012,26 @@ object Mhw {
     *    represent) the peak-distance slope fallback.
     * Variances use exact decimal moment sums (order-independent), final
     * arithmetic IEEE double, 6dp stage rounding — bit-identical to the
-    * DuckDB oracle. Single shuffle: the neighbour lag/lead and the run
-    * detection share partitionBy(user_id); events are tiny → broadcast
-    * span join, like detectEvents. */
+    * DuckDB oracle. Events come from the same per-key scan and span
+    * join as detectEvents ([[spanDays]]); the neighbour lag/lead rides
+    * on the fact side of that join. */
   def mhwEventRates(s: SparkSession, dir: String): DataFrame =
     eventRates(severityChain(s, dir, 0.6), minDuration = 3, maxGap = 2)
 
   /** Core of [[mhwEventRates]] over any severity frame carrying
     * (user_id, d, t_anom, severity, sst, seas, thresh). */
   def eventRates(sev: DataFrame, minDuration: Int = 5, maxGap: Int = 2): DataFrame = {
-    val origin = sev.agg(min(col("d")).as("d0"))
+    val (_, s) = indexed(sev)
     val wOrd = Window.partitionBy("user_id").orderBy("idx")
-    val t = sev.crossJoin(broadcast(origin))
-      .withColumn("idx", datediff(col("d"), col("d0")))
+    val t = s
       .withColumn("ta_prev",
         when(col("idx") - lag("idx", 1).over(wOrd) === 1,
           lag("t_anom", 1).over(wOrd)))
       .withColumn("ta_next",
         when(lead("idx", 1).over(wOrd) - col("idx") === 1,
           lead("t_anom", 1).over(wOrd)))
-    val events = eventSpans(t, minDuration, maxGap)
-    val span = t.join(graft.Hints.keyDim(events),
-        t("user_id") === events("user_id") &&
-        col("idx").between(col("index_start"), col("index_end")))
-      .drop(events("user_id"))
+    val span = spanDays(s, t, minDuration, maxGap, Int.MaxValue)
       .withColumn("rt", r(col("sst") - col("thresh"), 6))
-      .withColumn("mx", max(col("t_anom")).over(Window.partitionBy("user_id", "evt")))
     val g = span
       .groupBy(col("user_id"), col("evt"), col("index_start"), col("index_end"))
       .agg(

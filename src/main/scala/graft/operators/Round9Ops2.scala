@@ -432,9 +432,6 @@ object Round9Ops2 {
     hist.toSeq
   }
 
-  private val wMemo = new scala.collection.concurrent.TrieMap[
-    (String, String, Int, Double), Seq[Array[Double]]]
-
   /** The trained weight history for a corpus, memoized per (session,
     * dir, steps, lr) — #305/#308/#309 and the scoring stream all read
     * the same model; without the memo each re-ran the `steps` GD scans
@@ -442,8 +439,9 @@ object Round9Ops2 {
     * artifact, train once per session). */
   private[graft] def trainedWeights(s: SparkSession, dir: String,
                                     steps: Int, lr: Double): Seq[Array[Double]] =
-    wMemo.getOrElseUpdate((s.sparkContext.applicationId, dir, steps, lr),
-      trainWeights(classifierFeatures(Tables.documents(s, dir)), steps, lr))
+    graft.Caches.model(s, ("clf_weights", dir, steps, lr)) {
+      trainWeights(classifierFeatures(Tables.documents(s, dir)), steps, lr)
+    }
 
   /** σ(z) under weight vector `w`, with the shared stage roundings:
     * z 6dp (left-assoc sum, matching the SQL text), p 6dp. */

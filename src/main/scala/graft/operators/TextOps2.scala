@@ -645,16 +645,14 @@ object TextOps2 {
        |  GROUP BY 1)""".stripMargin
   }
 
-  private val richMemo =
-    new scala.collection.concurrent.TrieMap[(String, String), BatchedRun]
-
   /** The rich training run, memoized per (session, corpus): #369/#370/
     * #371 all read it, so one session pays the [[RichRounds]]-round
     * driver loop once. */
   private[graft] def richRun(s: SparkSession, dir: String): BatchedRun =
-    richMemo.getOrElseUpdate((s.sparkContext.applicationId, dir),
+    graft.Caches.model(s, ("bpe_rich_run", dir)) {
       runBatched(richWords(Tables.documents(s, dir)), RichRounds, BpeBatchK,
-                 RichGrid.toSet))
+                 RichGrid.toSet)
+    }
 
   /** #369 bpe_train_rich: the batched trainer IN ITS DESIGN REGIME —
     * ≥1024 realized merges on committed data via the rich-vocabulary

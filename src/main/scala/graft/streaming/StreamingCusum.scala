@@ -43,7 +43,6 @@ object StreamingCusum {
       // squares — BigDecimal, NOT a scale-10 unscaled Long: x² of a
       // large daily mean overflows the Long encoding (> ~9.2e8 throws,
       // larger sums wrap silently) where the batch decimal sum is exact
-      // (the StreamingMhw.decSum precedent)
       def dsumD(vs: Seq[Double]): Double = {
         var acc = java.math.BigDecimal.ZERO
         vs.foreach { v =>

@@ -12,7 +12,7 @@ import graft.sources.Tables
   * pooling at the Dec↔Jan boundary, Feb-29 interpolation on a real leap
   * year, and baseline-period restriction — asserted against
   * hand-computed values. */
-class GraftApiSpec extends AnyFunSuite {
+class GraftApiSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local("4")
   import spark.implicits._
@@ -209,11 +209,11 @@ class GraftApiSpec extends AnyFunSuite {
     withConf("MEMORY_AND_DISK_2") {
       assert(Mhw.mhwEvents(spark, sf).collect().map(_.toSeq).toSet == base)
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val ckpt = tempDir("graft_ckpt")
     spark.sparkContext.setCheckpointDir(ckpt)
-    withConf("RELIABLE") {
+    try withConf("RELIABLE") {
       assert(Mhw.mhwEvents(spark, sf).collect().map(_.toSeq).toSet == base)
-    }
+    } finally spark.sparkContext.setCheckpointDir(null)
   }
 
   test("metrics-from-clim derives severity internally and equals the explicit chain") {

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Graph
 
 /** Invariants for the graph/merge operators (#80-#81). */
-class GraphSpec extends AnyFunSuite {
+class GraphSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local("4")
   private val sf = "/root/testdata/sf0.001"
@@ -30,7 +30,7 @@ class GraphSpec extends AnyFunSuite {
     // session configures a checkpoint dir (the 1000-executor posture);
     // results must be bit-identical to the localCheckpoint path
     val viaLocal = Graph.graphPagerank(spark, sf).collect().map(_.toSeq).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = tempDir("graft_ckpt")
     spark.sparkContext.setCheckpointDir(dir)
     try {
       val viaDfs = Graph.graphPagerank(spark, sf).collect().map(_.toSeq).toSeq

@@ -1,20 +1,18 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{GraftCatalog, IO, Tables}
 
-class IOSpec extends AnyFunSuite {
+class IOSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local("4")
 
   private val sf = "/root/testdata/sf0.001"
   private def tmp(name: String) =
-    Files.createTempDirectory(s"graft_io_$name").toString
+    tempDir(s"graft_io_$name")
 
   test("round-trip through csv and json preserves values") {
     val src = Tables.orders(spark, sf)

@@ -9,7 +9,7 @@ import graft.operators.{Round6Ops12, Round6Ops24}
   * the documents-feed curation gate and garbage screen live, via the
   * registers/finalize contract — the stream twin must be bit-identical
   * to the batch build because the register stage IS shared code. */
-class Round8Spec extends AnyFunSuite {
+class Round8Spec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local("4")
 
@@ -167,7 +167,7 @@ class Round8Spec extends AnyFunSuite {
     val mid = Round8Ops.feedMidDay(ev)
     val cut = ev.selectExpr("percentile(unix_micros(ts), 0.5)")
       .collect()(0).getDouble(0).toLong
-    val dir = java.nio.file.Files.createTempDirectory("graft_regm").toString
+    val dir = tempDir("graft_regm")
     Seq("b=0" -> ev.filter(unix_micros(col("ts")) <= cut),
         "b=1" -> ev.filter(unix_micros(col("ts")) > cut))
       .foreach { case (sub, df) => df.coalesce(1).write.parquet(s"$dir/in/$sub") }
@@ -231,7 +231,7 @@ class Round8Spec extends AnyFunSuite {
     import graft.sources.Partitioned
     val ev = graft.sources.Tables.events(spark, sf)
       .withColumn("p_date", date_format(col("ts"), "yyyy-MM-dd"))
-    val path = java.nio.file.Files.createTempDirectory("graft_cmp").toString + "/events"
+    val path = tempDir("graft_cmp") + "/events"
     // natural small-file debris: 8 upstream tasks x every day
     ev.repartition(8).write.partitionBy("p_date").parquet(path)
     def snap() = spark.read.parquet(path)
@@ -291,7 +291,7 @@ class Round8Spec extends AnyFunSuite {
       (5L, 2L, "2024-01-03 09:00:00", "view", 5.0)
     ).toDF("event_id", "user_id", "ts", "event_type", "value")
       .withColumn("ts", col("ts").cast("timestamp"))
-    val path = java.nio.file.Files.createTempDirectory("graft_er").toString + "/events"
+    val path = tempDir("graft_er") + "/events"
     ev.withColumn("p_date", date_format(col("ts"), "yyyy-MM-dd"))
       .write.partitionBy("p_date").parquet(path)
     val day3 = new java.io.File(s"$path/p_date=2024-01-03")

@@ -2,7 +2,6 @@ package graft
 
 import java.io.File
 import java.lang.management.ManagementFactory
-import java.nio.file.Files
 import java.util.concurrent.TimeUnit
 
 import scala.jdk.CollectionConverters._
@@ -16,33 +15,26 @@ import graft.sources.Partitioned
 /** The scratch layout of `graft.sources.Staging`: staged copies are keyed
   * on the full data-dir path, and each JVM stages into a dir of its own
   * that is gone once the JVM has exited. */
-class StagingSpec extends AnyFunSuite {
+class StagingSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local("4")
 
   private val sf = "/root/testdata/sf0.001"
 
-  /** `body` over a new temp dir, deleted afterwards. */
-  private def withTempDir(prefix: String)(body: File => Unit): Unit = {
-    val dir = Files.createTempDirectory(prefix).toFile
-    try body(dir) finally FileUtils.deleteDirectory(dir)
-  }
-
   test("data dirs that differ only in case and '.' vs '_' get distinct staged copies") {
-    withTempDir("graft_keys") { parent =>
-      val dirs = Seq("SF0.001", "sf0_001").map { name =>
-        val d = new File(parent, name)
-        FileUtils.copyToDirectory(new File(s"$sf/events.parquet"), d)
-        d.getPath
-      }
-      val staged = dirs.map(Partitioned.eventsPartitioned(spark, _))
-      assert(staged.distinct.size == 2, s"one staged copy for both dirs: $staged")
-      staged.foreach(p => assert(new File(p).isDirectory, s"$p was not staged"))
+    val parent = new File(tempDir("graft_keys"))
+    val dirs = Seq("SF0.001", "sf0_001").map { name =>
+      val d = new File(parent, name)
+      FileUtils.copyToDirectory(new File(s"$sf/events.parquet"), d)
+      d.getPath
     }
+    val staged = dirs.map(Partitioned.eventsPartitioned(spark, _))
+    assert(staged.distinct.size == 2, s"one staged copy for both dirs: $staged")
+    staged.foreach(p => assert(new File(p).isDirectory, s"$p was not staged"))
   }
 
   test("a child JVM stages under its own scratch dir, which is gone after it exits") {
-    withTempDir("graft_lifecycle")(childLifecycle)
+    childLifecycle(new File(tempDir("graft_lifecycle")))
   }
 
   private def childLifecycle(root: File): Unit = {

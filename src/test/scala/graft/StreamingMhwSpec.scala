@@ -8,31 +8,24 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
 import graft.operators.Mhw
-import graft.streaming.{MhwStreamState, SevIn, StreamingMhw}
+import graft.streaming.{MhwSpanDay, MhwStreamState, SevIn, StreamingMhw}
 
 /** Incremental MHW detection: batch ↔ stream parity and the in-order
   * chunking invariance of the stateful fold. */
-class StreamingMhwSpec extends AnyFunSuite {
+class StreamingMhwSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local("4")
 
   private val sf = "/root/testdata/sf0.001"
 
-  /** Drive the pure fold over chunks through a TestGroupState, exactly
-    * as flatMapGroupsWithState would. */
-  private def foldChunks(chunks: Seq[Seq[SevIn]]): (Seq[graft.streaming.MhwStreamEvent], Option[MhwStreamState]) = {
-    var state: Option[MhwStreamState] = None
-    val out = Seq.newBuilder[graft.streaming.MhwStreamEvent]
-    chunks.foreach { chunk =>
-      val gs = TestGroupState.create[MhwStreamState](
-        org.apache.spark.api.java.Optional.fromNullable(state.orNull),
-        GroupStateTimeout.NoTimeout, 0L,
-        org.apache.spark.api.java.Optional.empty[Long](), false)
-      out ++= StreamingMhw.foldMhw(1L, chunk.iterator, gs)
-      state = if (gs.exists) Some(gs.get) else None
-    }
-    (out.result(), state)
-  }
+  import StreamingMhwSpec.foldChunks
+
+  /** The distinct (evt, index_start, index_end) spans of emitted days. */
+  private def spans(days: Seq[MhwSpanDay]): Seq[(Long, Int, Int)] =
+    days.map(e => (e.evt, e.index_start, e.index_end)).distinct
+
+  private def sevIn(idx: Int, tAnom: Double, sev: Double): SevIn =
+    SevIn(1L, idx, tAnom, sev, sev > 1)
 
   test("foldMhw: emission is invariant to in-order chunking (property)") {
     val rnd = new scala.util.Random(20260812)
@@ -45,7 +38,7 @@ class StreamingMhwSpec extends AnyFunSuite {
           val sev =
             if (rnd.nextDouble() < 0.45) 1.0 + rnd.nextInt(30) / 10.0
             else rnd.nextDouble()
-          Some(SevIn(1L, i, math.floor(sev * 3 * 1e6) / 1e6, sev))
+          Some(sevIn(i, math.floor(sev * 3 * 1e6) / 1e6, sev))
         }
       }
       // single-shot reference
@@ -66,17 +59,21 @@ class StreamingMhwSpec extends AnyFunSuite {
     for (_ <- 1 to 100) {
       val days = (0 until 80).flatMap { i =>
         if (rnd.nextDouble() < 0.1) None
-        else Some(SevIn(1L, i, rnd.nextDouble(), if (rnd.nextDouble() < 0.5) 1.5 else 0.5))
+        else Some(sevIn(i, rnd.nextDouble(), if (rnd.nextDouble() < 0.5) 1.5 else 0.5))
       }
-      val all = StreamingMhw.chains(days.toIndexedSeq)
+      val all = Mhw.eventChains(days.filter(_.hot).map(_.idx), 3, 2)
       val (emitted, _) = foldChunks(Seq(days))
-      assert(emitted.map(e => (e.index_start, e.index_end)) == all.dropRight(1))
-      assert(emitted.map(_.evt) == (1 to (all.size - 1).max(0)).map(_.toLong))
+      val closed = all.dropRight(1).zipWithIndex.map { case ((a, b), i) => (i + 1L, a, b) }
+      assert(spans(emitted) == closed)
+      // every day on record inside a closed span, gap days included, in order
+      assert(emitted.map(e => (e.evt, e.idx)) == closed.flatMap { case (evt, a, b) =>
+        days.filter(d => d.idx >= a && d.idx <= b).map(d => (evt, d.idx))
+      })
     }
   }
 
   private def d(idx: Int, sev: Double = 2.0): SevIn =
-    SevIn(1L, idx, sev * 1.5, sev)
+    sevIn(idx, sev * 1.5, sev)
 
   test("foldMhw late data: out-of-order rows above the horizon are folded " +
        "exactly as if in-order (open-chain region repair)") {
@@ -95,7 +92,8 @@ class StreamingMhwSpec extends AnyFunSuite {
        "events are never re-emitted, mutated, or bridged into") {
     // chain A (0..9), closed by chain B (15..17): horizon becomes 14
     val (emitted1, st1) = foldChunks(Seq((0 to 9).map(d(_)), (15 to 17).map(d(_))))
-    assert(emitted1.map(e => (e.index_start, e.index_end)) == Seq((0, 9)))
+    assert(spans(emitted1) == Seq((1L, 0, 9)))
+    assert(emitted1.map(_.idx) == (0 to 9))
     assert(st1.get.horizon == 14)
     // a late qualifying fragment 11..13 — in-order it would have gap-joined
     // A (11−9 ≤ 2) — arrives after A closed: dropped entirely
@@ -118,7 +116,7 @@ class StreamingMhwSpec extends AnyFunSuite {
       org.apache.spark.api.java.Optional.empty[Long](), false)
     val out2 = StreamingMhw.foldMhw(1L,
       ((18 to 19).map(d(_)) ++ (25 to 27).map(d(_))).iterator, gs2).toSeq
-    assert(out2.map(e => (e.evt, e.index_start, e.index_end)) == Seq((2L, 15, 19)))
+    assert(spans(out2) == Seq((2L, 15, 19)))
   }
 
   test("stream_mhw_events: closed events equal batch events minus each series' last") {
@@ -138,11 +136,10 @@ class StreamingMhwSpec extends AnyFunSuite {
     // split the severity table at the median date into two files;
     // maxFilesPerTrigger=1 forces chains spanning the cut to survive a
     // batch boundary in state
-    val sev = Mhw.severityChain(spark, sf, 0.6)
-    val d0 = sev.agg(min(col("d")).as("d0")).head.getDate(0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_mhw_stream").toString
-    val withIdx = sev.select(col("user_id"),
-      datediff(col("d"), lit(d0)).as("idx"), col("t_anom"), col("severity"))
+    val (origin, sev) = Mhw.indexed(Mhw.severityChain(spark, sf, 0.6))
+    val dir = tempDir("graft_mhw_stream")
+    val withIdx = sev.select(col("user_id"), col("idx"), col("t_anom"),
+      col("severity"), Mhw.exceeds.as("hot"))
     val cut = withIdx.selectExpr("percentile(idx, 0.5)")
       .collect()(0).getDouble(0).toInt
     withIdx.filter(col("idx") <= cut).coalesce(1).write.parquet(s"$dir/in/b=0")
@@ -153,10 +150,10 @@ class StreamingMhwSpec extends AnyFunSuite {
     val schema = StructType(Seq(
       StructField("user_id", LongType), StructField("idx", IntegerType),
       StructField("t_anom", DoubleType), StructField("severity", DoubleType),
-      StructField("b", IntegerType)))
+      StructField("hot", BooleanType), StructField("b", IntegerType)))
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
-      .select(col("user_id"), col("idx"), col("t_anom"), col("severity"))
+      .select(col("user_id"), col("idx"), col("t_anom"), col("severity"), col("hot"))
       .as[SevIn]
     val q = src.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
@@ -166,7 +163,8 @@ class StreamingMhwSpec extends AnyFunSuite {
     q.awaitTermination()
     assert(q.recentProgress.map(_.batchId).distinct.length >= 2)
 
-    val streamed = spark.table("mhw_batches")
+    // the sink holds the closed events' days: the drain's own aggregate
+    val streamed = Mhw.eventMetrics(Mhw.withMx(spark.table("mhw_batches")), origin)
       .select("user_id", "evt", "index_start", "index_end", "duration",
               "index_peak", "intensity_max", "intensity_mean", "intensity_cumul")
       .collect().map(_.toSeq).toSet
@@ -205,5 +203,25 @@ class StreamingMhwSpec extends AnyFunSuite {
         staged.foreach(p => assert(p.startsWith(tmp + "/"), s"$p is not under $tmp"))
       }
     } finally spark.streams.removeListener(listener)
+  }
+}
+
+object StreamingMhwSpec {
+
+  /** Drive the pure fold over chunks of one series through a
+    * TestGroupState, exactly as flatMapGroupsWithState would. */
+  def foldChunks(chunks: Seq[Seq[SevIn]],
+                 uid: Long = 1L): (Seq[MhwSpanDay], Option[MhwStreamState]) = {
+    var state: Option[MhwStreamState] = None
+    val out = Seq.newBuilder[MhwSpanDay]
+    chunks.foreach { chunk =>
+      val gs = TestGroupState.create[MhwStreamState](
+        org.apache.spark.api.java.Optional.fromNullable(state.orNull),
+        GroupStateTimeout.NoTimeout, 0L,
+        org.apache.spark.api.java.Optional.empty[Long](), false)
+      out ++= StreamingMhw.foldMhw(uid, chunk.iterator, gs)
+      state = if (gs.exists) Some(gs.get) else None
+    }
+    (out.result(), state)
   }
 }

@@ -9,7 +9,7 @@ import graft.streaming.Streaming
 
 /** Batch↔stream parity: the same logical operation executed through
   * Structured Streaming must agree with its batch expression. */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local("4")
 
@@ -71,7 +71,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("drain: a failing stream raises, then its sink view and scratch dir are gone") {
     import org.apache.spark.sql.streaming.OutputMode
-    val scratch = java.nio.file.Files.createTempDirectory("graft_drainfail").toString
+    val scratch = tempDir("graft_drainfail")
     spark.range(3).write.parquet(s"$scratch/in")
     val schema = spark.read.parquet(s"$scratch/in").schema
     val boom = udf((x: Long) => if (x >= 0) throw new IllegalStateException("boom") else x)
@@ -129,7 +129,7 @@ class StreamingSpec extends AnyFunSuite {
     def mk(rows: Seq[(Long, String, String)]) =
       rows.toDF("user_id", "event_type", "t")
         .select(col("user_id"), col("event_type"), to_timestamp(col("t")).as("ts"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_dwm").toString
+    val dir = tempDir("graft_dwm")
     val schema = stageSplit(dir, Seq(
       "b=0" -> mk(Seq((1L, "click", "2024-01-01 00:00:00"), (2L, "view", "2024-01-01 00:05:00"))),
       "b=1" -> mk(Seq((3L, "click", "2024-01-11 00:00:00"))),
@@ -162,7 +162,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.StreamingUpsert
     val ev = graft.sources.Tables.events(spark, sf)
     val cut = ev.selectExpr("percentile(unix_micros(ts), 0.5)").collect()(0).getDouble(0).toLong
-    val dir = java.nio.file.Files.createTempDirectory("graft_ups").toString
+    val dir = tempDir("graft_ups")
     val schema = stageSplit(dir, Seq(
       "b=0" -> ev.filter(unix_micros(col("ts")) <= cut),
       "b=1" -> ev.filter(unix_micros(col("ts")) > cut)))
@@ -228,7 +228,7 @@ class StreamingSpec extends AnyFunSuite {
       0L -> ev.filter(us <= c1),
       1L -> ev.filter(us > c1 && us <= c2),
       2L -> ev.filter(us > c2))
-    val path = java.nio.file.Files.createTempDirectory("graft_cp").toString + "/state"
+    val path = tempDir("graft_cp") + "/state"
     batches.foreach { case (id, b) =>
       StreamingUpsert.mergeBatch(spark, path, StreamingUpsert.latestPerUser(b), id)
     }
@@ -263,7 +263,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.Analytics2
     val ev = graft.sources.Tables.events(spark, sf)
     val cut = ev.selectExpr("percentile(unix_micros(ts), 0.5)").collect()(0).getDouble(0).toLong
-    val dir = java.nio.file.Files.createTempDirectory("graft_hll").toString
+    val dir = tempDir("graft_hll")
     val schema = stageSplit(dir, Seq(
       "b=0" -> ev.filter(unix_micros(col("ts")) <= cut),
       "b=1" -> ev.filter(unix_micros(col("ts")) > cut)))
@@ -286,7 +286,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.Round6Ops4
     val ev = graft.sources.Tables.events(spark, sf)
     val cut = ev.selectExpr("percentile(unix_micros(ts), 0.5)").collect()(0).getDouble(0).toLong
-    val dir = java.nio.file.Files.createTempDirectory("graft_benford").toString
+    val dir = tempDir("graft_benford")
     val schema = stageSplit(dir, Seq(
       "b=0" -> ev.filter(unix_micros(col("ts")) <= cut),
       "b=1" -> ev.filter(unix_micros(col("ts")) > cut)))
@@ -311,7 +311,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.Sketches
     val ev = graft.sources.Tables.events(spark, sf)
     val cut = ev.selectExpr("percentile(unix_micros(ts), 0.5)").collect()(0).getDouble(0).toLong
-    val dir = java.nio.file.Files.createTempDirectory("graft_qs").toString
+    val dir = tempDir("graft_qs")
     val schema = stageSplit(dir, Seq(
       "b=0" -> ev.filter(unix_micros(col("ts")) <= cut),
       "b=1" -> ev.filter(unix_micros(col("ts")) > cut)))
@@ -339,7 +339,7 @@ class StreamingSpec extends AnyFunSuite {
     graft.functions.GraftFunctions.ensure(spark)
     val ev = graft.sources.Tables.events(spark, sf)
     val cut = ev.selectExpr("percentile(unix_micros(ts), 0.5)").collect()(0).getDouble(0).toLong
-    val dir = java.nio.file.Files.createTempDirectory("graft_kmv").toString
+    val dir = tempDir("graft_kmv")
     val schema = stageSplit(dir, Seq(
       "b=0" -> ev.filter(unix_micros(col("ts")) <= cut),
       "b=1" -> ev.filter(unix_micros(col("ts")) > cut)))
@@ -372,7 +372,7 @@ class StreamingSpec extends AnyFunSuite {
     graft.functions.GraftFunctions.ensure(spark)
     val emb = graft.sources.Tables.embeddings(spark, sf)
     val cut = emb.agg(expr("percentile(vec_id, 0.5)")).collect()(0).getDouble(0).toLong
-    val dir = java.nio.file.Files.createTempDirectory("graft_sknn").toString
+    val dir = tempDir("graft_sknn")
     val schema = stageSplit(dir, Seq(
       "b=0" -> emb.filter(col("vec_id") <= cut),
       "b=1" -> emb.filter(col("vec_id") > cut)))
@@ -398,7 +398,7 @@ class StreamingSpec extends AnyFunSuite {
     // close if per-user state survives the batch boundary
     val ev = graft.sources.Tables.events(spark, sf)
     val cut = ev.selectExpr("percentile(unix_micros(ts), 0.5)").collect()(0).getDouble(0).toLong
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream")
     val schema = stageSplit(dir, Seq(
       "b=0" -> ev.filter(unix_micros(col("ts")) <= cut),
       "b=1" -> ev.filter(unix_micros(col("ts")) > cut)))
@@ -481,7 +481,7 @@ class StreamingSpec extends AnyFunSuite {
     // all clicks land in file b=0, all purchases in b=1;
     // maxFilesPerTrigger=1 forces the purchase batch to join against
     // click state carried from the previous micro-batch
-    val dir = java.nio.file.Files.createTempDirectory("graft_attr").toString
+    val dir = tempDir("graft_attr")
     val ev = graft.sources.Tables.events(spark, sf)
     val schema = stageSplit(dir, Seq(
       "b=0" -> ev.filter(col("event_type") === "click"),

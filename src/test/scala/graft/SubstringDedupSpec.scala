@@ -9,7 +9,7 @@ import graft.operators.SubstringDedup
 /** #294 dedup_substring pins: interval-union span accounting, the
   * boundary-straddling catch that #24i text_passage_dedup provably
   * misses, and the k-token floor. */
-class SubstringDedupSpec extends AnyFunSuite {
+class SubstringDedupSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = GraftSession.local("4")
   import spark.implicits._
@@ -135,7 +135,7 @@ class SubstringDedupSpec extends AnyFunSuite {
     // exercise the Df path via the public entry on a temp dir is overkill;
     // replicate through the operator's building blocks instead
     val plan = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_srp").toString
+      val dir = tempDir("graft_srp")
       docs.withColumn("lang", org.apache.spark.sql.functions.lit("en"))
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       SubstringDedup.corpusSpanRemovalPlan(spark, dir).collect()
