@@ -117,8 +117,9 @@ object GraftSession {
     * Root: `SPARK_GRAFT_SCRATCH` when set (a production deployment
     * points it at its fast local NVMe); `off` or unset falls back as
     * below. Unset, it is a RAM-backed tmpfs (`/dev/shm/graft-scratch`)
-    * when `/dev/shm` is writable, else the JVM's default temp dir; `off`
-    * is always the JVM's default temp dir. Guide §2.1/§6: local scratch
+    * when `/dev/shm` is writable and its usable space covers the JVM's
+    * max heap ([[defaultScratchRoot]]), else the JVM's default temp dir;
+    * `off` is always the JVM's default temp dir. Guide §2.1/§6: local scratch
     * bandwidth+latency is the tighter limit for shuffle files and state
     * commits on machines with slow disks — measured here, the ~55
     * streaming drains spent 60-80% of their wall in state/WAL commits to
@@ -136,9 +137,20 @@ object GraftSession {
       case Some(d) if d.nonEmpty => Some(d)
       case _ =>
         val shm = new java.io.File("/dev/shm")
-        if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-scratch")
-        else None
+        defaultScratchRoot(shm.isDirectory && shm.canWrite, shm.getUsableSpace,
+          Runtime.getRuntime.maxMemory)
     }
+
+  /** The scratch root when `SPARK_GRAFT_SCRATCH` is unset: tmpfs only
+    * when it is writable and its usable space covers the max heap.
+    * Scratch (shuffle files, spills, staged copies) grows with the data
+    * a heap of that size works on, and a full tmpfs fails the write
+    * where a disk would not; a smaller tmpfs falls back to the JVM's
+    * default temp dir (None). */
+  private[graft] def defaultScratchRoot(shmWritable: Boolean, shmUsableBytes: Long,
+                                        maxHeapBytes: Long): Option[String] =
+    if (shmWritable && shmUsableBytes >= maxHeapBytes) Some("/dev/shm/graft-scratch")
+    else None
 
   /** This JVM's own scratch dir: one uniquely named `graft-<uuid>` dir
     * under the root, made once per JVM (the first `local` call) and

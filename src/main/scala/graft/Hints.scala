@@ -65,7 +65,7 @@ object Hints {
     * a deployment sets true and the family degrades to mergeable
     * sketches with bounded memory (accuracy spec-pinned, plan
     * spec-pinned). Climatology thresholds stay exact: their pooled
-    * groups are years-bounded (see Mhw.pooledQuantile). */
+    * groups are years-bounded (see Mhw.climThresh). */
   val ApproxQuantiles = "spark.graft.approxQuantiles"
 
   def approxQuantiles(s: SparkSession): Boolean =

@@ -53,9 +53,11 @@ object Parity {
     r(dsum(c) / count(c), d)
 
   /** Driver-side replica of [[r]] at d = 6 — THE half-up-6dp rounding
-    * every JVM-side finalize (streaming folds, MMR greedy) must share
-    * with the distributed expressions. */
-  def r6d(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
+    * every JVM-side finalize (streaming folds, MMR greedy, the MHW
+    * climatology kernel) must share with the distributed expressions.
+    * Spark's `floor` of a double is a LONG, so NaN rounds to 0.0 and
+    * ±Inf to ±Long.MaxValue/1e6, exactly as [[r]] does. */
+  def r6d(x: Double): Double = math.floor(x * 1e6 + 0.5).toLong / 1e6
 
   /** Spark's double→DECIMAL(38,10) cast (shortest decimal repr, then
     * HALF_UP to scale 10) as an unscaled long — the streaming-state

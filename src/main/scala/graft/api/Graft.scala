@@ -127,50 +127,51 @@ object Graft {
         byYears.filter(col("d").between(to_date(lit(from)), to_date(lit(to))))
       case None => byYears
     }
+    // a day holding a NaN observation stays NaN (the decimal mean would
+    // turn it into null), so strict skipna sees it downstream
     filtered.groupBy(col("user_id"), col("d"))
-      .agg(graft.Parity.davg(col("v"), 6).as("sst"))
+      .agg(when(bool_or(isnan(col("v"))), lit(Double.NaN))
+        .otherwise(graft.Parity.davg(col("v"), 6)).as("sst"))
       .withColumn("yr", year(col("d")))
       .withColumn("doy", climDoy(col("d")))
   }
 
-  private def half(smoothWidth: Int): Int = smoothWidth / 2
+  /** The half-width of the smoothing window, when smoothing is on. */
+  private def half(smooth: Boolean, smoothWidth: Int): Option[Int] =
+    if (smooth) Some(smoothWidth / 2) else None
 
-  /** best_practice.compute_climatology: per-DOY mean (+ optional
-    * circular running-mean smoothing). */
+  /** best_practice.compute_climatology: per-DOY mean, NaN skipped (+
+    * optional circular running-mean smoothing). */
   def computeClimatology(daily: DataFrame, smoothPercentile: Boolean = true,
-                         smoothPercentileWidth: Int = 31): DataFrame = {
-    val c = Mhw.climatologyBp(daily)
-    if (smoothPercentile) Mhw.smoothDoy(c, "seas", half(smoothPercentileWidth)) else c
-  }
+                         smoothPercentileWidth: Int = 31): DataFrame =
+    Mhw.climThresh(daily, Mhw.Clim(0, seas = true,
+      smoothHalf = half(smoothPercentile, smoothPercentileWidth)))
 
   /** best_practice.compute_threshold: ±windowHalfWidth cross-year pooled
     * quantile, strict skipna (+ optional smoothing). */
   def computeThreshold(daily: DataFrame, pctile: Double = 0.9,
                        windowHalfWidth: Int = 5,
                        smoothPercentile: Boolean = true,
-                       smoothPercentileWidth: Int = 31): DataFrame = {
-    val t = Mhw.pooledQuantile(daily, windowHalfWidth, pctile)
-    if (smoothPercentile) Mhw.smoothDoy(t, "thresh", half(smoothPercentileWidth)) else t
-  }
+                       smoothPercentileWidth: Int = 31): DataFrame =
+    Mhw.climThresh(daily, Mhw.Clim(windowHalfWidth, pctile = Some(pctile),
+      smoothHalf = half(smoothPercentile, smoothPercentileWidth)))
 
-  /** legacy.compute_climatology: pooled mean + Feb-29 interpolation +
-    * smoothing (Hobday/Oliver 2016 contract). */
+  /** legacy.compute_climatology: pooled mean (NaN skipped) + Feb-29
+    * interpolation + smoothing (Hobday/Oliver 2016 contract). */
   def computeClimatologyLegacy(daily: DataFrame, windowHalfWidth: Int = 5,
                                smoothPercentile: Boolean = true,
-                               smoothPercentileWidth: Int = 31): DataFrame = {
-    val c = Mhw.interpFeb29(Mhw.pooledMean(daily, windowHalfWidth), "seas")
-    if (smoothPercentile) Mhw.smoothDoy(c, "seas", half(smoothPercentileWidth)) else c
-  }
+                               smoothPercentileWidth: Int = 31): DataFrame =
+    Mhw.climThresh(daily, Mhw.Clim(windowHalfWidth, seas = true, feb29 = true,
+      smoothHalf = half(smoothPercentile, smoothPercentileWidth)))
 
   /** legacy.compute_threshold: pooled quantile + Feb-29 interpolation +
     * smoothing. */
   def computeThresholdLegacy(daily: DataFrame, pctile: Double = 0.9,
                              windowHalfWidth: Int = 5,
                              smoothPercentile: Boolean = true,
-                             smoothPercentileWidth: Int = 31): DataFrame = {
-    val t = Mhw.interpFeb29(Mhw.pooledQuantile(daily, windowHalfWidth, pctile), "thresh")
-    if (smoothPercentile) Mhw.smoothDoy(t, "thresh", half(smoothPercentileWidth)) else t
-  }
+                             smoothPercentileWidth: Int = 31): DataFrame =
+    Mhw.climThresh(daily, Mhw.Clim(windowHalfWidth, pctile = Some(pctile),
+      feb29 = true, smoothHalf = half(smoothPercentile, smoothPercentileWidth)))
 
   /** best_practice.detrend (deg=1): OLS fit per key over the baseline —
     * inclusive years OR the reference's date-granular `period=slice(...)`

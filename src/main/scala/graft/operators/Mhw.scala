@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
 import graft.Parity._
 import graft.sources.Tables
@@ -32,15 +33,16 @@ import graft.time.DoyFunctions._
   *
   * Scale design (100 TB): the per-(key,doy) climatology tables are tiny
   * relative to facts (366 rows per key) → broadcast back to facts, so the
-  * fact table never shuffles for severity. Pooling explodes ×(2w+1)
-  * map-side then partially aggregates per (key,doy) before the shuffle.
-  * The exact pooled quantile co-locates each (key,doy) group's values —
-  * group cardinality ∝ keys, no global hotspot, and each group is
-  * years-bounded, so no sketch is needed at any scale. Event
-  * detection groups each series' exceeding day indices under one
-  * exchange on the series key and scans them with [[eventChains]], the
-  * one run/gap-join implementation (the streaming detector folds with
-  * it too); the per-key spans then join back to the facts.
+  * fact table never shuffles for severity. The pooled climatology and
+  * threshold ([[climThresh]]) take ONE exchange on the series key; each
+  * task then holds one series' daily record at a time and pools,
+  * interpolates and smooths it on 366-slot arrays. A series is
+  * years-bounded, so no group grows with the data and no sketch is
+  * needed at any scale. Event detection groups each series' exceeding
+  * day indices under one exchange on the series key and scans them with
+  * [[eventChains]], the one run/gap-join implementation (the streaming
+  * detector folds with it too); the per-key spans then join back to the
+  * facts.
   */
 object Mhw {
 
@@ -67,262 +69,336 @@ object Mhw {
 
   // ---------------------------------------------------------------- pooling
 
-  /** One hash shuffle on the series key. Every aggregate in the pooling
-    * chain groups by (user_id, some-doy-expression), and hash(user_id)
-    * satisfies that clustering requirement, so after this exchange the
-    * ±hw pooling explode, the per-DOY aggregate, the Feb-29 fan-out and
-    * the ±15 smoothing explode all plan into ONE stage with zero further
-    * exchanges. Without it the quantile path shuffles the ×(2hw+1)
-    * exploded samples themselves (collect_list partials don't reduce),
-    * i.e. 11× the daily volume — measured superlinear at the ×30
-    * reference grid (BENCH_GRID_x30). MHW grids are volume-uniform per
-    * key (366·years daily rows each), so keying the exchange on the
-    * series id alone introduces no skew.
+  /** One hash shuffle on the series key: the only exchange of
+    * [[climThresh]]. MHW grids are volume-uniform per key (366·years
+    * daily rows each), so keying the exchange on the series id alone
+    * introduces no skew.
     *
     * The partition count is pinned to spark.sql.shuffle.partitions:
     * left implicit, AQE sizes the exchange by its INPUT bytes (the
-    * compact daily table) and coalesces to a handful of partitions —
-    * but each row fans out ×11 and then ×31 downstream in-stage, so
-    * coalescing starves the whole chain of parallelism. */
+    * compact daily table) and coalesces to a handful of partitions,
+    * which starves the per-series kernel downstream of parallelism. */
   private[graft] def byKey(df: DataFrame): DataFrame =
     df.repartition(
       df.sparkSession.sessionState.conf.numShufflePartitions, col("user_id"))
 
-  /** Explode each daily observation to the (2·hw+1) window centers it
-    * contributes to, with the reference's cross-year grid semantics: a
-    * center that falls off the [1,366] grid belongs to the adjacent year
-    * and only counts if that year is present in the data. */
-  private[graft] def poolSamples(dailyDf: DataFrame, hw: Int): DataFrame = {
-    val years = dailyDf.select(col("yr").as("c_yr")).distinct()
-    byKey(dailyDf)
-      .withColumn("k", explode(sequence(lit(-hw), lit(hw))))
-      .withColumn("c_raw", col("doy") + col("k"))
-      .withColumn("c_yr", col("yr") +
-        when(col("c_raw") < 1, -1).when(col("c_raw") > 366, 1).otherwise(0))
-      .join(broadcast(years), "c_yr")
-      .select(col("user_id"), wrapDoy(col("c_raw")).as("doy"), col("sst"))
+  /** What one [[climThresh]] call computes for each series:
+    *  - `hw`: the ±hw pooling half-width (0 = the plain per-DOY mean);
+    *  - `seas`: the pooled mean (climatology);
+    *  - `pctile`: the pooled linear quantile (threshold);
+    *  - `feb29`: legacy Feb-29 interpolation after pooling;
+    *  - `smoothHalf`: the ±half circular running mean after that. */
+  final case class Clim(hw: Int, seas: Boolean = false,
+                        pctile: Option[Double] = None, feb29: Boolean = false,
+                        smoothHalf: Option[Int] = None) {
+    require(0 <= hw && hw <= 365, s"pooling half-width $hw outside [0, 365]")
+    require(smoothHalf.forall(h => 0 <= h && h <= 365),
+      s"smoothing half-width ${smoothHalf.getOrElse(0)} outside [0, 365]")
+    require(seas || pctile.isDefined, "Clim asks for neither seas nor thresh")
   }
 
-  /** Slot-partials pooling — the clim_incremental mergeable-partials
-    * discipline ([[climIncremental]]) applied to the ±hw pooled
-    * climatology, replacing the raw ×(2hw+1) observation fan that was
-    * the engine's one remaining memory wall (BENCH_GRID_x100: 207 GB
-    * memory spill at 348 M points — grouped collect_list/GK aggregates
-    * run sort-based above 128 groups per partition, so the old shape
-    * external-sorted the ENTIRE ×11 exploded sample stream).
+  /** The pooled climatology and threshold of every series of a daily
+    * frame (user_id, yr, doy, sst): one [[byKey]] exchange, then a
+    * per-series kernel ([[ClimKernel]]). Returns (user_id, doy, seas?,
+    * thresh?), one row per DOY slot that holds a value.
     *
-    * Two-level build, all in the single [[byKey]] stage:
-    *   1. aggregate once per (key, doy) SLOT — unsorted value array,
-    *      exact DECIMAL(38,10) sum, count, NaN flag — each in three
-    *      year-shift eligibility variants (all years / obs whose next
-    *      year exists / obs whose previous year exists, the
-    *      cross-year-grid rule of [[poolSamples]]: a contribution that
-    *      wraps off the [1,366] grid lands in the adjacent year and
-    *      only counts if that year is present);
-    *   2. fan SLOTS (not observations) ×(2hw+1) and pick the variant
-    *      each wrap direction needs: c_raw>366 wraps forward (needs
-    *      year+1 present), c_raw<1 wraps backward (year−1), in-range
-    *      centers take everything.
-    * The merge per center ([[poolMerged]]) then flattens 2hw+1 small
-    * arrays and sums 2hw+1 decimal partials.
+    * The pool of a center DOY is every observation within ±hw calendar
+    * days on the per-year 366-slot grid. An observation that wraps off
+    * the [1,366] grid lands in the adjacent year and counts only if that
+    * year is present anywhere in the frame (the frame's years arrive as
+    * one scalar `collect_set(yr)` row). A center exists when at least
+    * one eligible row does, null sst included.
+    *  - seas: exact DECIMAL(38,10) sum / count, 6dp; a NaN observation
+    *    is skipped in both the sum and the count (nanmean).
+    *  - thresh: [[graft.Parity.linQuantile]] over the sorted pool, 6dp;
+    *    any NaN in the pool nulls the center (strict skipna,
+    *    best_practice/climatology.py:225).
+    *  - legacy Feb-29: DOY 60 becomes 0.5·(DOY 59 + DOY 61), absent
+    *    when either neighbour is (legacy/climatology.py:13).
+    *  - smoothing: the circular running mean of the present slots within
+    *    ±half, min_periods=1 (legacy/climatology.py:122).
+    * Every mean is the exact decimal mean of [[graft.Parity.davg]], and
+    * MhwKernelPropertySpec pins the output cell for cell to the
+    * DataFrame spelling of all of the above.
     *
-    * BIT-IDENTICAL to the raw fan (spec-pinned, "slot-partials pooling
-    * ≡ raw fan"): the flattened multiset per center is the same set of
-    * doubles, so the re-sorted array and [[graft.Parity.linQuantile]]
-    * agree bit-for-bit; decimal sums are exact and associative, so the
-    * merged mean finalizes to the same bits. The pre-aggregate row fan
-    * drops from ×11 on observations to ×11 on (years× fewer) slots —
-    * at the reference ×100 grid (33 years) that is 33× fewer rows
-    * through the heavy aggregate, the external-sort volume falls from
-    * ~11× to ~2× the daily bytes, and the measured spill goes from
-    * 207 GB memory / 20.7 GB disk to ZERO (BENCH_GRID_x100 r10 → r11).
-    * Cost of the extra aggregate level: on SINGLE-YEAR data (the sf
-    * bench tables span one January) slots ≈ observations, so the
-    * second aggregate buys nothing and legacy_clim_thresh pays ~+0.4 s
-    * at sf0.1 — accepted: the raw fan's cost grows with years×volume
-    * (the 100 TB axis), the slot overhead is a constant factor on a
-    * chain that is already sub-second at bench SF. */
-  private[graft] def pooledSlots(dailyDf: DataFrame, hw: Int,
-                                 withValues: Boolean = true): DataFrame = {
-    val years = dailyDf.select(col("yr")).distinct()
-    // per-observation eligibility flags (broadcast joins keep the byKey
-    // partitioning, so the whole chain still plans into one stage)
-    val flagged = byKey(dailyDf)
-      .join(broadcast(years.select((col("yr") - 1).as("yr"),
-                                   lit(1).as("next_ok"))), Seq("yr"), "left")
-      .join(broadcast(years.select((col("yr") + 1).as("yr"),
-                                   lit(1).as("prev_ok"))), Seq("yr"), "left")
-    def variant(cond: Column, sfx: String): Seq[Column] = {
-      val v = when(cond, col("sst"))
-      val base = Seq(
-        sum(v.cast(Dec)).as(s"s$sfx"),
-        count(v).as(s"n$sfx"),
-        // eligible-ROW count, null-sst rows included: the raw fan emits
-        // a center whenever ANY eligible observation row exists (even
-        // all-null sst), so center existence must be keyed on rows, not
-        // on non-null values (round-11 advisory)
-        count(when(cond, lit(1))).as(s"ne$sfx"),
-        max(when(cond && isnan(col("sst")), 1).otherwise(0)).as(s"nan$sfx"))
-      if (withValues) collect_list(v).as(s"vs$sfx") +: base else base
+    * Scale: a series is bounded (≤ 366·years rows). Each task sorts its
+    * partition by a hash of the key, then holds one series' record at a
+    * time; the ±hw pool is merged from per-slot partials, so it never
+    * materializes the ×(2hw+1) observation fan. */
+  def climThresh(dailyDf: DataFrame, c: Clim): DataFrame = {
+    val years = dailyDf.agg(collect_set(col("yr"))).scalar()
+    val rows = byKey(dailyDf.select(col("user_id"), col("doy").cast("int").as("doy"),
+        col("yr"), col("sst").cast("double").as("sst")))
+      .select(col("user_id"), col("doy"), col("sst"),
+        array_contains(years, col("yr") + 1).as("next_ok"),
+        array_contains(years, col("yr") - 1).as("prev_ok"),
+        xxhash64(col("user_id")).as("h"))
+      // one long sort key: Spark radix-sorts it; a hash collision only
+      // interleaves two series, which the kernel separates again
+      .sortWithinPartitions(col("h"))
+    val outCols = Seq("seas" -> c.seas, "thresh" -> c.pctile.isDefined)
+      .collect { case (name, true) => StructField(name, DoubleType) }
+    val out = StructType(dailyDf.schema("user_id") +:
+      StructField("doy", IntegerType, nullable = false) +: outCols)
+    rows.mapPartitions(it => new ClimKernel(c).run(it))(Encoders.row(out))
+  }
+
+  /** [[climThresh]]'s arithmetic over one series at a time, on 366-slot
+    * arrays. Rows arrive as (user_id, doy, sst, next_ok, prev_ok, h),
+    * sorted by h. Spark's own expressions are mirrored step for step:
+    * a double enters a sum through the DECIMAL(38,10) cast
+    * ([[graft.Parity.dec10Unscaled]]; NaN and ±Inf cast to null), sums
+    * are exact unscaled longs that widen to BigInteger past the long
+    * range, and a sum leaves through [[graft.Parity.dec10ToDouble]]. */
+  private final class ClimKernel(c: Clim) {
+    import ClimKernel._
+    // the series' values grouped by DOY slot: slot d holds [at(d), at(d + 1))
+    private val at = new Array[Int](368)
+    private var x = new Array[Double](4096)
+    private var fl = new Array[Int](4096)
+    private var pool = new Array[Double](512)
+    // per (variant, slot): eligible rows, non-null values, counted values,
+    // NaN seen, exact sum. Variant 0 takes every row, 1 the rows whose next
+    // year is present, 2 the rows whose previous year is present.
+    private val rowsN, valsN, meanN = new Array[Int](3 * Slots)
+    private val nan = new Array[Boolean](3 * Slots)
+    private val sums = new Sums(3 * Slots)
+    private val acc = new Sums(1)
+    private val exists = new Array[Boolean](Slots)
+
+    def run(rows: Iterator[Row]): Iterator[Row] = {
+      val in = rows.buffered
+      Iterator.continually(in.hasNext).takeWhile(identity).flatMap { _ =>
+        val h = in.head.getLong(5)
+        val group = scala.collection.mutable.ArrayBuffer.empty[Row]
+        while (in.hasNext && in.head.getLong(5) == h) group += in.next()
+        val k0 = group.head.get(0)
+        if (group.forall(_.get(0) == k0)) series(k0, group)
+        else group.groupBy(_.get(0)).toSeq.flatMap { case (k, rs) => series(k, rs) }
+      }
     }
-    val aggs = variant(lit(true), "_all") ++
-      variant(col("next_ok") === 1, "_next") ++
-      variant(col("prev_ok") === 1, "_prev")
-    val slots = flagged.groupBy(col("user_id"), col("doy"))
-      .agg(aggs.head, aggs.tail: _*)
-    def pick(c: String): Column =
-      when(col("c_raw") > 366, col(s"${c}_next"))
-        .when(col("c_raw") < 1, col(s"${c}_prev"))
-        .otherwise(col(s"${c}_all"))
-    val payload =
-      (if (withValues) Seq(pick("vs").as("vs")) else Nil) ++
-        Seq(pick("s").as("s"), pick("n").as("n"), pick("ne").as("ne"),
-            pick("nan").as("nan"))
-    slots
-      .withColumn("k", explode(sequence(lit(-hw), lit(hw))))
-      .withColumn("c_raw", col("doy") + col("k"))
-      .select(col("user_id") +: wrapDoy(col("c_raw")).as("doy") +: payload: _*)
-  }
 
-  /** Merge (2hw+1) slot partials per window center: sorted pooled value
-    * array (multiset-equal to the raw fan's, hence quantile-identical),
-    * exact decimal sum + count (mean-identical), pooled NaN flag.
-    * Centers with NO eligible observation row (data confined to a
-    * year-boundary sliver with no adjacent year) are dropped — the raw
-    * fan never emits them either. Existence is keyed on the eligible-
-    * ROW count `ne` (null-sst rows included), not the non-null value
-    * count: a center whose eligible rows are all null-sst must survive
-    * with null seas/thresh, exactly as the raw fan emits it. */
-  private[graft] def poolMerged(dailyDf: DataFrame, hw: Int,
-                                withValues: Boolean = true): DataFrame = {
-    val merge =
-      (if (withValues) Seq(sort_array(flatten(collect_list(col("vs")))).as("vs"))
-       else Nil) ++
-        Seq(sum(col("s")).as("s"), sum(col("n")).as("n"),
-            sum(col("ne")).as("ne"), max(col("nan")).as("has_nan"))
-    pooledSlots(dailyDf, hw, withValues)
-      .groupBy(col("user_id"), col("doy"))
-      .agg(merge.head, merge.tail: _*)
-      .filter(col("ne") > 0)
-      .drop("ne")
-  }
-
-  /** Pooled per-DOY quantile (best-practice threshold before smoothing).
-    * Strict skipna: any NaN observation in a window nulls that center.
-    * Slot-partials build ([[pooledSlots]]): bit-identical values, ×years
-    * fewer rows through the heavy aggregate. Each (key,doy) group holds
-    * ≤ years×(2w+1) values — bounded per group, no global hotspot — so
-    * the [[graft.Hints.ApproxQuantiles]] posture deliberately does NOT
-    * flip this chain: a sketch's bounded state buys nothing the slot
-    * build doesn't already guarantee, and a sketch would need the raw
-    * ×(2w+1) observation fan the slot build exists to avoid. */
-  def pooledQuantile(dailyDf: DataFrame, hw: Int, pctile: Double): DataFrame =
-    threshOf(poolMerged(dailyDf, hw), pctile)
-
-  /** Raw-fan spelling of the exact pooled quantile — retained as the
-    * parity reference for the slot-partials rework (spec: "slot-partials
-    * pooling ≡ raw fan", bit-identical at sf). Not on any query path. */
-  private[graft] def pooledQuantileRawFan(dailyDf: DataFrame, hw: Int,
-                                          pctile: Double): DataFrame =
-    poolSamples(dailyDf, hw)
-      .groupBy(col("user_id"), col("doy"))
-      .agg(sort_array(collect_list(col("sst"))).as("vs"),
-           max(when(isnan(col("sst")), 1).otherwise(0)).as("has_nan"))
-      .select(col("user_id"), col("doy"),
-              when(col("has_nan") === 1, lit(null))
-                .otherwise(r(linQuantile(col("vs"), pctile), 6)).as("thresh"))
-
-  /** Pooled per-DOY mean (legacy climatology before Feb-29 + smoothing).
-    * Slot-partials build: merged exact decimal sum / merged count is
-    * bit-identical to davg over the raw fan (decimal addition is exact
-    * and associative; the finalize expression is the same). */
-  def pooledMean(dailyDf: DataFrame, hw: Int): DataFrame =
-    seasOf(poolMerged(dailyDf, hw, withValues = false))
-
-  /** Raw-fan spelling of [[pooledMean]] — parity reference for the
-    * slot-partials rework (spec-pinned). Not on any query path. */
-  private[graft] def pooledMeanRawFan(dailyDf: DataFrame, hw: Int): DataFrame =
-    poolSamples(dailyDf, hw)
-      .groupBy(col("user_id"), col("doy"))
-      .agg(davg(col("sst"), 6).as("seas"))
-
-  /** Plain per-DOY mean (best-practice climatology). */
-  def climatologyBp(dailyDf: DataFrame): DataFrame =
-    dailyDf.groupBy(col("user_id"), col("doy"))
-      .agg(davg(col("sst"), 6).as("seas"))
-
-  // ------------------------------------------------------------- smoothing
-
-  /** 31-slot circular running mean over the DOY grid, min_periods=1:
-    * smoothed[d] = mean of available values at circular slots d±15.
-    * Absent slots contribute nothing (nanmean); outputs every slot within
-    * 15 of an available one. */
-  def smoothDoy(climDf: DataFrame, valCol: String, half: Int = 15): DataFrame =
-    smoothDoyCols(climDf, Seq(valCol), half)
-
-  /** [[smoothDoy]] over several value columns in one explode+aggregate
-    * (identical per-column arithmetic — the fused legacy chain smooths
-    * seas and thresh in a single pass). */
-  def smoothDoyCols(climDf: DataFrame, valCols: Seq[String], half: Int = 15): DataFrame =
-    climDf
-      .withColumn("o", explode(sequence(lit(-half), lit(half))))
-      .groupBy(col("user_id"), wrapDoy(col("doy") + col("o")).as("doy"))
-      .agg(davg(col(valCols.head), 6).as(valCols.head),
-           valCols.tail.map(c => davg(col(c), 6).as(c)): _*)
-
-  /** Legacy Feb-29: replace every DOY-60 row with 0.5·(DOY59 + DOY61);
-    * if either neighbour is absent the row is absent (NaN semantics).
-    *
-    * Single-pass form: each row fans out map-side to the slots it
-    * feeds (itself unless DOY 60; DOY 59/61 additionally contribute to
-    * slot 60), then ONE grouped aggregate reassembles the grid. The
-    * naive filter-join-union spelling references the input THREE times,
-    * so Spark evaluates the (expensive) upstream pooling subtree three
-    * times per action — on the reference-scale 3.5 M-point grid that
-    * alone tripled the legacy chain's cost. Values are bit-identical:
-    * the same `0.5·v59 + 0.5·v61` expression, null neighbours still
-    * null the slot, either neighbour absent → slot absent. */
-  def interpFeb29(climDf: DataFrame, valCol: String): DataFrame =
-    interpFeb29Cols(climDf, Seq(valCol))
-
-  /** [[interpFeb29]] over several value columns in one pass (the fused
-    * legacy chain interpolates seas and thresh together). */
-  def interpFeb29Cols(climDf: DataFrame, valCols: Seq[String]): DataFrame = {
-    def payload = valCols.map(c => col(c).as(c))
-    val fan = explode(array(
-      when(col("doy") =!= 60,
-        struct((col("doy").as("doy2") +: lit(0).as("src") +: payload): _*)),
-      when(col("doy") === 59,
-        struct((lit(60).as("doy2") +: lit(59).as("src") +: payload): _*)),
-      when(col("doy") === 61,
-        struct((lit(60).as("doy2") +: lit(61).as("src") +: payload): _*))))
-    val perCol = valCols.flatMap { c =>
-      Seq(max(when(col("c.src") === 0, col(s"c.$c"))).as(s"direct_$c"),
-          max(when(col("c.src") === 59, col(s"c.$c"))).as(s"v59_$c"),
-          max(when(col("c.src") === 61, col(s"c.$c"))).as(s"v61_$c"))
+    /** The output rows of one series' record. */
+    private def series(key: Any, rows: collection.Seq[Row]): Seq[Row] = {
+      load(rows)
+      val seas = if (c.seas) new Array[java.lang.Double](Slots) else null
+      val thresh = if (c.pctile.isDefined) new Array[java.lang.Double](Slots) else null
+      var center = 1
+      while (center <= Slots - 1) {
+        exists(center) = pooled(center, seas, thresh)
+        center += 1
+      }
+      if (c.feb29) {
+        exists(60) = exists(59) && exists(61)
+        for (v <- Seq(seas, thresh) if v != null) v(60) =
+          if (v(59) == null || v(61) == null) null else box(r6d(0.5 * v(59) + 0.5 * v(61)))
+      }
+      val (s, t) = c.smoothHalf match {
+        case Some(half) =>
+          val present = exists.clone()
+          for (d <- 1 until Slots)
+            exists(d) = (-half to half).exists(o => present(wrap(d - o)))
+          (smooth(seas, present, half), smooth(thresh, present, half))
+        case None => (seas, thresh)
+      }
+      (1 until Slots).filter(exists(_)).map { d =>
+        Row.fromSeq(Seq(key, d) ++ Option(s).map(_(d)) ++ Option(t).map(_(d)))
+      }
     }
-    val counts = Seq(
-      sum(when(col("c.src") === 0, 1).otherwise(0)).as("dcnt"),
-      sum(when(col("c.src") === 59, 1).otherwise(0)).as("n59"),
-      sum(when(col("c.src") === 61, 1).otherwise(0)).as("n61"))
-    val aggs = counts ++ perCol
-    climDf.select(col("user_id"), fan.as("c"))
-      .filter(col("c").isNotNull)
-      .groupBy(col("user_id"), col("c.doy2").as("doy"))
-      .agg(aggs.head, aggs.tail: _*)
-      .filter(col("dcnt") > 0 || (col("n59") === 1 && col("n61") === 1))
-      .select(col("user_id") +: col("doy") +: valCols.map { c =>
-        when(col("dcnt") > 0, col(s"direct_$c"))
-          .otherwise(r(lit(0.5) * col(s"v59_$c") + lit(0.5) * col(s"v61_$c"), 6))
-          .as(c)
-      }: _*)
+
+    /** Group the rows by slot (counting sort) and build the per
+      * (variant, slot) partials. */
+    private def load(rows: collection.Seq[Row]): Unit = {
+      val n = rows.length
+      if (x.length < n) { x = new Array[Double](2 * n); fl = new Array[Int](2 * n) }
+      java.util.Arrays.fill(at, 0)
+      rows.foreach { r =>
+        val d = r.getInt(1)
+        require(1 <= d && d <= 366, s"doy $d outside [1, 366]")
+        at(d + 1) += 1
+      }
+      for (d <- 1 until Slots) at(d + 1) += at(d)
+      val next = at.clone()
+      rows.foreach { r =>
+        val i = next(r.getInt(1)); next(r.getInt(1)) += 1
+        val nul = r.isNullAt(2)
+        x(i) = if (nul) 0.0 else r.getDouble(2)
+        fl(i) = (if (nul) 0 else NonNull) |
+          (if (!nul && java.lang.Double.isNaN(x(i))) NaN else 0) |
+          (if (r.getBoolean(3)) NextOk else 0) | (if (r.getBoolean(4)) PrevOk else 0)
+      }
+      java.util.Arrays.fill(rowsN, 0); java.util.Arrays.fill(valsN, 0)
+      java.util.Arrays.fill(meanN, 0); java.util.Arrays.fill(nan, false)
+      sums.clear()
+      for (d <- 1 until Slots; i <- at(d) until at(d + 1); v <- 0 to 2
+           if (fl(i) & VariantFlag(v)) == VariantFlag(v)) {
+        val j = v * Slots + d
+        rowsN(j) += 1
+        if ((fl(i) & NonNull) != 0) {
+          valsN(j) += 1
+          if ((fl(i) & NaN) != 0) nan(j) = true
+          else { meanN(j) += 1; if (c.seas) sums.addDouble(j, x(i)) }
+        }
+      }
+    }
+
+    /** The (variant, slot) partial that feeds `center` at offset k:
+      * the slot k days before it on the circular grid, read through the
+      * variant its unwrapped position needs. */
+    private def source(center: Int, k: Int): Int = {
+      val d = wrap(center - k)
+      val raw = d + k
+      (if (raw > 366) 1 else if (raw < 1) 2 else 0) * Slots + d
+    }
+
+    /** Merge the ±hw partials of one center; false when no eligible row
+      * feeds it. */
+    private def pooled(center: Int, seas: Array[java.lang.Double],
+                       thresh: Array[java.lang.Double]): Boolean = {
+      var rowCount, vals = 0
+      var cnt = 0L
+      var anyNan = false
+      acc.clear()
+      for (k <- -c.hw to c.hw) {
+        val j = source(center, k)
+        rowCount += rowsN(j); vals += valsN(j); cnt += meanN(j)
+        anyNan ||= nan(j)
+        if (seas != null) acc.addFrom(0, sums, j)
+      }
+      if (rowCount > 0) {
+        if (seas != null)
+          seas(center) = if (acc.any(0)) box(r6d(acc.toDouble(0) / cnt)) else null
+        if (thresh != null)
+          thresh(center) =
+            if (anyNan || vals == 0) null else box(r6d(quantile(center, vals, c.pctile.get)))
+      }
+      rowCount > 0
+    }
+
+    /** [[graft.Parity.linQuantile]] over the sorted NaN-free pool of
+      * `center` (`m` values). */
+    private def quantile(center: Int, m: Int, p: Double): Double = {
+      if (pool.length < m) pool = new Array[Double](2 * m)
+      var n = 0
+      var k = -c.hw
+      while (k <= c.hw) {
+        val j = source(center, k)
+        val need = NonNull | VariantFlag(j / Slots)
+        var i = at(j % Slots)
+        while (i < at(j % Slots + 1)) {
+          if ((fl(i) & need) == need) { pool(n) = x(i); n += 1 }
+          i += 1
+        }
+        k += 1
+      }
+      java.util.Arrays.sort(pool, 0, m)
+      val h = (m - 1) * p
+      val l = math.floor(h).toLong.toInt
+      val f = h - l
+      val vl = pool(l)
+      val vu = pool(math.min(l + 1, m - 1))
+      vl + (vu - vl) * f
+    }
+
+    /** The ±half circular running mean of the `present` slots' values
+      * (min_periods=1: a slot with any present neighbour is output; its
+      * value is null when every neighbour value is). */
+    private def smooth(vals: Array[java.lang.Double], present: Array[Boolean],
+                       half: Int): Array[java.lang.Double] =
+      if (vals == null) null
+      else {
+        val in = new Sums(Slots)
+        val n = new Array[Int](Slots)
+        for (d <- 1 until Slots if present(d) && vals(d) != null) {
+          in.addDouble(d, vals(d)); n(d) = 1
+        }
+        val out = new Array[java.lang.Double](Slots)
+        for (d <- 1 until Slots) {
+          acc.clear()
+          var cnt = 0L
+          for (o <- -half to half) {
+            val s = wrap(d - o)
+            acc.addFrom(0, in, s); cnt += n(s)
+          }
+          out(d) = if (acc.any(0)) box(r6d(acc.toDouble(0) / cnt)) else null
+        }
+        out
+      }
+  }
+
+  private object ClimKernel {
+    /** Array length of a 366-slot DOY grid indexed 1..366. */
+    val Slots = 367
+    val NonNull = 1
+    val NaN = 2
+    val NextOk = 4
+    val PrevOk = 8
+    /** The flag a row needs to join each variant's partial. */
+    val VariantFlag: Array[Int] = Array(0, NextOk, PrevOk)
+
+    /** Circular re-centering onto [1, 366], as [[wrapDoy]]. */
+    def wrap(raw: Int): Int = ((raw - 1 + 366) % 366) + 1
+
+    def box(v: Double): java.lang.Double = java.lang.Double.valueOf(v)
+
+    /** Exact DECIMAL(38,10) sums: unscaled longs, widened to BigInteger
+      * once a sum (or a single value, |x| ≳ 9.2e8) leaves the long range. */
+    final class Sums(size: Int) {
+      private val lo = new Array[Long](size)
+      private val hi = new Array[java.math.BigInteger](size)
+      val any = new Array[Boolean](size)
+
+      def clear(): Unit = {
+        java.util.Arrays.fill(lo, 0L)
+        java.util.Arrays.fill(hi.asInstanceOf[Array[AnyRef]], null)
+        java.util.Arrays.fill(any, false)
+      }
+
+      private def addWide(i: Int, u: java.math.BigInteger): Unit =
+        hi(i) = if (hi(i) == null) u else hi(i).add(u)
+
+      private def addLong(i: Int, u: Long): Unit = {
+        val s = lo(i) + u
+        // signed overflow: both operands share a sign the sum lost
+        if (((lo(i) ^ s) & (u ^ s)) < 0) {
+          addWide(i, java.math.BigInteger.valueOf(lo(i)).add(java.math.BigInteger.valueOf(u)))
+          lo(i) = 0L
+        } else lo(i) = s
+      }
+
+      /** Add Spark's DECIMAL(38,10) cast of `v`: NaN and ±Inf cast to
+        * null and add nothing; past 38 digits the cast overflows. */
+      def addDouble(i: Int, v: Double): Unit =
+        if (!v.isNaN && !v.isInfinite) {
+          any(i) = true
+          if (math.abs(v) < 9e8) addLong(i, dec10Unscaled(v))
+          else {
+            val d = java.math.BigDecimal.valueOf(v).setScale(10, java.math.RoundingMode.HALF_UP)
+            if (d.precision > 38)
+              throw new ArithmeticException(s"$v overflows DECIMAL(38,10)")
+            addWide(i, d.unscaledValue)
+          }
+        }
+
+      def addFrom(i: Int, o: Sums, j: Int): Unit =
+        if (o.any(j)) {
+          any(i) = true
+          addLong(i, o.lo(j))
+          if (o.hi(j) != null) addWide(i, o.hi(j))
+        }
+
+      def toDouble(i: Int): Double =
+        if (hi(i) == null) dec10ToDouble(lo(i))
+        else new java.math.BigDecimal(hi(i).add(java.math.BigInteger.valueOf(lo(i))), 10).doubleValue
+    }
   }
 
   // ------------------------------------------------- composed climatologies
 
-  /** best_practice.compute_climatology, smoothPercentile=false. */
+  /** best_practice.compute_climatology, smoothPercentile=false: the
+    * plain per-DOY mean. */
   def climatologyBpRaw(s: SparkSession, dir: String): DataFrame =
-    climatologyBp(daily(s, dir))
+    climThresh(daily(s, dir), Clim(0, seas = true))
 
   /** #11m clim_incremental: the MERGEABLE-PARTIALS form of the
     * best-practice climatology — the property that makes the
@@ -341,101 +417,46 @@ object Mhw {
       df.groupBy(col("user_id"), col("doy"))
         .agg(sum(col("sst").cast(Dec)).as("s"), count(col("sst")).as("n"))
     val half = pmod(dayofmonth(col("d")), lit(2))
-    seasOf(partial(d.filter(half === 0)).unionByName(partial(d.filter(half === 1)))
+    partial(d.filter(half === 0)).unionByName(partial(d.filter(half === 1)))
       .groupBy(col("user_id"), col("doy"))
-      .agg(sum(col("s")).as("s"), sum(col("n")).as("n")))
+      .agg(sum(col("s")).as("s"), sum(col("n")).as("n"))
+      .select(col("user_id"), col("doy"),
+        r(col("s").cast("double") / col("n"), 6).as("seas"))
   }
 
-  /** best_practice.compute_climatology, smoothPercentile=true. Keyed
-    * exchange first: the per-DOY mean then aggregates map-side and the
-    * ×31 smoothing explode stays in-stage (one shuffle total), where
-    * smoothing a (user_id, doy)-partitioned grid would re-shuffle the
-    * exploded 31× rows. The bare [[climatologyBpRaw]] keeps the plain
-    * partial-agg shuffle — optimal when nothing runs downstream. */
+  /** best_practice.compute_climatology, smoothPercentile=true. */
   def climatologyBpSmooth(s: SparkSession, dir: String): DataFrame =
-    smoothDoy(climatologyBp(byKey(daily(s, dir))), "seas")
-
-  /** The merged slot-partials pool of the (dir, hw) daily series,
-    * memoized + persisted per session. SIX query chains derive their
-    * readout from this one table with the same expressions they always
-    * used (bp threshold raw/smooth, legacy climatology/threshold, the
-    * fused legacy pair, the severity chain's threshold) — previously
-    * each ran its own pooledSlots explode + merge, the heaviest stage
-    * of the whole MHW family (guide §1.2 step 1: don't recompute what
-    * a sibling already built). Every consumer reads seas and thresh
-    * through [[seasOf]] / [[threshOf]], the readouts [[pooledMean]] and
-    * [[pooledQuantile]] use, so each is bit-identical to
-    * its previous spelling (the slot-partials ≡ raw-fan spec already
-    * pins the build itself). */
-  private[graft] def pooledMergedCached(s: SparkSession, dir: String,
-                                        hw: Int = 5): DataFrame =
-    graft.Caches.persisted(s, ("mhw_pool_merged", dir, hw)) {
-      poolMerged(daily(s, dir), hw)
-    }
-
-  /** Pooled mean over a merged slot pool: exact decimal sum / count. */
-  private def seasCol: Column = r(col("s").cast("double") / col("n"), 6).as("seas")
-
-  /** Pooled quantile over a merged slot pool; any NaN in the window
-    * nulls the center (strict skipna). */
-  private def threshCol(pctile: Double): Column =
-    when(col("has_nan") === 1, lit(null))
-      .otherwise(r(linQuantile(col("vs"), pctile), 6)).as("thresh")
-
-  /** [[pooledMean]]'s readout over a merged slot pool. */
-  private[graft] def seasOf(pool: DataFrame): DataFrame =
-    pool.select(col("user_id"), col("doy"), seasCol)
-
-  /** [[pooledQuantile]]'s readout over a merged slot pool. */
-  private[graft] def threshOf(pool: DataFrame, pctile: Double): DataFrame =
-    pool.select(col("user_id"), col("doy"), threshCol(pctile))
-
-  /** The fused legacy climatology + threshold over a merged slot pool:
-    * Feb-29 interpolation and circular smoothing, each one pass over
-    * both columns. */
-  private def legacyOf(pool: DataFrame, pctile: Double): DataFrame = {
-    val cols = Seq("seas", "thresh")
-    smoothDoyCols(interpFeb29Cols(
-      pool.select(col("user_id"), col("doy"), seasCol, threshCol(pctile)), cols), cols)
-  }
+    climThresh(daily(s, dir), Clim(0, seas = true, smoothHalf = Some(15)))
 
   /** best_practice.compute_threshold, smoothPercentile=false, q=0.9. */
   def thresholdBpRaw(s: SparkSession, dir: String): DataFrame =
-    threshOf(pooledMergedCached(s, dir), 0.9)
+    climThresh(daily(s, dir), Clim(5, pctile = Some(0.9)))
 
   /** best_practice.compute_threshold, smoothPercentile=true, q=0.9. */
   def thresholdBpSmooth(s: SparkSession, dir: String): DataFrame =
-    smoothDoy(threshOf(pooledMergedCached(s, dir), 0.9), "thresh")
+    climThresh(daily(s, dir), Clim(5, pctile = Some(0.9), smoothHalf = Some(15)))
 
   /** legacy.compute_climatology: pooled mean + Feb-29 interp + smoothing. */
   def climatologyLegacy(s: SparkSession, dir: String): DataFrame =
-    smoothDoy(interpFeb29(seasOf(pooledMergedCached(s, dir)), "seas"), "seas")
+    climThresh(daily(s, dir), Clim(5, seas = true, feb29 = true, smoothHalf = Some(15)))
 
   /** legacy.compute_threshold: pooled quantile + Feb-29 interp + smoothing. */
   def thresholdLegacy(s: SparkSession, dir: String): DataFrame =
-    smoothDoy(interpFeb29(threshOf(pooledMergedCached(s, dir), 0.9), "thresh"), "thresh")
+    climThresh(daily(s, dir),
+      Clim(5, pctile = Some(0.9), feb29 = true, smoothHalf = Some(15)))
 
-  /** Fused legacy climatology + threshold: ONE shared ±hw pooling
-    * explode and a single per-(key,doy) aggregate computes both the
-    * pooled mean (seas) and the pooled quantile (thresh); the Feb-29
-    * interpolation and circular smoothing then run over both columns in
-    * one pass each. Bit-identical to running [[climatologyLegacy]] and
-    * [[thresholdLegacy]] separately (spec-pinned) at half the
-    * scan/shuffle cost — severity consumes BOTH tables, so this is the
-    * chain a user actually runs (the reference notebook's step 1). */
+  /** Legacy climatology + threshold in one kernel pass: the pooled mean
+    * (seas) and the pooled quantile (thresh), Feb-29 interpolation and
+    * circular smoothing of both. Column for column equal to
+    * [[climatologyLegacy]] and [[thresholdLegacy]] (spec-pinned). */
   def legacyClimThresh(dailyDf: DataFrame, hw: Int = 5,
                        pctile: Double = 0.9): DataFrame =
-    // slot-partials build: the one shared slot table feeds both the
-    // merged decimal mean and the merged pooled-value quantile —
-    // bit-identical to the separate raw-fan operators (spec-pinned)
-    legacyOf(poolMerged(dailyDf, hw), pctile)
+    climThresh(dailyDf,
+      Clim(hw, seas = true, pctile = Some(pctile), feb29 = true, smoothHalf = Some(15)))
 
-  /** Query: the fused legacy chain over the events-derived daily series
-    * — reads the session-shared merged slot pool ([[legacyClimThresh]]
-    * with the pool build factored out; identical expressions,
-    * bit-identical output). */
+  /** Query: [[legacyClimThresh]] over the events-derived daily series. */
   def legacyClimThreshQ(s: SparkSession, dir: String): DataFrame =
-    legacyOf(pooledMergedCached(s, dir), 0.9)
+    legacyClimThresh(daily(s, dir))
 
   // --------------------------------------------------------------- detrend
 
@@ -627,12 +648,10 @@ object Mhw {
     graft.Caches.persisted(s, ("mhw_sev", dir, pctile)) {
       val dl = daily(s, dir)
       val seas = graft.Caches.persisted(s, ("mhw_seas", dir)) {
-        smoothDoy(climatologyBp(dl), "seas")
+        climThresh(dl, Clim(0, seas = true, smoothHalf = Some(15)))
       }
       val thresh = graft.Caches.persisted(s, ("mhw_thresh", dir, pctile)) {
-        // same expression as pooledQuantile, read from
-        // the shared merged slot pool instead of a private rebuild
-        smoothDoy(threshOf(pooledMergedCached(s, dir), pctile), "thresh")
+        climThresh(dl, Clim(5, pctile = Some(pctile), smoothHalf = Some(15)))
       }
       severity(dl, seas, thresh)
     }
@@ -711,17 +730,19 @@ object Mhw {
   private def spanDays(s: DataFrame, facts: DataFrame, minDuration: Int,
                        maxGap: Int, maxEvents: Int): DataFrame = {
     val chains = udf((ix: Seq[Int]) => eventChains(ix, minDuration, maxGap))
+    // the span side's key is renamed: both sides derive from one frame,
+    // and `ev_uid` makes the join compare two distinct attributes
     val events = s.filter(exceeds)
-      .groupBy(col("user_id"))
+      .groupBy(col("user_id").as("ev_uid"))
       .agg(chains(array_sort(collect_list(col("idx")))).as("spans"))
-      .select(col("user_id"), posexplode(col("spans")))
-      .select(col("user_id"), (col("pos") + 1).cast("long").as("evt"),
+      .select(col("ev_uid"), posexplode(col("spans")))
+      .select(col("ev_uid"), (col("pos") + 1).cast("long").as("evt"),
         col("col._1").as("index_start"), col("col._2").as("index_end"))
       .filter(col("evt") <= maxEvents)
     withMx(facts.join(graft.Hints.keyDim(events),
-        facts("user_id") === events("user_id") &&
+        col("user_id") === col("ev_uid") &&
         col("idx").between(col("index_start"), col("index_end")))
-      .drop(events("user_id")))
+      .drop("ev_uid"))
   }
 
   /** Each event day's per-event T_anom max `mx` (for the first-argmax
@@ -1163,8 +1184,8 @@ object Mhw {
     * daily frame. */
   def coldSeverityChainDf(dailyDf: DataFrame, pctile: Double): DataFrame = {
     val dl = dailyDf.withColumn("sst", -col("sst"))
-    val seas = smoothDoy(climatologyBp(dl), "seas")
-    val thresh = smoothDoy(pooledQuantile(dl, 5, pctile), "thresh")
+    val seas = climThresh(dl, Clim(0, seas = true, smoothHalf = Some(15)))
+    val thresh = climThresh(dl, Clim(5, pctile = Some(pctile), smoothHalf = Some(15)))
     severity(dl, seas, thresh)
   }
 

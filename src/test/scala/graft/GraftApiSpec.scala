@@ -29,7 +29,7 @@ class GraftApiSpec extends AnyFunSuite with TempDirs {
     import java.time.LocalDate
     val rows = days(LocalDate.of(2022, 12, 20), LocalDate.of(2023, 1, 10))
       .map(d => d.toString -> (if (d == LocalDate.of(2022, 12, 31)) 100.0 else 10.0))
-    val pooled = Mhw.pooledMean(series(rows), 5)
+    val pooled = Mhw.climThresh(series(rows), Mhw.Clim(5, seas = true))
       .collect().map(r => r.getInt(1) -> r.getDouble(2)).toMap
     // centers 1 and 366 both pool Dec 27-31 + Jan 1-6 → (10·10+100)/11
     assert(pooled(1) == 18.181818)
@@ -44,15 +44,36 @@ class GraftApiSpec extends AnyFunSuite with TempDirs {
     val rows = days(LocalDate.of(2024, 2, 20), LocalDate.of(2024, 3, 10))
       .map(d => d.toString -> (if (d == LocalDate.of(2024, 2, 23)) 100.0 else 10.0))
     val daily = series(rows)
-    val raw = Mhw.pooledMean(daily, 5)
+    val raw = Mhw.climThresh(daily, Mhw.Clim(5, seas = true))
       .collect().map(r => r.getInt(1) -> r.getDouble(2)).toMap
     assert(raw(59) == 18.181818) // window 54..64 catches the spike
     assert(raw(60) == 10.0)      // window 55..65 does not
     assert(raw(61) == 10.0)
-    val legacy = Mhw.interpFeb29(Mhw.pooledMean(daily, 5), "seas")
+    val legacy = Graft.computeClimatologyLegacy(daily, smoothPercentile = false)
       .collect().map(r => r.getInt(1) -> r.getDouble(2)).toMap
     assert(legacy(60) == 0.5 * 18.181818 + 0.5 * 10.0) // 14.090909
     assert(legacy(59) == raw(59))
+  }
+
+  test("a measured NaN stays NaN in the daily series: strict skipna nulls the " +
+       "threshold windows around it, the pooled mean skips it") {
+    import java.time.LocalDate
+    val nanDay = LocalDate.of(2000, 1, 11)
+    val rows = (0 until 800).map(LocalDate.of(2000, 1, 1).plusDays(_)).map { d =>
+      d.toString -> (if (d == nanDay) Double.NaN else 10.0 + d.getDayOfMonth % 7)
+    }
+    val daily = series(rows)
+    val sst = daily.filter($"d" === java.sql.Date.valueOf(nanDay)).select($"sst").head()
+    assert(!sst.isNullAt(0) && sst.getDouble(0).isNaN, s"sst of the NaN day: $sst")
+    val thresh = Graft.computeThresholdLegacy(daily, smoothPercentile = false)
+      .collect().map(r => r.getInt(1) -> Option(r.get(2))).toMap
+    // DOY 11 of 2000 sits in the ±5 pool of centers 6..16 only
+    (6 to 16).foreach(d => assert(thresh(d).isEmpty, s"doy $d threshold survived the NaN"))
+    assert(thresh(5).nonEmpty && thresh(17).nonEmpty)
+    // Jan 11 of 2001 and 2002 hold 14.0; the NaN counts in neither sum nor count
+    val seas = Graft.computeClimatology(daily, smoothPercentile = false)
+      .collect().map(r => r.getInt(1) -> r.getDouble(2)).toMap
+    assert(seas(11) == 14.0)
   }
 
   test("baseline period restricts the fit but detrend covers the full record") {
@@ -219,8 +240,8 @@ class GraftApiSpec extends AnyFunSuite with TempDirs {
   test("metrics-from-clim derives severity internally and equals the explicit chain") {
     val sf = "/root/testdata/sf0.001"
     val dl = Mhw.daily(spark, sf)
-    val seas = Mhw.smoothDoy(Mhw.climatologyBp(dl), "seas")
-    val thresh = Mhw.smoothDoy(Mhw.pooledQuantile(dl, 5, 0.6), "thresh")
+    val seas = Graft.computeClimatology(dl)
+    val thresh = Graft.computeThreshold(dl, pctile = 0.6)
     val explicitChain = Graft.calculateMhwMetrics(
         Graft.calculateSeverity(dl, seas, thresh), minDuration = 3, maxGap = 2)
       .collect().map(_.toSeq).toSet

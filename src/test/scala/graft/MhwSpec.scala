@@ -161,7 +161,7 @@ class MhwSpec extends AnyFunSuite {
     val dl = rows.toDF("user_id", "d", "sst")
       .withColumn("yr", year($"d"))
       .withColumn("doy", DoyFunctions.climDoy($"d"))
-    val q = Mhw.pooledQuantile(dl, 5, 0.9)
+    val q = Mhw.climThresh(dl, Mhw.Clim(5, pctile = Some(0.9)))
     val nanDoy = dl.filter(isnan($"sst")).select($"doy").as[Int].head()
     val nulled = q.filter($"thresh".isNull).select($"doy").as[Int].collect().toSet
     // every center within ±5 of the NaN observation must be null
@@ -170,10 +170,11 @@ class MhwSpec extends AnyFunSuite {
   }
 
   test("interpFeb29: DOY 60 replaced by neighbours' mean; absent if a neighbour is absent") {
-    val clim = Seq((1L, 59, 10.0), (1L, 60, 99.0), (1L, 61, 20.0),
-                   (2L, 59, 10.0), (2L, 60, 99.0))
-      .toDF("user_id", "doy", "seas")
-    val out = Mhw.interpFeb29(clim, "seas")
+    // hw = 0: the pooled mean of a slot is its one observation
+    val dl = Seq((1L, 59, 10.0), (1L, 60, 99.0), (1L, 61, 20.0),
+                 (2L, 59, 10.0), (2L, 60, 99.0))
+      .toDF("user_id", "doy", "sst").withColumn("yr", lit(2024))
+    val out = Mhw.climThresh(dl, Mhw.Clim(0, seas = true, feb29 = true))
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getDouble(2)).toMap
     assert(out((1L, 60)) == 15.0)
     assert(!out.contains((2L, 60))) // doy 61 missing → row absent
@@ -192,6 +193,26 @@ class MhwSpec extends AnyFunSuite {
     assert(fused.keySet == seas.keySet && fused.keySet == thresh.keySet)
     fused.foreach { case (k, (s, t)) =>
       assert(s == seas(k) && t == thresh(k), s"mismatch at $k")
+    }
+  }
+
+  test("event span join compares two distinct key attributes (no self-join rewrite)") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val sev = Mhw.severityChain(spark, "/root/testdata/sf0.001", 0.6)
+    for (df <- Seq(Mhw.detectEvents(sev, 3, 2), Mhw.eventRates(sev, 3, 2))) {
+      val spanJoins = df.queryExecution.analyzed.collect {
+        case j: Join if j.condition.exists(_.references.exists(_.name == "index_start")) => j
+      }
+      assert(spanJoins.size == 1, df.queryExecution.analyzed)
+      val keyEqs = spanJoins.head.condition.toSeq.flatMap(_.collect {
+        case EqualTo(a: AttributeReference, b: AttributeReference) => (a, b)
+      })
+      assert(keyEqs.size == 1, spanJoins.head.condition)
+      keyEqs.foreach { case (a, b) =>
+        assert(a.exprId != b.exprId && a.name != b.name,
+          s"span join key $a = $b resolves only through the self-join rewrite")
+      }
     }
   }
 
@@ -239,12 +260,16 @@ class MhwSpec extends AnyFunSuite {
     def m(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> Option(r.get(2))).toMap
     for (dl <- Seq(gappedYears, Mhw.daily(spark, "/root/testdata/sf0.001"))) {
-      val q = m(Mhw.pooledQuantile(dl, 5, 0.9))
-      val qRef = m(Mhw.pooledQuantileRawFan(dl, 5, 0.9))
-      assert(q == qRef, "pooled quantile diverged from the raw-fan reference")
-      val s = m(Mhw.pooledMean(dl, 5))
-      val sRef = m(Mhw.pooledMeanRawFan(dl, 5))
-      assert(s == sRef, "pooled mean diverged from the raw-fan reference")
+      val qRef = m(MhwReference.pooledQuantileRawFan(dl, 5, 0.9))
+      assert(m(MhwReference.pooledQuantile(dl, 5, 0.9)) == qRef,
+        "slot-partials quantile diverged from the raw-fan reference")
+      assert(m(Mhw.climThresh(dl, Mhw.Clim(5, pctile = Some(0.9)))) == qRef,
+        "kernel quantile diverged from the raw-fan reference")
+      val sRef = m(MhwReference.pooledMeanRawFan(dl, 5))
+      assert(m(MhwReference.pooledMean(dl, 5)) == sRef,
+        "slot-partials mean diverged from the raw-fan reference")
+      assert(m(Mhw.climThresh(dl, Mhw.Clim(5, seas = true))) == sRef,
+        "kernel mean diverged from the raw-fan reference")
     }
   }
 
@@ -259,14 +284,16 @@ class MhwSpec extends AnyFunSuite {
         .otherwise($"sst"))
     def m(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> Option(r.get(2))).toMap
-    val q = m(Mhw.pooledQuantile(dl, 2, 0.9))
-    val qRef = m(Mhw.pooledQuantileRawFan(dl, 2, 0.9))
+    val q = m(Mhw.climThresh(dl, Mhw.Clim(2, pctile = Some(0.9))))
+    val qRef = m(MhwReference.pooledQuantileRawFan(dl, 2, 0.9))
     assert(q == qRef, "pooled quantile diverged on null-sst input")
+    assert(m(MhwReference.pooledQuantile(dl, 2, 0.9)) == qRef)
     assert(q.contains((1L, 2)) && q((1L, 2)).isEmpty,
       "all-null center was dropped or non-null")
-    val s = m(Mhw.pooledMean(dl, 2))
-    val sRef = m(Mhw.pooledMeanRawFan(dl, 2))
+    val s = m(Mhw.climThresh(dl, Mhw.Clim(2, seas = true)))
+    val sRef = m(MhwReference.pooledMeanRawFan(dl, 2))
     assert(s == sRef, "pooled mean diverged on null-sst input")
+    assert(m(MhwReference.pooledMean(dl, 2)) == sRef)
   }
 
   test("slot-partials fused chain ≡ raw-fan separate operators on gapped years") {
@@ -274,31 +301,35 @@ class MhwSpec extends AnyFunSuite {
     val fused = Mhw.legacyClimThresh(dl, 5, 0.9).collect()
       .map(r => (r.getLong(0), r.getInt(1)) ->
         ((Option(r.get(2)), Option(r.get(3))))).toMap
-    val seas = Mhw.smoothDoy(Mhw.interpFeb29(
-      Mhw.pooledMeanRawFan(dl, 5), "seas"), "seas").collect()
+    val seas = MhwReference.smoothDoy(MhwReference.interpFeb29(
+      MhwReference.pooledMeanRawFan(dl, 5), "seas"), "seas").collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> Option(r.get(2))).toMap
-    val thresh = Mhw.smoothDoy(Mhw.interpFeb29(
-      Mhw.pooledQuantileRawFan(dl, 5, 0.9), "thresh"), "thresh").collect()
+    val thresh = MhwReference.smoothDoy(MhwReference.interpFeb29(
+      MhwReference.pooledQuantileRawFan(dl, 5, 0.9), "thresh"), "thresh").collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> Option(r.get(2))).toMap
     assert(fused.keySet == seas.keySet && fused.keySet == thresh.keySet)
     fused.foreach { case (k, (se, th)) =>
       assert(se == seas(k), s"$k seas"); assert(th == thresh(k), s"$k thresh")
     }
+    // the slot-partials reference chain agrees too
+    val slots = MhwReference.legacyClimThresh(dl, 5, 0.9).collect()
+      .map(r => (r.getLong(0), r.getInt(1)) ->
+        ((Option(r.get(2)), Option(r.get(3))))).toMap
+    assert(slots == fused)
   }
 
   test("slot-partials plan: every explode sits above an aggregate — the raw " +
        "×11 observation fan is gone from the exact path") {
     import org.apache.spark.sql.execution.GenerateExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    // The assertion pins the BUILDER shape of the pooling core. A
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // The assertion pins the BUILDER shape of the pooling kernel. A
     // structurally fresh daily input (the no-op filter survives
-    // canonicalization) keeps Spark's CacheManager from substituting
-    // the session-memoized merged pool (round-13's pooledMergedCached)
-    // into the plan — an InMemoryTableScan stub would hide the slot
-    // aggregate this walker looks for below the smoothing explode.
+    // canonicalization) keeps Spark's CacheManager from substituting a
+    // persisted copy of the same plan.
     val dl = Mhw.daily(spark, "/root/testdata/sf0.001")
       .where(col("user_id") =!= Long.MinValue)
-    Seq(Mhw.pooledQuantile(dl, 5, 0.9),
+    Seq(Mhw.climThresh(dl, Mhw.Clim(5, pctile = Some(0.9))),
         Mhw.legacyClimThresh(dl, 5, 0.9)).foreach { df =>
       val sp = df.queryExecution.sparkPlan
       val naked = sp.collect {
@@ -307,8 +338,11 @@ class MhwSpec extends AnyFunSuite {
       }
       assert(naked.isEmpty,
         s"${naked.size} explode(s) fan raw observation rows:\n${naked.mkString("\n")}")
+      // the kernel's one exchange: the daily rows, hashed on the key
+      val exchanges = sp.collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 1, s"expected one keyed exchange:\n$sp")
       // and the raw-fan reference plan proves the assertion has teeth
-      val ref = Mhw.pooledQuantileRawFan(dl, 5, 0.9).queryExecution.sparkPlan
+      val ref = MhwReference.pooledQuantileRawFan(dl, 5, 0.9).queryExecution.sparkPlan
       val refNaked = ref.collect {
         case g: GenerateExec
           if g.collectFirst { case a: BaseAggregateExec => a }.isEmpty => g

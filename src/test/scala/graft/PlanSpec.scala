@@ -155,8 +155,8 @@ class PlanSpec extends AnyFunSuite {
       // would otherwise substitute the earlier severityChain(0.9) cache
       // entry, whose materialization plan has the hints baked in
       val sev = Mhw.severity(dl,
-        Mhw.smoothDoy(Mhw.climatologyBp(dl), "seas"),
-        Mhw.smoothDoy(Mhw.pooledQuantile(dl, 5, 0.8), "thresh"))
+        Mhw.climThresh(dl, Mhw.Clim(0, seas = true, smoothHalf = Some(15))),
+        Mhw.climThresh(dl, Mhw.Clim(5, pctile = Some(0.8), smoothHalf = Some(15))))
       val pSev = plan(sev)
       assert(!pSev.contains("BroadcastNestedLoopJoin"), pSev)
       assert(!pSev.contains("CartesianProduct"), pSev)

@@ -132,17 +132,16 @@ class PostureSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.GenerateExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.functions.{col, lit}
-    // Pin the posture property on the pooling CORE's builder plan: a
+    // Pin the posture property on the pooling kernel's builder plan: a
     // structurally fresh daily input (no-op filter) keeps the
-    // CacheManager from substituting the session-memoized merged pool
-    // (round 13's pooledMergedCached) — the InMemoryTableScan stub
-    // would hide both the aggregate and any approx_percentile from
-    // this walker. The memoized query entries (thresholdBpSmooth,
-    // legacyClimThreshQ) are pinned bit-identical to these cores by
-    // MhwSpec/R13OptimizationSpec, so the property transfers.
+    // CacheManager from substituting a persisted copy of the same plan
+    // (the severity chain's memoized threshold), whose
+    // InMemoryTableScan stub would hide any approx_percentile from
+    // this walker.
     val dl = Mhw.daily(spark, sf).where(col("user_id") =!= lit(Long.MinValue))
     withConf(Hints.ApproxQuantiles, "true") {
-      for (df <- Seq(Mhw.smoothDoy(Mhw.pooledQuantile(dl, 5, 0.9), "thresh"),
+      for (df <- Seq(Mhw.climThresh(dl,
+                       Mhw.Clim(5, pctile = Some(0.9), smoothHalf = Some(15))),
                      Mhw.legacyClimThresh(dl))) {
         val p = plan(df)
         assert(!p.contains("approx_percentile"),

@@ -12,8 +12,8 @@ import graft.operators.{Mhw, Round6Ops10, Round9Ops21, Graph}
   *    (markov stationary, pagerank, k-core) is value-identical to the
   *    lazy spelling (the audit-mode path IS the lazy spelling, so the
   *    equivalence is checked against it directly).
-  *  - The legacy/bp chains rewired onto the shared merged slot pool
-  *    still equal their independent raw-fan references.
+  *  - The legacy/bp registry chains (the per-series climatology
+  *    kernel) equal their independent raw-fan DataFrame references.
   *  - PlanAudit mode runs ZERO jobs on the eager-loop queries (explain
   *    must never execute — the round-5 audit contract).
   */
@@ -51,15 +51,15 @@ class R13OptimizationSpec extends AnyFunSuite {
     def m(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> Option(r.get(2))).toMap
     assert(m(Mhw.climatologyLegacy(spark, sf)) ==
-           m(Mhw.smoothDoy(Mhw.interpFeb29(
-             Mhw.pooledMeanRawFan(dl, 5), "seas"), "seas")),
+           m(MhwReference.smoothDoy(MhwReference.interpFeb29(
+             MhwReference.pooledMeanRawFan(dl, 5), "seas"), "seas")),
       "climatology_legacy diverged from the raw-fan reference")
     assert(m(Mhw.thresholdLegacy(spark, sf)) ==
-           m(Mhw.smoothDoy(Mhw.interpFeb29(
-             Mhw.pooledQuantileRawFan(dl, 5, 0.9), "thresh"), "thresh")),
+           m(MhwReference.smoothDoy(MhwReference.interpFeb29(
+             MhwReference.pooledQuantileRawFan(dl, 5, 0.9), "thresh"), "thresh")),
       "threshold_legacy diverged from the raw-fan reference")
     assert(m(Mhw.thresholdBpRaw(spark, sf)) ==
-           m(Mhw.pooledQuantileRawFan(dl, 5, 0.9)),
+           m(MhwReference.pooledQuantileRawFan(dl, 5, 0.9)),
       "threshold_bp diverged from the raw-fan reference")
     // the fused pair agrees column-by-column with the single-column chains
     val fused = Mhw.legacyClimThreshQ(spark, sf).collect()

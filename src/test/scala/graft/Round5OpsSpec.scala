@@ -85,8 +85,8 @@ class Round5OpsSpec extends AnyFunSuite {
     // warm pipeline on the hand-negated series (sst negated BEFORE the
     // frame enters the chain — same rounding order, independent wiring)
     val negDl = dailyOf(rows.map { case (u, d, v) => (u, d, -v) })
-    val seas = Mhw.smoothDoy(Mhw.climatologyBp(negDl), "seas")
-    val thr = Mhw.smoothDoy(Mhw.pooledQuantile(negDl, 5, 0.9), "thresh")
+    val seas = MhwReference.smoothDoy(MhwReference.climatologyBp(negDl), "seas")
+    val thr = MhwReference.smoothDoy(MhwReference.pooledQuantile(negDl, 5, 0.9), "thresh")
     val warm = Mhw.detectEvents(Mhw.severity(negDl, seas, thr), 3, 2)
     val c = cold.orderBy("user_id", "evt").collect()
     val w = warm.orderBy("user_id", "evt").collect()

@@ -37,6 +37,18 @@ class StagingSpec extends AnyFunSuite with TempDirs {
     childLifecycle(new File(tempDir("graft_lifecycle")))
   }
 
+  test("the default scratch root is tmpfs only when its usable space covers the max heap") {
+    val gib = 1L << 30
+    assert(GraftSession.defaultScratchRoot(shmWritable = true, 16 * gib, 3 * gib)
+      .contains("/dev/shm/graft-scratch"))
+    assert(GraftSession.defaultScratchRoot(shmWritable = true, 3 * gib, 3 * gib).isDefined)
+    // a tmpfs smaller than the heap, or one that cannot be written:
+    // the JVM's default temp dir
+    assert(GraftSession.defaultScratchRoot(shmWritable = true, 3 * gib - 1, 3 * gib).isEmpty)
+    assert(GraftSession.defaultScratchRoot(shmWritable = true, 64L << 20, 48 * gib).isEmpty)
+    assert(GraftSession.defaultScratchRoot(shmWritable = false, 16 * gib, 3 * gib).isEmpty)
+  }
+
   private def childLifecycle(root: File): Unit = {
     val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
     // the --add-opens flags, in either the "--add-opens=x" or "--add-opens x" form
