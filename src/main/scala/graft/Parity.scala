@@ -36,10 +36,12 @@ object Parity {
   /** Portable round-half-up: floor(x·10^d + 0.5)/10^d. Spark's `round`
     * (decimal-string HALF_UP) and DuckDB's (binary) disagree when x sits
     * exactly on a .5 boundary — e.g. the mean of two 6dp values — so we
-    * round with plain IEEE ops that are bit-identical in both engines. */
+    * round with plain IEEE ops that are bit-identical in both engines.
+    * NaN stays NaN, as in DuckDB: Spark's `floor` of a double is a LONG,
+    * which would read NaN as 0. */
   def r(c: Column, d: Int): Column = {
     val m = math.pow(10, d)
-    floor(c * m + 0.5) / m
+    when(isnan(c), lit(Double.NaN)).otherwise(floor(c * m + 0.5) / m)
   }
 
   /** Exact sum via decimal accumulation, returned as double. */
@@ -48,16 +50,29 @@ object Parity {
   /** Exact sum, rounded to `d` places. */
   def dsum(c: Column, d: Int): Column = r(dsum(c), d)
 
-  /** Order-independent mean: exact decimal sum / count, then round. */
+  /** Order-independent mean: exact decimal sum / count, then round. A
+    * NaN is skipped in the count as the decimal cast skips it in the sum
+    * (nanmean). */
   def davg(c: Column, d: Int): Column =
-    r(dsum(c) / count(c), d)
+    r(dsum(c) / count(nanAsNull(c)), d)
+
+  /** The daily mean of a series' observations: [[davg]], except that a
+    * day holding a NaN observation is NaN (the decimal cast would read
+    * the NaN as null and drop it), so the threshold's strict skipna sees
+    * it. The one daily-mean rule of the MHW chain. */
+  def dailyMean(c: Column, d: Int): Column =
+    when(bool_or(isnan(c)), lit(Double.NaN)).otherwise(davg(c, d))
+
+  /** `c` with NaN read as null (null stays null). */
+  def nanAsNull(c: Column): Column = when(!isnan(c), c)
 
   /** Driver-side replica of [[r]] at d = 6 — THE half-up-6dp rounding
     * every JVM-side finalize (streaming folds, MMR greedy, the MHW
     * climatology kernel) must share with the distributed expressions.
-    * Spark's `floor` of a double is a LONG, so NaN rounds to 0.0 and
-    * ±Inf to ±Long.MaxValue/1e6, exactly as [[r]] does. */
-  def r6d(x: Double): Double = math.floor(x * 1e6 + 0.5).toLong / 1e6
+    * NaN stays NaN and ±Inf rounds to ±Long.MaxValue/1e6, exactly as
+    * [[r]] does. */
+  def r6d(x: Double): Double =
+    if (x.isNaN) x else math.floor(x * 1e6 + 0.5).toLong / 1e6
 
   /** Spark's double→DECIMAL(38,10) cast (shortest decimal repr, then
     * HALF_UP to scale 10) as an unscaled long — the streaming-state

@@ -106,7 +106,8 @@ object Graft {
   }
 
   /** Normalize a user DataFrame to the canonical daily-series layout
-    * (one row per key per day; multiple observations per day averaged),
+    * (one row per key per day; multiple observations per day averaged
+    * by [[graft.Parity.dailyMean]], so a day holding a NaN is NaN),
     * optionally restricted to an inclusive year baseline or — matching
     * the reference's date-granular `baseline_period=slice(...)`
     * (best_practice/climatology.py:95-96, :150-151) — an inclusive
@@ -127,11 +128,8 @@ object Graft {
         byYears.filter(col("d").between(to_date(lit(from)), to_date(lit(to))))
       case None => byYears
     }
-    // a day holding a NaN observation stays NaN (the decimal mean would
-    // turn it into null), so strict skipna sees it downstream
     filtered.groupBy(col("user_id"), col("d"))
-      .agg(when(bool_or(isnan(col("v"))), lit(Double.NaN))
-        .otherwise(graft.Parity.davg(col("v"), 6)).as("sst"))
+      .agg(graft.Parity.dailyMean(col("v"), 6).as("sst"))
       .withColumn("yr", year(col("d")))
       .withColumn("doy", climDoy(col("d")))
   }

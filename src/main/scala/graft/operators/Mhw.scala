@@ -48,15 +48,17 @@ object Mhw {
 
   /** Daily series: one observation per (series key, calendar day).
     * sst = mean event value that day, rounded (6dp) for cross-engine
-    * parity. Adds year + leap-normalized DOY. Memoized + persisted per
-    * (session, dir) in the bounded [[graft.Caches]] registry: every
+    * parity, NaN when the day holds a NaN ([[graft.Parity.dailyMean]],
+    * the rule `Graft.dailySeries` shares). Adds year + leap-normalized
+    * DOY. Memoized + persisted per (session, dir) in the bounded
+    * [[graft.Caches]] registry: every
     * operator in the MHW chain starts here, and the table is tiny
     * relative to the events it aggregates. */
   def daily(s: SparkSession, dir: String): DataFrame =
     graft.Caches.persisted(s, ("mhw_daily", dir)) {
       Tables.events(s, dir)
         .groupBy(col("user_id"), to_date(col("ts")).as("d"))
-        .agg(davg(col("value"), 6).as("sst"))
+        .agg(dailyMean(col("value"), 6).as("sst"))
         .withColumn("yr", year(col("d")))
         .withColumn("doy", climDoy(col("d")))
     }
@@ -140,8 +142,13 @@ object Mhw {
       .collect { case (name, true) => StructField(name, DoubleType) }
     val out = StructType(dailyDf.schema("user_id") +:
       StructField("doy", IntegerType, nullable = false) +: outCols)
-    rows.mapPartitions(it => new ClimKernel(c).run(it))(Encoders.row(out))
+    rows.mapPartitions(climKernel(c))(Encoders.row(out))
   }
+
+  /** [[climThresh]]'s per-partition step over rows as its exchange lays
+    * them out: (user_id, doy, sst, next_ok, prev_ok, h), sorted by h. */
+  private[graft] def climKernel(c: Clim)(rows: Iterator[Row]): Iterator[Row] =
+    new ClimKernel(c).run(rows)
 
   /** [[climThresh]]'s arithmetic over one series at a time, on 366-slot
     * arrays. Rows arrive as (user_id, doy, sst, next_ok, prev_ok, h),
@@ -490,13 +497,19 @@ object Mhw {
     detrendDailyFit(dl,
       _.filter(col("d").between(to_date(lit(fromDate)), to_date(lit(toDate)))))
 
-  /** Core: OLS per key over `fitSlice(t)`, trend subtracted everywhere. */
+  /** The days an OLS fit counts: those holding a number (a null or NaN
+    * sst would still count in `n` while the decimal sums skip it). */
+  private def valued(t: DataFrame): DataFrame =
+    t.filter(nanAsNull(col("sst")).isNotNull)
+
+  /** Core: OLS per key over `fitSlice(t)`, trend subtracted everywhere
+    * (a NaN day stays NaN). */
   private def detrendDailyFit(dl: DataFrame,
                               fitSlice: DataFrame => DataFrame): DataFrame = {
     val origin = dl.agg(min(col("d")).as("d0"))
     val t = dl.crossJoin(broadcast(origin))
       .withColumn("t", datediff(col("d"), col("d0")))
-    val tFit = fitSlice(t)
+    val tFit = valued(fitSlice(t))
     val fit = tFit.groupBy(col("user_id")).agg(
       count(lit(1)).cast("double").as("n"),
       sum(col("t").cast("long")).cast("double").as("st"),
@@ -539,7 +552,7 @@ object Mhw {
     // integer powers stay integral per row (long t⁴ is exact to ~150
     // years of daily data) and accumulate in exact decimals
     val tl = col("t").cast("long")
-    val fit = t.groupBy(col("user_id")).agg(
+    val fit = valued(t).groupBy(col("user_id")).agg(
       count(lit(1)).cast("double").as("n"),
       sum(tl.cast(DecI)).cast("double").as("s1"),
       sum((tl * tl).cast(DecI)).cast("double").as("s2"),
@@ -596,7 +609,7 @@ object Mhw {
     val t = dl.crossJoin(broadcast(origin))
       .withColumn("t", datediff(col("d"), col("d0")))
       .withColumn("cut", floor(datediff(col("d1"), col("d0")) / 2))
-    val fit = t.filter(col("t") <= col("cut"))
+    val fit = valued(t.filter(col("t") <= col("cut")))
       .groupBy(col("user_id")).agg(
         count(lit(1)).cast("double").as("n"),
         sum(col("t").cast("long")).cast("double").as("st"),
@@ -618,14 +631,17 @@ object Mhw {
   // -------------------------------------------------------------- severity
 
   /** common.calculate_severity: T_anom = sst − seas(doy); severity =
-    * T_anom / (thresh(doy) − seas(doy) + 1e-9). Clim tables are
+    * T_anom / (thresh(doy) − seas(doy) + 1e-9). A day whose sst is NaN
+    * carries null sst, T_anom and severity, as an absent day would: it
+    * never exceeds (Spark orders NaN above every number) and the event
+    * metrics skip it. Clim tables are
     * key-proportional dims (366 rows per key): broadcast by default so
     * the fact side never shuffles, gated by [[graft.Hints.keyDim]] for
     * deployments whose key cardinality would OOM a broadcast — both
     * gated joins share the (user_id, doy) key, so the degraded plan
     * shuffles the fact side once. */
   def severity(dailyDf: DataFrame, seas: DataFrame, thresh: DataFrame): DataFrame =
-    dailyDf
+    dailyDf.withColumn("sst", nanAsNull(col("sst")))
       .join(graft.Hints.keyDim(seas), Seq("user_id", "doy"))
       .join(graft.Hints.keyDim(thresh), Seq("user_id", "doy"))
       .select(col("user_id"), col("d"),

@@ -252,12 +252,68 @@ class GraftApiSpec extends AnyFunSuite with TempDirs {
   }
 
   test("generic API over the events table equals the canonical chain") {
-    val ev = Tables.events(spark, "/root/testdata/sf0.001")
-    val viaApi = Graft.dailySeries(ev,
+    val sf = "/root/testdata/sf0.001"
+    // a copy of the events table whose first observation is NaN
+    val raw = spark.read.parquet(s"$sf/events.parquet")
+    val first = raw.orderBy("user_id", "ts").select("user_id", "ts").head()
+    val withNan = tempDir("graft_nan_events")
+    raw.withColumn("value",
+        when($"user_id" === first.getLong(0) && $"ts" === lit(first.get(1)), lit(Double.NaN))
+          .otherwise($"value"))
+      .write.parquet(s"$withNan/events.parquet")
+    // rows as strings: NaN equals NaN
+    def cells(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(String.valueOf)).toSet
+    for (dir <- Seq(sf, withNan)) {
+      val daily = Graft.dailySeries(Tables.events(spark, dir),
         SeriesConfig(keyCol = "user_id", timeCol = "ts", valueCol = "value"))
-      .collect().map(_.toSeq).toSet
-    val canonical = Mhw.daily(spark, "/root/testdata/sf0.001")
-      .collect().map(_.toSeq).toSet
-    assert(viaApi == canonical)
+      assert(cells(daily) == cells(Mhw.daily(spark, dir)), dir)
+      val unsmoothed = Graft.computeThreshold(daily, smoothPercentile = false)
+      assert(cells(unsmoothed) == cells(Mhw.thresholdBpRaw(spark, dir)), dir)
+      assert(cells(Graft.calculateSeverity(daily, Graft.computeClimatology(daily),
+          Graft.computeThreshold(daily))) == cells(Mhw.severityChain(spark, dir)), dir)
+      // strict skipna fires on both sides exactly when the NaN is there
+      assert(unsmoothed.filter($"thresh".isNull).isEmpty == (dir == sf), dir)
+    }
+  }
+
+  test("a NaN day has no anomaly: severity and events equal the series with " +
+       "that day left out, and detrend keeps the day NaN") {
+    import java.time.LocalDate
+    val nanDay = LocalDate.of(2005, 7, 16)
+    // twelve years of a seasonal cycle; July 10-22 2005 is a hot spell
+    // that the NaN day splits into two runs of six, which gap-join into
+    // one event spanning the NaN day
+    val rows = days(LocalDate.of(2000, 1, 1), LocalDate.of(2011, 12, 31)).map { d =>
+      val hot = d.getYear == 2005 && d.getMonthValue == 7 &&
+        d.getDayOfMonth >= 10 && d.getDayOfMonth <= 22
+      d.toString -> (if (d == nanDay) Double.NaN else if (hot) 25.0
+                     else 15.0 + 5 * math.sin(d.getDayOfYear / 58.1) + d.getDayOfMonth % 7 * 0.5)
+    }
+    val kept = rows.filterNot(_._1 == nanDay.toString)
+    val (full, leftOut) = (series(rows), series(kept))
+    // one pair of tables for both series: only the daily frame differs
+    val seas = Graft.computeClimatology(full)
+    val thresh = Graft.computeThreshold(full)
+    val nanDate = java.sql.Date.valueOf(nanDay)
+    val sev = Graft.calculateSeverity(full, seas, thresh)
+    val day = sev.filter($"d" === nanDate).head()
+    assert(!day.isNullAt(day.fieldIndex("thresh")), "the NaN day faces a threshold")
+    Seq("sst", "t_anom", "severity").foreach(c => assert(day.isNullAt(day.fieldIndex(c)), c))
+    def cells(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(String.valueOf)).toSet
+    val events = Graft.calculateMhwMetrics(sev)
+    assert(cells(events) ==
+      cells(Graft.calculateMhwMetrics(Graft.calculateSeverity(leftOut, seas, thresh))))
+    val nanIdx = nanDay.toEpochDay - LocalDate.of(2000, 1, 1).toEpochDay
+    assert(events.filter($"index_start" < nanIdx && $"index_end" > nanIdx).count() == 1,
+      "an event spans the NaN day")
+    def detrended(rs: Seq[(String, Double)]) =
+      Graft.detrend(rs.toDF("t", "v").withColumn("k", lit(1L)),
+          SeriesConfig(keyCol = "k", timeCol = "t", valueCol = "v"))
+        .collect().map(r => r.getDate(1).toString -> r.getDouble(2)).toMap
+    val dt = detrended(rows)
+    assert(dt(nanDay.toString).isNaN)
+    assert(dt - nanDay.toString == detrended(kept))
   }
 }

@@ -136,4 +136,28 @@ class MhwKernelPropertySpec extends AnyFunSuite {
     // {1.0, NaN, 3.0}: mean 2.0, threshold nulled
     assert(out(71) == ((2.0, None)))
   }
+
+  test("two series whose key hashes collide come out as each series alone") {
+    // rows as climThresh's exchange lays them out: (user_id, doy, sst,
+    // next_ok, prev_ok, h); keys 1 and 2 share h, key 3 follows
+    val rnd = new scala.util.Random(3)
+    def record(key: Long, h: Long): Seq[Row] =
+      (1 to 366).filter(_ => rnd.nextDouble() < 0.8).map { doy =>
+        val v = if (rnd.nextDouble() < 0.05) null
+                else java.lang.Double.valueOf(key * 10 + math.rint(rnd.nextGaussian() * 1e3) / 1e3)
+        Row(key, doy, v, doy % 3 == 0, doy % 5 == 0, h)
+      }
+    val (a, b, c) = (record(1L, 42L), record(2L, 42L), record(3L, 43L))
+    val interleaved = a.zipAll(b, null, null).flatMap { case (x, y) => Seq(x, y) }
+      .filter(_ != null) ++ c
+    for (clim <- Seq(Mhw.Clim(5, seas = true, pctile = Some(0.9), feb29 = true,
+                              smoothHalf = Some(15)),
+                     Mhw.Clim(2, seas = true, pctile = Some(0.1)))) {
+      def run(rows: Seq[Row]) =
+        Mhw.climKernel(clim)(rows.iterator).map(r => (r.get(0), r.getInt(1)) -> r.toSeq.drop(2)).toMap
+      val alone = Seq(a, b, c).map(run)
+      assert(alone(0) != alone(1).map { case ((_, d), v) => (1L, d) -> v })
+      assert(run(interleaved) == alone.reduce(_ ++ _), s"$clim")
+    }
+  }
 }

@@ -16,15 +16,10 @@ import graft.time.DoyFunctions.wrapDoy
   *    ×(2hw+1) as slots and merged per center;
   *  - the Feb-29 ([[interpFeb29Cols]]) and smoothing ([[smoothDoyCols]])
   *    passes over a (user_id, doy, value…) table.
-  * Means skip a NaN observation in both the sum and the count, the
-  * kernel's rule; everything else is the expression the production chain
-  * ran before the kernel replaced it. */
+  * Means skip a NaN observation in both the sum and the count
+  * ([[graft.Parity.davg]]), the kernel's rule; everything else is the
+  * expression the production chain ran before the kernel replaced it. */
 object MhwReference {
-
-  /** Pooled mean of a center: exact decimal sum over the count of
-    * non-NaN values. */
-  private def nanMean(v: Column): Column =
-    r(dsum(v) / count(when(!isnan(v), v)), 6)
 
   /** Explode each daily observation to the (2·hw+1) window centers it
     * contributes to, with the reference's cross-year grid semantics: a
@@ -43,7 +38,7 @@ object MhwReference {
 
   /** Plain per-DOY mean (best-practice climatology). */
   def climatologyBp(dailyDf: DataFrame): DataFrame =
-    dailyDf.groupBy(col("user_id"), col("doy")).agg(nanMean(col("sst")).as("seas"))
+    dailyDf.groupBy(col("user_id"), col("doy")).agg(davg(col("sst"), 6).as("seas"))
 
   /** Raw-fan pooled quantile: strict skipna, any NaN nulls the center. */
   def pooledQuantileRawFan(dailyDf: DataFrame, hw: Int, pctile: Double): DataFrame =
@@ -59,7 +54,7 @@ object MhwReference {
   def pooledMeanRawFan(dailyDf: DataFrame, hw: Int): DataFrame =
     poolSamples(dailyDf, hw)
       .groupBy(col("user_id"), col("doy"))
-      .agg(nanMean(col("sst")).as("seas"))
+      .agg(davg(col("sst"), 6).as("seas"))
 
   /** Slot partials: per (key, DOY) slot, the value array, exact decimal
     * sum, counts and NaN flag in three year-shift eligibility variants

@@ -35,6 +35,14 @@ class PropertySpec extends AnyFunSuite {
     assert(xs.zip(rs).forall { case (x, r) => math.abs(x - r) <= 5e-7 + 1e-9 })
   }
 
+  test("Parity.r keeps NaN; Parity.davg skips a NaN in both its sum and its count") {
+    val row = Seq(1.0, Double.NaN, 3.0).toDF("x")
+      .agg(Parity.davg(col("x"), 6), Parity.r(max(col("x")), 6)).head()
+    assert(row.getDouble(0) == 2.0)
+    assert(row.getDouble(1).isNaN) // Spark orders NaN above every number
+    assert(Parity.r6d(Double.NaN).isNaN)
+  }
+
   test("hamming is a metric on generated 64-bit fingerprints") {
     val bitsGen = Gen.listOfN(64, Gen.oneOf(0, 1))
     val triples = sample(for {
