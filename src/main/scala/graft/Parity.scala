@@ -74,6 +74,12 @@ object Parity {
   def r6d(x: Double): Double =
     if (x.isNaN) x else math.floor(x * 1e6 + 0.5).toLong / 1e6
 
+  /** Driver-side replica of [[sqlR]] at d = 6 as Spark evaluates it:
+    * Spark's `floor` of a double is a LONG, so NaN rounds to 0.0 where
+    * [[r6d]] keeps it. The step rounding of the `aggregate` folds over
+    * [[sqlR]] that the streaming refold twins replay. */
+  def sqlR6d(x: Double): Double = math.floor(x * 1e6 + 0.5).toLong / 1e6
+
   /** Spark's double→DECIMAL(38,10) cast (shortest decimal repr, then
     * HALF_UP to scale 10) as an unscaled long — the streaming-state
     * encoding of an exact decimal sum. */
@@ -85,6 +91,78 @@ object Parity {
   /** Scale-10 unscaled long back to double (Decimal.toDouble). */
   def dec10ToDouble(u: Long): Double =
     new java.math.BigDecimal(java.math.BigInteger.valueOf(u), 10).doubleValue
+
+  /** `size` exact sums, each Spark's `sum(CAST(x AS DECIMAL(38,10)))`
+    * in JVM code — the one exact-sum accumulator of every Scala-side
+    * kernel and fold. A double enters through the DECIMAL(38,10) cast:
+    * NaN and ±Inf cast to null and add nothing, and a value past 38
+    * digits throws as the cast does. A sum is an unscaled long that
+    * widens to BigInteger once it (or a single value, |x| ≳ 9.2e8)
+    * leaves the long range, and it leaves through `toDouble`
+    * (Decimal.toDouble), which throws past 38 digits as Spark's sum
+    * does. `any(i)`: the sum saw a value (false reads as SQL null). */
+  final class Sums(size: Int) {
+    private val lo = new Array[Long](size)
+    private val hi = new Array[java.math.BigInteger](size)
+    val any = new Array[Boolean](size)
+
+    def clear(): Unit = {
+      java.util.Arrays.fill(lo, 0L)
+      java.util.Arrays.fill(hi.asInstanceOf[Array[AnyRef]], null)
+      java.util.Arrays.fill(any, false)
+    }
+
+    private def addWide(i: Int, u: java.math.BigInteger): Unit =
+      hi(i) = if (hi(i) == null) u else hi(i).add(u)
+
+    private def addLong(i: Int, u: Long): Unit = {
+      val s = lo(i) + u
+      // signed overflow: both operands share a sign the sum lost
+      if (((lo(i) ^ s) & (u ^ s)) < 0) {
+        addWide(i, java.math.BigInteger.valueOf(lo(i)).add(java.math.BigInteger.valueOf(u)))
+        lo(i) = 0L
+      } else lo(i) = s
+    }
+
+    def addDouble(i: Int, v: Double): Unit =
+      if (!v.isNaN && !v.isInfinite) {
+        any(i) = true
+        if (math.abs(v) < 9e8) addLong(i, dec10Unscaled(v))
+        else {
+          val d = java.math.BigDecimal.valueOf(v).setScale(10, java.math.RoundingMode.HALF_UP)
+          if (d.precision > 38)
+            throw new ArithmeticException(s"$v overflows DECIMAL(38,10)")
+          addWide(i, d.unscaledValue)
+        }
+      }
+
+    /** Add an exact scale-10 unscaled sum (a partial kept elsewhere). */
+    def addUnscaled(i: Int, u: java.math.BigInteger): Unit = {
+      any(i) = true
+      if (u.bitLength < 64) addLong(i, u.longValue) else addWide(i, u)
+    }
+
+    def addFrom(i: Int, o: Sums, j: Int): Unit =
+      if (o.any(j)) {
+        any(i) = true
+        addLong(i, o.lo(j))
+        if (o.hi(j) != null) addWide(i, o.hi(j))
+      }
+
+    /** The exact scale-10 unscaled sum. */
+    def unscaled(i: Int): java.math.BigInteger =
+      if (hi(i) == null) java.math.BigInteger.valueOf(lo(i))
+      else hi(i).add(java.math.BigInteger.valueOf(lo(i)))
+
+    def toDouble(i: Int): Double =
+      if (hi(i) == null) dec10ToDouble(lo(i))
+      else {
+        val d = new java.math.BigDecimal(unscaled(i), 10)
+        if (d.precision > 38)
+          throw new ArithmeticException(s"sum $d overflows DECIMAL(38,10)")
+        d.doubleValue
+      }
+  }
 
   /** Oracle-SQL fragments mirroring the above (DuckDB dialect-safe ANSI). */
   def sqlR(x: String, d: Int): String = {

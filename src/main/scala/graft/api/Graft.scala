@@ -193,11 +193,16 @@ object Graft {
     Mhw.severity(daily, seas, thresh)
 
   /** common.calculate_mhw_metrics: event detection (runs of severity>1,
-    * duration filter, transitive gap-join) + per-event metrics.
+    * duration filter, transitive gap-join) + per-event metrics, one
+    * vectorized scan per series as in the reference: one keyed exchange
+    * of the severity rows, then each series' days scanned once in Scala
+    * (`Mhw.detectEvents`); the severity frame is read once, so it need
+    * not be persisted first.
     * `maxEvents` mirrors the reference's `maxEvt=200` (core.py:130): it
     * pre-allocates that many event slots per cell and chronologically
-    * later events are dropped; here the cap is a filter on the per-series
-    * chronological event ordinal — long format needs no padding rows. */
+    * later events are dropped; here each series keeps its first
+    * `maxEvents` events, cut before their metrics are computed — long
+    * format needs no padding rows. */
   def calculateMhwMetrics(severity: DataFrame, minDuration: Int = 5,
                           maxGap: Int = 2, maxEvents: Int = 200): DataFrame =
     Mhw.detectEvents(severity, minDuration, maxGap, maxEvents)

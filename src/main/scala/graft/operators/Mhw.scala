@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.Parity._
 import graft.sources.Tables
@@ -38,11 +38,13 @@ import graft.time.DoyFunctions._
   * task then holds one series' daily record at a time and pools,
   * interpolates and smooths it on 366-slot arrays. A series is
   * years-bounded, so no group grows with the data and no sketch is
-  * needed at any scale. Event detection groups each series' exceeding
-  * day indices under one exchange on the series key and scans them with
-  * [[eventChains]], the one run/gap-join implementation (the streaming
-  * detector folds with it too); the per-key spans then join back to the
-  * facts.
+  * needed at any scale. Event detection ([[detectEvents]]) is a second
+  * per-series kernel on the same layout: one exchange on the series key,
+  * then each series' day-sorted record scanned once for its spans
+  * ([[eventChains]], the one run/gap-join implementation, which the
+  * streaming detector folds with too) and their metrics
+  * ([[EventDays.metrics]], which the stream drain shares). Nothing joins
+  * back to the facts, and the severity frame is read once.
   */
 object Mhw {
 
@@ -152,11 +154,8 @@ object Mhw {
 
   /** [[climThresh]]'s arithmetic over one series at a time, on 366-slot
     * arrays. Rows arrive as (user_id, doy, sst, next_ok, prev_ok, h),
-    * sorted by h. Spark's own expressions are mirrored step for step:
-    * a double enters a sum through the DECIMAL(38,10) cast
-    * ([[graft.Parity.dec10Unscaled]]; NaN and ±Inf cast to null), sums
-    * are exact unscaled longs that widen to BigInteger past the long
-    * range, and a sum leaves through [[graft.Parity.dec10ToDouble]]. */
+    * sorted by h. Spark's own expressions are mirrored step for step;
+    * every sum is a [[graft.Parity.Sums]] slot. */
   private final class ClimKernel(c: Clim) {
     import ClimKernel._
     // the series' values grouped by DOY slot: slot d holds [at(d), at(d + 1))
@@ -347,57 +346,6 @@ object Mhw {
     def wrap(raw: Int): Int = ((raw - 1 + 366) % 366) + 1
 
     def box(v: Double): java.lang.Double = java.lang.Double.valueOf(v)
-
-    /** Exact DECIMAL(38,10) sums: unscaled longs, widened to BigInteger
-      * once a sum (or a single value, |x| ≳ 9.2e8) leaves the long range. */
-    final class Sums(size: Int) {
-      private val lo = new Array[Long](size)
-      private val hi = new Array[java.math.BigInteger](size)
-      val any = new Array[Boolean](size)
-
-      def clear(): Unit = {
-        java.util.Arrays.fill(lo, 0L)
-        java.util.Arrays.fill(hi.asInstanceOf[Array[AnyRef]], null)
-        java.util.Arrays.fill(any, false)
-      }
-
-      private def addWide(i: Int, u: java.math.BigInteger): Unit =
-        hi(i) = if (hi(i) == null) u else hi(i).add(u)
-
-      private def addLong(i: Int, u: Long): Unit = {
-        val s = lo(i) + u
-        // signed overflow: both operands share a sign the sum lost
-        if (((lo(i) ^ s) & (u ^ s)) < 0) {
-          addWide(i, java.math.BigInteger.valueOf(lo(i)).add(java.math.BigInteger.valueOf(u)))
-          lo(i) = 0L
-        } else lo(i) = s
-      }
-
-      /** Add Spark's DECIMAL(38,10) cast of `v`: NaN and ±Inf cast to
-        * null and add nothing; past 38 digits the cast overflows. */
-      def addDouble(i: Int, v: Double): Unit =
-        if (!v.isNaN && !v.isInfinite) {
-          any(i) = true
-          if (math.abs(v) < 9e8) addLong(i, dec10Unscaled(v))
-          else {
-            val d = java.math.BigDecimal.valueOf(v).setScale(10, java.math.RoundingMode.HALF_UP)
-            if (d.precision > 38)
-              throw new ArithmeticException(s"$v overflows DECIMAL(38,10)")
-            addWide(i, d.unscaledValue)
-          }
-        }
-
-      def addFrom(i: Int, o: Sums, j: Int): Unit =
-        if (o.any(j)) {
-          any(i) = true
-          addLong(i, o.lo(j))
-          if (o.hi(j) != null) addWide(i, o.hi(j))
-        }
-
-      def toDouble(i: Int): Double =
-        if (hi(i) == null) dec10ToDouble(lo(i))
-        else new java.math.BigDecimal(hi(i).add(java.math.BigInteger.valueOf(lo(i))), 10).doubleValue
-    }
   }
 
   // ------------------------------------------------- composed climatologies
@@ -675,53 +623,86 @@ object Mhw {
   // ---------------------------------------------------------------- events
 
   /** common.calculate_mhw_metrics: boolean runs of severity>1 on the
-    * shared calendar index (absent days break runs, like NaN→False in the
+    * calendar day axis (absent days break runs, like NaN→False in the
     * reference), duration filter, then single-pass gap-join of kept runs
     * (start − prev_end ≤ maxGap — chains merge transitively), all in
     * [[eventChains]] over each series' exceeding days. Metrics are
-    * computed over the merged index span INCLUDING gap days
+    * computed over the merged span INCLUDING gap days
     * ([[eventMetrics]]); peak is the first argmax of T_anom.
+    *
+    * One per-series kernel ([[eventKernel]]): one [[byKey]] exchange of
+    * (user_id, epoch day, t_anom, severity), a hash sort, then each
+    * series' day-sorted record scanned once in Scala for its spans and
+    * their metrics. The severity frame is read once, origin included:
+    * the kernel works on epoch days, each task reports its first day,
+    * and the small event output is re-based on the earliest
+    * ([[rebased]]), so indices count days since the frame's first day.
     *
     * `maxEvents` is the reference's `maxEvt`/`l_return` slot cap
     * (core.py:37,130: metrics arrays are pre-allocated at l_return=200
     * per cell, so chronologically later events have nowhere to land):
-    * here a filter on the per-series chronological event ordinal,
-    * applied BEFORE the span-metrics join so capped-away events don't
-    * pay the join either. Long format needs no padding rows; the
+    * here each series keeps its first `maxEvents` spans, cut BEFORE
+    * their metrics are computed. Long format needs no padding rows; the
     * default keeps every event (the cap only binds on >200-event
     * series — century-scale hourly records). */
   def detectEvents(sev: DataFrame, minDuration: Int = 5, maxGap: Int = 2,
                    maxEvents: Int = Int.MaxValue): DataFrame = {
-    // persist FIRST: the severity table feeds the origin scalar, run
-    // detection AND the span metrics join — otherwise the entire
-    // upstream chain (pooled quantiles, smoothing, clim joins) is
-    // re-evaluated once per consumer
-    val sevP =
-      if (sev.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        sev.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sev // the memoized severity chain arrives already persisted
-    val (origin, s) = indexed(sevP)
-    eventMetrics(spanDays(s, s, minDuration, maxGap, maxEvents), origin)
+    val ix = (c: String) => (col(c) - col("d0")).as(c)
+    rebased(kernelRows(sev, minDuration, maxGap, maxEvents, None))
+      .select(col("user_id"), col("evt"), ix("index_start"), ix("index_end"),
+        date_from_unix_date(col("index_start")).as("date_start"),
+        date_from_unix_date(col("index_end")).as("date_end"),
+        (col("index_end") - col("index_start") + 1).as("duration"),
+        ix("index_peak"), date_from_unix_date(col("index_peak")).as("date_peak"),
+        col("intensity_max"), col("intensity_mean"), col("intensity_cumul"),
+        col("severity_max"))
   }
 
-  /** Exceedance, Spark's own `severity > 1` (null: no; NaN: yes). Batch
-    * detection filters on it and the stream stages it as a column. */
+  /** Exceedance, Spark's own `severity > 1` (null: no; NaN: yes). The
+    * stream stages it as a column and [[eventKernel]] spells it in
+    * Scala. */
   private[graft] val exceeds: Column = col("severity") > 1
 
-  /** The origin scalar (first day on record) and the severity frame with
-    * the shared calendar index `idx` = days since that origin. */
-  private[graft] def indexed(sev: DataFrame): (DataFrame, DataFrame) = {
-    val origin = sev.agg(min(col("d")).as("d0"))
-    (origin, sev.crossJoin(broadcast(origin))
-      .withColumn("idx", datediff(col("d"), col("d0"))))
+  /** [[eventKernel]] over a severity frame: one [[byKey]] exchange of
+    * (user_id, day, t_anom, severity, carry…, h), `day` the epoch day,
+    * sorted on h = xxhash64(user_id) — one long sort key that Spark
+    * radix-sorts; a hash collision only interleaves two series, which
+    * the kernel separates again. `carry` set asks for span days. The
+    * output holds the event columns, then for span days the day columns
+    * (idx, t_anom, severity, carry…, ta_prev, ta_next), then `lo`; its
+    * key may be null (marker rows). */
+  private def kernelRows(sev: DataFrame, minDuration: Int, maxGap: Int, maxEvents: Int,
+                         carry: Option[Seq[String]]): DataFrame = {
+    val rows = byKey(sev.select(Seq(col("user_id"), unix_date(col("d")).as("day"),
+        col("t_anom").cast("double"), col("severity").cast("double")) ++
+        carry.toSeq.flatten.map(c => col(c).cast("double")): _*))
+      .withColumn("h", xxhash64(col("user_id")))
+      .sortWithinPartitions(col("h"))
+    val days = carry.toSeq.flatMap(cs => ("idx" -> IntegerType) +:
+      (Seq("t_anom", "severity") ++ cs ++ Seq("ta_prev", "ta_next")).map(_ -> DoubleType))
+    val out = StructType(sev.schema("user_id").copy(nullable = true) +:
+      (Seq("evt" -> LongType, "index_start" -> IntegerType, "index_end" -> IntegerType,
+           "index_peak" -> IntegerType) ++
+       Seq("intensity_max", "intensity_mean", "intensity_cumul", "severity_max").map(_ -> DoubleType) ++
+       days :+ ("lo" -> IntegerType)).map { case (n, t) => StructField(n, t) })
+    rows.mapPartitions(eventKernel(minDuration, maxGap, maxEvents, carry.isDefined))(
+      Encoders.row(out))
   }
+
+  /** The kernel output with the origin `d0` (the frame's first day)
+    * beside every event row: each task's `lo` marker row carries its
+    * first day, and one window over the small detection output takes
+    * their minimum, then the markers go. */
+  private def rebased(out: DataFrame): DataFrame =
+    out.withColumn("d0", min(col("lo")).over(Window.partitionBy()))
+      .filter(col("lo").isNull)
 
   /** The event scan of ONE series (common/core.py:37 `_detect_events`):
     * its exceeding day indices, sorted ascending → maximal runs of
     * consecutive indices, the duration filter, then a single-pass
     * gap-join (start − prev_end ≤ maxGap, chains merge transitively).
     * Returns the merged (start, end) spans in order. The only run
-    * detection in graft: [[spanDays]] runs it per series key, the
+    * detection in graft: [[eventKernel]] runs it per series, the
     * streaming fold over each key's open buffer. */
   private[graft] def eventChains(idx: Seq[Int], minDuration: Int,
                                  maxGap: Int): Vector[(Int, Int)] = {
@@ -736,58 +717,89 @@ object Mhw {
       }
   }
 
-  /** The event days of an idx'd severity frame `s`: each series key's
-    * exceeding indices, grouped and sorted, go through [[eventChains]];
-    * the spans explode with `evt` = their chronological ordinal (capped
-    * at `maxEvents`), join back to `facts` (events are per-key →
-    * keyDim-gated range join) and each day carries its event's T_anom
-    * max `mx`. Any key type groups — the public API's is a
-    * struct<lat,lon>. */
-  private def spanDays(s: DataFrame, facts: DataFrame, minDuration: Int,
-                       maxGap: Int, maxEvents: Int): DataFrame = {
-    val chains = udf((ix: Seq[Int]) => eventChains(ix, minDuration, maxGap))
-    // the span side's key is renamed: both sides derive from one frame,
-    // and `ev_uid` makes the join compare two distinct attributes
-    val events = s.filter(exceeds)
-      .groupBy(col("user_id").as("ev_uid"))
-      .agg(chains(array_sort(collect_list(col("idx")))).as("spans"))
-      .select(col("ev_uid"), posexplode(col("spans")))
-      .select(col("ev_uid"), (col("pos") + 1).cast("long").as("evt"),
-        col("col._1").as("index_start"), col("col._2").as("index_end"))
-      .filter(col("evt") <= maxEvents)
-    withMx(facts.join(graft.Hints.keyDim(events),
-        col("user_id") === col("ev_uid") &&
-        col("idx").between(col("index_start"), col("index_end")))
-      .drop("ev_uid"))
+  /** The metrics of one event over its days `ds` in day order, each row
+    * holding (day, t_anom, severity) from column `at` on: the
+    * first-argmax peak day, intensity max / mean / cumulative and the
+    * max severity, each null when no day holds a value. Spark's
+    * aggregates mirrored: `max` skips null and orders NaN above every
+    * number, the peak is the first day whose T_anom equals it (NaN
+    * equals NaN), the mean and cumulative are [[graft.Parity.davg]] and
+    * [[graft.Parity.dsum]] at 6dp on an exact [[graft.Parity.Sums]].
+    * The batch kernel and the stream drain's finish share it. */
+  private[graft] def eventMetrics(ds: collection.Seq[Row], at: Int): Seq[Any] = {
+    def vals(j: Int) = ds.collect { case r if !r.isNullAt(at + j) => r.getInt(at) -> r.getDouble(at + j) }
+    def mx(vs: collection.Seq[Double]) = vs.reduceOption((x, y) => if (!x.isNaN && (y.isNaN || y > x)) y else x)
+    val ta = vals(1)
+    val imax = mx(ta.map(_._2))
+    val peak = imax.flatMap(m => ta.collectFirst { case (d, v) if v == m || v.isNaN && m.isNaN => d })
+    val acc = new Sums(1)
+    ta.foreach(p => acc.addDouble(0, p._2))
+    val sum = if (acc.any(0)) Some(acc.toDouble(0)) else None
+    Seq[Option[Any]](peak, imax, sum.map(s => r6d(s / ta.count(!_._2.isNaN))), sum.map(r6d),
+      mx(vals(2).map(_._2)).map(r6d(_))).map(_.orNull)
   }
 
-  /** Each event day's per-event T_anom max `mx` (for the first-argmax
-    * peak). */
-  private[graft] def withMx(days: DataFrame): DataFrame =
-    days.withColumn("mx", max(col("t_anom")).over(Window.partitionBy("user_id", "evt")))
-
-  /** The event-metric aggregate over event days (user_id, evt,
-    * index_start, index_end, idx, t_anom, severity, mx): one grouped
-    * pass incl. first-argmax peak, dates off the `origin` scalar. Batch
-    * detection and the streaming drain both finish here. */
-  private[graft] def eventMetrics(days: DataFrame, origin: DataFrame): DataFrame =
-    days.groupBy(col("user_id"), col("evt"), col("index_start"), col("index_end"))
-      .agg(
-        min(when(col("t_anom") === col("mx"), col("idx"))).as("index_peak"),
-        max(col("t_anom")).as("intensity_max"),
-        davg(col("t_anom"), 6).as("intensity_mean"),
-        dsum(col("t_anom"), 6).as("intensity_cumul"),
-        r(max(col("severity")), 6).as("severity_max"))
-      .crossJoin(broadcast(origin))
-      .select(col("user_id"), col("evt"),
-        col("index_start"), col("index_end"),
-        date_add(col("d0"), col("index_start")).as("date_start"),
-        date_add(col("d0"), col("index_end")).as("date_end"),
-        (col("index_end") - col("index_start") + 1).as("duration"),
-        col("index_peak"),
-        date_add(col("d0"), col("index_peak")).as("date_peak"),
-        col("intensity_max"), col("intensity_mean"), col("intensity_cumul"),
-        col("severity_max"))
+  /** The event kernel's per-partition step over rows as [[kernelRows]]
+    * lays them out (user_id, day, t_anom, severity, carry…, h), sorted
+    * by h. Per series it sorts the days, finds the spans with
+    * [[eventChains]], keeps the first `maxEvents` and emits, with epoch
+    * days in the index columns, one row per event (user_id, evt,
+    * index_start, index_end, index_peak, intensity_max, intensity_mean,
+    * intensity_cumul, severity_max, lo = null), or with `spanDays` one
+    * per span day: those columns but `lo`, then the day's (idx, t_anom,
+    * severity, carry…), the T_anom of the calendar days before and
+    * after when the series holds them (ta_prev, ta_next), lo = null.
+    * After the last series, one marker row (all null but `lo`, the
+    * task's first day) for [[rebased]]. Null keys and null days make no
+    * events (a null day never counts toward the first day either). */
+  private[graft] def eventKernel(minDuration: Int, maxGap: Int, maxEvents: Int,
+                                 spanDays: Boolean)(rows: Iterator[Row]): Iterator[Row] = {
+    val in = rows.buffered
+    var lo = Int.MaxValue
+    var width = 10
+    def series(key: Any, rs: collection.Seq[Row]): Iterator[Row] = {
+      // day order: (day, arrival) packed into one long per row
+      val order = Array.tabulate(rs.length)(i => (rs(i).getInt(1).toLong << 32) | i)
+      java.util.Arrays.sort(order)
+      val ds = order.map(o => rs(o.toInt)).toIndexedSeq
+      val hot = ds.collect { case r if !r.isNullAt(3) && (r.getDouble(3) > 1 || r.getDouble(3).isNaN) => r.getInt(1) }
+      var at = 0
+      eventChains(hot, minDuration, maxGap).iterator.take(maxEvents).zipWithIndex.flatMap {
+        case ((a, b), k) =>
+          while (ds(at).getInt(1) < a) at += 1
+          val from = at
+          while (at < ds.length && ds(at).getInt(1) <= b) at += 1
+          val ev = Seq(key, k + 1L, a, b) ++ eventMetrics(ds.slice(from, at), 1)
+          if (!spanDays) Iterator.single(Row.fromSeq(ev :+ null))
+          else (from until at).iterator.map { i =>
+            def ta(j: Int): Any =
+              if (j >= 0 && j < ds.length && math.abs(ds(j).getInt(1) - ds(i).getInt(1)) == 1)
+                ds(j).get(2) else null
+            val r = ds(i)
+            Row.fromSeq(ev ++ r.toSeq.slice(1, r.length - 1) ++ Seq(ta(i - 1), ta(i + 1), null))
+          }
+      }
+    }
+    val events = Iterator.continually(in.hasNext).takeWhile(identity).flatMap { _ =>
+      val hAt = in.head.length - 1
+      if (spanDays) width = hAt + 11
+      val h = in.head.getLong(hAt)
+      val group = scala.collection.mutable.ArrayBuffer.empty[Row]
+      while (in.hasNext && in.head.getLong(hAt) == h) {
+        val r = in.next()
+        if (!r.isNullAt(1)) {
+          lo = math.min(lo, r.getInt(1))
+          if (!r.isNullAt(0)) group += r
+        }
+      }
+      val k0 = group.headOption.map(_.get(0)).orNull
+      if (group.isEmpty) Iterator.empty
+      else if (group.forall(_.get(0) == k0)) series(k0, group)
+      else group.groupBy(_.get(0)).iterator.flatMap { case (k, rs) => series(k, rs) }
+    }
+    events ++ (if (lo == Int.MaxValue) Iterator.empty
+               else Iterator.single(Row.fromSeq(Seq.fill(width - 1)(null) :+ lo)))
+  }
 
   /** Hobday-2018 category from per-event max severity. */
   def categoryOf(sevMax: Column): Column =
@@ -827,21 +839,19 @@ object Mhw {
     * can sit below the mean, where the anomaly's sign flips with the
     * denominator — severity is what detection thresholds on).
     *
-    * Scale shape: the event table is per-key (keyDim-gated broadcast,
-    * the detectEvents span-join discipline); the composite is one
-    * range-join of the persisted severity table against it plus a
-    * ≤(before+after+1)-row rollup — no window, nothing collected. */
+    * Scale shape: the event table is per-key (keyDim-gated broadcast);
+    * the composite is one range-join of the persisted severity table
+    * against its onset dates plus a ≤(before+after+1)-row rollup — no
+    * window, nothing collected. */
   def mhwOnsetComposite(s: SparkSession, dir: String, before: Int = 10,
                         after: Int = 20): DataFrame = {
-    val sev = severityChain(s, dir, 0.6)
     val ev = eventsTable(s, dir)
-      .select(col("user_id").as("ev_uid"), col("index_start"))
-    val (_, si) = indexed(sev)
-    si.join(graft.Hints.keyDim(ev),
+      .select(col("user_id").as("ev_uid"), col("date_start"))
+    severityChain(s, dir, 0.6).join(graft.Hints.keyDim(ev),
         col("user_id") === col("ev_uid") &&
-        col("idx").between(col("index_start") - before,
-                           col("index_start") + after))
-      .select((col("idx") - col("index_start")).cast("int").as("offset"),
+        col("d").between(date_sub(col("date_start"), before),
+                         date_add(col("date_start"), after)))
+      .select(datediff(col("d"), col("date_start")).as("offset"),
               col("t_anom"), col("severity"))
       .groupBy(col("offset"))
       .agg(count(lit(1)).as("n_obs"),
@@ -1049,31 +1059,25 @@ object Mhw {
     *    represent) the peak-distance slope fallback.
     * Variances use exact decimal moment sums (order-independent), final
     * arithmetic IEEE double, 6dp stage rounding — bit-identical to the
-    * DuckDB oracle. Events come from the same per-key scan and span
-    * join as detectEvents ([[spanDays]]); the neighbour lag/lead rides
-    * on the fact side of that join. */
+    * DuckDB oracle. Events come from the same per-series kernel as
+    * detectEvents, which also hands each event day its neighbours'
+    * anomalies. */
   def mhwEventRates(s: SparkSession, dir: String): DataFrame =
     eventRates(severityChain(s, dir, 0.6), minDuration = 3, maxGap = 2)
 
   /** Core of [[mhwEventRates]] over any severity frame carrying
-    * (user_id, d, t_anom, severity, sst, seas, thresh). */
+    * (user_id, d, t_anom, severity, sst, seas, thresh): the event
+    * kernel's span days ([[eventKernel]] with sst and thresh carried,
+    * each day beside its event's peak and its neighbours' anomalies)
+    * under one grouped aggregate, re-based like [[detectEvents]]. */
   def eventRates(sev: DataFrame, minDuration: Int = 5, maxGap: Int = 2): DataFrame = {
-    val (_, s) = indexed(sev)
-    val wOrd = Window.partitionBy("user_id").orderBy("idx")
-    val t = s
-      .withColumn("ta_prev",
-        when(col("idx") - lag("idx", 1).over(wOrd) === 1,
-          lag("t_anom", 1).over(wOrd)))
-      .withColumn("ta_next",
-        when(lead("idx", 1).over(wOrd) - col("idx") === 1,
-          lead("t_anom", 1).over(wOrd)))
-    val span = spanDays(s, t, minDuration, maxGap, Int.MaxValue)
+    val span = kernelRows(sev, minDuration, maxGap, Int.MaxValue, Some(Seq("sst", "thresh")))
       .withColumn("rt", r(col("sst") - col("thresh"), 6))
     val g = span
-      .groupBy(col("user_id"), col("evt"), col("index_start"), col("index_end"))
+      .groupBy(col("user_id"), col("evt"), col("index_start"), col("index_end"),
+        col("index_peak"))
       .agg(
         count(lit(1)).cast("double").as("n"),
-        min(when(col("t_anom") === col("mx"), col("idx"))).as("index_peak"),
         max(col("t_anom")).as("ta_peak"),
         dsum(col("t_anom")).as("m1"),
         dsum(col("t_anom") * col("t_anom")).as("m2"),
@@ -1095,15 +1099,17 @@ object Mhw {
         min(when(col("idx") === col("index_start"), col("t_anom"))).as("ta_first"),
         min(when(col("idx") === col("index_end"), col("t_anom"))).as("ta_last"),
         min(when(col("idx") === col("index_start"), col("ta_prev"))).as("ta_prev0"),
-        min(when(col("idx") === col("index_end"), col("ta_next"))).as("ta_next1"))
+        min(when(col("idx") === col("index_end"), col("ta_next"))).as("ta_next1"),
+        min(col("lo")).as("lo"))
     val tp = (col("index_peak") - col("index_start")).cast("double")
     val td = (col("index_end") - col("index_peak")).cast("double")
     def sd(s2: Column, s1: Column, cnt: Column): Column =
       r(sqrt(greatest(s2 / cnt - (s1 / cnt) * (s1 / cnt), lit(0.0))), 6)
-    g.select(
-      col("user_id"), col("evt"), col("index_start"), col("index_end"),
+    val ix = (c: String) => (col(c) - col("d0")).as(c)
+    rebased(g).select(
+      col("user_id"), col("evt"), ix("index_start"), ix("index_end"),
       (col("index_end") - col("index_start") + 1).as("duration"),
-      col("index_peak"),
+      ix("index_peak"),
       sd(col("m2"), col("m1"), col("n")).as("intensity_var"),
       col("imax_relthresh"), col("imean_relthresh"),
       sd(col("rt2"), col("rt1"), col("nrt")).as("ivar_relthresh"),

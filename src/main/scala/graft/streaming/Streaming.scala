@@ -195,13 +195,21 @@ object Streaming {
     * from the batch reader when the testdata regenerated with a new `ts`
     * encoding (µs NTZ vs int64 nanos) — the raw µs were then
     * "div 1000"-ed into 1970. So the schema comes from the parquet footer
-    * via a zero-row batch read (driver-side metadata only). */
+    * via a zero-row batch read (driver-side metadata only). A table
+    * Spark wrote is a directory (`<table>.parquet/part-*`): the stream
+    * reads that directory's part files; the glob over the corpus dir
+    * would match none of them. */
   private[streaming] def fileStream(s: SparkSession, dir: String,
                                     table: String): DataFrame = {
-    val footerSchema = s.read.parquet(s"$dir/$table.parquet").schema
-    s.readStream.schema(footerSchema)
-      .option("pathGlobFilter", s"$table.parquet") // source wants a dir
-      .parquet(dir)
+    val path = s"$dir/$table.parquet"
+    val footerSchema = s.read.parquet(path).schema
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(s.sessionState.newHadoopConf()).getFileStatus(p).isDirectory)
+      s.readStream.schema(footerSchema).parquet(path)
+    else
+      s.readStream.schema(footerSchema)
+        .option("pathGlobFilter", s"$table.parquet") // source wants a dir
+        .parquet(dir)
   }
 
   /** Streaming events source; the ts canonicalization is the SAME helper

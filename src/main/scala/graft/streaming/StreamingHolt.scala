@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** #126 stream_holt: the #115 Holt level/trend smoother maintained
   * incrementally over the events stream. The recursion itself is
   * order-sensitive, so the state is NOT (l, b): it is the per-day
-  * decimal partials — day → (scale-10 unscaled sum, count) — and each
+  * decimal partials — day → [[StreamingHolt.DaySum]] — and each
   * emission re-folds the sorted day axis. That makes the operator
   * arrival-order and chunking INVARIANT (partials commute; late or
   * out-of-order days land in their slot), at O(days) state per key —
@@ -22,82 +22,109 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object StreamingHolt {
 
   private[graft] case class HoltIn(user_id: Long, day: Int, value: Double)
-  private[graft] case class HoltState(
-      upd: Int, days: Map[Int, (Long, Long)])
+  /** One day's partial: the exact scale-10 sum of its finite values
+    * (None: it holds none), its count of non-NaN values and whether it
+    * held a NaN — what [[graft.Parity.dailyMean]] needs. */
+  private[graft] case class DaySum(sum: Option[BigInt], n: Long, nan: Boolean)
+  private[graft] case class HoltState(upd: Int, days: Map[Int, DaySum])
   private[graft] case class HoltEmit(
       user_id: Long, upd: Int, n_obs: Long,
       level: Double, trend: Double, forecast: Double)
 
-  import graft.Parity.{dec10Unscaled, dec10ToDouble, r6d}
+  import graft.Parity.{Sums, r6d, sqlR6d}
 
-  /** The batch chain's arithmetic over the day partials: davg per day
-    * (decimal sum → double, / count, r6), then the α=0.5/β=0.3 fold. */
-  private[graft] def foldDays(days: Map[Int, (Long, Long)])
-      : (Long, Double, Double) = {
+  /** The batch chain's arithmetic over the day partials: the daily
+    * mean per day, then the α=0.5/β=0.3 fold with Spark's step
+    * rounding. */
+  private[graft] def foldDays(days: Map[Int, DaySum]): (Long, Double, Double) = {
     val xs = dailySeries(days)
     var l = xs.head; var b = 0.0
     xs.tail.foreach { x =>
-      val nl = r6d(0.5 * x + 0.5 * (l + b))
-      b = r6d(0.3 * (nl - l) + 0.7 * b); l = nl
+      val nl = sqlR6d(0.5 * x + 0.5 * (l + b))
+      b = sqlR6d(0.3 * (nl - l) + 0.7 * b); l = nl
     }
     (xs.length.toLong, l, b)
   }
 
-  /** Merge a micro-batch into the day→(decimal sum, count) partials —
-    * the shared state transition of every day-grain refold twin
-    * (#126 Holt, #143 CUSUM). Returns (sawNewRows, merged). */
-  private[graft] def mergeDays(prev: Option[HoltState], rows: Iterator[HoltIn])
-      : (Boolean, scala.collection.mutable.HashMap[Int, (Long, Long)]) = {
-    val acc = scala.collection.mutable.HashMap.empty[Int, (Long, Long)]
-    prev.foreach(st => acc ++= st.days)
-    var any = false
-    rows.foreach { r =>
-      any = true
-      val (su, n) = acc.getOrElse(r.day, (0L, 0L))
-      acc(r.day) = (su + dec10Unscaled(r.value), n + 1)
-    }
-    (any, acc)
+  /** `prev` with the values `vs` of the same day added, through the
+    * exact-sum accumulator. */
+  private[graft] def daySum(prev: Option[DaySum], vs: Seq[Double]): DaySum = {
+    val acc = new Sums(1)
+    prev.flatMap(_.sum).foreach(u => acc.addUnscaled(0, u.bigInteger))
+    vs.foreach(acc.addDouble(0, _))
+    DaySum(if (acc.any(0)) Some(BigInt(acc.unscaled(0))) else None,
+      prev.fold(0L)(_.n) + vs.count(!_.isNaN), prev.exists(_.nan) || vs.exists(_.isNaN))
   }
 
-  /** The sorted daily series (davg per day, 6dp) from the partials —
-    * the refold input both twins share. */
-  private[graft] def dailySeries(days: scala.collection.Map[Int, (Long, Long)])
+  /** The shared state transition of every day-grain refold twin (#126
+    * Holt, #177 Holt-Winters, #143 CUSUM): merge the micro-batch into
+    * the day partials, count the update and emit `f(upd, days)`; a key
+    * with no days emits nothing. */
+  private[graft] def mergeDays[E](rows: Iterator[HoltIn], state: GroupState[HoltState])(
+      f: (Int, Map[Int, DaySum]) => Iterator[E]): Iterator[E] = {
+    val prev = state.getOption
+    val days = rows.toSeq.groupBy(_.day).foldLeft(prev.fold(Map.empty[Int, DaySum])(_.days)) {
+      case (m, (d, rs)) => m.updated(d, daySum(m.get(d), rs.map(_.value)))
+    }
+    if (days.isEmpty) Iterator.empty
+    else {
+      val upd = prev.fold(0)(_.upd) + 1
+      state.update(HoltState(upd, days))
+      f(upd, days)
+    }
+  }
+
+  /** `fold` per user over the events stream at day grain, Update mode. */
+  private[graft] def dayFold[E: Encoder](ev: DataFrame)(
+      fold: (Long, Iterator[HoltIn], GroupState[HoltState]) => Iterator[E]): Dataset[E] = {
+    val s = ev.sparkSession
+    import s.implicits._
+    ev.select(col("user_id"),
+              datediff(to_date(col("ts")), lit("1970-01-01").cast("date")).as("day"),
+              col("value"))
+      .as[HoltIn]
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(fold)
+  }
+
+  /** The last emission per user of a drained sink. */
+  private[graft] def lastPerUser(sink: DataFrame): DataFrame =
+    sink.withColumn("rn", row_number().over(
+        Window.partitionBy(col("user_id")).orderBy(col("upd").desc)))
+      .filter(col("rn") === 1)
+
+  /** The sorted daily series from the partials — the refold input the
+    * twins share: [[graft.Parity.dailyMean]] per day (the exact mean,
+    * 6dp; NaN when the day holds a NaN). */
+  private[graft] def dailySeries(days: scala.collection.Map[Int, DaySum])
       : IndexedSeq[Double] =
-    days.toIndexedSeq.sortBy(_._1).map { case (_, (su, n)) =>
-      r6d(dec10ToDouble(su) / n)
+    days.toIndexedSeq.sortBy(_._1).map { case (_, ds) =>
+      ds.sum match {
+        case Some(u) if !ds.nan =>
+          val acc = new Sums(1)
+          acc.addUnscaled(0, u.bigInteger)
+          r6d(acc.toDouble(0) / ds.n)
+        case _ => Double.NaN
+      }
     }
 
   private[graft] def foldHolt(uid: Long, rows: Iterator[HoltIn],
-                       state: GroupState[HoltState]): Iterator[HoltEmit] = {
-    val (any, acc) = mergeDays(state.getOption, rows)
-    if (!any && acc.isEmpty) Iterator.empty
-    else {
-      val upd = state.getOption.map(_.upd).getOrElse(0) + 1
-      state.update(HoltState(upd, acc.toMap))
-      val (n, l, b) = foldDays(acc.toMap)
+                       state: GroupState[HoltState]): Iterator[HoltEmit] =
+    mergeDays(rows, state) { (upd, days) =>
+      val (n, l, b) = foldDays(days)
       Iterator.single(HoltEmit(uid, upd, n, l, b, r6d(l + 7 * b)))
     }
-  }
 
   private[graft] def holtFold(ev: DataFrame): Dataset[HoltEmit] = {
     val s = ev.sparkSession
     import s.implicits._
-    ev.select(col("user_id"),
-              datediff(to_date(col("ts")), lit("1970-01-01").cast("date"))
-                .as("day"),
-              col("value"))
-      .as[HoltIn]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        foldHolt)
+    dayFold(ev)(foldHolt)
   }
 
   /** Last emission per user from a drained sink → the batch output
     * shape (user_id, n_obs, level, trend, forecast). */
   private[graft] def finalizeHolt(sink: DataFrame): DataFrame =
-    sink.withColumn("rn", row_number().over(
-        Window.partitionBy(col("user_id")).orderBy(col("upd").desc)))
-      .filter(col("rn") === 1)
+    lastPerUser(sink)
       .select(col("user_id"), col("n_obs"), col("level"), col("trend"),
               col("forecast"))
       .orderBy(col("user_id"))
@@ -118,20 +145,20 @@ object StreamingHolt {
   /** The #174 batch chain's arithmetic over the day partials: davg per
     * day, first-week init, then the α/β/γ rotating-seasonal fold.
     * None below the batch operator's m+1-observation floor. */
-  private[graft] def foldDaysHw(days: scala.collection.Map[Int, (Long, Long)])
+  private[graft] def foldDaysHw(days: scala.collection.Map[Int, DaySum])
       : Option[(Long, Double, Double, IndexedSeq[Double])] = {
     import graft.operators.Round6Ops.{HwAlpha, HwBeta, HwGamma, HwSeason}
     val xs = dailySeries(days)
     if (xs.length < HwSeason + 1) None
     else {
-      val l0 = r6d(xs.take(HwSeason).foldLeft(0.0)(_ + _) / HwSeason)
+      val l0 = sqlR6d(xs.take(HwSeason).foldLeft(0.0)(_ + _) / HwSeason)
       var l = l0; var b = 0.0
-      var sArr = xs.take(HwSeason).map(x => r6d(x - l0))
+      var sArr = xs.take(HwSeason).map(x => sqlR6d(x - l0))
       xs.drop(HwSeason).foreach { x =>
         val sm = sArr.head
-        val nl = r6d(HwAlpha * (x - sm) + (1 - HwAlpha) * (l + b))
-        val nb = r6d(HwBeta * (nl - l) + (1 - HwBeta) * b)
-        val ns = r6d(HwGamma * (x - nl) + (1 - HwGamma) * sm)
+        val nl = sqlR6d(HwAlpha * (x - sm) + (1 - HwAlpha) * (l + b))
+        val nb = sqlR6d(HwBeta * (nl - l) + (1 - HwBeta) * b)
+        val ns = sqlR6d(HwGamma * (x - nl) + (1 - HwGamma) * sm)
         sArr = sArr.tail :+ ns; l = nl; b = nb
       }
       Some((xs.length.toLong, l, b, sArr))
@@ -139,37 +166,21 @@ object StreamingHolt {
   }
 
   private[graft] def foldHw(uid: Long, rows: Iterator[HoltIn],
-                            state: GroupState[HoltState]): Iterator[HwEmit] = {
-    val (any, acc) = mergeDays(state.getOption, rows)
-    if (!any && acc.isEmpty) Iterator.empty
-    else {
-      val upd = state.getOption.map(_.upd).getOrElse(0) + 1
-      state.update(HoltState(upd, acc.toMap))
-      foldDaysHw(acc).map { case (n, l, b, sArr) =>
-        HwEmit(uid, upd, n, l, b, sArr)
-      }.iterator
+                            state: GroupState[HoltState]): Iterator[HwEmit] =
+    mergeDays(rows, state) { (upd, days) =>
+      foldDaysHw(days).map { case (n, l, b, sArr) => HwEmit(uid, upd, n, l, b, sArr) }.iterator
     }
-  }
 
   private[graft] def hwFold(ev: DataFrame): Dataset[HwEmit] = {
     val s = ev.sparkSession
     import s.implicits._
-    ev.select(col("user_id"),
-              datediff(to_date(col("ts")), lit("1970-01-01").cast("date"))
-                .as("day"),
-              col("value"))
-      .as[HoltIn]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        foldHw)
+    dayFold(ev)(foldHw)
   }
 
   /** Last emission per user → the batch #174 output shape
     * (user_id, n_obs, level, trend, h, forecast). */
   private[graft] def finalizeHw(sink: DataFrame): DataFrame =
-    sink.withColumn("rn", row_number().over(
-        Window.partitionBy(col("user_id")).orderBy(col("upd").desc)))
-      .filter(col("rn") === 1)
+    lastPerUser(sink)
       .select(col("user_id"), col("n_obs"), col("level"), col("trend"),
               posexplode(col("seasonals")))
       .select(col("user_id"), col("n_obs"), col("level"), col("trend"),
@@ -179,7 +190,7 @@ object StreamingHolt {
       .orderBy(col("user_id"), col("h"))
 
   /** #177 stream_holt_winters: the #174 seasonal forecaster maintained
-    * incrementally — the same day→(decimal sum, count) partial state as
+    * incrementally — the same day → [[DaySum]] partial state as
     * [[streamHolt]] (arrival-order and chunking INVARIANT: partials
     * commute, late days land in their slot), with each emission
     * re-folding the sorted day axis through the #174 α/β/γ recursion.

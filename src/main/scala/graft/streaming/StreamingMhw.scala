@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -20,8 +20,8 @@ case class SevIn(user_id: Long, idx: Int, t_anom: Double, severity: Double,
 case class MhwStreamState(evtBase: Long, days: Seq[SevIn],
                           horizon: Int = Int.MinValue)
 
-/** One day of a closed (emitted) MHW event: the row shape
-  * [[Mhw.eventMetrics]] aggregates. */
+/** One day of a closed (emitted) MHW event: the row shape the drain's
+  * [[StreamingMhw.eventsOf]] reads. */
 case class MhwSpanDay(user_id: Long, evt: Long, index_start: Int,
                       index_end: Int, idx: Int, t_anom: Double,
                       severity: Double)
@@ -31,7 +31,7 @@ case class MhwSpanDay(user_id: Long, evt: Long, index_start: Int,
   * `calculate_mhw_metrics` — the same runs → duration filter → gap-join
   * → metrics contract, applied to a live severity feed). Run detection
   * is [[Mhw.eventChains]] and the metrics are [[Mhw.eventMetrics]], the
-  * batch detector's own.
+  * batch kernel's own.
   *
   * Semantics: per series, maintain the newest candidate event chain in
   * state; a chain is CLOSED — its days emitted — the moment a later
@@ -116,15 +116,52 @@ object StreamingMhw {
     StructField("t_anom", DoubleType), StructField("severity", DoubleType),
     StructField("hot", BooleanType)))
 
+  /** The origin scalar (first day on record) and the severity frame with
+    * the calendar index `idx` = days since that origin: the stream's
+    * input. */
+  private[graft] def indexed(sev: DataFrame): (DataFrame, DataFrame) = {
+    val origin = sev.agg(min(col("d")).as("d0"))
+    (origin, sev.crossJoin(broadcast(origin))
+      .withColumn("idx", datediff(col("d"), col("d0"))))
+  }
+
+  /** The drain's finish: the closed events' days → one metrics row per
+    * event through the batch kernel's own [[Mhw.eventMetrics]], dates
+    * off the `origin` scalar. The batch event table's columns less
+    * `severity_max`. */
+  private[graft] def eventsOf(days: DataFrame, origin: DataFrame): DataFrame = {
+    val s = days.sparkSession
+    import s.implicits._
+    val out = StructType(Seq("user_id" -> LongType, "evt" -> LongType,
+        "index_start" -> IntegerType, "index_end" -> IntegerType, "index_peak" -> IntegerType,
+        "intensity_max" -> DoubleType, "intensity_mean" -> DoubleType,
+        "intensity_cumul" -> DoubleType).map { case (n, t) => StructField(n, t) })
+    days.as[MhwSpanDay].groupByKey(d => (d.user_id, d.evt)).mapGroups {
+      (k: (Long, Long), it: Iterator[MhwSpanDay]) =>
+        val ds = it.toSeq.sortBy(_.idx)
+        val m = Mhw.eventMetrics(ds.map(d => Row(d.idx, d.t_anom, d.severity)), 0)
+        Row.fromSeq(Seq[Any](k._1, k._2, ds.head.index_start, ds.head.index_end) ++ m.init)
+    }(Encoders.row(out))
+      .crossJoin(broadcast(origin))
+      .select(col("user_id"), col("evt"),
+        col("index_start"), col("index_end"),
+        date_add(col("d0"), col("index_start")).as("date_start"),
+        date_add(col("d0"), col("index_end")).as("date_end"),
+        (col("index_end") - col("index_start") + 1).as("duration"),
+        col("index_peak"),
+        date_add(col("d0"), col("index_peak")).as("date_peak"),
+        col("intensity_max"), col("intensity_mean"), col("intensity_cumul"))
+  }
+
   /** Driver-contract entry: run the incremental detector over the
     * severity chain. The batch climatology/threshold stage materializes
     * the severity table (in a deployment that's the precomputed model
     * side), the stream consumes it through a file source and emits the
     * days of the closed events (all but each series' last), and the
-    * drain aggregates them into event metrics. */
+    * drain turns them into event metrics. */
   def streamMhwEvents(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (origin, sev) = Mhw.indexed(Mhw.severityChain(s, dir, 0.6))
+    val (origin, sev) = indexed(Mhw.severityChain(s, dir, 0.6))
     val tmp = Staging.scratchPath("mhw_sev")
     // parallel (multi-file) staging write: the file source reads any
     // number of part files, and per-batch chunking invariance is
@@ -137,9 +174,8 @@ object StreamingMhw {
       s.readStream.schema(sevSchema)
         .option("pathGlobFilter", "*.parquet").parquet(tmp).as[SevIn]
         .groupByKey(_.user_id)
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(foldMhw)) {
-      days => Mhw.eventMetrics(Mhw.withMx(days), origin).drop("severity_max")
-    }
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(foldMhw))(
+      eventsOf(_, origin))
   }
 
   /** Oracle: the batch event table minus each series' newest event. */

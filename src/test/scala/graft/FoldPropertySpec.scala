@@ -66,7 +66,7 @@ class FoldPropertySpec extends AnyFunSuite {
         (18000 + rng.nextInt(20), math.floor(rng.nextDouble() * 1e6) / 1e6))
       // direct partial accumulation -> the shared batch arithmetic
       val partials = obs.groupBy(_._1).map { case (d, vs) =>
-        d -> (vs.map(v => graft.Parity.dec10Unscaled(v._2)).sum, vs.size.toLong)
+        d -> StreamingHolt.daySum(None, vs.map(_._2))
       }
       val expected = StreamingHolt.foldDays(partials)
       val shuffled = rng.shuffle(obs)

@@ -196,23 +196,15 @@ class MhwSpec extends AnyFunSuite {
     }
   }
 
-  test("event span join compares two distinct key attributes (no self-join rewrite)") {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo}
-    import org.apache.spark.sql.catalyst.plans.logical.Join
+  test("event detection and rates add one exchange and no join to the severity frame") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, RepartitionByExpression}
+    // the memoized severity chain is cached: above its scan, each event
+    // path is the per-series kernel over one exchange, with no span join
     val sev = Mhw.severityChain(spark, "/root/testdata/sf0.001", 0.6)
     for (df <- Seq(Mhw.detectEvents(sev, 3, 2), Mhw.eventRates(sev, 3, 2))) {
-      val spanJoins = df.queryExecution.analyzed.collect {
-        case j: Join if j.condition.exists(_.references.exists(_.name == "index_start")) => j
-      }
-      assert(spanJoins.size == 1, df.queryExecution.analyzed)
-      val keyEqs = spanJoins.head.condition.toSeq.flatMap(_.collect {
-        case EqualTo(a: AttributeReference, b: AttributeReference) => (a, b)
-      })
-      assert(keyEqs.size == 1, spanJoins.head.condition)
-      keyEqs.foreach { case (a, b) =>
-        assert(a.exprId != b.exprId && a.name != b.name,
-          s"span join key $a = $b resolves only through the self-join rewrite")
-      }
+      val p = df.queryExecution.withCachedData
+      assert(p.collect { case j: Join => j }.isEmpty, p)
+      assert(p.collect { case r: RepartitionByExpression => r }.size == 1, p)
     }
   }
 

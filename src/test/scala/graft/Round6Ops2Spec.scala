@@ -255,7 +255,7 @@ class Round6Ops2Spec extends AnyFunSuite {
     }.toDF("user_id", "d", "sst")
     val batch = Round6Ops2.tsCusumAlarmDf(dl).collect()(0)
     val days = vals.zipWithIndex.map { case (v, i) =>
-      (19358 + i) -> (Parity.dec10Unscaled(v), 1L)
+      (19358 + i) -> streaming.StreamingHolt.daySum(None, Seq(v))
     }.toMap
     val Some((n, mu, sg, mx, al)) = streaming.StreamingCusum.chartOf(days)
     assert(n == batch.getLong(1) && mu == batch.getDouble(2) &&

@@ -136,7 +136,7 @@ class StreamingMhwSpec extends AnyFunSuite with TempDirs {
     // split the severity table at the median date into two files;
     // maxFilesPerTrigger=1 forces chains spanning the cut to survive a
     // batch boundary in state
-    val (origin, sev) = Mhw.indexed(Mhw.severityChain(spark, sf, 0.6))
+    val (origin, sev) = StreamingMhw.indexed(Mhw.severityChain(spark, sf, 0.6))
     val dir = tempDir("graft_mhw_stream")
     val withIdx = sev.select(col("user_id"), col("idx"), col("t_anom"),
       col("severity"), Mhw.exceeds.as("hot"))
@@ -163,8 +163,8 @@ class StreamingMhwSpec extends AnyFunSuite with TempDirs {
     q.awaitTermination()
     assert(q.recentProgress.map(_.batchId).distinct.length >= 2)
 
-    // the sink holds the closed events' days: the drain's own aggregate
-    val streamed = Mhw.eventMetrics(Mhw.withMx(spark.table("mhw_batches")), origin)
+    // the sink holds the closed events' days: the drain's own finish
+    val streamed = StreamingMhw.eventsOf(spark.table("mhw_batches"), origin)
       .select("user_id", "evt", "index_start", "index_end", "duration",
               "index_peak", "intensity_max", "intensity_mean", "intensity_cumul")
       .collect().map(_.toSeq).toSet

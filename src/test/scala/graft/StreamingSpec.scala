@@ -44,6 +44,48 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     (cols, rows.sortBy(_.mkString("\u0001")))
   }
 
+  /** A copy of the corpus' events table at a new dir, written by Spark
+    * with `f` applied: as one `events.parquet` file, or (`asDir`) as the
+    * directory of part files Spark itself writes. */
+  private def eventsCopy(prefix: String, asDir: Boolean = false)(
+      f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): String = {
+    val dir = tempDir(prefix)
+    val raw = f(spark.read.parquet(s"$sf/events.parquet"))
+    if (asDir) raw.repartition(3).write.parquet(s"$dir/events.parquet")
+    else {
+      raw.coalesce(1).write.parquet(s"$dir/w")
+      val part = new java.io.File(s"$dir/w").listFiles().filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(s"$dir/events.parquet"))
+    }
+    dir
+  }
+
+  test("stream_holt, stream_holt_winters and stream_cusum equal their batch twins on a NaN or a 1e12 observation") {
+    val first = spark.read.parquet(s"$sf/events.parquet").orderBy("user_id", "ts").first()
+    val (u, t) = (first.getAs[Any]("user_id"), first.getAs[Any]("ts"))
+    for (v <- Seq(Double.NaN, 1e12)) {
+      val dir = eventsCopy("graft_oddvalue") { ev =>
+        ev.withColumn("value", when(col("user_id") === lit(u) && col("ts") === lit(t), lit(v))
+          .otherwise(col("value")))
+      }
+      for ((stream, batch) <- Seq("stream_holt" -> "ts_holt",
+                                  "stream_holt_winters" -> "ts_holt_winters",
+                                  "stream_cusum" -> "ts_cusum_alarm")) {
+        val want = canonical(SparkEntry.queries(batch)(spark, dir))
+        assert(want._2.nonEmpty)
+        assert(canonical(SparkEntry.queries(stream)(spark, dir)) == want, s"$stream on value $v")
+      }
+    }
+  }
+
+  test("stream_holt over a Spark-written (directory) events table returns the single-file rows") {
+    val dir = eventsCopy("graft_dirtable", asDir = true)(identity)
+    assert(new java.io.File(s"$dir/events.parquet").isDirectory)
+    val want = canonical(SparkEntry.queries("stream_holt")(spark, sf))
+    assert(want._2.nonEmpty)
+    assert(canonical(SparkEntry.queries("stream_holt")(spark, dir)) == want)
+  }
+
   test("registry: each stream twin sharing a batch oracle returns the batch rows") {
     val batchBySql = SparkEntry.registry.filterNot(_.name.startsWith("stream_"))
       .groupBy(_.oracleSql)
