@@ -74,23 +74,20 @@ object Parity {
   def r6d(x: Double): Double =
     if (x.isNaN) x else math.floor(x * 1e6 + 0.5).toLong / 1e6
 
-  /** Driver-side replica of [[sqlR]] at d = 6 as Spark evaluates it:
-    * Spark's `floor` of a double is a LONG, so NaN rounds to 0.0 where
-    * [[r6d]] keeps it. The step rounding of the `aggregate` folds over
-    * [[sqlR]] that the streaming refold twins replay. */
+  /** The step rounding of the day-grain folds (Holt, Holt-Winters, the
+    * CUSUM chart): half-up at 6dp through a LONG, so NaN rounds to 0.0
+    * where [[r6d]] keeps it and ±Inf to ±Long.MaxValue/1e6. It is
+    * [[sqlR]] at d = 6 as Spark evaluates it (Spark's `floor` of a
+    * double is a long), which is what the folds' oracle SQL replays. */
   def sqlR6d(x: Double): Double = math.floor(x * 1e6 + 0.5).toLong / 1e6
 
-  /** Spark's double→DECIMAL(38,10) cast (shortest decimal repr, then
-    * HALF_UP to scale 10) as an unscaled long — the streaming-state
-    * encoding of an exact decimal sum. */
-  def dec10Unscaled(x: Double): Long =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(10, java.math.RoundingMode.HALF_UP)
-      .unscaledValue().longValueExact()
-
-  /** Scale-10 unscaled long back to double (Decimal.toDouble). */
-  def dec10ToDouble(u: Long): Double =
-    new java.math.BigDecimal(java.math.BigInteger.valueOf(u), 10).doubleValue
+  /** The exact sum of `xs` as Spark's `sum(CAST(x AS DECIMAL(38,10)))`
+    * returns it: None (SQL null) when no value casts. */
+  def exactSum(xs: IterableOnce[Double]): Option[Double] = {
+    val acc = new Sums(1)
+    xs.iterator.foreach(acc.addDouble(0, _))
+    acc.get(0)
+  }
 
   /** `size` exact sums, each Spark's `sum(CAST(x AS DECIMAL(38,10)))`
     * in JVM code — the one exact-sum accumulator of every Scala-side
@@ -124,16 +121,15 @@ object Parity {
       } else lo(i) = s
     }
 
+    /** Add `v` as Spark's double→DECIMAL(38,10) cast reads it: its
+      * shortest decimal repr, HALF_UP to scale 10. */
     def addDouble(i: Int, v: Double): Unit =
       if (!v.isNaN && !v.isInfinite) {
         any(i) = true
-        if (math.abs(v) < 9e8) addLong(i, dec10Unscaled(v))
-        else {
-          val d = java.math.BigDecimal.valueOf(v).setScale(10, java.math.RoundingMode.HALF_UP)
-          if (d.precision > 38)
-            throw new ArithmeticException(s"$v overflows DECIMAL(38,10)")
-          addWide(i, d.unscaledValue)
-        }
+        val d = java.math.BigDecimal.valueOf(v).setScale(10, java.math.RoundingMode.HALF_UP)
+        if (math.abs(v) < 9e8) addLong(i, d.unscaledValue.longValue)
+        else if (d.precision > 38) throw new ArithmeticException(s"$v overflows DECIMAL(38,10)")
+        else addWide(i, d.unscaledValue)
       }
 
     /** Add an exact scale-10 unscaled sum (a partial kept elsewhere). */
@@ -154,14 +150,20 @@ object Parity {
       if (hi(i) == null) java.math.BigInteger.valueOf(lo(i))
       else hi(i).add(java.math.BigInteger.valueOf(lo(i)))
 
-    def toDouble(i: Int): Double =
-      if (hi(i) == null) dec10ToDouble(lo(i))
-      else {
-        val d = new java.math.BigDecimal(unscaled(i), 10)
-        if (d.precision > 38)
-          throw new ArithmeticException(s"sum $d overflows DECIMAL(38,10)")
-        d.doubleValue
-      }
+    def toDouble(i: Int): Double = {
+      val d = new java.math.BigDecimal(unscaled(i), 10)
+      if (d.precision > 38) throw new ArithmeticException(s"sum $d overflows DECIMAL(38,10)")
+      d.doubleValue
+    }
+
+    /** The sum as Spark reads it: None (SQL null) when it saw no value. */
+    def get(i: Int): Option[Double] = if (any(i)) Some(toDouble(i)) else None
+
+    /** The sum as streaming state keeps it (exact, None when it saw no
+      * value); [[addState]] reads it back. */
+    def state(i: Int): Option[BigInt] = if (any(i)) Some(BigInt(unscaled(i))) else None
+
+    def addState(i: Int, u: Option[BigInt]): Unit = u.foreach(v => addUnscaled(i, v.bigInteger))
   }
 
   /** Oracle-SQL fragments mirroring the above (DuckDB dialect-safe ANSI). */

@@ -147,6 +147,31 @@ object Mhw {
     rows.mapPartitions(climKernel(c))(Encoders.row(out))
   }
 
+  /** One task's rows, sorted on their last column h (xxhash64 of the
+    * series key in column 0), one series at a time: each run of equal h
+    * is a series, unless a hash collision interleaves two keys, which
+    * are split by key. `keep` sees every row and drops those it
+    * rejects. The group loop of [[ClimKernel]] and [[eventKernel]]. */
+  private def perSeries[A](rows: Iterator[Row])(keep: Row => Boolean)(
+      series: (Any, collection.Seq[Row]) => IterableOnce[A]): Iterator[A] = {
+    val in = rows.buffered
+    Iterator.continually(in.hasNext).takeWhile(identity).flatMap { _ =>
+      val hAt = in.head.length - 1
+      val h = in.head.getLong(hAt)
+      val group = scala.collection.mutable.ArrayBuffer.empty[Row]
+      while (in.hasNext && in.head.getLong(hAt) == h) {
+        val r = in.next()
+        if (keep(r)) group += r
+      }
+      if (group.isEmpty) Iterator.empty
+      else {
+        val k0 = group.head.get(0)
+        if (group.forall(_.get(0) == k0)) series(k0, group)
+        else group.groupBy(_.get(0)).iterator.flatMap { case (k, rs) => series(k, rs) }
+      }
+    }
+  }
+
   /** [[climThresh]]'s per-partition step over rows as its exchange lays
     * them out: (user_id, doy, sst, next_ok, prev_ok, h), sorted by h. */
   private[graft] def climKernel(c: Clim)(rows: Iterator[Row]): Iterator[Row] =
@@ -172,17 +197,7 @@ object Mhw {
     private val acc = new Sums(1)
     private val exists = new Array[Boolean](Slots)
 
-    def run(rows: Iterator[Row]): Iterator[Row] = {
-      val in = rows.buffered
-      Iterator.continually(in.hasNext).takeWhile(identity).flatMap { _ =>
-        val h = in.head.getLong(5)
-        val group = scala.collection.mutable.ArrayBuffer.empty[Row]
-        while (in.hasNext && in.head.getLong(5) == h) group += in.next()
-        val k0 = group.head.get(0)
-        if (group.forall(_.get(0) == k0)) series(k0, group)
-        else group.groupBy(_.get(0)).toSeq.flatMap { case (k, rs) => series(k, rs) }
-      }
-    }
+    def run(rows: Iterator[Row]): Iterator[Row] = perSeries(rows)(_ => true)(series)
 
     /** The output rows of one series' record. */
     private def series(key: Any, rows: collection.Seq[Row]): Seq[Row] = {
@@ -732,9 +747,7 @@ object Mhw {
     val ta = vals(1)
     val imax = mx(ta.map(_._2))
     val peak = imax.flatMap(m => ta.collectFirst { case (d, v) if v == m || v.isNaN && m.isNaN => d })
-    val acc = new Sums(1)
-    ta.foreach(p => acc.addDouble(0, p._2))
-    val sum = if (acc.any(0)) Some(acc.toDouble(0)) else None
+    val sum = exactSum(ta.map(_._2))
     Seq[Option[Any]](peak, imax, sum.map(s => r6d(s / ta.count(!_._2.isNaN))), sum.map(r6d),
       mx(vals(2).map(_._2)).map(r6d(_))).map(_.orNull)
   }
@@ -754,7 +767,6 @@ object Mhw {
     * events (a null day never counts toward the first day either). */
   private[graft] def eventKernel(minDuration: Int, maxGap: Int, maxEvents: Int,
                                  spanDays: Boolean)(rows: Iterator[Row]): Iterator[Row] = {
-    val in = rows.buffered
     var lo = Int.MaxValue
     var width = 10
     def series(key: Any, rs: collection.Seq[Row]): Iterator[Row] = {
@@ -780,23 +792,12 @@ object Mhw {
           }
       }
     }
-    val events = Iterator.continually(in.hasNext).takeWhile(identity).flatMap { _ =>
-      val hAt = in.head.length - 1
-      if (spanDays) width = hAt + 11
-      val h = in.head.getLong(hAt)
-      val group = scala.collection.mutable.ArrayBuffer.empty[Row]
-      while (in.hasNext && in.head.getLong(hAt) == h) {
-        val r = in.next()
-        if (!r.isNullAt(1)) {
-          lo = math.min(lo, r.getInt(1))
-          if (!r.isNullAt(0)) group += r
-        }
-      }
-      val k0 = group.headOption.map(_.get(0)).orNull
-      if (group.isEmpty) Iterator.empty
-      else if (group.forall(_.get(0) == k0)) series(k0, group)
-      else group.groupBy(_.get(0)).iterator.flatMap { case (k, rs) => series(k, rs) }
-    }
+    // every row with a day counts toward the task's first day; rows
+    // with a null key or day make no events
+    val events = perSeries(rows) { r =>
+      if (spanDays) width = r.length + 10
+      !r.isNullAt(1) && { lo = math.min(lo, r.getInt(1)); !r.isNullAt(0) }
+    }(series)
     events ++ (if (lo == Int.MaxValue) Iterator.empty
                else Iterator.single(Row.fromSeq(Seq.fill(width - 1)(null) :+ lo)))
   }

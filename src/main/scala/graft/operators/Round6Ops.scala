@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,11 +22,11 @@ object Round6Ops {
 
   // --------------------------------------------------------- #115 ts_holt
 
-  // shared with the #139 backtest oracle (Round6Ops2) — the Spark sides
-  // already share holtFoldExpr, so the constants must too
-  private[operators] val HoltAlpha = 0.5
-  private[operators] val HoltBeta = 0.3
-  private val HoltHorizon = 7
+  // the one copy of the Holt constants: ts_holt, the #139 backtest and
+  // stream_holt fold with holtFold, and the oracles spell them from here
+  private[graft] val HoltAlpha = 0.5
+  private[graft] val HoltBeta = 0.3
+  private[graft] val HoltHorizon = 7
 
   /** #115 ts_holt: Holt's linear-trend (double-exponential) smoothing
     * per series with zero initial trend (l₀ = x₀, b₀ = 0):
@@ -34,45 +36,53 @@ object Round6Ops {
     * short-horizon forecaster of an ops pipeline (the batch twin of the
     * streaming EWMA family).
     *
-    * The recursion is inherently sequential PER SERIES, so it runs as a
-    * bounded higher-order `aggregate` fold over that series' sorted
-    * value array — the same per-key-bounded-array contract as the exact
-    * pooled quantile (≤366·years elements; series are independent →
-    * linear scaling, one shuffle). Each step rounds l and b half-up at
-    * 6dp so the fold is bit-identical to the oracle's `list_reduce`
-    * replay (both fold structs left-to-right over the same doubles).
-    * Gaps in the daily record advance the fold by observation (no
-    * implicit NaN-fill), matching the `list(sst ORDER BY d)` replay. */
+    * The recursion is inherently sequential PER SERIES: [[foldSeries]]
+    * runs [[holtFold]] over each series' sorted daily values (≤366·years
+    * elements; series are independent → linear scaling, one shuffle).
+    * Each step rounds l and b half-up at
+    * 6dp ([[graft.Parity.sqlR6d]]), so the fold is bit-identical to the
+    * oracle's `list_reduce` replay (both fold left-to-right over the
+    * same doubles). Gaps in the daily record advance the fold by
+    * observation (no implicit NaN-fill), matching the
+    * `list(sst ORDER BY d)` replay. */
   def tsHolt(s: SparkSession, dir: String): DataFrame =
     tsHoltDf(Mhw.daily(s, dir))
 
-  /** The Holt recursion as a Spark SQL `aggregate` fold over any sorted
-    * value-array expression — shared by #115 and the #139 backtest
-    * (which folds a PREFIX of the same array). */
-  private[operators] def holtFoldExpr(xs: String): String = {
-    val r6 = (x: String) => sqlR(x, 6) // Parity's ONE rounding fragment
-    val newL = r6(s"$HoltAlpha * x + ${1 - HoltAlpha} * (acc.l + acc.b)")
-    s"""aggregate(
-       |  slice($xs, 2, size($xs) - 1),
-       |  named_struct('l', element_at($xs, 1), 'b', CAST(0.0 AS DOUBLE)),
-       |  (acc, x) -> named_struct(
-       |    'l', $newL,
-       |    'b', ${r6(s"$HoltBeta * ($newL - acc.l) + ${1 - HoltBeta} * acc.b")}))"""
-      .stripMargin.replace('\n', ' ')
+  /** Each series of a daily frame (user_id, d, sst) as (user_id, n_obs,
+    * st): `fold` over its values in day order (a null sst keeps its
+    * slot), run by a UDF on the groupBy's sorted value array. The one
+    * shape of the day-grain folds (#115, #136, #139, #174). */
+  private[operators] def foldSeries[R: TypeTag](dl: DataFrame)(
+      fold: Seq[Option[Double]] => R): DataFrame =
+    dl.groupBy(col("user_id")).agg(count(lit(1)).as("n_obs"), udf(fold).apply(
+      transform(sort_array(collect_list(struct(col("d"), col("sst")))), p => p("sst"))).as("st"))
+
+  /** The Holt recursion over one series' sorted daily values: the final
+    * (level, trend). A null value nulls the level from its step on, as
+    * SQL arithmetic does, and the trend then reads 0.0: ts_holt's
+    * output contract, where the trend is never null. Each step is
+    * rounded with [[graft.Parity.sqlR6d]]. The only Holt fold: ts_holt,
+    * the #139 backtest (over the train prefix) and stream_holt run it. */
+  private[graft] def holtFold(xs: collection.Seq[Option[Double]]): (Option[Double], Double) =
+    xs.tail.foldLeft((xs.head, 0.0)) { case ((l, b), x) =>
+      val nl = for (x <- x; l <- l)
+        yield sqlR6d(HoltAlpha * x + (1 - HoltAlpha) * (l + b))
+      (nl, (for (nl <- nl; l <- l)
+        yield sqlR6d(HoltBeta * (nl - l) + (1 - HoltBeta) * b)).getOrElse(0.0))
+    }
+
+  /** One ts_holt row: the fitted level and trend, and the
+    * [[HoltHorizon]]-step forecast (6dp, NaN kept). */
+  private[graft] final case class HoltRow(level: Option[Double], trend: Double,
+                                          forecast: Option[Double])
+
+  private[graft] def holt(xs: collection.Seq[Option[Double]]): HoltRow = {
+    val (l, b) = holtFold(xs)
+    HoltRow(l, b, l.map(l => r6d(l + HoltHorizon * b)))
   }
 
-  def tsHoltDf(dl: DataFrame): DataFrame = {
-    val fold = holtFoldExpr("xs")
-    dl.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_obs"),
-           transform(sort_array(collect_list(struct(col("d"), col("sst")))),
-                     p => p("sst")).as("xs"))
-      .withColumn("st", expr(fold))
-      .select(col("user_id"), col("n_obs"),
-              col("st.l").as("level"), col("st.b").as("trend"))
-      .withColumn("forecast",
-        r(col("level") + lit(HoltHorizon) * col("trend"), 6))
-  }
+  def tsHoltDf(dl: DataFrame): DataFrame =
+    foldSeries(dl)(holt).select(col("user_id"), col("n_obs"), col("st.*"))
 
   val tsHoltSql: String = {
     val r6 = (x: String) => sqlR(x, 6) // Parity's ONE rounding fragment
@@ -104,6 +114,8 @@ object Round6Ops {
 
   // ------------------------------------------------ #174 ts_holt_winters
 
+  // the one copy of the Holt-Winters constants (ts_holt_winters,
+  // stream_holt_winters and the oracle)
   private[graft] val HwAlpha = 0.5
   private[graft] val HwBeta = 0.3
   private[graft] val HwGamma = 0.2
@@ -123,46 +135,53 @@ object Round6Ops {
     * backtests Holt WITHOUT seasonality; this is the model that
     * removes the weekly residual it leaves.
     *
-    * Scale shape: identical to #115 — one bounded sorted-array fold
-    * per series (state = 9 doubles), every step 6dp-rounded so the
-    * oracle's list_reduce replay (9-element LIST state — the DuckDB
+    * Scale shape: identical to #115 — [[foldSeries]] runs
+    * [[holtWinters]] (state = 9 doubles), every step 6dp-rounded so
+    * the oracle's list_reduce replay (9-element LIST state — the DuckDB
     * struct-accumulator bug workaround) is bit-identical; series are
     * independent, one shuffle, nothing key-proportional. */
   def tsHoltWinters(s: SparkSession, dir: String): DataFrame =
     tsHoltWintersDf(Mhw.daily(s, dir))
 
-  def tsHoltWintersDf(dl: DataFrame): DataFrame = {
-    val r6 = (x: String) => sqlR(x, 6)
-    val m = HwSeason
-    val l0 = r6(s"aggregate(slice(xs, 1, $m), CAST(0.0 AS DOUBLE), (a, x) -> a + x) / $m")
-    val sInit = (1 to m).map(i => r6(s"element_at(xs, $i) - l0")).mkString(", ")
-    val newL = r6(s"$HwAlpha * (x - element_at(acc, 3)) + ${1 - HwAlpha} * (element_at(acc, 1) + element_at(acc, 2))")
-    val newB = r6(s"$HwBeta * (($newL) - element_at(acc, 1)) + ${1 - HwBeta} * element_at(acc, 2)")
-    val newS = r6(s"$HwGamma * (x - ($newL)) + ${1 - HwGamma} * element_at(acc, 3)")
-    val fold =
-      s"""aggregate(
-         |  slice(xs, ${m + 1}, size(xs) - $m),
-         |  concat(array(l0, CAST(0.0 AS DOUBLE)), array($sInit)),
-         |  (acc, x) -> concat(
-         |    array($newL, $newB), slice(acc, 4, ${m - 1}), array($newS)))"""
-        .stripMargin.replace('\n', ' ')
-    val fc = (1 to m).map(h =>
-      r6(s"element_at(st, 1) + $h * element_at(st, 2) + element_at(st, ${2 + h})"))
-      .mkString(", ")
-    dl.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_obs"),
-           transform(sort_array(collect_list(struct(col("d"), col("sst")))),
-                     p => p("sst")).as("xs"))
-      .filter(col("n_obs") >= m + 1)
-      .withColumn("l0", expr(l0))
-      .withColumn("st", expr(fold))
+  /** One ts_holt_winters series: the final level and trend and the
+    * forecasts h = 1…m, each null once a null value reached it. */
+  private[graft] final case class HwRow(level: Option[Double], trend: Option[Double],
+                                        forecasts: Seq[Option[Double]])
+
+  /** The Holt-Winters recursion over one series' sorted daily values,
+    * None below m + 1 values. A null value flows through the SQL
+    * arithmetic (it nulls what it touches); every step, the first-week
+    * mean and the forecasts are rounded with [[graft.Parity.sqlR6d]].
+    * The only Holt-Winters fold: ts_holt_winters and
+    * stream_holt_winters run it. */
+  private[graft] def holtWinters(xs: collection.Seq[Option[Double]]): Option[HwRow] =
+    Option.when(xs.length >= HwSeason + 1) {
+      val first = xs.take(HwSeason)
+      val l0 = first.foldLeft(Option(0.0))((a, x) => for (a <- a; x <- x) yield a + x)
+        .map(t => sqlR6d(t / HwSeason))
+      val init = (l0, Option(0.0), first.map(x => for (x <- x; l <- l0) yield sqlR6d(x - l)))
+      val (l, b, ss) = xs.drop(HwSeason).foldLeft(init) { case ((l, b, ss), x) =>
+        val sm = ss.head
+        val nl = for (x <- x; sm <- sm; l <- l; b <- b)
+          yield sqlR6d(HwAlpha * (x - sm) + (1 - HwAlpha) * (l + b))
+        val nb = for (nl <- nl; l <- l; b <- b)
+          yield sqlR6d(HwBeta * (nl - l) + (1 - HwBeta) * b)
+        val ns = for (x <- x; nl <- nl; sm <- sm)
+          yield sqlR6d(HwGamma * (x - nl) + (1 - HwGamma) * sm)
+        (nl, nb, ss.tail :+ ns)
+      }
+      HwRow(l, b, ss.indices.map(i =>
+        for (l <- l; b <- b; s <- ss(i)) yield sqlR6d(l + (i + 1) * b + s)))
+    }
+
+  def tsHoltWintersDf(dl: DataFrame): DataFrame =
+    foldSeries(dl)(holtWinters)
+      .filter(col("n_obs") >= HwSeason + 1)
       .select(col("user_id"), col("n_obs"),
-              col("st")(0).as("level"), col("st")(1).as("trend"),
-              posexplode(expr(s"array($fc)")))
+              col("st.level"), col("st.trend"), posexplode(col("st.forecasts")))
       .select(col("user_id"), col("n_obs"), col("level"), col("trend"),
               (col("pos") + 1).cast("int").as("h"), col("col").as("forecast"))
       .orderBy(col("user_id"), col("h"))
-  }
 
   val tsHoltWintersSql: String = {
     val r6 = (x: String) => sqlR(x, 6)

@@ -31,7 +31,7 @@ object Round6Ops19 {
     *
     * Scale shape: the transition model is the #159 model-sized
     * collect; both fixed points iterate driver-side over the ≤|states|²
-    * matrix with the dec10 discipline; the result is a |states|-row
+    * matrix with exact decimal sums; the result is a |states|-row
     * table. */
   def eventsMarkovHittingTime(s: SparkSession, dir: String): DataFrame = {
     val rows = Round6Ops3.markovTransitions(s, dir)
@@ -40,8 +40,7 @@ object Round6Ops19 {
       rows.map { case (p, n, pr) => (p, n) -> pr }.toMap.withDefaultValue(0.0)
     val absorbing = Set("CONV", "NULL")
     def decDot(v: Map[String, Double], st: String): Double =
-      graft.Parity.dec10ToDouble(
-        states.map(nx => graft.Parity.dec10Unscaled(mat((st, nx)) * v(nx))).sum)
+      graft.Parity.exactSum(states.map(nx => mat((st, nx)) * v(nx))).getOrElse(0.0)
     var p: Map[String, Double] =
       states.map(st => st -> (if (st == "CONV") 1.0 else 0.0)).toMap
     var t: Map[String, Double] = states.map(_ -> 0.0).toMap

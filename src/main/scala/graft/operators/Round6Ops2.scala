@@ -138,54 +138,54 @@ object Round6Ops2 {
 
   // --------------------------------------- #139 ts_forecast_backtest
 
-  private val BtHorizon = 7
+  private[graft] val BtHorizon = 7
 
   /** #139 ts_forecast_backtest: rolling-origin evaluation of the #115
     * Holt forecaster — hold out each series' final [[BtHorizon]]
-    * observations, fit level+trend on the prefix (the SAME fold
-    * expression, via [[Round6Ops.holtFoldExpr]]), forecast h = 1…H, and
-    * score MAE against the actuals next to the naive last-value
-    * baseline; skill = 1 − MAE_holt/MAE_naive. The backtest is what
-    * turns a forecaster from code into a trusted monitor — no model
-    * ships without one.
+    * observations, fit level+trend on the prefix (the SAME fold,
+    * [[Round6Ops.holtFold]]), forecast h = 1…H, and score MAE against
+    * the actuals next to the naive last-value baseline;
+    * skill = 1 − MAE_holt/MAE_naive. The backtest is what turns a
+    * forecaster from code into a trusted monitor — no model ships
+    * without one.
     *
-    * Same bounded-sorted-array contract as #115: one shuffle, the
-    * holdout arithmetic is per-row higher-order expressions over ≤ H
-    * elements. Error sums fold left-to-right over H doubles in both
-    * engines (same order → same bits; no decimal needed). */
+    * Same shape as #115: [[Round6Ops.foldSeries]] runs [[backtest]]
+    * over each series' sorted daily values. Error sums fold
+    * left-to-right over H doubles in both engines (same order → same
+    * bits; no decimal needed). */
   def tsForecastBacktest(s: SparkSession, dir: String): DataFrame =
     tsForecastBacktestDf(Mhw.daily(s, dir))
 
-  def tsForecastBacktestDf(dl: DataFrame): DataFrame = {
-    val r6 = (x: String) => sqlR(x, 6)
-    val fold = Round6Ops.holtFoldExpr(s"slice(xs, 1, size(xs) - $BtHorizon)")
-    val errsHolt =
-      s"""transform(sequence(1, $BtHorizon),
-         |  h -> abs(element_at(xs, size(xs) - $BtHorizon + h) -
-         |           ${r6("st.l + h * st.b")}))""".stripMargin.replace('\n', ' ')
-    val errsNaive =
-      s"""transform(sequence(1, $BtHorizon),
-         |  h -> abs(element_at(xs, size(xs) - $BtHorizon + h) -
-         |           element_at(xs, size(xs) - $BtHorizon)))"""
-        .stripMargin.replace('\n', ' ')
-    def mae(errs: String) =
-      r(expr(s"aggregate($errs, CAST(0.0 AS DOUBLE), (a, x) -> a + x)") /
-        BtHorizon.toDouble, 6)
-    dl.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_obs"),
-           transform(sort_array(collect_list(struct(col("d"), col("sst")))),
-                     p => p("sst")).as("xs"))
+  /** One ts_forecast_backtest row (the columns after n_obs). */
+  private[graft] final case class BacktestRow(
+      level: Option[Double], trend: Double, mae_holt: Option[Double],
+      mae_naive: Option[Double], skill: Option[Double])
+
+  /** The backtest of one series' sorted daily values, None below H + 2:
+    * the Holt fit of all but the last H, its h-step forecasts (rounded
+    * with [[graft.Parity.sqlR6d]]) and the naive last-value forecast,
+    * each scored by its 6dp MAE over the last H values. SQL's rules
+    * hold: a null nulls the sum it enters, and a NaN naive MAE counts
+    * as above 0 (NaN sorts above every number). */
+  private[graft] def backtest(xs: collection.Seq[Option[Double]]): Option[BacktestRow] =
+    Option.when(xs.length >= BtHorizon + 2) {
+      val n = xs.length
+      val (l, b) = Round6Ops.holtFold(xs.take(n - BtHorizon))
+      def mae(forecast: Int => Option[Double]): Option[Double] =
+        (1 to BtHorizon).foldLeft(Option(0.0)) { (acc, h) =>
+          for (a <- acc; x <- xs(n - BtHorizon - 1 + h); f <- forecast(h)) yield a + math.abs(x - f)
+        }.map(t => r6d(t / BtHorizon.toDouble))
+      val maeHolt = mae(h => l.map(l => sqlR6d(l + h * b)))
+      val maeNaive = mae(_ => xs(n - BtHorizon - 1))
+      BacktestRow(l, b, maeHolt, maeNaive,
+        for (mh <- maeHolt; mn <- maeNaive if mn > 0.0 || mn.isNaN) yield r6d(1.0 - mh / mn))
+    }
+
+  def tsForecastBacktestDf(dl: DataFrame): DataFrame =
+    Round6Ops.foldSeries(dl)(backtest)
       .filter(col("n_obs") >= BtHorizon + 2)
-      .withColumn("st", expr(fold))
-      .withColumn("mae_holt", mae(errsHolt))
-      .withColumn("mae_naive", mae(errsNaive))
-      .select(col("user_id"), col("n_obs"),
-              col("st.l").as("level"), col("st.b").as("trend"),
-              col("mae_holt"), col("mae_naive"),
-              when(col("mae_naive") > 0.0,
-                r(lit(1.0) - col("mae_holt") / col("mae_naive"), 6)).as("skill"))
+      .select(col("user_id"), col("n_obs"), col("st.*"))
       .orderBy(col("user_id"))
-  }
 
   val tsForecastBacktestSql: String = {
     val r6 = (x: String) => sqlR(x, 6)
@@ -269,8 +269,10 @@ object Round6Ops2 {
 
   // -------------------------------------------- #136 ts_cusum_alarm
 
-  private val CusumK = 0.5 // slack, in σ units
-  private val CusumH = 4.0 // alarm threshold, in σ units
+  // the one copy of the CUSUM constants (ts_cusum_alarm, stream_cusum
+  // and the oracle)
+  private[graft] val CusumK = 0.5 // slack, in σ units
+  private[graft] val CusumH = 4.0 // alarm threshold, in σ units
 
   /** #136 ts_cusum_alarm: the SEQUENTIAL one-sided CUSUM control chart
     * per series — s⁺_t = max(0, s⁺_{t−1} + (x_t − μ − K·σ)), alarm
@@ -281,47 +283,55 @@ object Round6Ops2 {
     * after the fact, the CUSUM chart counts how often the monitored
     * process would have paged.
     *
-    * μ and σ come from decimal-exact moments in the SAME groupBy that
-    * builds the bounded sorted value array; the recursion is the
-    * ts_holt `aggregate`-fold contract (per-step 6dp rounding, struct
-    * state on the Spark side, list-typed state in the oracle's
-    * list_reduce — the documented DuckDB workaround). One shuffle,
-    * state O(1) per step, array bounded per key. */
+    * [[Round6Ops.foldSeries]] runs [[cusumChart]] over each series'
+    * sorted daily values: μ and σ from exact decimal moments,
+    * then the chart with per-step 6dp rounding (the oracle replays it
+    * with list-typed state in list_reduce — the documented DuckDB
+    * workaround). One shuffle, state O(1) per step, array bounded per
+    * key. */
   def tsCusumAlarm(s: SparkSession, dir: String): DataFrame =
     tsCusumAlarmDf(Mhw.daily(s, dir))
 
-  def tsCusumAlarmDf(dl: DataFrame): DataFrame = {
-    val r6 = (x: String) => sqlR(x, 6)
-    val sp = r6(s"greatest(CAST(0.0 AS DOUBLE), acc.sp + (x - mu - $CusumK * sg))")
-    val fold =
-      s"""aggregate(xs,
-         |  named_struct('sp', CAST(0.0 AS DOUBLE), 'mx', CAST(0.0 AS DOUBLE),
-         |               'al', CAST(0.0 AS DOUBLE), 'ab', CAST(0.0 AS DOUBLE)),
-         |  (acc, x) -> named_struct(
-         |    'sp', $sp,
-         |    'mx', greatest(acc.mx, $sp),
-         |    'al', acc.al + (CASE WHEN $sp > $CusumH * sg AND acc.ab = 0.0
-         |                         THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END),
-         |    'ab', CASE WHEN $sp > $CusumH * sg
-         |               THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END))"""
-        .stripMargin.replace('\n', ' ')
-    dl.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_obs"),
-           dsum(col("sst")).as("sx"),
-           dsum(col("sst") * col("sst")).as("sxx"),
-           transform(sort_array(collect_list(struct(col("d"), col("sst")))),
-                     p => p("sst")).as("xs"))
-      .filter(col("n_obs") >= 2)
-      .withColumn("mu", r(col("sx") / col("n_obs"), 6))
-      .withColumn("sg", r(sqrt(greatest(lit(0.0),
-        (col("sxx") - col("n_obs") * col("mu") * col("mu")) /
-          (col("n_obs") - 1))), 6))
-      .withColumn("st", expr(fold))
-      .select(col("user_id"), col("n_obs"), col("mu"), col("sg").as("sigma"),
-              col("st.mx").as("cusum_max"),
-              col("st.al").cast("long").as("n_alarms"))
-      .orderBy(col("user_id"))
+  /** One ts_cusum_alarm row (the columns after n_obs). */
+  private[graft] final case class CusumRow(mu: Option[Double], sigma: Double,
+                                           cusum_max: Double, n_alarms: Long)
+
+  /** The CUSUM chart of one series' sorted daily values, None below two
+    * values. μ = Σx/n and σ (the n−1 sample deviation from Σx²) come
+    * from exact DECIMAL(38,10) sums ([[graft.Parity.Sums]]: null, NaN
+    * and ±Inf add nothing, n counts every day) and are rounded at 6dp.
+    * The arithmetic follows SQL's rules: `greatest` skips a null (σ is 0
+    * when μ is null; a step that meets a null restarts at 0), NaN sorts
+    * above every number, each step
+    * is rounded with [[graft.Parity.sqlR6d]]. The only CUSUM chart:
+    * ts_cusum_alarm and stream_cusum run it. */
+  private[graft] def cusumChart(xs: collection.Seq[Option[Double]]): Option[CusumRow] = {
+    val n = xs.length
+    Option.when(n >= 2) {
+      val acc = new Sums(2)
+      xs.flatten.foreach { x => acc.addDouble(0, x); acc.addDouble(1, x * x) }
+      val mu = acc.get(0).map(sx => r6d(sx / n))
+      val sg = r6d(math.sqrt(
+        (for (sxx <- acc.get(1); mu <- mu) yield (sxx - n * mu * mu) / (n - 1))
+          .fold(0.0)(math.max(0.0, _))))
+      var sp = 0.0; var mx = 0.0; var al = 0L; var above = false
+      xs.foreach { x =>
+        sp = sqlR6d((for (x <- x; mu <- mu) yield sp + (x - mu - CusumK * sg))
+          .fold(0.0)(math.max(0.0, _)))
+        mx = math.max(mx, sp)
+        val now = sp > CusumH * sg
+        if (now && !above) al += 1
+        above = now
+      }
+      CusumRow(mu, sg, mx, al)
+    }
   }
+
+  def tsCusumAlarmDf(dl: DataFrame): DataFrame =
+    Round6Ops.foldSeries(dl)(cusumChart)
+      .filter(col("n_obs") >= 2)
+      .select(col("user_id"), col("n_obs"), col("st.*"))
+      .orderBy(col("user_id"))
 
   val tsCusumAlarmSql: String = {
     val r6 = (x: String) => sqlR(x, 6)

@@ -215,8 +215,8 @@ object Round6Ops3 {
             case "CONV" => 1.0
             case "NULL" => 0.0
             case c if removed.contains(c) => 0.0
-            case c => graft.Parity.r6d(graft.Parity.dec10ToDouble(
-              states.map(nx => graft.Parity.dec10Unscaled(mat((c, nx)) * p(nx))).sum))
+            case c => graft.Parity.r6d(graft.Parity.exactSum(
+              states.map(nx => mat((c, nx)) * p(nx))).getOrElse(0.0))
           })
         }.toMap
       }
@@ -229,8 +229,7 @@ object Round6Ops3 {
       val re = if (pFull > 0.0) graft.Parity.r6d(1.0 - pc / pFull) else 0.0
       (c, pFull, pc, re)
     }
-    val totRe = graft.Parity.dec10ToDouble(
-      res.map(t => graft.Parity.dec10Unscaled(t._4)).sum)
+    val totRe = graft.Parity.exactSum(res.map(_._4)).getOrElse(0.0)
     import s.implicits._
     res.toSeq.map { case (c, pf, pc, re) =>
       (c, pf, pc, re,

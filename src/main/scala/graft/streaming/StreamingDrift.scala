@@ -5,104 +5,96 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.Parity
+
 /** #120 stream_centroid_drift: the #113 embedding distribution-shift
-  * monitor maintained INCREMENTALLY — per-label, per-component decimal
-  * sums and cohort counts ARE the streaming state, folded by one
-  * `flatMapGroupsWithState` keyed on the label. State is O(dims) longs
-  * per label (the exact-decimal sums carried as scale-10 unscaled
-  * longs — exact while |Σx| < 9.2e8, far past any per-label cohort this
-  * sketch monitors; the same portability trick as the md5-affine hash
-  * family), so a continuous deployment holds |labels| × dims × 4 longs
-  * total, no watermark needed.
+  * monitor maintained INCREMENTALLY — per-label, per-component exact
+  * decimal sums and counts of both cohorts ARE the streaming state,
+  * folded by one `flatMapGroupsWithState` keyed on the label. State is
+  * O(dims) per label (each sum kept as its exact scale-10 unscaled
+  * integer, [[graft.Parity.Sums]]), so a continuous deployment holds
+  * |labels| × dims × 2 cells total, no watermark needed.
   *
-  * The fold is order/chunking-invariant (sums commute) and the
-  * finalize replays the batch operator's exact arithmetic — scale-10
-  * decimal → double, divide by count, half-up 6dp round, L2 over the
-  * component deltas — so the drained stream's report is BIT-IDENTICAL
-  * to batch [[graft.operators.Similarity2.embCentroidDrift]]
-  * (spec-pinned) and shares its DuckDB oracle.
+  * The fold is order/chunking-invariant (sums commute) and each
+  * emission replays the batch operator's exact arithmetic — per
+  * component the exact mean of its non-NaN values at 6dp (a NaN or null
+  * component adds nothing, as in [[graft.Parity.davg]]), then the L2 of
+  * the component deltas over an exact sum — so the drained stream's
+  * report is BIT-IDENTICAL to batch
+  * [[graft.operators.Similarity2.embCentroidDrift]] (spec-pinned) and
+  * shares its DuckDB oracle.
   */
 object StreamingDrift {
 
-  private[graft] case class DriftIn(label: Int, par: Long, x: Seq[Double])
+  private[graft] case class DriftIn(label: Int, par: Long, x: Seq[Option[Double]])
+  /** Per cell `2·pos + par`: the count of non-null values (`n`), of
+    * non-null non-NaN values (`m`, the mean's divisor) and the exact
+    * sum, None while it saw no finite value. */
   private[graft] case class DriftStateRow(
-      upd: Int, sa: Array[Long], na: Long, sb: Array[Long], nb: Long)
+      upd: Int, n: Seq[Long], m: Seq[Long], sums: Seq[Option[BigInt]])
   private[graft] case class DriftEmit(
-      label: Int, upd: Int,
-      sa: Array[Long], na: Long, sb: Array[Long], nb: Long)
-
+      label: Int, upd: Int, n_a: Long, n_b: Long, drift_l2: Option[Double])
 
   private[graft] def foldDrift(label: Int, rows: Iterator[DriftIn],
                         state: GroupState[DriftStateRow]): Iterator[DriftEmit] = {
-    var st = state.getOption.orNull
-    rows.foreach { r =>
-      if (st == null)
-        st = DriftStateRow(0, new Array[Long](r.x.length), 0L,
-                           new Array[Long](r.x.length), 0L)
-      val tgt = if (r.par == 0L) st.sa else st.sb
-      var i = 0
-      while (i < r.x.length) { tgt(i) += graft.Parity.dec10Unscaled(r.x(i)); i += 1 }
-      st = if (r.par == 0L) st.copy(na = st.na + 1) else st.copy(nb = st.nb + 1)
-    }
-    if (st == null) Iterator.empty
+    val prev = state.getOption
+    val in = rows.toSeq
+    if (in.isEmpty) Iterator.empty
     else {
+      val cells = (prev.fold(0)(_.n.length) +: in.map(2 * _.x.length)).max
+      val n, m = new Array[Long](cells)
+      val acc = new Parity.Sums(cells)
+      prev.foreach { st =>
+        st.n.copyToArray(n); st.m.copyToArray(m)
+        st.sums.zipWithIndex.foreach { case (u, j) => acc.addState(j, u) }
+      }
+      for (r <- in; (x, pos) <- r.x.zipWithIndex; v <- x) {
+        val j = 2 * pos + r.par.toInt
+        n(j) += 1
+        if (!v.isNaN) { m(j) += 1; acc.addDouble(j, v) }
+      }
       // deterministic per-key update counter orders the Update-mode
       // emissions (the KmvSketchRow pattern) - no clock involved
-      st = st.copy(upd = state.getOption.map(_.upd).getOrElse(0) + 1)
-      state.update(st)
-      Iterator.single(DriftEmit(label, st.upd, st.sa, st.na, st.sb, st.nb))
+      val upd = prev.fold(0)(_.upd) + 1
+      state.update(DriftStateRow(upd, n.toSeq, m.toSeq, (0 until cells).map(acc.state)))
+      // the batch's final stage: components both cohorts hold, their
+      // 6dp means, then the L2 of the deltas over an exact sum
+      val both = (0 until cells / 2).filter(p => n(2 * p) > 0 && n(2 * p + 1) > 0)
+      def mean(j: Int) = acc.get(j).map(t => Parity.r6d(t / m(j)))
+      if (both.isEmpty) Iterator.empty
+      else Iterator.single(DriftEmit(label, upd,
+        both.map(p => n(2 * p)).min, both.map(p => n(2 * p + 1)).min,
+        Parity.exactSum(both.flatMap(p =>
+          for (ca <- mean(2 * p); cb <- mean(2 * p + 1)) yield (ca - cb) * (ca - cb)))
+          .map(t => Parity.r6d(math.sqrt(t)))))
     }
   }
 
   /** The fold pipeline over any embeddings frame (streaming or batch
     * — the chunking-invariance spec drives batch slices through it).
     * Cohorts split on SIGNED vec_id parity exactly like the batch
-    * operator (a negative id joins neither cohort). */
+    * operator (a negative id joins neither cohort, a null embedding
+    * adds nothing). */
   private[graft] def driftFold(emb: DataFrame): Dataset[DriftEmit] = {
     val s = emb.sparkSession
     import s.implicits._
     emb.select(col("label"), (col("vec_id") % 2).as("par"),
                transform(col("embedding"), _.cast("double")).as("x"))
-      .filter(col("par").isin(0L, 1L))
+      .filter(col("par").isin(0L, 1L) && col("x").isNotNull)
       .as[DriftIn]
       .groupByKey(_.label)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
         foldDrift)
   }
 
-  /** Finalize a drained sink: last emission per label (window over the
-    * ≤ labels × batches sink), then the batch operator's exact final
-    * arithmetic per component and label. */
-  private[graft] def finalizeDrift(sink: DataFrame): DataFrame = {
-    val s = sink.sparkSession
-    import s.implicits._
-    val last = sink.withColumn("rn", row_number().over(
+  /** Finalize a drained sink: the last emission per label (a window
+    * over the ≤ labels × batches sink). */
+  private[graft] def finalizeDrift(sink: DataFrame): DataFrame =
+    sink.withColumn("rn", row_number().over(
         Window.partitionBy(col("label")).orderBy(col("upd").desc)))
       .filter(col("rn") === 1)
-      .select(col("label"), col("sa"), col("na"), col("sb"), col("nb"))
-      .as[(Int, Array[Long], Long, Array[Long], Long)]
-    // per-(label, pos) means with the batch davg bit-arithmetic, then
-    // the L2 finalize — computed JVM-side over the model-sized sketch
-    // (|labels| × dims values), exactly like the batch's final stage
-    last.flatMap { case (label, sa, na, sb, nb) =>
-      if (na == 0 || nb == 0) Iterator.empty
-      else {
-        var ss = java.math.BigDecimal.ZERO
-        var i = 0
-        while (i < sa.length) {
-          val ca = graft.Parity.r6d(graft.Parity.dec10ToDouble(sa(i)) / na)
-          val cb = graft.Parity.r6d(graft.Parity.dec10ToDouble(sb(i)) / nb)
-          val d = ca - cb
-          // the batch dsum: per-term double product cast DECIMAL(38,10)
-          ss = ss.add(java.math.BigDecimal.valueOf(d * d)
-            .setScale(10, java.math.RoundingMode.HALF_UP))
-          i += 1
-        }
-        Iterator.single((label, na, nb, graft.Parity.r6d(math.sqrt(ss.doubleValue))))
-      }
-    }.toDF("label", "n_a", "n_b", "drift_l2")
+      .select(col("label"), col("n_a"), col("n_b"), col("drift_l2"))
       .orderBy(col("label"))
-  }
 
   /** Driver-contract entry: stream the embeddings file through the
     * fold, finalize the drained sink. */

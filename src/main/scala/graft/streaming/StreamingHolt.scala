@@ -14,46 +14,44 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * out-of-order days land in their slot), at O(days) state per key —
   * calendar-bounded, the same boundedness argument as the panel-mean
   * broadcast in ts_cross_corr, and the same emit-cumulative/last-wins
-  * protocol as stream_kmv. The re-fold per emission costs O(days) with
-  * the identical arithmetic as batch ts_holt (davg per day, 6dp-rounded
-  * α/β steps), so the drained stream is BIT-IDENTICAL to the batch
-  * operator (spec-pinned) and shares its oracle.
+  * protocol as stream_kmv. Each emission runs batch ts_holt's own fold,
+  * [[graft.operators.Round6Ops.holtFold]], over [[dailySeries]] (the
+  * daily means of [[graft.Parity.dailyMean]]), so the drained stream is
+  * BIT-IDENTICAL to the batch operator (spec-pinned) and shares its
+  * oracle. Null observations, all-null and all-±Inf days are read as
+  * the batch reads them.
   */
 object StreamingHolt {
 
-  private[graft] case class HoltIn(user_id: Long, day: Int, value: Double)
+  private[graft] case class HoltIn(user_id: Long, day: Int, value: Option[Double])
   /** One day's partial: the exact scale-10 sum of its finite values
-    * (None: it holds none), its count of non-NaN values and whether it
-    * held a NaN — what [[graft.Parity.dailyMean]] needs. */
+    * (None: it holds none), its count of non-null, non-NaN values and
+    * whether it held a NaN — what [[graft.Parity.dailyMean]] needs. */
   private[graft] case class DaySum(sum: Option[BigInt], n: Long, nan: Boolean)
   private[graft] case class HoltState(upd: Int, days: Map[Int, DaySum])
   private[graft] case class HoltEmit(
       user_id: Long, upd: Int, n_obs: Long,
-      level: Double, trend: Double, forecast: Double)
+      level: Option[Double], trend: Double, forecast: Option[Double])
 
-  import graft.Parity.{Sums, r6d, sqlR6d}
+  import graft.Parity.{Sums, r6d}
+  import graft.operators.Round6Ops.{HoltRow, HwRow, holt, holtWinters}
 
-  /** The batch chain's arithmetic over the day partials: the daily
-    * mean per day, then the α=0.5/β=0.3 fold with Spark's step
-    * rounding. */
-  private[graft] def foldDays(days: Map[Int, DaySum]): (Long, Double, Double) = {
+  /** ts_holt's row over the day partials: the day count and
+    * [[graft.operators.Round6Ops.holt]] of the daily series. */
+  private[graft] def foldDays(days: Map[Int, DaySum]): (Long, HoltRow) = {
     val xs = dailySeries(days)
-    var l = xs.head; var b = 0.0
-    xs.tail.foreach { x =>
-      val nl = sqlR6d(0.5 * x + 0.5 * (l + b))
-      b = sqlR6d(0.3 * (nl - l) + 0.7 * b); l = nl
-    }
-    (xs.length.toLong, l, b)
+    (xs.length.toLong, holt(xs))
   }
 
   /** `prev` with the values `vs` of the same day added, through the
     * exact-sum accumulator. */
-  private[graft] def daySum(prev: Option[DaySum], vs: Seq[Double]): DaySum = {
+  private[graft] def daySum(prev: Option[DaySum], vs: Seq[Option[Double]]): DaySum = {
     val acc = new Sums(1)
-    prev.flatMap(_.sum).foreach(u => acc.addUnscaled(0, u.bigInteger))
-    vs.foreach(acc.addDouble(0, _))
-    DaySum(if (acc.any(0)) Some(BigInt(acc.unscaled(0))) else None,
-      prev.fold(0L)(_.n) + vs.count(!_.isNaN), prev.exists(_.nan) || vs.exists(_.isNaN))
+    acc.addState(0, prev.flatMap(_.sum))
+    val xs = vs.flatten
+    xs.foreach(acc.addDouble(0, _))
+    DaySum(acc.state(0), prev.fold(0L)(_.n) + xs.count(!_.isNaN),
+      prev.exists(_.nan) || xs.exists(_.isNaN))
   }
 
   /** The shared state transition of every day-grain refold twin (#126
@@ -94,25 +92,25 @@ object StreamingHolt {
       .filter(col("rn") === 1)
 
   /** The sorted daily series from the partials — the refold input the
-    * twins share: [[graft.Parity.dailyMean]] per day (the exact mean,
-    * 6dp; NaN when the day holds a NaN). */
+    * twins share, [[graft.Parity.dailyMean]] per day: NaN when the day
+    * holds a NaN, else null when it holds no finite value, else the
+    * exact mean at 6dp. */
   private[graft] def dailySeries(days: scala.collection.Map[Int, DaySum])
-      : IndexedSeq[Double] =
+      : IndexedSeq[Option[Double]] =
     days.toIndexedSeq.sortBy(_._1).map { case (_, ds) =>
-      ds.sum match {
-        case Some(u) if !ds.nan =>
-          val acc = new Sums(1)
-          acc.addUnscaled(0, u.bigInteger)
-          r6d(acc.toDouble(0) / ds.n)
-        case _ => Double.NaN
+      if (ds.nan) Some(Double.NaN)
+      else ds.sum.map { u =>
+        val acc = new Sums(1)
+        acc.addState(0, Some(u))
+        r6d(acc.toDouble(0) / ds.n)
       }
     }
 
   private[graft] def foldHolt(uid: Long, rows: Iterator[HoltIn],
                        state: GroupState[HoltState]): Iterator[HoltEmit] =
     mergeDays(rows, state) { (upd, days) =>
-      val (n, l, b) = foldDays(days)
-      Iterator.single(HoltEmit(uid, upd, n, l, b, r6d(l + 7 * b)))
+      val (n, h) = foldDays(days)
+      Iterator.single(HoltEmit(uid, upd, n, h.level, h.trend, h.forecast))
     }
 
   private[graft] def holtFold(ev: DataFrame): Dataset[HoltEmit] = {
@@ -140,35 +138,23 @@ object StreamingHolt {
 
   private[graft] case class HwEmit(
       user_id: Long, upd: Int, n_obs: Long,
-      level: Double, trend: Double, seasonals: Seq[Double])
+      level: Option[Double], trend: Option[Double], forecasts: Seq[Option[Double]])
 
-  /** The #174 batch chain's arithmetic over the day partials: davg per
-    * day, first-week init, then the α/β/γ rotating-seasonal fold.
-    * None below the batch operator's m+1-observation floor. */
+  /** ts_holt_winters' series over the day partials: the day count and
+    * [[graft.operators.Round6Ops.holtWinters]] of the daily series;
+    * None below its m+1-day floor. */
   private[graft] def foldDaysHw(days: scala.collection.Map[Int, DaySum])
-      : Option[(Long, Double, Double, IndexedSeq[Double])] = {
-    import graft.operators.Round6Ops.{HwAlpha, HwBeta, HwGamma, HwSeason}
+      : Option[(Long, HwRow)] = {
     val xs = dailySeries(days)
-    if (xs.length < HwSeason + 1) None
-    else {
-      val l0 = sqlR6d(xs.take(HwSeason).foldLeft(0.0)(_ + _) / HwSeason)
-      var l = l0; var b = 0.0
-      var sArr = xs.take(HwSeason).map(x => sqlR6d(x - l0))
-      xs.drop(HwSeason).foreach { x =>
-        val sm = sArr.head
-        val nl = sqlR6d(HwAlpha * (x - sm) + (1 - HwAlpha) * (l + b))
-        val nb = sqlR6d(HwBeta * (nl - l) + (1 - HwBeta) * b)
-        val ns = sqlR6d(HwGamma * (x - nl) + (1 - HwGamma) * sm)
-        sArr = sArr.tail :+ ns; l = nl; b = nb
-      }
-      Some((xs.length.toLong, l, b, sArr))
-    }
+    holtWinters(xs).map(xs.length.toLong -> _)
   }
 
   private[graft] def foldHw(uid: Long, rows: Iterator[HoltIn],
                             state: GroupState[HoltState]): Iterator[HwEmit] =
     mergeDays(rows, state) { (upd, days) =>
-      foldDaysHw(days).map { case (n, l, b, sArr) => HwEmit(uid, upd, n, l, b, sArr) }.iterator
+      foldDaysHw(days).map { case (n, hw) =>
+        HwEmit(uid, upd, n, hw.level, hw.trend, hw.forecasts)
+      }.iterator
     }
 
   private[graft] def hwFold(ev: DataFrame): Dataset[HwEmit] = {
@@ -182,18 +168,17 @@ object StreamingHolt {
   private[graft] def finalizeHw(sink: DataFrame): DataFrame =
     lastPerUser(sink)
       .select(col("user_id"), col("n_obs"), col("level"), col("trend"),
-              posexplode(col("seasonals")))
+              posexplode(col("forecasts")))
       .select(col("user_id"), col("n_obs"), col("level"), col("trend"),
-              (col("pos") + 1).cast("int").as("h"),
-              graft.Parity.r(col("level") + (col("pos") + 1) * col("trend")
-                + col("col"), 6).as("forecast"))
+              (col("pos") + 1).cast("int").as("h"), col("col").as("forecast"))
       .orderBy(col("user_id"), col("h"))
 
   /** #177 stream_holt_winters: the #174 seasonal forecaster maintained
     * incrementally — the same day → [[DaySum]] partial state as
     * [[streamHolt]] (arrival-order and chunking INVARIANT: partials
     * commute, late days land in their slot), with each emission
-    * re-folding the sorted day axis through the #174 α/β/γ recursion.
+    * re-folding the sorted day axis through batch #174's own fold,
+    * [[graft.operators.Round6Ops.holtWinters]].
     * O(days) state per key, calendar-bounded; the drained stream is
     * BIT-IDENTICAL to the batch operator and shares its oracle. */
   def streamHoltWinters(s: SparkSession, dir: String): DataFrame =

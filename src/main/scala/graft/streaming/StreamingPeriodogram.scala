@@ -10,14 +10,14 @@ import graft.Parity
 import graft.sources.Staging
 
 /** #135 stream_periodogram: the #134 fixed-period seasonality detector
-  * maintained incrementally — per-series state is the five decimal sums
-  * (count, Σx, Σx·cos, Σx·sin, Σcos, Σsin) PER CANDIDATE PERIOD, kept
-  * as scale-10 unscaled longs (O(periods) per key, the smallest state
-  * any of the streaming folds carries). The sums commute, so the fold
-  * is arrival-order/chunking invariant; every emission finalizes with
-  * the batch operator's exact algebra (mean-centering expanded, 6dp
-  * rounding), so the drained stream is bit-identical to the batch
-  * operator and shares its oracle.
+  * maintained incrementally — per-series state is the day count and
+  * five exact decimal sums (Σx, Σx·cos, Σx·sin, Σcos, Σsin) PER
+  * CANDIDATE PERIOD, kept as scale-10 unscaled integers (O(periods)
+  * per key, the smallest state any of the streaming folds carries).
+  * The sums commute, so the fold is arrival-order/chunking invariant;
+  * every emission finalizes with the batch operator's exact algebra
+  * (mean-centering expanded, 6dp rounding), so the drained stream is
+  * bit-identical to the batch operator and shares its oracle.
   *
   * The input is the daily series feed (the same staged-severity
   * contract as [[StreamingMhw]]: the per-day mean is the model side a
@@ -28,57 +28,54 @@ object StreamingPeriodogram {
   private val periods: Seq[Int] =
     graft.operators.Round6Ops2.PeriodogramPeriods
 
-  private[graft] case class PgIn(user_id: Long, day: Int, sst: Double)
-  private[graft] case class PgState(upd: Int, n: Long,
-                                    sx: Array[Long], sxc: Array[Long],
-                                    sxs: Array[Long], sc: Array[Long],
-                                    ss: Array[Long])
+  private[graft] case class PgIn(user_id: Long, day: Int, sst: Option[Double])
+  /** The day count and the five sums of each period, period-major:
+    * sum `5·i + t` is term t of period i, None while it saw no value. */
+  private[graft] case class PgState(upd: Int, n: Long, sums: Seq[Option[BigInt]])
   private[graft] case class PgEmit(user_id: Long, upd: Int, period: Int,
-                                   n_obs: Long, power: Double)
+                                   n_obs: Long, power: Option[Double])
 
   /** One observation folded into the per-period decimal sums — the
     * JVM mirror of the batch operator's per-row expressions: identical
     * phase arithmetic (day mod P first), Math.cos/sin (the same libm
     * Spark's codegen calls), 6dp rounding before use, and the
-    * DECIMAL(38,10)-cast-equivalent accumulation
-    * ([[Parity.dec10Unscaled]]). */
+    * DECIMAL(38,10) sums of [[Parity.Sums]] (a null, NaN or ±Inf sst
+    * adds nothing to the sst sums; every day counts). */
   private[graft] def foldPg(uid: Long, rows: Iterator[PgIn],
                             state: GroupState[PgState]): Iterator[PgEmit] = {
     val k = periods.length
-    val st = state.getOption.getOrElse(
-      PgState(0, 0L, new Array[Long](k), new Array[Long](k),
-              new Array[Long](k), new Array[Long](k), new Array[Long](k)))
-    val (sx, sxc, sxs, sc, ss) =
-      (st.sx.clone(), st.sxc.clone(), st.sxs.clone(), st.sc.clone(), st.ss.clone())
-    var n = st.n
+    val acc = new Parity.Sums(5 * k)
+    val st = state.getOption
+    st.foreach(_.sums.zipWithIndex.foreach { case (u, j) => acc.addState(j, u) })
+    var n = st.fold(0L)(_.n)
     var any = false
     rows.foreach { r =>
       any = true
       n += 1
-      var i = 0
-      while (i < k) {
+      for (i <- 0 until k) {
         val p = periods(i)
         val phase = 2.0 * math.Pi * (r.day % p) / p
         val c = Parity.r6d(math.cos(phase))
         val sn = Parity.r6d(math.sin(phase))
-        sx(i) += Parity.dec10Unscaled(r.sst)
-        sxc(i) += Parity.dec10Unscaled(r.sst * c)
-        sxs(i) += Parity.dec10Unscaled(r.sst * sn)
-        sc(i) += Parity.dec10Unscaled(c)
-        ss(i) += Parity.dec10Unscaled(sn)
-        i += 1
+        r.sst.foreach { x =>
+          acc.addDouble(5 * i, x)
+          acc.addDouble(5 * i + 1, x * c)
+          acc.addDouble(5 * i + 2, x * sn)
+        }
+        acc.addDouble(5 * i + 3, c)
+        acc.addDouble(5 * i + 4, sn)
       }
     }
     if (!any) Iterator.empty
     else {
-      val upd = st.upd + 1
-      state.update(PgState(upd, n, sx, sxc, sxs, sc, ss))
+      val upd = st.fold(0)(_.upd) + 1
+      state.update(PgState(upd, n, (0 until 5 * k).map(acc.state)))
       // finalize with the batch algebra — a = Σxc − (Σx/n)·Σc, etc.
       periods.indices.iterator.map { i =>
-        val sxD = Parity.dec10ToDouble(sx(i))
-        val a = Parity.dec10ToDouble(sxc(i)) - (sxD / n) * Parity.dec10ToDouble(sc(i))
-        val b = Parity.dec10ToDouble(sxs(i)) - (sxD / n) * Parity.dec10ToDouble(ss(i))
-        PgEmit(uid, upd, periods(i), n, Parity.r6d((a * a + b * b) / n))
+        def centered(t: Int) = for (sxt <- acc.get(5 * i + t); sx <- acc.get(5 * i);
+                                    st <- acc.get(5 * i + t + 2)) yield sxt - (sx / n) * st
+        val power = for (a <- centered(1); b <- centered(2)) yield Parity.r6d((a * a + b * b) / n)
+        PgEmit(uid, upd, periods(i), n, power)
       }
     }
   }

@@ -255,13 +255,13 @@ class Round6Ops2Spec extends AnyFunSuite {
     }.toDF("user_id", "d", "sst")
     val batch = Round6Ops2.tsCusumAlarmDf(dl).collect()(0)
     val days = vals.zipWithIndex.map { case (v, i) =>
-      (19358 + i) -> streaming.StreamingHolt.daySum(None, Seq(v))
+      (19358 + i) -> streaming.StreamingHolt.daySum(None, Seq(Some(v)))
     }.toMap
-    val Some((n, mu, sg, mx, al)) = streaming.StreamingCusum.chartOf(days)
-    assert(n == batch.getLong(1) && mu == batch.getDouble(2) &&
-           sg == batch.getDouble(3) && mx == batch.getDouble(4) &&
-           al == batch.getLong(5),
-      s"stream ($n,$mu,$sg,$mx,$al) vs batch $batch")
+    val Some((n, c)) = streaming.StreamingCusum.chartOf(days)
+    assert(n == batch.getLong(1) && c.mu.contains(batch.getDouble(2)) &&
+           c.sigma == batch.getDouble(3) && c.cusum_max == batch.getDouble(4) &&
+           c.n_alarms == batch.getLong(5),
+      s"stream ($n,$c) vs batch $batch")
   }
 
   // -------------------------------------------------------- dedup_tau_sweep

@@ -44,42 +44,61 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     (cols, rows.sortBy(_.mkString("\u0001")))
   }
 
-  /** A copy of the corpus' events table at a new dir, written by Spark
-    * with `f` applied: as one `events.parquet` file, or (`asDir`) as the
+  /** A copy of the corpus' `table` at a new dir, written by Spark with
+    * `f` applied: as one `<table>.parquet` file, or (`asDir`) as the
     * directory of part files Spark itself writes. */
-  private def eventsCopy(prefix: String, asDir: Boolean = false)(
+  private def tableCopy(prefix: String, table: String = "events", asDir: Boolean = false)(
       f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): String = {
     val dir = tempDir(prefix)
-    val raw = f(spark.read.parquet(s"$sf/events.parquet"))
-    if (asDir) raw.repartition(3).write.parquet(s"$dir/events.parquet")
+    val raw = f(spark.read.parquet(s"$sf/$table.parquet"))
+    if (asDir) raw.repartition(3).write.parquet(s"$dir/$table.parquet")
     else {
       raw.coalesce(1).write.parquet(s"$dir/w")
       val part = new java.io.File(s"$dir/w").listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(s"$dir/events.parquet"))
+      java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(s"$dir/$table.parquet"))
     }
     dir
   }
 
+  // the four day-grain twins on user 0's first observation (NaN, 1e12,
+  // null) or its whole first day (all null, all +Inf): each value the
+  // batch side reads must reach the stream's fold and come out the same
   test("stream_holt, stream_holt_winters and stream_cusum equal their batch twins on a NaN or a 1e12 observation") {
     val first = spark.read.parquet(s"$sf/events.parquet").orderBy("user_id", "ts").first()
     val (u, t) = (first.getAs[Any]("user_id"), first.getAs[Any]("ts"))
-    for (v <- Seq(Double.NaN, 1e12)) {
-      val dir = eventsCopy("graft_oddvalue") { ev =>
-        ev.withColumn("value", when(col("user_id") === lit(u) && col("ts") === lit(t), lit(v))
-          .otherwise(col("value")))
+    val (obs, day) = (col("ts") === lit(t), to_date(col("ts")) === to_date(lit(t)))
+    val nul = lit(null).cast("double")
+    for ((what, at, v) <- Seq(("NaN", obs, lit(Double.NaN)), ("1e12", obs, lit(1e12)),
+                              ("null", obs, nul), ("all-null day", day, nul),
+                              ("all-+Inf day", day, lit(Double.PositiveInfinity)))) {
+      val dir = tableCopy("graft_oddvalue") { ev =>
+        ev.withColumn("value", when(col("user_id") === lit(u) && at, v).otherwise(col("value")))
       }
       for ((stream, batch) <- Seq("stream_holt" -> "ts_holt",
                                   "stream_holt_winters" -> "ts_holt_winters",
-                                  "stream_cusum" -> "ts_cusum_alarm")) {
+                                  "stream_cusum" -> "ts_cusum_alarm",
+                                  "stream_periodogram" -> "ts_periodogram")) {
         val want = canonical(SparkEntry.queries(batch)(spark, dir))
         assert(want._2.nonEmpty)
-        assert(canonical(SparkEntry.queries(stream)(spark, dir)) == want, s"$stream on value $v")
+        assert(canonical(SparkEntry.queries(stream)(spark, dir)) == want, s"$stream on $what")
       }
     }
   }
 
+  test("stream_centroid_drift equals its batch twin on an embedding with a NaN component") {
+    val dir = tableCopy("graft_nanemb", "embeddings") { emb =>
+      val id = emb.agg(min(col("vec_id"))).first().get(0)
+      emb.withColumn("embedding", when(col("vec_id") === lit(id),
+        transform(col("embedding"), (x, i) => when(i === 1, lit(Float.NaN)).otherwise(x)))
+        .otherwise(col("embedding")))
+    }
+    val want = canonical(SparkEntry.queries("emb_centroid_drift")(spark, dir))
+    assert(want._2.nonEmpty)
+    assert(canonical(SparkEntry.queries("stream_centroid_drift")(spark, dir)) == want)
+  }
+
   test("stream_holt over a Spark-written (directory) events table returns the single-file rows") {
-    val dir = eventsCopy("graft_dirtable", asDir = true)(identity)
+    val dir = tableCopy("graft_dirtable", asDir = true)(identity)
     assert(new java.io.File(s"$dir/events.parquet").isDirectory)
     val want = canonical(SparkEntry.queries("stream_holt")(spark, sf))
     assert(want._2.nonEmpty)
