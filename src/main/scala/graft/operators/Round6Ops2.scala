@@ -284,9 +284,9 @@ object Round6Ops2 {
     * process would have paged.
     *
     * [[Round6Ops.foldSeries]] runs [[cusumChart]] over each series'
-    * sorted daily values: μ and σ from exact decimal moments,
-    * then the chart with per-step 6dp rounding (the oracle replays it
-    * with list-typed state in list_reduce — the documented DuckDB
+    * sorted daily values: μ and σ from exact decimal moments, then the
+    * chart with per-step 6dp rounding (the oracle replays it with
+    * list-typed state in list_reduce — the documented DuckDB
     * workaround). One shuffle, state O(1) per step, array bounded per
     * key. */
   def tsCusumAlarm(s: SparkSession, dir: String): DataFrame =
@@ -302,9 +302,9 @@ object Round6Ops2 {
     * and ±Inf add nothing, n counts every day) and are rounded at 6dp.
     * The arithmetic follows SQL's rules: `greatest` skips a null (σ is 0
     * when μ is null; a step that meets a null restarts at 0), NaN sorts
-    * above every number, each step
-    * is rounded with [[graft.Parity.sqlR6d]]. The only CUSUM chart:
-    * ts_cusum_alarm and stream_cusum run it. */
+    * above every number, and each step is rounded with
+    * [[graft.Parity.sqlR6d]]. The only CUSUM chart: ts_cusum_alarm and
+    * stream_cusum run it. */
   private[graft] def cusumChart(xs: collection.Seq[Option[Double]]): Option[CusumRow] = {
     val n = xs.length
     Option.when(n >= 2) {
